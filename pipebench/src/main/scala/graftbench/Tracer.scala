@@ -64,8 +64,8 @@ object Layers {
     }
 }
 
-final class JobRec(val id: Int, val start: Long, val stageIds: Seq[Int],
-    val execId: Option[Long], val layer: String, val cls: String, val site: String) {
+final class JobRec(val id: Int, val start: Long, val execId: Option[Long],
+    val layer: String, val cls: String, val site: String) {
   @volatile var end: Long = -1L
 }
 
@@ -130,7 +130,7 @@ final class Tracer(spark: SparkSession) {
       val (layer, cls) =
         if (streaming) ("streaming", "graft.streaming.StreamingCuration$") else Layers.attribute(site)
       val exec = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
-      jobs(e.jobId) = new JobRec(e.jobId, e.time, e.stageIds, exec, layer, cls,
+      jobs(e.jobId) = new JobRec(e.jobId, e.time, exec, layer, cls,
         site.linesIterator.take(4).mkString(" | "))
       e.stageInfos.foreach { si =>
         stages.getOrElseUpdate(si.stageId,
