@@ -118,7 +118,7 @@ def main():
     cp = classpath()
     os.makedirs(os.path.join(WORK, "tmp"), exist_ok=True)
     cmd = ["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")] + [
-        "-Xmx3g",
+        "-Xms2g", "-Xmx2g",
         "-XX:+UseG1GC",
         f"-Djava.io.tmpdir={os.path.join(WORK, 'tmp')}",
         "-Dspark.ui.enabled=false",

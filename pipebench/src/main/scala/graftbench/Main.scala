@@ -1,5 +1,6 @@
 package graftbench
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
@@ -41,23 +42,18 @@ object Main {
   }
 
   /** Untraced setup builds per run; the median is `setup_s`. */
-  val SetupBuilds = 7
-  /** Batch runs after the cold one that are checked but not timed: the JIT
-    * is still compiling the kernels through the first few runs.
+  val SetupBuilds = 15
+  /** Timed warm runs (batch runs or stream drains) at least, whatever
+    * `--seconds` says.
     */
-  val WarmupRuns = 1
-  /** Timed warm runs at least, whatever `--seconds` says. */
   val MinWarmRuns = 3
-  /** Timed warm drains of the stream workload at least. */
-  val MinWarmDrains = 2
   /** Stop starting new runs after this long, so a run ends well inside 180 s. */
   val WallBudgetSeconds = 140.0
 
   def main(argv: Array[String]): Unit = {
     val code =
       try {
-        if (argv.headOption.contains("--list-metrics")) { listMetrics(); 0 }
-        else run(parse(argv.toSeq))
+        run(parse(argv.toSeq))
       } catch {
         case e: Throwable =>
           System.err.println(s"benchmark error: $e")
@@ -66,12 +62,6 @@ object Main {
       }
     System.out.flush()
     sys.exit(code)
-  }
-
-  private def listMetrics(): Unit = {
-    println(Json.obj(Seq(
-      "end_to_end" -> Json.arr(MetricSpecs.endToEnd.map(MetricSpecs.specJson)),
-      "per_layer" -> Json.arr(MetricSpecs.perLayer.map(MetricSpecs.specJson)))))
   }
 
   def session(a: Args, master: String, cores: Int): SparkSession = {
@@ -136,7 +126,8 @@ object Main {
         out
       }(check(spark))
       o match {
-        case Ok(s, _) => log(f"${a.workload} run ok in $s%.3f s, heap peak $lastHeapMb%.1f MB")
+        case Ok(s, out) => log(f"${a.workload} run ok in $s%.3f s, heap peak $lastHeapMb%.1f MB" +
+          (if (out.progress.isEmpty) "" else s", triggers ${out.triggerSeconds.mkString(" ")} s"))
         case Failed(r) => log(s"${a.workload} run FAILED: $r")
       }
       o
@@ -147,9 +138,7 @@ object Main {
     val cold = attemptRun()
     val coldCodegen = CodegenCounters.snapshot().minus(cg0)
     val isStream = workload == Workloads.StreamDedup
-    // untimed runs while the JIT is still compiling; a traced stream run
-    // needs one so its untraced and traced drains compare like with like
-    val warmup = (1 to (if (!isStream) WarmupRuns else if (a.trace) 1 else 0)).map(_ => attemptRun())
+    val warmup = (1 to workload.warmupRuns).map(_ => attemptRun())
 
     // ---- warm runs: closed loop, one client ----
     def warmLoop(seconds: Double, minRuns: Int): (Seq[Outcome[RunOutput]], Seq[Double]) = {
@@ -170,7 +159,7 @@ object Main {
       (outcomes.toSeq, heaps.toSeq)
     }
     if (!a.trace) {
-      val (warm, heaps) = warmLoop(a.seconds, if (isStream) MinWarmDrains else MinWarmRuns)
+      val (warm, heaps) = warmLoop(a.seconds, MinWarmRuns)
       val all = (cold +: warmup) ++ warm
       val failures = Stats.failures(all)
       val warmTimes = Stats.timings(warm)
@@ -191,16 +180,15 @@ object Main {
         metrics += Metric("live_heap_peak_mb", Stats.median(heaps), "MB", heaps.size)
       }
       val errorRate = failures.size.toDouble / all.size
-      val record = Seq(
-        "workload" -> Json.str(a.workload), "seed" -> a.seed.toString,
-        "input_rows" -> prepared.inputRows.toString, "input_bytes" -> prepared.inputBytes.toString,
-        "cores" -> a.cores.toString, "error_rate" -> Json.num(errorRate),
-        "failures" -> Json.arr(failures.map(Json.str)),
+      println(Json(ListMap(
+        "workload" -> a.workload, "seed" -> a.seed,
+        "input_rows" -> prepared.inputRows, "input_bytes" -> prepared.inputBytes,
+        "cores" -> a.cores, "error_rate" -> errorRate,
+        "failures" -> failures,
         "metrics" -> Json.detailed(metrics.toSeq),
         // the highest commit-latency percentile with ten samples beyond it
-        "micro_batch_tail" -> Stats.tailRank(commits.size).map(q => Json.obj(Seq(
-          "rank" -> Json.num(q), "value_s" -> Json.num(Stats.percentile(commits, q))))).getOrElse("null"))
-      println(Json.obj(record))
+        "micro_batch_tail" -> Stats.tailRank(commits.size).map(q => ListMap(
+          "rank" -> q, "value_s" -> Stats.percentile(commits, q))))))
       if (a.workload == Workloads.WebClean.name || a.workload == Workloads.NearDedup.name)
         metrics.find(_.name == "records_per_s").foreach(m => println(f"context: ${m.value}%.0f records/s on ${a.cores} cores " +
           "(reference pipeline: 20,362 rec/s for url + length filters on 8 cores; not a gate)"))
@@ -327,11 +315,11 @@ object Main {
     val specs = MetricSpecs.perLayer.map(s => s.name -> s).toMap
     val out = metrics.toSeq.filter { case (k, _) => specs.contains(k) }
       .map { case (k, v) => Metric(k, v, specs(k).unit, perRun.size) }
-    println(Json.obj(Seq(
-      "workload" -> Json.str(a.workload), "seed" -> a.seed.toString,
-      "spans" -> Json.str(spanFile.getPath), "span_count" -> spans.size.toString,
-      "traced_runs" -> perRun.size.toString,
-      "failures" -> Json.arr((failures ++ problems).distinct.map(Json.str)))))
+    println(Json(ListMap(
+      "workload" -> a.workload, "seed" -> a.seed,
+      "spans" -> spanFile.getPath, "span_count" -> spans.size,
+      "traced_runs" -> perRun.size,
+      "failures" -> (failures ++ problems).distinct)))
     val correct = failures.isEmpty && problems.isEmpty && perRun.nonEmpty
     println(Json.result(correct, outcomes.size, failures.size, out))
     0

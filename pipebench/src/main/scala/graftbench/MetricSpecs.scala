@@ -79,7 +79,4 @@ object MetricSpecs {
   ) ++ jobLayers.flatMap(l => Seq(lower(s"$l.jobs", "count"), lower(s"$l.job_s", "s"))) ++
     operatorNames.flatMap(o => Seq(
       lower(s"op.$o.self_s", "s"), lower(s"op.$o.build_s", "s"), higher(s"op.$o.pass_rate", "ratio")))
-
-  def specJson(s: Spec): String =
-    Json.obj(Seq("name" -> Json.str(s.name), "unit" -> Json.str(s.unit), "better" -> Json.str(s.better)))
 }

@@ -60,44 +60,29 @@ object Stats {
     outcomes.collect { case Failed(r) => r }
 }
 
-/** Minimal JSON rendering for the benchmark's records. */
+/** JSON rendering for the benchmark's records. An object is a `ListMap`,
+  * so its keys keep their order; NaN and infinities render as null.
+  */
 object Json {
-  def str(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"' => b ++= "\\\""
-      case '\\' => b ++= "\\\\"
-      case '\n' => b ++= "\\n"
-      case '\r' => b ++= "\\r"
-      case '\t' => b ++= "\\t"
-      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
-      case c => b += c
-    }
-    b += '"'
-    b.toString
-  }
+  import scala.collection.immutable.ListMap
 
-  def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null"
-    else if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
-    else d.toString
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
 
-  def obj(fields: Seq[(String, String)]): String =
-    fields.map { case (k, v) => s"${str(k)}: $v" }.mkString("{", ", ", "}")
+  def apply(value: Any): String = mapper.writeValueAsString(value)
 
-  def arr(items: Seq[String]): String = items.mkString("[", ", ", "]")
+  def num(d: Double): Any = if (d.isNaN || d.isInfinite) null else d
 
   /** The result line: exactly correct, attempted, failed and metrics. */
   def result(correct: Boolean, attempted: Int, failed: Int, metrics: Seq[Metric]): String =
-    obj(Seq(
-      "correct" -> correct.toString,
-      "attempted" -> attempted.toString,
-      "failed" -> failed.toString,
-      "metrics" -> obj(metrics.map(m =>
-        m.name -> obj(Seq("value" -> num(m.value), "unit" -> str(m.unit)))))))
+    Json(ListMap(
+      "correct" -> correct,
+      "attempted" -> attempted,
+      "failed" -> failed,
+      "metrics" -> ListMap(metrics.map(m => m.name -> ListMap("value" -> num(m.value), "unit" -> m.unit)): _*)))
 
   /** The same metrics with their sample counts, for the human-readable record. */
-  def detailed(metrics: Seq[Metric]): String =
-    obj(metrics.map(m => m.name -> obj(Seq(
-      "value" -> num(m.value), "unit" -> str(m.unit), "samples" -> m.samples.toString))))
+  def detailed(metrics: Seq[Metric]): ListMap[String, Any] =
+    ListMap(metrics.map(m => m.name -> ListMap(
+      "value" -> num(m.value), "unit" -> m.unit, "samples" -> m.samples)): _*)
 }

@@ -18,10 +18,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 final case class Span(id: String, parent: String, kind: String, name: String,
     startMs: Long, endMs: Long, attrs: Seq[(String, String)] = Nil) {
-  def json: String = Json.obj(Seq(
-    "id" -> Json.str(id), "parent" -> Json.str(parent), "kind" -> Json.str(kind),
-    "name" -> Json.str(name), "start_ms" -> startMs.toString, "end_ms" -> endMs.toString) ++
-    attrs.map { case (k, v) => k -> Json.str(v) })
+  def json: String = Json(scala.collection.immutable.ListMap(
+    "id" -> id, "parent" -> parent, "kind" -> kind, "name" -> name,
+    "start_ms" -> startMs, "end_ms" -> endMs) ++ attrs)
 }
 
 /** The repository's modules, used as the benchmark's layers. */

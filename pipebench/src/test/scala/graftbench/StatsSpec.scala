@@ -56,9 +56,9 @@ class StatsSpec extends AnyFunSuite {
   test("the result record has exactly its four keys") {
     val line = Json.result(correct = true, attempted = 3, failed = 0,
       Seq(Metric("run_s_p50", 1.25, "s"), Metric("records_per_s", 800.0, "records/s")))
-    assert(line == """{"correct": true, "attempted": 3, "failed": 0, "metrics": """ +
-      """{"run_s_p50": {"value": 1.25, "unit": "s"}, "records_per_s": {"value": 800, "unit": "records/s"}}}""")
-    assert(Json.str("a\"b\n") == "\"a\\\"b\\n\"")
-    assert(Json.num(Double.NaN) == "null")
+    assert(line == """{"correct":true,"attempted":3,"failed":0,"metrics":""" +
+      """{"run_s_p50":{"value":1.25,"unit":"s"},"records_per_s":{"value":800.0,"unit":"records/s"}}}""")
+    assert(Json(Seq("a\"b\n")) == "[\"a\\\"b\\n\"]")
+    assert(Json(Json.num(Double.NaN)) == "null")
   }
 }
