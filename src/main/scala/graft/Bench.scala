@@ -1,5 +1,7 @@
 package graft
+import graft.core.BenchHarness
 import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -9,7 +11,7 @@ object Bench {
       .builder(s"local[$cpus]", cpus.toInt, codegenCacheEntries = 10000)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       // scoped staging: frames release at block exit, INSIDE the timed
       // region — staging cost is the query's honest cost, and leaked
       // blocks would bleed memory pressure into LATER queries'
@@ -26,8 +28,7 @@ object Bench {
       graft.core.Staging.scoped {
         // noop sink materializes every output column (count() would let
         // Catalyst prune the computed columns and fake the numbers)
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
     // Deterministic order + warmup + WARM MIN of n>=3: without the
     // warmup the first Map-ordered query eats JVM/codegen warmup (~9s in
@@ -61,7 +62,6 @@ object Bench {
       .filter(_.nonEmpty)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => benchOnly.forall(_(n)) }
-    def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
     // AMBIENT CONTROL (r20, VERDICT r19 #2): one pinned, deterministic,
     // NEVER-TO-BE-OPTIMIZED leg interleaved with the gate reps and
@@ -96,60 +96,43 @@ object Bench {
     // guarded leg now carries per-run evidence and ONE retry, so a
     // single contended rep can't canonize a 30x artifact (the r15
     // driver record's minhash_lsh_dedup_transitive lesson).
-    val harness = new graft.core.BenchHarness(reps, wallLimit)
+    val harness = new BenchHarness(reps, wallLimit)
     def results = harness.results
-    def medians = harness.medians
-    def guarded = harness.guarded
-    @volatile var probeJson: Option[String] = None
+    @volatile var probeRecord: Option[ListMap[String, Any]] = None
     // trimmed probe for the compact line: the full probe record grew past
     // the driver's 2000-char parse window (BENCH_r16 carried
     // "parsed": null because the compact line embedded all ~2.2 KB of
-    // scale_probe) — the compact line now carries only the
-    // baseline-comparable throughput fields; the full probe stays in
-    // bench_out.json (committed) and the full printed record.
-    @volatile var probeCompactJson: Option[String] = None
+    // scale_probe) — the compact line carries only each leg's derived
+    // throughput; the full probe stays in bench_out.json (committed) and
+    // the full printed record.
+    @volatile var probeCompact: Option[ListMap[String, Any]] = None
     @volatile var finishedNormally = false
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
 
-    // single source of truth for the flag rule: the harness (which also
-    // runs the end-of-suite stabilization pass for flagged legs)
-    def unstableLegs: Seq[String] = harness.unstableLegs
-
     // the control is read out of the harness results lazily so partial
-    // (shutdown-hook) records also carry whatever was measured
-    def controlSec: Option[Double] = results.get(controlName)
-    def controlJson: String = controlSec.map(sec).getOrElse("null")
+    // (shutdown-hook) records also carry whatever was measured; a
+    // control leg that threw reads null
+    def controlSec = results.get(controlName).map(BenchHarness.sec)
+    // measured gate legs in order; a failed leg keeps its key and reads null
+    def gateSecs(m: collection.Map[String, Double]) = ListMap(ordered.collect {
+      case (n, _) if m.contains(n) || harness.failed.contains(n) => n -> m.get(n).map(BenchHarness.sec)
+    }: _*)
+    def gateResults = results.toSeq.filter(_._1 != controlName)
+    def total = BenchHarness.sec(gateResults.map(_._2).sum)
+    def partialFlag(partial: Boolean) =
+      if (partial) ListMap("partial" -> true) else ListMap.empty[String, Any]
 
-    def fullJson(partial: Boolean): String = {
-      val rs = results.toSeq.filter(_._1 != controlName)
-      val qs = rs.map { case (k, v) => "\"" + k + "\":" + sec(v) }
-        .mkString("{", ",", "}")
-      val total = rs.map(_._2).sum
-      val g = guarded.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val rt = harness.retried.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val p = probeJson.getOrElse("null")
-      val pf = if (partial) ",\"partial\":true" else ""
-      val med = medians.toSeq.filter(_._1 != controlName)
-        .map { case (k, v) => "\"" + k + "\":" + sec(v) }
-        .mkString("{", ",", "}")
-      // legs whose median reads >2x their min are contention-suspect OR
-      // genuinely intermittent (memory-pressure-dependent): surface them
-      // so a real regression can't hide behind the min estimator
-      // (VERDICT r14 #8). Tiny legs (<0.1 s min) are skipped — scheduler
-      // jitter alone doubles those.
-      val unstable = unstableLegs
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-      // per-run evidence for every flagged leg (guarded or unstable):
-      // the record proves its own artifacts instead of leaving them to
-      // cross-round inference (VERDICT r15 #2)
-      // detail also covers stabilized legs whose flag CLEARED — the
-      // third run that produced the official min must stay visible in
-      // the record, not just when the flag survives
-      val detail = harness.detailJson(
-        guarded.toSeq ++ unstableLegs ++ harness.stabilized.toSeq)
-      val stab = harness.stabilized.map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","reps":$reps,"estimator":"warm_min_interleaved_retry","control_sec":$controlJson,"wall_guarded":$g,"retried":$rt,"unstable_legs":$unstable,"stabilized":$stab,"reps_detail":$detail,"queries":$qs,"queries_median":$med,"sf":"$sfDir","scale_probe":$p$pf}"""
-    }
+    // legs whose median reads >2x their min are contention-suspect OR
+    // genuinely intermittent (memory-pressure-dependent): the harness
+    // surfaces them so a real regression can't hide behind the min
+    // estimator (VERDICT r14 #8), and the record carries per-run
+    // evidence for every flagged leg (VERDICT r15 #2)
+    def fullJson(partial: Boolean): String = BenchHarness.json(
+      ListMap("metric" -> "total", "value" -> total, "unit" -> "sec", "reps" -> reps,
+        "estimator" -> "warm_min_interleaved_retry", "control_sec" -> controlSec) ++
+        harness.evidence(BenchHarness.GateKeys) ++
+        ListMap("queries" -> gateSecs(results), "queries_median" -> gateSecs(harness.medians),
+          "sf" -> sfDir, "scale_probe" -> probeRecord) ++ partialFlag(partial))
     // The driver keeps only the LAST 2000 chars of output and parses the
     // final JSON line out of that window (BENCH_r7/r8 both carried
     // "parsed": null because the full record is wider than the window —
@@ -157,29 +140,24 @@ object Bench {
     // bench_out.json (committed, self-contained) and is printed first;
     // the LAST line is a compact summary guaranteed to fit the window —
     // total + scale probe + the slowest queries, added in descending
-    // cost until a 1300-char budget (the cheap tail of the distribution
+    // cost until a 1900-char budget (the cheap tail of the distribution
     // is the part that carries no grading signal).
     def compactJson(partial: Boolean): String = {
-      val rs = results.toSeq.filter(_._1 != controlName)
-      val total = rs.map(_._2).sum
-      val slow = rs.sortBy(-_._2)
-      val pf = if (partial) ",\"partial\":true" else ""
-      val head = s"""{"metric":"total","value":${sec(total)},"unit":"sec","reps":$reps,"control_sec":$controlJson,"sf":"$sfDir","n_queries":${rs.size},"queries_file":"$outFile"$pf,"scale_probe":${probeCompactJson.getOrElse("null")},"queries":{"""
-      val tailStr = "}}"
-      val budget = 1300 - head.length - tailStr.length
-      val parts = Seq.newBuilder[String]
-      var used = 0
-      slow.foreach { case (k, v) =>
-        val e = s"\"$k\":${sec(v)}"
-        if (used + e.length + 1 <= budget) { parts += e; used += e.length + 1 }
-      }
-      head + parts.result().mkString(",") + tailStr
+      val head = ListMap("metric" -> "total", "value" -> total, "unit" -> "sec",
+        "reps" -> reps, "control_sec" -> controlSec, "sf" -> sfDir,
+        "n_queries" -> gateResults.size, "queries_file" -> outFile) ++ partialFlag(partial) ++
+        ListMap("scale_probe" -> probeCompact)
+      val budget = 1900 - BenchHarness.json(head + ("queries" -> ListMap.empty)).length
+      val slow = gateResults.sortBy(-_._2).map { case (k, v) => k -> BenchHarness.sec(v) }
+      // `"k":v,` per entry
+      val used = slow.map { case (k, v) => k.length + v.toString.length + 4 }.scanLeft(0)(_ + _).tail
+      BenchHarness.json(head + ("queries" -> ListMap(slow.zip(used).takeWhile(_._2 <= budget).map(_._1): _*)))
     }
     def emit(partial: Boolean): Unit = {
       val json = fullJson(partial)
       try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
         (json + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
       println(json)
       println(compactJson(partial))
       System.out.flush()
@@ -197,504 +175,41 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY) so every A/B run self-reports its window;
     // it interleaves round-robin with the gate reps like any other leg
     // and is filtered back out of "queries"/total above.
-    harness.run((controlName -> (() => {
-      try controlLeg()
-      catch { case e: Throwable => System.err.println(s"[bench] control: $e") }
-    })) +: ordered.map { case (name, fn) =>
-      name -> (() => runOne(name, fn))
-    })
+    harness.run((controlName -> (() => controlLeg())) +:
+      ordered.map { case (name, fn) => name -> (() => runOne(fn)) })
 
-    // 10x scale probe (promoted from the dev-only graft.ScaleProbe): the
-    // documents table replicated 10x under re-keyed ids (≈90% duplicate
-    // rate, raw-CommonCrawl shape) drives the shuffle-bound dedup paths
-    // at 10x volume, so the round-over-round trend tracks the scale
-    // shape, not only sf-sized absolutes.
+    // 10x scale probe: the documents table replicated 10x under
+    // re-keyed ids (≈90% duplicate rate, raw-CommonCrawl shape) drives
+    // the shuffle-bound dedup paths at 10x volume, so the
+    // round-over-round trend tracks the scale shape, not only sf-sized
+    // absolutes. Every leg comes from the graft.ProbeLegs registry.
     //
     // r17: the probe legs run through the SAME BenchHarness protocol as
     // the gate legs (warmup pass excluded from the record, reps
     // INTERLEAVED round-robin, wall guard + ONE end-of-suite retry,
-    // per-run evidence for flagged legs). The old per-leg min-of-3 ran
-    // its reps BACK-TO-BACK, so a sustained contention burst poisoned
-    // all three reps of one leg at once — the r16 record's phash_hash
-    // 0.38→0.75 s / knn_join_100q 0.31→1.12 s wobble on byte-identical
-    // code (VERDICT r16 #2). All staged inputs persist up front
-    // (untimed) so legs can interleave; peak concurrent cache is a few
-    // GB — well inside the bench JVM.
+    // per-run evidence for flagged legs, one failure rule). The old
+    // per-leg min-of-3 ran its reps BACK-TO-BACK, so a sustained
+    // contention burst poisoned all three reps of one leg at once — the
+    // r16 record's phash_hash 0.38→0.75 s / knn_join_100q 0.31→1.12 s
+    // wobble on byte-identical code (VERDICT r16 #2). All staged inputs
+    // persist up front (untimed) so legs can interleave; peak concurrent
+    // cache is a few GB — well inside the bench JVM.
     val probeReps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "2").toInt
-    val probeHarness = new graft.core.BenchHarness(probeReps, wallLimit)
-    val failedProbeLegs = scala.collection.mutable.Set.empty[String]
     // SPARK_GRAFT_SKIP_PROBE=1: builder-local iteration aid (like
     // SPARK_GRAFT_BENCH_ONLY) — run the full GATE suite but skip the
     // scale probe, for full-suite-context A/B runs where only the gate
     // legs are under comparison. The official driver run never sets it.
     val skipProbe = sys.env.get("SPARK_GRAFT_SKIP_PROBE").contains("1")
-    val probe = if (benchOnly.isDefined || skipProbe) "null" else {
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"), col("n_chars"))
-      val big = (0 until 10).map(i =>
-        docs.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = big.count() // materialize once; probes measure compute, not scan
-      // TextLengthFilter at 100x (5M rows): the baseline's 1.97M rec/s
-      // row is too cheap to measure at 10x — fixed job overhead
-      // dominates a 50k-row run; at 100x the per-row cost is the signal.
-      // NOT persisted (r18): it is the probe's largest staged block by
-      // far and serves exactly one leg — each rep re-unions from big's
-      // cache (the same bytes a cached big100 would read), and the
-      // freed storage memory stops the concurrent-staging pressure that
-      // the r17 driver record showed evicting the byte-heavy legs
-      // (phash_hash read 0.45x baseline there on unchanged kernel code)
-      val big100 = (0 until 10).map(i =>
-        big.withColumn("doc_id", col("doc_id") + lit(i * 1000000000L)))
-        .reduce(_ unionByName _)
-      val n100 = big100.count()
-      // frozen-model scoring input — the production-dominant inference
-      // path (train once, score the firehose): model trains UNTIMED on
-      // the 1x src0 slice; the timed leg is scoring 10x docs via the two
-      // model joins + broadcast scalar (no training rescan)
-      val blmModel = new graft.operators.text.BigramLm("text", "doc_id")
-        .freeze(spark.read.parquet(s"$sfDir/documents.parquet")
-          .filter(org.apache.spark.sql.functions.col("source") === "src0")
-          .select(org.apache.spark.sql.functions.col("doc_id"),
-            org.apache.spark.sql.functions.col("text")))
-      // Multimodal inputs at replication: 10x vectors through the
-      // auto-bucketed semantic dedup and the knn join; 100x images
-      // (re-keyed, bytes reused) through phash near-dedup — so the
-      // round-over-round scale trend covers the vector and image paths,
-      // not just text.
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      val bigEmb = (0 until 10).map(i =>
-        emb.withColumn("vec_id", col("vec_id") + lit(i * 10000000L)))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nv = bigEmb.count()
-      // Realistic image-dedup shape: decode+DCT is the expensive step,
-      // so production stages the `phash` column ONCE (both dedup
-      // operators pick up a precomputed `phash`) and persists it — the
-      // lazy self-join would otherwise recompute the decode per join
-      // branch (measured: 17 s vs ~6 s at 100x). Legs: the hash pass
-      // itself, then exact dedup and capped near-dedup over the staged
-      // hashes.
-      val img = graft.sources.SyntheticImages.df(spark)
-      // stage the input BYTES first (untimed): the 100-way union
-      // re-runs the fixture generator (PNG encode!) per branch, and the
-      // repartition shuffles ~200 MB of image bytes — neither is hash
-      // work. The phash_hash leg then measures decode+DCT alone over
-      // cached bytes (single-shot: the select's output is not
-      // persisted, so it really decodes).
-      val stagedBytes = (0 until 100).map(i =>
-        img.withColumn("id", col("id") + lit(i * 1000L)))
-        .reduce(_ unionByName _)
-        // the 100-way union leaves 400 tiny partitions — task overhead
-        // would swamp the measurement; coalesce to the thread count
-        .repartition(32)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ni = stagedBytes.count()
-      val bigImg = stagedBytes
-        .withColumn("phash", graft.operators.image.ImageOps.phashUdf(col("image.bytes")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bigImg.count() // untimed: the dedup legs consume the staged hashes
-      // As-of join at 10x events with RE-KEYED users (10x keys, same
-      // per-key density — the realistic growth axis for an event
-      // stream): the union-tag window shape should scale linearly
-      // because the single exchange stays user-keyed.
-      val ev = graft.core.Tables.events(spark, sfDir)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      val bigEv = (0 until 10).map(i =>
-        ev.withColumn("event_id", col("event_id") + lit(i * 100000000L))
-          .withColumn("user_id", col("user_id") + lit(i * 100000L)))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ne = bigEv.count()
-      // 10x lineitem (re-keyed orders): the exact profiler's narrow
-      // stacked plan (cells/s), and the bloom-pruned semi join against
-      // its unpruned twin — the prune must WIN, that's its only job
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .select(col("l_orderkey"), col("l_quantity"),
-          col("l_extendedprice"), col("l_returnflag"))
-      val bigLi = (0 until 10).map(i =>
-        li.withColumn("l_orderkey", col("l_orderkey") + lit(i * 100000000L)))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nl = bigLi.count()
-      val profCols = Seq("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
-      // the bloom/plain semi-join dim is STAGED (persisted) before
-      // timing, as production would have it — the r11 leg double-billed
-      // the dim scan+distinct inside the bloom twin. MEASURED VERDICT
-      // (r12, staged dim): bloom 0.52 s vs plain 0.42 s — in a single
-      // JVM the probe's exchange+sort cut (6M rows → ~12k+FP) still
-      // cannot pay for the 6M-row hash-probe scan, because an in-memory
-      // "shuffle" moves no network bytes. That is exactly why
-      // graft.core.BloomSemiJoin guards the prune behind a fact-side
-      // size estimate (BloomSpec pins both paths output-identical and
-      // the plan shapes); this leg keeps the honest local pair on
-      // record. Both twins run under a merge-join hint: the regime
-      // where runtime filters earn their keep is a build side too big
-      // to broadcast (locally AQE would broadcast 12k keys and the
-      // comparison would measure nothing); probe hash is the production
-      // xxhash64, not the oracle-parity md5 path the gate pins.
-      val bloomBuild = bigLi.select(col("l_orderkey").as("bk"))
-        .where(col("bk") % 500 === 0).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bloomBuild.count()
-      val nNodes = n
-      // signature-mix cost twin (r17): the shingle-hash arrays staged
-      // ONCE (untimed), so the two legs time ONLY the signature pass —
-      // classic k-min (16 mixes per shingle element) vs OPH (one
-      // binning pass + k-bin densify), the measured form of the
-      // kernel's 1/16-hash-work claim
-      val sigHashes = big.select(
-        graft.plans.kernels.shingle_hashes(col("text"), 3).as("_h"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sigHashes.count()
-
-      // Leg bodies (unchanged semantics from the pre-r17 suite; comments
-      // kept with their legs). Each leg swallows its own errors — the
-      // harness contract — and a failed leg reads -1 in the record.
-      val probeLegs: Seq[(String, () => Unit)] = Seq[(String, () => Unit)](
-        "filter_chain" -> (() => { new graft.operators.text.TextLengthFilter(
-          minLength = 100, maxLength = Some(400),
-          textCol = "text", lengthCol = Some("n_chars"))(big).count(); () }),
-        "exact_dedup" -> (() => { graft.operators.dedup.TextExactDedup(
-          textCol = "text", idCol = "doc_id", orderCol = "doc_id")(big).count(); () }),
-        "minhash_lsh_capped" -> (() => { new graft.operators.dedup.MinHashLSHDedup(
-          textCol = "text", idCol = "doc_id",
-          shingleWidth = 3, numHashes = 16, numBands = 4, threshold = 0.8,
-          maxBucketSize = Some(50))(big).count(); () }),
-        // exact-collapse-first LSH: full uncapped semantics at replicated
-        // scale (the production order — exact dedup folded into near-dedup)
-        "minhash_precollapse" -> (() => { new graft.operators.dedup.MinHashLSHDedup(
-          textCol = "text", idCol = "doc_id",
-          shingleWidth = 3, numHashes = 16, numBands = 4, threshold = 0.8,
-          preCollapseExact = true)(big).count(); () }),
-        // the signature pass ALONE over staged hash arrays (production
-        // splitmix family both sides); bit_xor forces every row without
-        // the ANSI long-overflow a plain sum of 2^63-scale values hits
-        "minhash_mix_kmin" -> (() => { sigHashes
-          .select(graft.plans.kernels.minhash_from_hashes(col("_h"), 16, false).as("_m"))
-          .select(bit_xor(element_at(col("_m"), 1))).head(); () }),
-        "minhash_mix_oph" -> (() => { sigHashes
-          .select(graft.plans.kernels.oph_minhash_from_hashes(col("_h"), 16, false).as("_m"))
-          .select(bit_xor(element_at(col("_m"), 1))).head(); () }),
-        // trained-classifier loop at 10x docs (r18): 8 full-batch GD
-        // iterations (one partial-aggregated scan each over the
-        // persisted featurized frame, model quantized per iteration) +
-        // the literal-weight scoring projection, materialized via noop
-        // (count() would prune the score column). Fresh operator per
-        // rep: the single-slot fit cache must not amortize across reps.
-        "logreg_fit_score" -> (() => {
-          val op = new graft.operators.ml.LogregQualityRefiner(
-            textCol = "text", idCol = "doc_id", labelCol = "_lab",
-            outputCol = "logreg_score")
-          // weak label derived from the staged columns (the probe frame
-          // stages only doc_id/text/n_chars — a projection, no restage)
-          op(big.withColumn("_lab", col("n_chars") > lit(290L)))
-            .select(col("doc_id"), col("logreg_score"))
-            .write.format("noop").mode("overwrite").save() }),
-        // span removal must materialize its OUTPUT columns (count() would
-        // prune the coverage-mask projection and measure only the joins)
-        "dup_ngram" -> (() => {
-          new graft.operators.text.DupNgramRefiner(
-            textCol = "text", idCol = "doc_id", ngramWidth = 8, minCount = 2)(big)
-            .write.format("noop").mode("overwrite").save() }),
-        // the fused quality batteries (C4 + Gopher kernels) as one chained
-        // filter pass — the pre-dedup cleaning stage's raw throughput
-        "quality_battery" -> (() => {
-          val g = new graft.operators.text.GopherQualityFilter(
-            "text", minWords = 10, minStopwords = 1)
-          val c = new graft.operators.text.C4QualityFilter("text")
-          g(c(big)).count(); () }),
-        // DSIR scoring at replication: two bounded model fits + the
-        // broadcast-table scoring scan (the data-selection stage)
-        "dsir_score" -> (() => {
-          new graft.operators.ml.DsirScoreRefiner(
-            s => s.read.parquet(s"$sfDir/documents.parquet")
-              .filter(org.apache.spark.sql.functions.col("source") === "src0")
-              .select(org.apache.spark.sql.functions.col("text")),
-            textCol = "text")(big)
-            .select(org.apache.spark.sql.functions.sum(
-              org.apache.spark.sql.functions.col("dsir_logw"))).head(); () }),
-        // URLFilter at replication — the BASELINE.md bottleneck stage
-        // (20,362 rec/s on 8 cores, regex scoring): urls synthesized from
-        // the fixture (host from source, pathword planted per id) so the
-        // blocklist, the lexicon regex, and the subdomain check all fire
-        "url_filter" -> (() => {
-          val urls = big.select(concat(lit("http://src"), col("doc_id") % 10,
-            lit(".example.com/page/"), col("doc_id") % 97,
-            when(col("doc_id") % 13 === 0, lit("/casino")).otherwise(lit("/a"))).as("url"))
-          new graft.operators.text.UrlFilter(
-            blockedDomains = Seq("src3.example.com"))(urls).count(); () }),
-        // HTML text extraction throughput — the baseline's Rust kernel row
-        // (5,000 doc/s on 8 cores): fixture docs wrapped in a multi-block
-        // page (nav + link-dense block + body paragraphs) and pushed
-        // through the real extractor
-        "html_extract" -> (() => {
-          val extract = udf((h: String) =>
-            graft.sources.Warc.htmlExtractText(h).map(_._2).getOrElse(""))
-          val pages = big.select(concat(
-            lit("<html><head><title>t</title></head><body><nav>skip this nav</nav>" +
-              "<div><a href=\"/a\">one link</a> <a href=\"/b\">two link</a></div><p>"),
-            col("text"),
-            lit("</p><p>second paragraph with plenty of ordinary words here</p></body></html>"))
-            .as("html"))
-          pages.select(length(extract(col("html"))).as("l"))
-            .agg(sum(col("l"))).head(); () }),
-        "filter_100x" -> (() => { new graft.operators.text.TextLengthFilter(
-          minLength = 100, maxLength = Some(400),
-          textCol = "text", lengthCol = Some("n_chars"))(big100).count(); () }),
-        // BM25 at replication: the two corpus scans (stats + score) plus
-        // the TakeOrdered top-k — the retrieval stage's raw throughput
-        "bm25" -> (() => { new graft.operators.text.Bm25Retrieval(
-          Seq("spark", "join", "window"), "text", "doc_id", topK = 50)(big).count(); () }),
-        // conditional bigram LM at replication — the r14 perplexity-style
-        // quality scorer: one tokenize into the staged hashed-count table,
-        // corpus counts + context totals + scoring join (scoped release
-        // inside the leg: the staging is the operator's honest
-        // per-invocation cost, same as the gate measurement). noop sink,
-        // not count(): count prunes the scoring expressions (the
-        // floor-log cost column and the per-doc weighted sums) and would
-        // shave the transcendental work off the record.
-        "bigram_lm" -> (() => {
-          graft.core.Staging.scoped {
-            new graft.operators.text.BigramLm("text", "doc_id")(big)
-              .write.format("noop").mode("overwrite").save() } }),
-        "bigram_lm_score_frozen" -> (() => {
-          new graft.operators.text.BigramLm("text", "doc_id")
-            .scoreAgainst(big, blmModel)
-            .write.format("noop").mode("overwrite").save() }),
-        // the full composed curation order (clean → filter → quality →
-        // corpus-global span removal → exact dedup) as ONE leg — the r9
-        // driver run blew up exactly here (3.7 s → 61 s) and per-operator
-        // legs can't see cross-stage recompute/spill amplification
-        "curation_stack" -> (() => {
-          // the raw fixture text has no sentence punctuation, so C4's
-          // doc rule would reject EVERYTHING and the downstream stages
-          // would measure an empty corpus (observed: 0 survivors).
-          // Suffix three sentence-shaped lines (stopwords included) so a
-          // realistic fraction survives into dup-ngram + exact dedup —
-          // and the shared suffix makes span removal actually work.
-          val stackIn = big.withColumn("text", concat(col("text"),
-            lit(". This sentence keeps the cleaner happy for the probe today.\n" +
-              "Another full sentence follows with plenty of the usual words.\n" +
-              "A third one closes the document for the quality rules.")))
-          val cleaned = new graft.operators.text.C4CleanRefiner("text")(stackIn)
-          val f1 = new graft.operators.text.C4QualityFilter("text")(cleaned)
-          val f2 = new graft.operators.text.GopherQualityFilter(
-            "text_c4_clean", minWords = 10, minStopwords = 2)(f1)
-          val dup = new graft.operators.text.DupNgramRefiner(
-            "text_c4_clean", "doc_id", ngramWidth = 8, minCount = 3,
-            hashName = "portable")(f2)
-          graft.operators.dedup.TextExactDedup(
-            textCol = "text_dedup_spans", idCol = "doc_id",
-            orderCol = "doc_id")(dup).count(); () }),
-        // fixed-point PageRank over a 10x-node synthetic graph (2 edges
-        // per node): 5 iterations × 2 exchanges — the iterative-join
-        // scale shape, long keys only on the wire
-        "pagerank5" -> (() => {
-          val nodes = big.select(col("doc_id").as("id"))
-          val edges = nodes.select(col("id").as("src"), ((col("id") * 2 + 1) % nNodes).as("dst"))
-            .unionByName(nodes.select(col("id").as("src"), ((col("id") * 3 + 7) % nNodes).as("dst")))
-          new graft.operators.graph.FixedPointPageRank(iterations = 5)
-            .ranks(nodes, edges).count(); () }),
-        // triangle counting over the 10x circulant C(n;1,2): the
-        // degree-ordered wedge join's two hash joins at 10x nodes.
-        // Dense 0..n-1 ids via spark.range — big's re-keyed doc_ids
-        // modulo n would fold the replicas onto the low range and the
-        // measured graph would be skew-hubbed, not the claimed circulant
-        "triangle" -> (() => {
-          val ids = spark.range(nNodes).toDF("id")
-          val tedges = ids.select(col("id").as("src"), ((col("id") + 1) % nNodes).as("dst"))
-            .unionByName(ids.select(col("id").as("src"), ((col("id") + 2) % nNodes).as("dst")))
-          new graft.operators.graph.TriangleCount().counts(tedges).count(); () }),
-        // inverted index at 10x docs: distinct-term explode + the bounded
-        // TopKAgg posting aggregation (never a full collect of a hot term)
-        "inverted_index" -> (() => { new graft.operators.text.InvertedIndex(
-          minDocFreq = 2L, topTerms = 100, postingsCap = 10)(big).count(); () }),
-        // weighted LPA over the same 10x graph: 4 rounds × (join + 2-level
-        // argmax) — the community-detection twin of the PageRank leg
-        "lpa4" -> (() => {
-          val nodes = big.select(col("doc_id").as("id"))
-          val edges = nodes.select(col("id").as("src"),
-              ((col("id") * 2 + 1) % nNodes).as("dst"), lit(2L).as("n"))
-            .unionByName(nodes.select(col("id").as("src"),
-              ((col("id") * 3 + 7) % nNodes).as("dst"), lit(1L).as("n")))
-          new graft.operators.graph.LabelPropagation(iterations = 4)
-            .communities(edges).count(); () }),
-        // corpus novelty at 10x: explode + two hash-keyed aggregations
-        // (first-occurrence + per-doc rollup) — the per-doc attribution
-        // twin of the dup-ngram tier, pure long-keyed shuffles
-        "novelty" -> (() => { new graft.operators.text.NgramNovelty(
-          "text", "doc_id", shingleWidth = 3)(big).count(); () }),
-        // distributed OLS at 10x: tokenize-heavy featurization + ONE
-        // partial-aggregated moment pass (9 longs/partition on the wire)
-        "ols_fit" -> (() => {
-          val feats = big.select(col("n_chars").cast("long").as("y"),
-            graft.functions.TextFunctions.tokenCount(col("text")).as("x1"),
-            size(array_distinct(graft.functions.TextFunctions.tokensOf(col("text"))))
-              .cast("long").as("x2"))
-          new graft.operators.stats.LinearFit("y", "x1", "x2").fit(feats).head(); () }),
-        "semantic_dedup" -> (() => { new graft.operators.vector.AutoBucketedCosineDedup(
-          vecCol = "embedding", idCol = "vec_id", threshold = 0.95,
-          numBuckets = 32)(bigEmb).count(); () }),
-        // the r16 probed tier at 10x: same trained cells, nprobe=2 —
-        // tracks the recall lever's ~nprobe^2 candidate-mass cost at scale
-        "semantic_dedup_probed" -> (() => { new graft.operators.vector.AutoBucketedCosineDedup(
-          vecCol = "embedding", idCol = "vec_id", threshold = 0.95,
-          numBuckets = 32, nprobe = 2)(bigEmb).count(); () }),
-        // the r17 anchored hot-cell cap at 10x: the linear-mass policy
-        // the 100 TB config ships — tracks the cap's cost (one extra
-        // cell-keyed rank window) against the uncapped probed leg
-        "semantic_dedup_anchored" -> (() => { new graft.operators.vector.AutoBucketedCosineDedup(
-          vecCol = "embedding", idCol = "vec_id", threshold = 0.95,
-          numBuckets = 32, nprobe = 2, maxCellSize = Some(100),
-          anchoredCap = true)(bigEmb).count(); () }),
-        // sampled-fit twin of the probed leg (r20, VERDICT r19 #3): the
-        // k-means fit — the probe suite's single most expensive cost
-        // (34.1 s cold in the r19 record) — runs on the deterministic
-        // 1-in-4 id sample via the operator's designed 100 TB lever
-        // (`trainSampleMod`); assignment and the dedup still cover the
-        // full corpus. ADDED next to the full-fit legs, which keep their
-        // exact semantics for round-over-round comparability.
-        "semantic_dedup_sampled_fit" -> (() => { new graft.operators.vector.AutoBucketedCosineDedup(
-          vecCol = "embedding", idCol = "vec_id", threshold = 0.95,
-          numBuckets = 32, nprobe = 2,
-          trainSampleMod = Some(4))(bigEmb).count(); () }),
-        // PCA at 10x vectors (r18): the full fit-and-project pass — one
-        // distributed exact-moment aggregate (the only corpus scan),
-        // driver Jacobi, then the stateless literal-matrix projection
-        // materialized via noop (count would prune the projection).
-        // The fit is the scale story: the exchange carries one 17 KB
-        // moment row per partition regardless of corpus size.
-        "pca_fit_project" -> (() => {
-          val op = new graft.operators.vector.PcaProjection(
-            vecCol = "embedding", dims = 64, q = 8)
-          op(bigEmb).write.format("noop").mode("overwrite").save() }),
-        "knn_join_100q" -> (() => { graft.operators.vector.AnnSearch.knnJoin(
-          bigEmb, emb.limit(100), "embedding", "vec_id", "vec_id", k = 10).count(); () }),
-        // multi-probe LSH knn join (100 queries, 3 buckets probed each,
-        // the REAL operator incl. its bounded-heap + rank-window top-k):
-        // the bucket-pruned path at 10x vectors — candidates are
-        // (probes+1)/2^bits of the corpus per query, never the cross
-        // product the brute leg pays. count() cannot prune the cosine
-        // here: the rank window orders by it.
-        "multiprobe_knn_100q" -> (() => { graft.operators.vector.AnnSearch
-          .knnJoinMultiProbe(bigEmb, emb.limit(100), "embedding", "vec_id",
-            "vec_id", k = 10, coords = 0 until 4, probes = 2).count(); () }),
-        "phash_hash" -> (() => { stagedBytes
-          .select(graft.operators.image.ImageOps.phashUdf(col("image.bytes")).as("p"))
-          .filter(col("p").isNotNull).count(); () }),
-        "phash_exact_dedup" -> (() => { new graft.operators.image.ImagePhashDedup(
-          imageCol = "image", idCol = "id", orderCol = "id")(bigImg).count(); () }),
-        "phash_near_capped" -> (() => { new graft.operators.image.ImagePhashNearDedup(
-          imageCol = "image", idCol = "id", k = 8,
-          maxBucketSize = Some(50))(bigImg).count(); () }),
-        "asof_join" -> (() => {
-          val purchases = bigEv.where(col("event_type") === "purchase")
-            .select(col("event_id"), col("user_id"), col("ts"))
-          val clicks = bigEv.where(col("event_type") === "click")
-            .select(col("user_id"), col("ts").as("cts"), col("event_id").as("click_id"))
-          new graft.operators.events.AsofJoin(
-            keyCol = "user_id", leftTsCol = "ts", rightTsCol = "cts",
-            rightOrderCol = Some("click_id"))(purchases, clicks).count(); () }),
-        // CDC fold at 10x events: max_by netting (one key shuffle, one
-        // struct per key on the wire) + one outer merge join
-        "cdc_merge" -> (() => {
-          val changes = bigEv.select(col("user_id").as("k"), col("ts"),
-            col("event_id"), col("event_type"),
-            (col("event_id") % 997).cast("double").as("v"))
-          val base = changes.select(col("k")).distinct().withColumn("bal", lit(0.0))
-          new graft.operators.table.CdcMerge(
-            "k", "ts", "event_id", "event_type", "error", "v")
-            .merge(base, changes, "bal").count(); () }),
-        "profile" -> (() => { graft.operators.table.ColumnProfiler
-          .profile(bigLi, profCols).count(); () }),
-        "bloom_semi" -> (() => {
-          val bits = 1 << 20; val kh = 4
-          val bf = bloomBuild.agg(graft.functions.BloomSketch.bloomSketch(
-              xxhash64(col("bk")).bitwiseAND(lit((1L << 60) - 1)), bits, kh).as("bf"))
-            .head().getSeq[Long](0).toArray
-          bigLi.where(graft.functions.BloomSketch.mightContainLit(bf,
-              xxhash64(col("l_orderkey")).bitwiseAND(lit((1L << 60) - 1)), kh))
-            .join(bloomBuild.hint("merge"), col("l_orderkey") === col("bk"), "left_semi")
-            .count(); () }),
-        "plain_semi" -> (() => {
-          bigLi.join(bloomBuild.hint("merge"), col("l_orderkey") === col("bk"), "left_semi")
-            .count(); () })
-      ).map { case (name, fn) =>
-        // every leg runs in its own staging scope (the gate-leg runOne
-        // contract): operators that stage intermediates (DupNgram,
-        // MinHash*, semantic dedup) release them at leg exit instead of
-        // leaking them into the session-global registry for the rest of
-        // the probe suite — unreleased staged frames from earlier legs
-        // were exactly the cross-leg storage pressure behind the r17/r18
-        // probe instabilities (phash 0.45x, minhash_precollapse 10x run
-        // spread). Staging cost itself stays inside the timed region.
-        name -> (() => try graft.core.Staging.scoped(fn()) catch {
-          case e: Throwable =>
-            // a throw mid-leg leaves the harness a time-to-exception —
-            // a bogus (usually tiny) number the min estimator would
-            // then publish as the leg's official value. Mark the leg
-            // failed; its results are dropped after the run so the
-            // record reads the documented -1, never a fake fast time.
-            failedProbeLegs += name
-            System.err.println(s"[probe] $name: $e")
-        })
-      }
-      probeHarness.run(probeLegs)
-      failedProbeLegs.foreach { n =>
-        probeHarness.results.remove(n); probeHarness.medians.remove(n)
-      }
-      bloomBuild.unpersist(); bigLi.unpersist(); bigEv.unpersist()
-      bigImg.unpersist(); stagedBytes.unpersist(); bigEmb.unpersist()
-      big.unpersist(); blmModel.release()
-      sigHashes.unpersist()
-
-      def pt(name: String): Double = probeHarness.results.getOrElse(name, -1.0)
-      val tFilter = pt("filter_chain"); val tExact = pt("exact_dedup")
-      val tLsh = pt("minhash_lsh_capped"); val tLshPre = pt("minhash_precollapse")
-      val tDup = pt("dup_ngram"); val tQuality = pt("quality_battery")
-      val tDsir = pt("dsir_score"); val tUrl = pt("url_filter")
-      val tHtml = pt("html_extract"); val tFilter100 = pt("filter_100x")
-      val tBm25 = pt("bm25"); val tBigram = pt("bigram_lm")
-      val tBigramScore = pt("bigram_lm_score_frozen"); val tStack = pt("curation_stack")
-      val tPr = pt("pagerank5"); val tTri = pt("triangle")
-      val tInv = pt("inverted_index"); val tLpa = pt("lpa4")
-      val tNovelty = pt("novelty"); val tOls = pt("ols_fit")
-      val tLogreg = pt("logreg_fit_score")
-      val tSem = pt("semantic_dedup"); val tSemProbed = pt("semantic_dedup_probed")
-      val tPcaFp = pt("pca_fit_project")
-      val tSemAnchored = pt("semantic_dedup_anchored")
-      val tSemSampled = pt("semantic_dedup_sampled_fit")
-      val tKnn = pt("knn_join_100q"); val tMultiProbe = pt("multiprobe_knn_100q")
-      val tPhashHash = pt("phash_hash"); val tPhashExact = pt("phash_exact_dedup")
-      val tPhashNear = pt("phash_near_capped"); val tAsof = pt("asof_join")
-      val tCdc = pt("cdc_merge"); val tProfile = pt("profile")
-      val tBloomSemi = pt("bloom_semi"); val tPlainSemi = pt("plain_semi")
-      val tMixKmin = pt("minhash_mix_kmin"); val tMixOph = pt("minhash_mix_oph")
-      // the compact line's probe: the BASELINE.md-comparable throughput
-      // rows only (~0.6 KB), so the driver's window-parse succeeds again
-      def rate(c: Long, t: Double): String =
-        if (t > 0) "%.0f".formatLocal(java.util.Locale.ROOT, c / t) else "-1"
-      probeCompactJson = Some(
-        s"""{"rows":$n,"replication":10,"url_filter_docs_per_sec":${rate(n, tUrl)},"filter_docs_per_sec":${rate(n, tFilter)},"filter_100x_docs_per_sec":${rate(n100, tFilter100)},"html_extract_docs_per_sec":${rate(n, tHtml)},"exact_dedup_docs_per_sec":${rate(n, tExact)},"minhash_lsh_docs_per_sec":${rate(n, tLsh)},"curation_stack_docs_per_sec":${rate(n, tStack)},"quality_battery_docs_per_sec":${rate(n, tQuality)},"phash_hash_images_per_sec":${rate(ni, tPhashHash)},"phash_near_images_per_sec":${rate(ni, tPhashNear)},"semantic_dedup_vecs_per_sec":${rate(nv, tSem)},"asof_events_per_sec":${rate(ne, tAsof)},"bigram_lm_score_frozen_docs_per_sec":${rate(n, tBigramScore)}}""")
-      // probe-suite self-evidence, same contract as the gate record:
-      // guarded/retried lists + per-run detail for flagged legs
-      val probeUnstable = probeHarness.unstableLegs
-      val pg = probeHarness.guarded.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val pr = probeHarness.retried.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val pu = probeUnstable.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val pd = probeHarness.detailJson(probeHarness.guarded.toSeq ++ probeUnstable
-        ++ probeHarness.stabilized.toSeq)
-      val ps = probeHarness.stabilized.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val pf = failedProbeLegs.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val evidence = s""""probe_estimator":"warm_min_interleaved_retry","probe_reps":$probeReps,"probe_guarded":$pg,"probe_retried":$pr,"probe_unstable":$pu,"probe_stabilized":$ps,"probe_failed":$pf,"probe_detail":$pd"""
-
-      f"""{"rows":$n,"replication":10,"filter_chain_sec":$tFilter%.3f,"exact_dedup_sec":$tExact%.3f,"minhash_lsh_capped_sec":$tLsh%.3f,"minhash_precollapse_sec":$tLshPre%.3f,"minhash_precollapse_docs_per_sec":${n / tLshPre}%.0f,"dup_ngram_sec":$tDup%.3f,"curation_stack_sec":$tStack%.3f,"curation_stack_docs_per_sec":${n / tStack}%.0f,"quality_battery_sec":$tQuality%.3f,"quality_battery_docs_per_sec":${n / tQuality}%.0f,"dsir_score_sec":$tDsir%.3f,"dsir_docs_per_sec":${n / tDsir}%.0f,"url_filter_sec":$tUrl%.3f,"url_filter_docs_per_sec":${n / tUrl}%.0f,"bm25_sec":$tBm25%.3f,"bm25_docs_per_sec":${n / tBm25}%.0f,"pagerank5_sec":$tPr%.3f,"pagerank_nodes_per_sec":${n / tPr}%.0f,"filter_docs_per_sec":${n / tFilter}%.0f,"exact_dedup_docs_per_sec":${n / tExact}%.0f,"minhash_lsh_docs_per_sec":${n / tLsh}%.0f,"dup_ngram_docs_per_sec":${n / tDup}%.0f,"vectors":$nv,"semantic_dedup_sec":$tSem%.3f,"semantic_dedup_vecs_per_sec":${nv / tSem}%.0f,"semantic_dedup_probed_sec":$tSemProbed%.3f,"semantic_dedup_probed_vecs_per_sec":${nv / tSemProbed}%.0f,"semantic_dedup_anchored_sec":$tSemAnchored%.3f,"semantic_dedup_anchored_vecs_per_sec":${nv / tSemAnchored}%.0f,"semantic_dedup_sampled_fit_sec":$tSemSampled%.3f,"semantic_dedup_sampled_fit_vecs_per_sec":${nv / tSemSampled}%.0f,"pca_fit_project_sec":$tPcaFp%.3f,"pca_fit_project_vecs_per_sec":${nv / tPcaFp}%.0f,"knn_join_100q_sec":$tKnn%.3f,"images":$ni,"phash_hash_sec":$tPhashHash%.3f,"phash_hash_images_per_sec":${ni / tPhashHash}%.0f,"phash_exact_dedup_sec":$tPhashExact%.3f,"phash_exact_images_per_sec":${ni / tPhashExact}%.0f,"phash_near_capped_sec":$tPhashNear%.3f,"phash_near_images_per_sec":${ni / tPhashNear}%.0f,"events":$ne,"asof_join_sec":$tAsof%.3f,"asof_events_per_sec":${ne / tAsof}%.0f,"html_extract_sec":$tHtml%.3f,"html_extract_docs_per_sec":${n / tHtml}%.0f,"novelty_sec":$tNovelty%.3f,"novelty_docs_per_sec":${n / tNovelty}%.0f,"triangle_sec":$tTri%.3f,"triangle_nodes_per_sec":${nNodes / tTri}%.0f,"inverted_index_sec":$tInv%.3f,"inverted_index_docs_per_sec":${n / tInv}%.0f,"ols_fit_sec":$tOls%.3f,"ols_docs_per_sec":${n / tOls}%.0f,"logreg_fit_score_sec":$tLogreg%.3f,"logreg_docs_per_sec":${n / tLogreg}%.0f,"filter_100x_rows":$n100,"filter_100x_sec":$tFilter100%.3f,"filter_100x_docs_per_sec":${n100 / tFilter100}%.0f,"cdc_merge_sec":$tCdc%.3f,"cdc_events_per_sec":${ne / tCdc}%.0f,"lpa4_sec":$tLpa%.3f,"lpa_nodes_per_sec":${nNodes / tLpa}%.0f,"lineitem_rows":$nl,"profile_sec":$tProfile%.3f,"profile_cells_per_sec":${nl * profCols.size / tProfile}%.0f,"bloom_semi_sec":$tBloomSemi%.3f,"plain_semi_sec":$tPlainSemi%.3f,"bigram_lm_sec":$tBigram%.3f,"bigram_lm_docs_per_sec":${n / tBigram}%.0f,"bigram_lm_score_frozen_sec":$tBigramScore%.3f,"bigram_lm_score_frozen_docs_per_sec":${n / tBigramScore}%.0f,"multiprobe_knn_100q_sec":$tMultiProbe%.3f,"minhash_mix_kmin_sec":$tMixKmin%.3f,"minhash_mix_oph_sec":$tMixOph%.3f,$evidence}"""
+    if (benchOnly.isEmpty && !skipProbe) {
+      val probeHarness = new BenchHarness(probeReps, wallLimit)
+      val replication = 10
+      val rows = ProbeLegs.run(ProbeLegs.all,
+        new ProbeLegs.Inputs(spark, sfDir, replication), probeHarness)
+      probeRecord = Some(ProbeLegs.record(rows, probeHarness, replication))
+      probeCompact = Some(ListMap("replication" -> replication,
+        "probe_failed" -> probeHarness.failed.toSeq,
+        "per_sec" -> ProbeLegs.perSec(rows, probeHarness)))
     }
-    probeJson = Some(probe)
 
     finishedNormally = true
     spark.stop()

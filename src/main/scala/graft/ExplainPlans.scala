@@ -24,9 +24,11 @@ object ExplainPlans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      // scoped: frames a query stages while planning release per query
+      val plan = graft.core.Staging.scoped {
+        SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      }
       Files.write(outDir.resolve(s"${n}_${suffix}.txt"),
         plan.getBytes("UTF-8"))
       println(s"wrote ${n}_${suffix}.txt (${plan.length} chars)")

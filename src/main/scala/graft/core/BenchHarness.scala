@@ -18,10 +18,15 @@ package graft.core
   * guarded vs 1.32 s clean, code byte-identical). Per-run evidence for
   * flagged legs is kept ([[detail]]) so the record is self-evidencing.
   *
+  * One failure rule for every leg: a leg that throws on ANY run is
+  * marked [[failed]], all of its times are dropped, and it is never run
+  * again — so a time-to-exception can never become a leg's value.
+  *
   * State is live-updated per measurement: a shutdown hook reading
   * [[results]] mid-run emits an honest partial record.
   */
-final class BenchHarness(reps: Int, wallLimit: Double) {
+final class BenchHarness(val reps: Int, wallLimit: Double) {
+  import scala.collection.immutable.ListMap
   import scala.collection.mutable
 
   /** Official per-leg seconds: min over all observed runs (warm reps +
@@ -49,6 +54,8 @@ final class BenchHarness(reps: Int, wallLimit: Double) {
     */
   val repTimes: mutable.LinkedHashMap[String, mutable.ArrayBuffer[Double]] =
     mutable.LinkedHashMap.empty
+  /** Legs that threw on some run; none of their times is kept. */
+  val failed: mutable.ArrayBuffer[String] = mutable.ArrayBuffer.empty
 
   private def medianOf(ts: Seq[Double]): Double = {
     val s = ts.sorted; val m = s.length / 2
@@ -63,27 +70,39 @@ final class BenchHarness(reps: Int, wallLimit: Double) {
   }
 
   /** Run the whole protocol. `legs` execute in the given order each
-    * pass; each thunk must swallow its own query errors (a throw aborts
-    * the suite — the bench's contract is "measure what runs").
+    * pass. A leg that throws is logged, marked [[failed]] and dropped
+    * from every record field and every later pass.
     */
   def run(legs: Seq[(String, () => Unit)]): Unit = {
     val skip = scala.collection.mutable.Set.empty[String]
-    def measure(fn: () => Unit): Double = {
-      val t0 = System.nanoTime(); fn(); (System.nanoTime() - t0) / 1e9
+    // one run of `name`: its seconds, or None if it threw — then the
+    // leg leaves every pass, list and time map (a failed leg is neither
+    // guarded nor unstable, so no retry or stabilization run reaches it)
+    def measure(name: String, fn: () => Unit): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { fn(); Some((System.nanoTime() - t0) / 1e9) }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name; skip += name; guarded -= name
+          Seq(results, medians, warmups, repTimes).foreach(_.remove(name))
+          None
+      }
     }
+    def legNamed(name: String) = legs.find(_._1 == name).map(_._2)
     legs.foreach { case (name, fn) =>
-      val w = measure(fn)
-      warmups(name) = w
-      // a leg pathological enough to blow the limit COLD is recorded
-      // from its warmup and skips the warm passes (it still gets the
-      // end-of-suite retry)
-      if (w > wallLimit) { record(name, w); guarded += name; skip += name }
+      measure(name, fn).foreach { w =>
+        warmups(name) = w
+        // a leg pathological enough to blow the limit COLD is recorded
+        // from its warmup and skips the warm passes (it still gets the
+        // end-of-suite retry)
+        if (w > wallLimit) { record(name, w); guarded += name; skip += name }
+      }
     }
     var pass = 0
     while (pass < reps) {
       legs.foreach { case (name, fn) =>
-        if (!skip(name)) {
-          val t = measure(fn)
+        if (!skip(name)) measure(name, fn).foreach { t =>
           record(name, t)
           if (t > wallLimit) { guarded += name; skip += name }
         }
@@ -93,10 +112,8 @@ final class BenchHarness(reps: Int, wallLimit: Double) {
     // end-of-suite retry: exactly one more run per guarded leg, after
     // every other measurement — min over all observed runs stays official
     guarded.toSeq.foreach { name =>
-      legs.find(_._1 == name).foreach { case (_, fn) =>
-        val t = measure(fn)
-        record(name, t)
-        retried += name
+      legNamed(name).foreach { fn =>
+        measure(name, fn).foreach { t => record(name, t); retried += name }
       }
     }
     // stabilization run (r17): a leg whose MEDIAN reads >2x its min
@@ -109,13 +126,14 @@ final class BenchHarness(reps: Int, wallLimit: Double) {
     // way the surviving flag is evidence-backed. Guarded legs already
     // got their retry above and are excluded.
     unstableLegs.filterNot(guarded.contains).foreach { name =>
-      legs.find(_._1 == name).foreach { case (_, fn) =>
-        val t = measure(fn)
-        record(name, t)
-        stabilized += name
-        // the stabilization run is still under the wall budget's
-        // contract: a blow-out here is evidence, not a freebie
-        if (t > wallLimit) guarded += name
+      legNamed(name).foreach { fn =>
+        measure(name, fn).foreach { t =>
+          record(name, t)
+          stabilized += name
+          // the stabilization run is still under the wall budget's
+          // contract: a blow-out here is evidence, not a freebie
+          if (t > wallLimit) guarded += name
+        }
       }
     }
   }
@@ -128,16 +146,46 @@ final class BenchHarness(reps: Int, wallLimit: Double) {
     case (k, m) if results.get(k).exists(mn => mn >= 0.1 && m > 2.0 * mn) => k
   }
 
-  /** Per-run evidence for the given legs as a JSON object fragment:
-    * `{"leg":{"warmup":w,"runs":[...]}}` — emitted for guarded/unstable
-    * legs so a flagged record carries its own proof.
+  /** Per-run evidence for the given legs:
+    * `{"leg":{"warmup":w,"runs":[...]}}` — emitted for flagged legs so a
+    * flagged record carries its own proof.
     */
-  def detailJson(names: Seq[String]): String = {
-    def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    names.distinct.filter(repTimes.contains).map { n =>
-      val runs = repTimes(n).map(sec).mkString("[", ",", "]")
-      val w = warmups.get(n).map(sec).getOrElse("null")
-      s""""$n":{"warmup":$w,"runs":$runs}"""
-    }.mkString("{", ",", "}")
+  def detail(names: Seq[String]): ListMap[String, ListMap[String, Any]] =
+    ListMap(names.distinct.filter(repTimes.contains).map { n =>
+      n -> ListMap("warmup" -> warmups.get(n).map(BenchHarness.sec),
+        "runs" -> repTimes(n).toSeq.map(BenchHarness.sec))
+    }: _*)
+
+  /** The record's evidence fields, rendered once for every block that
+    * carries them; `keys` names them in the order guarded, retried,
+    * unstable, stabilized, failed, detail (see [[BenchHarness.GateKeys]]).
+    * Detail covers every flagged leg, including stabilized legs whose
+    * flag cleared — the run that produced the official min stays visible.
+    */
+  def evidence(keys: Seq[String]): ListMap[String, Any] = {
+    val unstable = unstableLegs
+    ListMap(keys.zip(Seq(guarded.toSeq, retried.toSeq, unstable, stabilized.toSeq,
+      failed.toSeq, detail(guarded.toSeq ++ unstable ++ stabilized))): _*)
   }
+}
+
+object BenchHarness {
+  /** Evidence key names of the gate record (see [[BenchHarness.evidence]]). */
+  val GateKeys: Seq[String] = Seq("wall_guarded", "retried", "unstable_legs",
+    "stabilized", "failed_legs", "reps_detail")
+  /** Evidence key names of the scale-probe record. */
+  val ProbeKeys: Seq[String] = Seq("probe_guarded", "probe_retried", "probe_unstable",
+    "probe_stabilized", "probe_failed", "probe_detail")
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+
+  /** A record (nested `ListMap`s, `Seq`s, `Option`s) as one JSON line;
+    * `None` renders as null.
+    */
+  def json(record: Any): String = mapper.writeValueAsString(record)
+
+  /** Seconds as every record prints them: three decimals. */
+  def sec(v: Double): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(v).setScale(3, java.math.RoundingMode.HALF_UP)
 }

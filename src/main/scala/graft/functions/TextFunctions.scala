@@ -49,10 +49,6 @@ object TextFunctions {
     * Used by MinHash / Jaccard near-dup (SURVEY.md training-data ops).
     * Pass an already-materialized token column (stage it with [[tokensOf]])
     * so the token split isn't recomputed per shingle.
-    *
-    * The codegen'd [[graft.plans.kernels.WordShingles]] kernel is the
-    * one-JVM-pass twin of this chain (KernelSpec pins them
-    * bit-identical, incl. null-slot tokens).
     */
   def shingles(toks: Column, w: Int): Column = {
     val n = size(toks)

@@ -163,8 +163,8 @@ final class UnigramLmInduction(
   * BIGINT arithmetic (`V[i] = max_l V[i−l] + lp·64 − 1`; the ·64−1
   * packing breaks score ties toward fewer pieces) — no float
   * COMPARISON ever decides a segmentation, so Spark and DuckDB agree
-  * bit-for-bit. The float-free-ness matters: the trainer-faithful
-  * [[graft.plans.kernels.UnigramTokenCount]] compares summed doubles
+  * bit-for-bit. The float-free-ness matters: the trainer's own
+  * segmentation ([[UnigramLmInduction.segment]]) compares summed doubles
   * and cannot be replayed by a second engine.
   *
   * Scale shape: vocab derivation is one distributed substring

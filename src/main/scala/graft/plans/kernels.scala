@@ -214,30 +214,10 @@ object kernels {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
-  /** 60-bit portable hash of each string in an array (for hashed posting
-    * lists / hashed shingle sets — shuffles fixed-width longs, not text).
-    */
-  case class HashArray(child: Expression)
-      extends UnaryExpression with UnaryRefCodegen {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = {
-      val ss = v.asInstanceOf[ArrayData]
-      val out = new Array[Long](ss.numElements())
-      var i = 0
-      while (i < out.length) { out(i) = portableHashJvm(ss.getUTF8String(i)); i += 1 }
-      new GenericArrayData(out)
-    }
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-
-  /** Scalar 60-bit portable hash of ONE string — the single-value form of
-    * [[HashArray]], bit-identical to the declarative
-    * `conv(substring(md5(cast(cast)))).cast(long)` chain
+  /** Scalar 60-bit portable hash of ONE string, bit-identical to the
+    * declarative `conv(substring(md5(cast(cast)))).cast(long)` chain
     * (`HashFunctions.portableHash64` routes here) but one MessageDigest
-    * call with no hex-string/substring/conv allocations per value. The
-    * per-token / per-gram hash is the map-side scan cost of every
-    * oracle-parity text operator, so the chain's 4 intermediate strings
-    * per value were pure overhead.
+    * call with no hex-string/substring/conv allocations per value.
     */
   case class PortableHash64(child: Expression)
       extends UnaryExpression with UnaryRefCodegen {
@@ -263,7 +243,8 @@ object kernels {
 
   /** Fused tokenize → word w-shingle → 60-bit portable hash → distinct.
     * One JVM loop per row; equals
-    * `array_distinct(HashArray(shingles(tokensOf(text), w)))` bit-for-bit
+    * `array_distinct(transform(shingles(tokensOf(text), w), portableHash64))`
+    * bit-for-bit
     * (first-occurrence order; set-equal is all downstream ops need).
     * Fewer than w tokens (incl. null/empty text after normalize) → empty
     * array, mirroring `TextFunctions.shingles`.
@@ -304,37 +285,11 @@ object kernels {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
-  /** Fused tokenize → per-TOKEN 60-bit portable hash (with multiplicity,
-    * first-to-last order) — bit-identical to
-    * `transform(TextFunctions.tokensOf(text), t => portableHash64(t))`
-    * but one JVM pass per row instead of an interpreted HOF invoking the
-    * md5 chain per element. Callers coalesce NULL text to '' (tokensOf
-    * maps NULL to an empty array; the wrapper below does it). Unlike
-    * [[ShingleHashes]] this keeps duplicates and order: consumers count
-    * occurrences ([[graft.operators.text.BigramLm]] pairs adjacent
-    * elements, so position matters).
-    */
-  case class TokenHashes(child: Expression)
-      extends UnaryExpression with UnaryRefCodegen {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = {
-      val toks = tokenizeJvm(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-      val out = new Array[Long](toks.length)
-      var i = 0
-      while (i < out.length) {
-        out(i) = portableHashJvm(
-          org.apache.spark.unsafe.types.UTF8String.fromString(toks(i)))
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-
   /** Fused tokenize → per-token portable hash → adjacent-pair bigram
     * rows: array of `(_h1, _h2, _hb)` structs, one per bigram
     * OCCURRENCE (multiplicity + order kept) — bit-identical to pairing
-    * [[TokenHashes]]' adjacent elements and mixing with
+    * the adjacent elements of
+    * `transform(tokensOf(text), portableHash64)` and mixing with
     * `BigramLm.mixPair` (`mixed(h1,0) + mixed(h2,1)` — the overflow-safe
     * 30-bit-split constant mix), but ONE JVM pass per row: each token
     * hashes once (n md5 calls for n tokens) and the pair structs
@@ -415,115 +370,6 @@ object kernels {
       new GenericArrayData(out)
     }
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-
-  /** Word w-shingles of a TOKEN ARRAY as strings — shingle i =
-    * `toks[i..i+w-1]` joined by one space, fewer than w tokens → empty
-    * array. Bit-identical to the declarative
-    * `transform(sequence(0, size(toks)-w), i -> concat_ws(" ",
-    * element_at(toks, i+1) .. element_at(toks, i+w)))` chain
-    * ([[graft.functions.TextFunctions.shingles]]' former body, pinned in
-    * KernelSpec incl. null-slot tokens, which concat_ws SKIPS) but ONE
-    * JVM pass per row: the interpreted HOF re-entered the lambda per
-    * shingle with w element_at calls each (r20 — the last interpreted
-    * HOF family in the gate plans: BoilerplateNgrams, TextRepetition,
-    * NgramLm, NgramDiversity all derive word-grams from it).
-    */
-  case class WordShingles(child: Expression, w: Int)
-      extends UnaryExpression with UnaryRefCodegen {
-    require(w >= 1)
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = {
-      val toks = v.asInstanceOf[ArrayData]
-      val n = toks.numElements()
-      if (n < w) return new GenericArrayData(Array.empty[Any])
-      val sep = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
-      val out = new Array[Any](n - w + 1)
-      val window = new Array[org.apache.spark.unsafe.types.UTF8String](w)
-      var i = 0
-      while (i <= n - w) {
-        var j = 0
-        while (j < w) {
-          // concat_ws skips null inputs — preserve that for arbitrary
-          // token columns (tokensOf output never has null slots)
-          window(j) = if (toks.isNullAt(i + j)) null else toks.getUTF8String(i + j)
-          j += 1
-        }
-        out(i) = org.apache.spark.unsafe.types.UTF8String.concatWs(sep, window: _*)
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-
-  /** Per-band mean-centered sign-bucket keys of a vector in ONE pass —
-    * array of `(_band, _bk)` structs, one per band, feeding the banded
-    * explode directly ([[graft.operators.vector.AnnSearch]]'s
-    * centered-bucket tiers; VERDICT r19 #4). `stats` is the broadcast
-    * one-row aggregate `(count, sum(floor(v[c]*1e6)) per coord)` packed
-    * as `struct(n, array(sums...))` in `allCoords` order. Bit-identical
-    * to the declarative per-band
-    * `sum_kk(when(floor(v[c]*1e6)*n >= sum_c, 1<<kk, 0))` chains: same
-    * floored 1e6 scale, same `scaled*n >= sum` centering test evaluated
-    * in LONG arithmetic, and the declarative NULL semantics (a missing
-    * coordinate — vector shorter than c+1 — or a NULL corpus sum makes
-    * that bit contribute 0, exactly the `when`'s otherwise arm).
-    */
-  case class BandKeys(left: Expression, right: Expression,
-      bands: Seq[Seq[Int]], allCoords: Seq[Int])
-      extends BinaryExpression with BinaryRefCodegen {
-    require(bands.nonEmpty && bands.forall(_.nonEmpty))
-    require(allCoords == bands.flatten.distinct.sorted,
-      "allCoords must be the sorted distinct union of the bands' coords")
-    private val pairType = StructType(Seq(
-      StructField("_band", IntegerType, nullable = false),
-      StructField("_bk", LongType, nullable = false)))
-    override def dataType: DataType = ArrayType(pairType, containsNull = false)
-    private val coordIdx = allCoords.zipWithIndex.toMap
-    // per band: the (sums-array index, bit) pairs its key is built from
-    private val bandPlan: Array[Array[(Int, Long)]] = bands.map(coords =>
-      coords.zipWithIndex.map { case (c, kk) => (coordIdx(c), 1L << kk) }.toArray
-    ).toArray
-    @transient private lazy val et =
-      left.dataType.asInstanceOf[ArrayType].elementType
-    override def nullSafeEval(vecAny: Any, statsAny: Any): Any = {
-      val vec = vecAny.asInstanceOf[ArrayData]
-      val stats = statsAny.asInstanceOf[InternalRow]
-      val n = stats.getLong(0)
-      val sums = stats.getArray(1)
-      val nel = vec.numElements()
-      // scaled*n per allCoords slot; Long.MinValue marks "bit is 0"
-      // (missing coord / NULL sum — the declarative when()'s null arm)
-      val scaledN = new Array[Long](allCoords.length)
-      val defined = new Array[Boolean](allCoords.length)
-      var i = 0
-      while (i < allCoords.length) {
-        val c = allCoords(i)
-        if (c < nel && !vec.isNullAt(c) && !sums.isNullAt(i)) {
-          scaledN(i) = math.floor(arrayDouble(vec, et, c) * 1000000.0).toLong * n
-          defined(i) = true
-        }
-        i += 1
-      }
-      val out = new Array[Any](bandPlan.length)
-      var bi = 0
-      while (bi < bandPlan.length) {
-        var bk = 0L
-        val plan = bandPlan(bi)
-        var j = 0
-        while (j < plan.length) {
-          val (si, bit) = plan(j)
-          if (defined(si) && scaledN(si) >= sums.getLong(si)) bk |= bit
-          j += 1
-        }
-        out(bi) = org.apache.spark.sql.catalyst.InternalRow(bi, bk)
-        bi += 1
-      }
-      new GenericArrayData(out)
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-      copy(left = l, right = r)
   }
 
   /** MinHash signature from an ALREADY-HASHED shingle array (the output of
@@ -1824,82 +1670,9 @@ object kernels {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
-  /** Token count under a FIXED unigram-LM vocabulary in one JVM pass
-    * per row: normalize (the shared `TextFunctions.normalizeText`
-    * algebra), whitespace-split, Viterbi-segment each word under the
-    * piece log-probs (max Σ log p, longest piece on ties — the exact
-    * [[graft.operators.text.UnigramLmInduction.segment]] semantics,
-    * spec-pinned equal), sum the piece counts. Per-partition word memo
-    * as in [[BpeTokenCount]]. Unsegmentable words (chars outside the
-    * vocab) fall back to char count, mirroring the trainer's coverage
-    * fallback.
-    */
-  case class UnigramTokenCount(child: Expression, vocab: Seq[(String, Double)],
-      maxPieceLen: Int)
-      extends UnaryExpression with UnaryRefCodegen {
-    override def dataType: DataType = LongType
-    @transient private lazy val logp: java.util.HashMap[String, java.lang.Double] = {
-      val m = new java.util.HashMap[String, java.lang.Double]()
-      vocab.foreach { case (p, lp) => m.put(p, java.lang.Double.valueOf(lp)) }
-      m
-    }
-    @transient private lazy val memo = new java.util.HashMap[String, java.lang.Long]()
-    private val MaxMemo = 1 << 16
-
-    private def segCount(word: String): Long = {
-      val n = word.length
-      val best = Array.fill(n + 1)(Double.NegativeInfinity)
-      val cnt = new Array[Long](n + 1)
-      best(0) = 0.0
-      var i = 1
-      while (i <= n) {
-        var l = 1
-        while (l <= math.min(i, maxPieceLen)) {
-          if (best(i - l) > Double.NegativeInfinity) {
-            val p = logp.get(word.substring(i - l, i))
-            if (p != null && best(i - l) + p.doubleValue() >= best(i)) {
-              best(i) = best(i - l) + p.doubleValue()
-              cnt(i) = cnt(i - l) + 1
-            }
-          }
-          l += 1
-        }
-        i += 1
-      }
-      if (best(n) == Double.NegativeInfinity) n.toLong else cnt(n)
-    }
-
-    override def nullSafeEval(v: Any): Any = {
-      val norm = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-        .toString.replaceAll("\\s+", " ").trim.toLowerCase(java.util.Locale.ROOT)
-      if (norm.isEmpty) java.lang.Long.valueOf(0L)
-      else {
-        var total = 0L
-        var from = 0
-        while (from <= norm.length) {
-          val sp = norm.indexOf(' ', from)
-          val end = if (sp < 0) norm.length else sp
-          if (end > from) {
-            val w = norm.substring(from, end)
-            val cached = memo.get(w)
-            val c = if (cached != null) cached.longValue()
-            else {
-              val n = segCount(w)
-              if (memo.size < MaxMemo) memo.put(w, java.lang.Long.valueOf(n))
-              n
-            }
-            total += c
-          }
-          from = end + 1
-        }
-        java.lang.Long.valueOf(total)
-      }
-    }
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-
-  /** ORACLE-PORTABLE Viterbi token count: like [[UnigramTokenCount]]
-    * but over INTEGER-scaled piece log-probs with an exact packed-
+  /** ORACLE-PORTABLE Viterbi token count: segments like
+    * [[graft.operators.text.UnigramLmInduction.segment]] but over
+    * INTEGER-scaled piece log-probs with an exact packed-
     * BIGINT DP, so a SQL engine can replay it bit-for-bit (no float
     * comparisons decide anything). Per position the DP keeps
     * `V[i] = max_l candidate(l)` where
@@ -1907,8 +1680,8 @@ object kernels {
     * in-vocab, else the sentinel `−2⁶²`; the ·64−1 packing makes the
     * max lexicographic on (score, fewer pieces) — scaled scores are
     * exact BIGINTs, so ties are decided by piece count, never by float
-    * noise (the tie rule difference vs [[UnigramTokenCount]]'s
-    * trainer-faithful longest-piece rule). Piece count decodes as
+    * noise (the tie rule difference vs the trainer's longest-piece
+    * rule). Piece count decodes as
     * `(−V[n]) % 64`; a word longer than 63 chars (pieces wouldn't fit
     * the packing) or with an out-of-vocab char (V[n] ≤ −2⁶¹ —
     * unreachable; real scores are ≥ −10¹¹ even at 10¹² corpus tokens)
@@ -1996,10 +1769,6 @@ object kernels {
   def unigram_scaled_token_count(text: Column, vocab: Seq[(String, Long)],
       maxPieceLen: Int): Column =
     expr2col(UnigramScaledTokenCount(colExpr(text), vocab, maxPieceLen))
-  /** Unigram-LM token count under a fixed trained vocab. */
-  def unigram_token_count(text: Column, vocab: Seq[(String, Double)],
-      maxPieceLen: Int): Column =
-    expr2col(UnigramTokenCount(colExpr(text), vocab, maxPieceLen))
   def array_cosine(a: Column, b: Column): Column = expr2col(ArrayCosine(colExpr(a), colExpr(b)))
   def unicode_normalize(text: Column, form: String = "NFC",
       stripControls: Boolean = false): Column =
@@ -2062,22 +1831,8 @@ object kernels {
     expr2col(DeflateKeep(colExpr(
       org.apache.spark.sql.functions.coalesce(
         text, org.apache.spark.sql.functions.lit(""))), minRatio, maxRatio))
-  def hash_array(ss: Column): Column = expr2col(HashArray(colExpr(ss)))
-  /** Word w-shingle strings of a token array; < w tokens → []. */
-  def word_shingles(toks: Column, w: Int): Column =
-    expr2col(WordShingles(colExpr(toks), w))
-  /** Per-band centered sign-bucket `(_band,_bk)` structs; `stats` is
-    * `struct(n, array(sums in allCoords order))`. */
-  def band_keys(vec: Column, stats: Column,
-      bands: Seq[Seq[Int]], allCoords: Seq[Int]): Column =
-    expr2col(BandKeys(colExpr(vec), colExpr(stats), bands, allCoords))
   /** Scalar 60-bit portable hash; caller casts to string first. */
   def portable_hash64(s: Column): Column = expr2col(PortableHash64(colExpr(s)))
-  /** Per-token portable hashes (multiplicity + order kept); NULL text → []. */
-  def token_hashes(text: Column): Column =
-    expr2col(TokenHashes(colExpr(
-      org.apache.spark.sql.functions.coalesce(
-        text, org.apache.spark.sql.functions.lit("")))))
   /** Adjacent-token bigram rows `(_h1,_h2,_hb)` (multiplicity + order
     * kept); NULL text → []. */
   def token_bigrams(text: Column): Column =

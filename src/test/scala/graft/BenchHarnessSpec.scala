@@ -100,17 +100,88 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(h.results("esc") < 0.2) // official min stays the honest fast run
   }
 
-  test("detailJson carries warmup + every observed run for the asked legs") {
+  test("detail carries warmup + every observed run for the asked legs") {
     val h = new graft.core.BenchHarness(reps = 2, wallLimit = 0.05)
     h.run(Seq("x" -> leg(Set(2)), "y" -> leg(Set.empty)))
-    val d = h.detailJson(Seq("x", "x", "zzz_never_ran"))
-    assert(d.startsWith("{\"x\":{\"warmup\":"), d)
-    assert(d.contains("\"runs\":["), d)
+    val d = h.detail(Seq("x", "x", "zzz_never_ran"))
     // duplicate names collapse; unknown legs are omitted, not fabricated
-    assert(d.indexOf("\"x\"") == d.lastIndexOf("\"x\"") && !d.contains("zzz"), d)
+    assert(d.keys.toSeq == Seq("x"), d)
+    assert(d("x")("warmup").isInstanceOf[Some[_]], d)
     // the evidence must show the guard-tripping run AND the fast retry
-    val runs = d.substring(d.indexOf("\"runs\":[") + 8, d.indexOf("]"))
-      .split(",").map(_.toDouble)
+    val runs = d("x")("runs").asInstanceOf[Seq[java.math.BigDecimal]].map(_.doubleValue)
     assert(runs.count(_ > 0.05) == 1 && runs.count(_ <= 0.05) >= 1, d)
+    val json = graft.core.BenchHarness.json(d)
+    assert(json.startsWith("{\"x\":{\"warmup\":") && json.contains("\"runs\":["), json)
+  }
+
+  // a leg that throws on the invocation numbers in `throwOn` (1-based,
+  // as in `leg`) and otherwise sleeps `slowMs` on `slowOn`, `fastMs` else
+  private def flaky(throwOn: Set[Int], slowOn: Set[Int] = Set.empty,
+      slowMs: Long = 120, fastMs: Long = 2): () => Unit = {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    () => {
+      val c = calls.incrementAndGet()
+      Thread.sleep(if (slowOn(c)) slowMs else fastMs)
+      if (throwOn(c)) throw new IllegalStateException(s"boom on call $c")
+    }
+  }
+
+  private def assertFailed(h: graft.core.BenchHarness, name: String): Unit = {
+    assert(h.failed.toSeq == Seq(name), h.failed.toString)
+    assert(!h.results.contains(name) && !h.medians.contains(name),
+      s"a failed leg must carry no time: ${h.results.get(name)}")
+    assert(!h.repTimes.contains(name) && !h.warmups.contains(name))
+    assert(!h.retried.contains(name) && !h.stabilized.contains(name))
+    assert(h.evidence(graft.core.BenchHarness.GateKeys)("failed_legs") == Seq(name))
+    assert(h.detail(Seq(name)).isEmpty, "no per-run evidence of a failed leg's times")
+  }
+
+  test("a leg that throws on its warmup, a warm rep, or only its retry reads as failed, never as a time") {
+    // throws at warmup: never run again
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val h1 = new graft.core.BenchHarness(reps = 3, wallLimit = 0.05)
+    h1.run(Seq("cold" -> (() => { calls.incrementAndGet(); throw new RuntimeException("cold") }),
+      "ok" -> leg(Set.empty)))
+    assertFailed(h1, "cold")
+    assert(calls.get == 1, s"a failed leg must not be run again: ${calls.get} runs")
+    assert(h1.results.contains("ok") && h1.repTimes("ok").length == 3)
+    // throws on the second warm rep: its fast first rep is dropped too
+    val h2 = new graft.core.BenchHarness(reps = 3, wallLimit = 0.05)
+    h2.run(Seq("mid" -> flaky(Set(3)), "ok" -> leg(Set.empty)))
+    assertFailed(h2, "mid")
+    // slow (guarded) warm rep, then the end-of-suite retry throws: the
+    // guard-tripping time must not survive as the leg's value
+    val h3 = new graft.core.BenchHarness(reps = 2, wallLimit = 0.05)
+    h3.run(Seq("retry" -> flaky(throwOn = Set(4), slowOn = Set(3))))
+    assertFailed(h3, "retry")
+    assert(!h3.guarded.contains("retry"))
+    // an unstable leg whose stabilization run throws is failed as well
+    val h4 = new graft.core.BenchHarness(reps = 2, wallLimit = 10.0)
+    h4.run(Seq("stab" -> flaky(throwOn = Set(4), slowOn = Set(2), slowMs = 700, fastMs = 120)))
+    assertFailed(h4, "stab")
+  }
+
+  test("probe registry: leg names are unique") {
+    val names = ProbeLegs.all.map(_.name)
+    assert(names.nonEmpty && names.distinct == names,
+      s"duplicate legs: ${names.diff(names.distinct)}")
+  }
+
+  test("probe record: exactly one <name>_sec and <name>_rows per registry leg, null for a failed leg") {
+    val h = new graft.core.BenchHarness(reps = 1, wallLimit = 10.0)
+    val failing = ProbeLegs.all(1).name
+    h.run(ProbeLegs.all.map(l => l.name -> (if (l.name == failing)
+      (() => throw new RuntimeException("boom")) else leg(Set.empty))))
+    val rows = ProbeLegs.all.map(_.name -> 1000L)
+    val rec = ProbeLegs.record(rows, h, replication = 10)
+    val secs = rec.keys.filter(k => k.endsWith("_sec") && !k.endsWith("_per_sec")).toSeq
+    assert(secs.sorted == ProbeLegs.all.map(_.name + "_sec").sorted)
+    assert(rec.keys.count(_.endsWith("_rows")) == ProbeLegs.all.size)
+    assert(rec(failing + "_sec") == None && rec("probe_failed") == Seq(failing))
+    ProbeLegs.all.map(_.name).filter(_ != failing).foreach(n =>
+      assert(rec(n + "_sec").isInstanceOf[Some[_]], n))
+    val json = graft.core.BenchHarness.json(rec)
+    assert(json.contains("\"" + failing + "_sec\":null"), json)
+    assert(ProbeLegs.perSec(rows, h)(failing).isEmpty)
   }
 }

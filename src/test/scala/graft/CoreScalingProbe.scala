@@ -1,21 +1,31 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import graft.core.BenchHarness
+
+import scala.collection.immutable.ListMap
 
 /** Dev-only probe (r20, VERDICT r19 #6): core-scaling evidence the
   * sf0.1 gate bench cannot give — the heaviest shuffle-bound operator
-  * families at `SPARK_GRAFT_SCALE_X` (default 50×) replication, timed
-  * identically at whatever `SPARK_GRAFT_CPUS` the caller sets. Run it
-  * twice (8 and 32) and compare the printed seconds: at this volume the
-  * per-task work dominates fixed job overhead, so the ratio reads the
-  * operators' actual parallelism, unlike the 1–3 s sf0.1 gate legs
-  * (whose 8-core total BEAT the 32-core total in the r19 driver record
-  * — fixed-cost-bound, not code-bound).
+  * families from the [[ProbeLegs]] registry at `SPARK_GRAFT_SCALE_X`
+  * (default 50×) replication, timed identically at whatever
+  * `SPARK_GRAFT_CPUS` the caller sets. Run it twice (8 and 32) and
+  * compare the printed seconds: at this volume the per-task work
+  * dominates fixed job overhead, so the ratio reads the operators'
+  * actual parallelism, unlike the 1–3 s sf0.1 gate legs (whose 8-core
+  * total BEAT the 32-core total in the r19 driver record —
+  * fixed-cost-bound, not code-bound).
+  *
+  * The legs run through the bench's harness (warmup, 2 interleaved
+  * reps, one failure rule) and print one JSON record in the scale
+  * probe's shape.
   *
   * `sbt "Test/runMain graft.CoreScalingProbe"` with
   * SPARK_GRAFT_CPUS / SPARK_GRAFT_SF_DIR / SPARK_GRAFT_SCALE_X.
   */
 object CoreScalingProbe {
+  private val legNames = Set("minhash_lsh_capped", "exact_dedup", "dup_ngram",
+    "bigram_lm", "novelty", "quality_battery", "semantic_dedup_probed")
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val xf = sys.env.getOrElse("SPARK_GRAFT_SCALE_X", "50").toInt
@@ -24,68 +34,14 @@ object CoreScalingProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"), col("n_chars"))
-    val big = (0 until xf).map(i =>
-      docs.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-      // replicate-then-repartition: the union's xf×scan-split partition
-      // list is itself core-count-dependent overhead; a fixed 256-way
-      // spread makes the two runs read identical task shapes
-      .repartition(256)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = big.count()
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val bigEmb = (0 until xf).map(i =>
-      emb.withColumn("vec_id", col("vec_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-      .repartition(256)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nv = bigEmb.count()
-    def leg(name: String)(f: => Unit): Unit = {
-      val reps = (1 to 2).map { _ =>
-        graft.core.Staging.scoped {
-          val t0 = System.nanoTime; f; (System.nanoTime - t0) / 1e9
-        }
-      }
-      println(f"SCALING cpus=$cpus x=$xf rows=$n $name%-24s " +
-        f"reps ${reps.map(t => f"$t%.2f").mkString(", ")} min ${reps.min}%.2f s")
-    }
-    leg("minhash_lsh_capped") {
-      new graft.operators.dedup.MinHashLSHDedup(
-        textCol = "text", idCol = "doc_id",
-        shingleWidth = 3, numHashes = 16, numBands = 4, threshold = 0.8,
-        maxBucketSize = Some(50))(big).count()
-    }
-    leg("exact_dedup") {
-      graft.operators.dedup.TextExactDedup(
-        textCol = "text", idCol = "doc_id", orderCol = "doc_id")(big).count()
-    }
-    leg("dup_ngram") {
-      new graft.operators.text.DupNgramRefiner(
-        textCol = "text", idCol = "doc_id", ngramWidth = 8, minCount = 2)(big)
-        .write.format("noop").mode("overwrite").save()
-    }
-    leg("bigram_lm") {
-      new graft.operators.text.BigramLm("text", "doc_id")(big)
-        .write.format("noop").mode("overwrite").save()
-    }
-    leg("novelty") {
-      new graft.operators.text.NgramNovelty(
-        "text", "doc_id", shingleWidth = 3)(big).count()
-    }
-    leg("quality_battery") {
-      val g = new graft.operators.text.GopherQualityFilter(
-        "text", minWords = 10, minStopwords = 1)
-      val c = new graft.operators.text.C4QualityFilter("text")
-      g(c(big)).count()
-    }
-    leg("semantic_dedup_probed") {
-      new graft.operators.vector.AutoBucketedCosineDedup(
-        vecCol = "embedding", idCol = "vec_id", threshold = 0.95,
-        numBuckets = 32, nprobe = 2)(bigEmb).count()
-    }
+    val harness = new BenchHarness(reps = 2, wallLimit = Double.PositiveInfinity)
+    // replicate-then-repartition: the union's xf×scan-split partition
+    // list is itself core-count-dependent overhead; a fixed 256-way
+    // spread makes the two runs read identical task shapes
+    val rows = ProbeLegs.run(ProbeLegs.all.filter(l => legNames(l.name)),
+      new ProbeLegs.Inputs(spark, sfDir, xf, spread = Some(256)), harness)
+    println(BenchHarness.json(ListMap("cpus" -> cpus.toInt) ++
+      ProbeLegs.record(rows, harness, xf)))
     spark.stop()
   }
 }

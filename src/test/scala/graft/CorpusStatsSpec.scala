@@ -177,30 +177,6 @@ class CorpusStatsSpec extends AnyFunSuite {
     assert(vocab == again)
   }
 
-  test("unigram token-count kernel matches the trainer's encode on the fixture") {
-    import spark.implicits._
-    val docs = table("documents").select($"doc_id", $"text").limit(200)
-    val u = new graft.operators.text.UnigramLmInduction(
-      "text", seedMaxLen = 4, seedSize = 800, vocabSize = 80, emIters = 2)
-    val vocab = u.train(docs)
-    val got = docs.select($"doc_id",
-        graft.plans.kernels.unigram_token_count($"text", vocab, 4).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rows = docs.collect()
-    rows.foreach { r =>
-      val text = if (r.isNullAt(1)) "" else r.getString(1)
-      val norm = text.trim.toLowerCase.replaceAll("\\s+", " ")
-      val exp = if (norm.isEmpty) 0L
-        else norm.split(" ").filter(_.nonEmpty)
-          .map(w => u.encode(w, vocab).size.toLong).sum
-      assert(got(r.getLong(0)) == exp, s"doc ${r.getLong(0)}")
-    }
-    // the learned vocab compresses vs character count
-    val charToks = rows.map(r => if (r.isNullAt(1)) 0L
-      else r.getString(1).count(c => !c.isWhitespace).toLong).sum
-    assert(got.values.sum < charToks)
-  }
-
   test("scaled viterbi kernel == declarative packed-DP twin, incl. fallbacks and ties") {
     import spark.implicits._
     val op = new graft.operators.text.UnigramViterbiCount(

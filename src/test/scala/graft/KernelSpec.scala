@@ -147,9 +147,15 @@ class KernelSpec extends AnyFunSuite {
 
   private lazy val docs = table("documents").select(col("doc_id"), col("text"))
 
+  /** The declarative 60-bit portable hash chain (the expression the
+    * oracle SQL mirrors) — the non-kernel reference for hashed pins.
+    */
+  private def declaredHash(c: org.apache.spark.sql.Column) =
+    conv(substring(md5(c.cast("string").cast("binary")), 1, 15), 16, 10).cast("long")
+
   test("fused ShingleHashes set-equals the declarative tokensOf→shingles→hash chain") {
-    val declarative = array_sort(array_distinct(kernels.hash_array(
-      TextFunctions.shingles(TextFunctions.tokensOf(col("text")), 3))))
+    val declarative = array_sort(array_distinct(transform(
+      TextFunctions.shingles(TextFunctions.tokensOf(col("text")), 3), declaredHash(_))))
     val fused = array_sort(kernels.shingle_hashes(col("text"), 3))
     val diff = docs.select(declarative.as("a"), fused.as("b"))
       .filter(col("a") =!= col("b")).count()
@@ -192,8 +198,7 @@ class KernelSpec extends AnyFunSuite {
     // expression the oracle SQL mirrors), incl. a non-string input whose
     // cast must match and NULLs.
     import spark.implicits._
-    val declared = conv(substring(md5(col("v").cast("string").cast("binary")), 1, 15),
-      16, 10).cast("long")
+    val declared = declaredHash(col("v"))
     val df = docs.limit(200).select(col("text").as("v"))
       .unionByName(spark.range(50).select(col("id").cast("string").as("v")))
       .unionByName(Seq[Option[String]](None, Some(""), Some(" a\tB "))
@@ -204,29 +209,11 @@ class KernelSpec extends AnyFunSuite {
     rows.foreach(r => assert(r.get(0) == r.get(1)))
   }
 
-  test("token_hashes kernel == transform(tokensOf, portableHash64) declarative form") {
-    import spark.implicits._
-    val declared = transform(TextFunctions.tokensOf(col("text")),
-      t => conv(substring(md5(t.cast("string").cast("binary")), 1, 15), 16, 10)
-        .cast("long"))
-    val rows = docs.limit(200)
-      .select(col("text"))
-      .unionByName(Seq[Option[String]](None, Some(""), Some("  "), Some("One two TWO"))
-        .toDF("text"))
-      .select(kernels.token_hashes(col("text")).as("k"), declared.as("d"))
-      .collect()
-    rows.foreach { r =>
-      val k = r.getSeq[Long](0)
-      val d = Option(r.getSeq[Long](1)).getOrElse(Seq.empty[Long])
-      assert(k == d, s"token_hashes mismatch: $k vs $d")
-    }
-  }
-
   test("token_bigrams kernel == paired token_hashes + mixPair declarative form") {
     import spark.implicits._
     // the EXACT pre-r19 BigramLm.occurrences chain: staged hash array,
     // interpreted pair transform, mixed(h1,0)+mixed(h2,1) bigram key
-    val hts = kernels.token_hashes(col("text"))
+    val hts = transform(TextFunctions.tokensOf(col("text")), declaredHash(_))
     val declaredPairs = when(size(col("_hts")) < 2,
       array().cast("array<struct<_h1:bigint,_h2:bigint>>"))
       .otherwise(transform(sequence(lit(0), size(col("_hts")) - 2),
@@ -273,69 +260,6 @@ class KernelSpec extends AnyFunSuite {
         .collect()
       shorts.foreach(r => assert(r.getSeq[Long](0).isEmpty))
     }
-  }
-
-  test("word_shingles kernel == transform(sequence, concat_ws(element_at...)) declarative form") {
-    import spark.implicits._
-    // the EXACT pre-r20 TextFunctions.shingles body
-    def declared(toks: org.apache.spark.sql.Column, w: Int) = {
-      val n = size(toks)
-      when(n < w, array().cast("array<string>")).otherwise(
-        transform(sequence(lit(0), n - w),
-          i => concat_ws(" ", (0 until w).map(j => element_at(toks, i + j + 1)): _*)))
-    }
-    val toks = TextFunctions.tokensOf(col("text"))
-    for (w <- Seq(1, 2, 3, 8)) {
-      val bad = docs.limit(200).select(col("text"))
-        .unionByName(Seq[Option[String]](None, Some(""), Some("solo"),
-          Some("a b"), Some("One two TWO one  two here"), Some(" tab\tsep "))
-          .toDF("text"))
-        .select(kernels.word_shingles(toks, w).as("k"), declared(toks, w).as("d"))
-        .filter(not(col("k") <=> col("d"))).count()
-      assert(bad == 0, s"w=$w")
-    }
-    // null-slot token arrays: concat_ws SKIPS nulls — the kernel must too
-    val withNulls = Seq(Seq[String]("a", null, "c", "d"), Seq[String](null, null))
-      .toDF("toks")
-    val bad2 = withNulls
-      .select(kernels.word_shingles(col("toks"), 2).as("k"),
-        declared(col("toks"), 2).as("d"))
-      .filter(not(col("k") <=> col("d"))).count()
-    assert(bad2 == 0)
-  }
-
-  test("band_keys kernel == per-band when(scaled*n >= sum) bit chains (banded + single)") {
-    import spark.implicits._
-    val bands = Seq(Seq(0, 1, 2, 3), Seq(4, 5, 6, 7), Seq(1, 3, 5, 7))
-    val allCoords = bands.flatten.distinct.sorted
-    def scaled(vec: org.apache.spark.sql.Column, c: Int) =
-      floor(element_at(vec, c + 1).cast("double") * lit(1000000.0d))
-    val emb = TestSpark.table("embeddings")
-      .select(col("vec_id"), col("embedding")).limit(300)
-      // short + null-slot vectors exercise the missing-coord null arm
-      .unionByName(Seq(
-        (9000001L, Seq(0.5, -0.25)),
-        (9000002L, Seq.empty[Double])).toDF("vec_id", "embedding"))
-    val base = emb.filter(col("embedding").isNotNull)
-    val sumCols = allCoords.map(c =>
-      sum(scaled(col("embedding"), c)).as(s"_ms_c$c"))
-    val stats = base.agg(count(lit(1)).as("_mn"), sumCols: _*)
-    // the EXACT pre-r20 centeredCappedBandBuckets arm
-    val bandStructs = bands.zipWithIndex.map { case (coords, bi) =>
-      val bits = coords.zipWithIndex.map { case (c, kk) =>
-        when(scaled(col("embedding"), c) * col("_mn") >= col(s"_ms_c$c"),
-          lit(1L << kk)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(bi).as("_band"), bits.as("_bk"))
-    }
-    val statsStruct = struct(col("_mn"),
-      array(allCoords.map(c => col(s"_ms_c$c")): _*))
-    val bad = base.crossJoin(broadcast(stats))
-      .select(
-        kernels.band_keys(col("embedding"), statsStruct, bands, allCoords).as("k"),
-        array(bandStructs: _*).as("d"))
-      .filter(not(col("k") <=> col("d"))).count()
-    assert(bad == 0)
   }
 
   test("wordlist_hits kernel == size(filter(toks, array_contains)) declarative form") {
