@@ -57,50 +57,56 @@ trait Refiner extends Operator {
     added(df).foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
 }
 
-/** Mark-don't-drop result of one [[RejectingOperator]] in disposition
-  * mode: `stillAlive` / `newlyRejected` are flags local to this operator
-  * (the chain guards them with the accumulated alive flag), `details` is
-  * the provenance struct to stamp on newly rejected rows, and
-  * `internalCols` are scratch columns the chain drops after consuming the
-  * flag expressions.
+/** Mark-don't-drop result of one [[RejectingOperator]]: `stillAlive` is
+  * the operator's drop rule as a flag local to this operator (false on
+  * the rows it drops; the chain ANDs it with the accumulated alive
+  * flag), `details` is the provenance struct to stamp on the rows it
+  * drops, and `internalCols` are scratch columns the chain drops after
+  * consuming the flag expressions.
   */
 final case class Marked(
     df: DataFrame,
     stillAlive: Column,
-    newlyRejected: Column,
     details: Column,
     internalCols: Seq[String] = Nil)
 
 /** Any operator that drops rows and can produce the annotated complement
   * (§2.8 of SURVEY.md) — filters, window dedups, and the pairwise
-  * near-dup family all route their rejects through this.
+  * near-dup family all route their rejects through this. `mark` is the
+  * one place an operator states which rows it drops; `rejected` is
+  * derived from it.
   */
 trait RejectingOperator extends Operator {
-  def rejected(df: DataFrame): DataFrame
-
-  /** Disposition twin of `apply`/`rejected`: mark rows instead of dropping
-    * them, so passed AND every operator's rejects come out of ONE scan
-    * (the runner's single-pass reject routing). `alive` is the accumulated
-    * survival flag — only alive rows may compete or be rejected; `tag`
-    * uniquifies any scratch columns.
+  /** The drop rule: mark rows instead of dropping them, so passed AND
+    * every operator's rejects come out of ONE scan (the runner's
+    * single-pass reject routing). `alive` is the accumulated survival
+    * flag — only alive rows may compete or be rejected; `tag`
+    * uniquifies any scratch columns. With every row alive, `apply`
+    * keeps exactly the rows marked `stillAlive`.
     */
   def mark(df: DataFrame, alive: Column, tag: String): Marked
+
+  /** The rows `apply` drops, annotated with `_rejection_details`: `mark`
+    * with every row alive, filtered to the rows it drops. Columns are
+    * the input's, in input order, then `_rejection_details`.
+    */
+  final def rejected(df: DataFrame): DataFrame = {
+    val m = mark(df, lit(true), "_rej")
+    val inputCols = df.columns.filterNot(_ == Rejection.ColName)
+      .map(c => col("`" + c.replace("`", "``") + "`"))
+    m.df.filter(!m.stillAlive).select(inputCols :+ m.details.as(Rejection.ColName): _*)
+  }
 }
 
 /** Keeps rows matching a predicate (reference Filter,
-  * framework/operator.py:226-238); `rejected` is the annotated complement
-  * (§2.8 of SURVEY.md).
+  * framework/operator.py:226-238).
   */
 trait RowFilter extends RejectingOperator {
   def keep(df: DataFrame): Column
   final def apply(df: DataFrame): DataFrame = df.filter(keep(df))
-  final def rejected(df: DataFrame): DataFrame =
-    df.filter(!keep(df)).withColumn(Rejection.ColName, Rejection.filtered(name))
 
-  final def mark(df: DataFrame, alive: Column, tag: String): Marked = {
-    val k = keep(df)
-    Marked(df, k, !k, Rejection.filtered(name))
-  }
+  final def mark(df: DataFrame, alive: Column, tag: String): Marked =
+    Marked(df, keep(df), Rejection.filtered(name))
 }
 
 /** Global first-wins deduplication (reference Deduplicator +
@@ -128,34 +134,20 @@ trait Deduplicator extends RejectingOperator {
   /** Id of the row, recorded on rejects as `representative_id` of the kept row. */
   def representative(df: DataFrame): Column
 
-  private def annotated(df: DataFrame): DataFrame = {
+  final def apply(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("_dedup_key")).orderBy(col("_dedup_order"))
     df.withColumn("_dedup_key", key(df))
       .withColumn("_dedup_order", order(df))
       .withColumn("_dedup_rn", row_number().over(w))
-      .withColumn("_dedup_rep", first(col("_dedup_rep_src")).over(w))
-      .drop("_dedup_rep_src")
+      .filter(col("_dedup_rn") === 1)
+      .drop("_dedup_key", "_dedup_order", "_dedup_rn")
   }
 
-  private def withRepSrc(df: DataFrame): DataFrame =
-    df.withColumn("_dedup_rep_src", representative(df))
-
-  private val internal = Seq("_dedup_key", "_dedup_order", "_dedup_rn", "_dedup_rep")
-
-  final def apply(df: DataFrame): DataFrame =
-    annotated(withRepSrc(df)).filter(col("_dedup_rn") === 1).drop(internal: _*)
-
-  /** Rows dropped as duplicates, annotated with key + first-seen representative. */
-  final override def rejected(df: DataFrame): DataFrame =
-    annotated(withRepSrc(df)).filter(col("_dedup_rn") > 1)
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, col("_dedup_key"), col("_dedup_rep")))
-      .drop(internal: _*)
-
-  /** Disposition mode: dead rows stay in the frame, so the first-wins
-    * window sorts alive rows first — the winner is the first ALIVE row by
-    * arrival order, exactly the sequential semantics where rows rejected
-    * upstream never reached this operator.
+  /** Dead rows stay in the frame, so the first-wins window sorts alive
+    * rows first — the winner is the first ALIVE row by arrival order,
+    * exactly the sequential semantics where rows rejected upstream never
+    * reached this operator. Rejects carry the key and the winner's
+    * `representative`.
     */
   final def mark(df: DataFrame, alive: Column, tag: String): Marked = {
     val aC = s"_dal$tag"; val kC = s"_dk$tag"; val oC = s"_do$tag"
@@ -166,29 +158,37 @@ trait Deduplicator extends RejectingOperator {
     val w = Window.partitionBy(col(kC)).orderBy(col(aC).desc, col(oC))
     d = d.withColumn(rnC, row_number().over(w))
       .withColumn(repC, first(col(repSrcC)).over(w))
-    Marked(d, col(rnC) === 1, col(rnC) > 1,
+    Marked(d, col(rnC) === 1,
       Rejection.duplicate(name, col(kC), col(repC)),
       Seq(aC, kC, oC, rnC, repC, repSrcC))
   }
 }
 
-/** Disposition `mark` for the pairwise drop-set dedup family (MinHash
-  * LSH, n-gram Jaccard, SimHash-near, embedding-cosine): duplicate pairs
-  * are computed over the ALIVE subset only — rows rejected upstream never
-  * compete, exactly the sequential semantics — then one left join stamps
-  * the representative back onto the chain.
+/** The pairwise drop-set dedup family (MinHash LSH, n-gram Jaccard and
+  * containment, SimHash-near, embedding-cosine, probed cosine, image
+  * phash-near): an operator states only its verified duplicate pairs
+  * `(d1, d2)`, `d1 < d2`, over `idCol`. Every `d2` is dropped, with the
+  * smallest `d1` it pairs with as its representative.
   */
-object PairwiseMark {
-  def apply(
-      df: DataFrame, alive: Column, tag: String, idCol: String, opName: String,
-      pairs: DataFrame => DataFrame): Marked = {
+trait PairwiseDedup extends RejectingOperator {
+  def idCol: String
+  def verifiedPairs(df: DataFrame): DataFrame
+
+  final def apply(df: DataFrame): DataFrame =
+    df.join(verifiedPairs(df).select(col("d2").as(idCol)).distinct(), Seq(idCol), "left_anti")
+
+  /** Duplicate pairs are computed over the ALIVE subset only — rows
+    * rejected upstream never compete, exactly the sequential semantics —
+    * then one left join stamps the representative back onto the chain.
+    */
+  final def mark(df: DataFrame, alive: Column, tag: String): Marked = {
     val repC = s"_prep$tag"
-    val reps = pairs(df.filter(alive)).groupBy(col("d2"))
+    val reps = verifiedPairs(df.filter(alive)).groupBy(col("d2"))
       .agg(min(col("d1")).as(repC))
       .withColumnRenamed("d2", idCol)
     val d = df.join(reps, Seq(idCol), "left")
-    Marked(d, col(repC).isNull, col(repC).isNotNull,
-      Rejection.duplicate(opName, lit(null).cast("string"), col(repC)), Seq(repC))
+    Marked(d, col(repC).isNull,
+      Rejection.duplicate(name, lit(null).cast("string"), col(repC)), Seq(repC))
   }
 }
 
@@ -221,7 +221,7 @@ object Disposition {
     case r: RejectingOperator =>
       val m = r.mark(df, col(AliveCol), tag)
       m.df.withColumns(Map(
-        Rejection.ColName -> when(col(AliveCol) && m.newlyRejected, m.details)
+        Rejection.ColName -> when(col(AliveCol) && !m.stillAlive, m.details)
           .otherwise(col(Rejection.ColName)),
         AliveCol -> (col(AliveCol) && m.stillAlive)))
         .drop(m.internalCols: _*)

@@ -104,15 +104,13 @@ final case class BloomSketch(
 
 object BloomSketch {
 
-  private val Mask30 = (1L << 30) - 1
-
   /** JVM twin of `mixed(h, r) % numBits` — the r-th bit index of
     * pre-hashed `h` (mixed value < 2⁶² and non-negative, so `%` is plain
     * remainder in both engines).
     */
   def bitIndex(h: Long, r: Int, numBits: Int): Int = {
     val (a, b, c) = HashFunctions.mixConstants(r)
-    ((a * (h & Mask30) + b * (h >> 30) + c) % numBits).toInt
+    (HashFunctions.mixedJvm(h, a, b, c) % numBits).toInt
   }
 
   /** `bloomSketch(portableHash64(col), numBits, numHashes)` as an

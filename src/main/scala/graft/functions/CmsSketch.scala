@@ -103,15 +103,13 @@ final case class CmsSketch(
 
 object CmsSketch {
 
-  private val Mask30 = (1L << 30) - 1
-
   /** JVM twin of [[HashFunctions.mixed]]`(h, r) % width` — bucket of
     * pre-hashed `h` in row `r`. `h` is 60-bit non-negative and the mixed
     * value < 2⁶², so `%` is plain non-negative remainder in both engines.
     */
   def bucket(h: Long, r: Int, width: Int): Int = {
     val (a, b, c) = HashFunctions.mixConstants(r)
-    ((a * (h & Mask30) + b * (h >> 30) + c) % width).toInt
+    (HashFunctions.mixedJvm(h, a, b, c) % width).toInt
   }
 
   /** `cmsSketch(portableHash64(col), depth, width)` as an aggregate

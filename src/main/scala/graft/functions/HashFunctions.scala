@@ -65,15 +65,19 @@ object HashFunctions {
 
   /** JVM-side twin of [[mixed]]/[[mixedSql]] for kernel inner loops —
     * the single place the 30-bit-split mix arithmetic lives on the JVM
-    * side (ADVICE r19: TokenBigrams hand-inlined a third copy). Callers
-    * that loop over many seeds should hoist `mixConstants(j)` themselves
-    * ([[graft.plans.kernels.MinHashFromHashes]]' consts array); this
-    * entry point is for the fixed-seed call sites.
+    * side. Takes the seed's constants as raw longs: callers hoist
+    * [[mixConstants]] once into long fields (fixed seeds) or
+    * [[mixConstantArrays]] (seed loops), so the inner loop never reads
+    * a boxed tuple.
     */
-  def mixedJvm(h: Long, consts: (Long, Long, Long)): Long =
-    consts._1 * (h & Mask30) + consts._2 * (h >> 30) + consts._3
+  @inline def mixedJvm(h: Long, a: Long, b: Long, c: Long): Long =
+    a * (h & Mask30) + b * (h >> 30) + c
 
-  def mixedJvm(h: Long, j: Int): Long = mixedJvm(h, mixConstants(j))
+  /** [[mixConstants]] of seeds `0 until n` as three arrays `(a, b, c)`. */
+  def mixConstantArrays(n: Int): (Array[Long], Array[Long], Array[Long]) = {
+    val cs = (0 until n).map(mixConstants)
+    (cs.map(_._1).toArray, cs.map(_._2).toArray, cs.map(_._3).toArray)
+  }
 
   def hashByName(algorithm: String)(c: Column): Column = algorithm match {
     case "xxhash64" => fastHash64(c)

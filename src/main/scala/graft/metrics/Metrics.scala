@@ -1,6 +1,6 @@
 package graft.metrics
 
-import graft.core.{Deduplicator, Operator, RowFilter}
+import graft.core.{Operator, Staging}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -89,7 +89,9 @@ final class MeteredPipeline(val stageName: String, val ops: Seq[Operator]) {
     (df, counts)
   }
 
-  /** Fused-mode run: one `count()` action fills every boundary. */
+  /** Fused-mode run: one action (a `noop`-format write of the output)
+    * fills every boundary.
+    */
   def run(input: DataFrame): (Seq[OperatorCounts], StageRollup) = {
     val (df, counts) = instrument(input)
     df.write.format("noop").mode("overwrite").save()
@@ -128,24 +130,33 @@ final class MeteredPipeline(val stageName: String, val ops: Seq[Operator]) {
 
   /** Instrumented-mode run: one action per boundary so wall time is
     * attributable per operator (the reference's per-operator total_time).
-    * Costs recomputation — use for profiling, not production.
+    * Every boundary is staged, so each operator is charged only for its
+    * own work — use for profiling, not production. The last stage is
+    * released before returning.
     */
   def timedRun(input: DataFrame): (Seq[OperatorCounts], StageRollup) = {
-    val (_, cs, rollup) = timedRunThrough(input)
+    val (out, cs, rollup) = timedRunThrough(input)
+    Staging.release(out)
     (cs, rollup)
   }
 
   /** [[timedRun]] that also returns the stage's output frame, so a
-    * runner can continue the chain (profiling mode).
+    * runner can continue the chain (profiling mode). The input and
+    * every boundary are staged ([[Staging.stage]]); operator i is timed
+    * building and materializing `op(df_i)` over the staged `df_i`,
+    * which is then released. The returned frame is the last stage,
+    * still staged: the caller releases it (or its scope does).
     */
   def timedRunThrough(input: DataFrame): (DataFrame, Seq[OperatorCounts], StageRollup) = {
-    var df = input
+    var df = Staging.stage(input)
     var prev = df.count()
     val cs = ops.zipWithIndex.map { case (op, i) =>
       val t0 = System.nanoTime()
-      df = op(df)
-      val out = df.count()
+      val next = Staging.stage(op(df))
       val dt = (System.nanoTime() - t0) / 1e9
+      Staging.release(df)
+      df = next
+      val out = df.count()
       val c = OperatorCounts(i, op.name, prev, out, dt)
       prev = out
       c

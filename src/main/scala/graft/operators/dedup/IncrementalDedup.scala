@@ -75,31 +75,19 @@ final class IncrementalExactDedup(
     else df.withColumn("_ik", keyOf(df))
       .join(priorKeys(df), Seq("_ik"), "left_anti").drop("_ik")
 
-  def rejected(df: DataFrame): DataFrame =
-    if (useBloom) df.filter(!bloomKeep(df))
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, keyOf(df), lit(null).cast("string")))
-    else df.withColumn("_ik", keyOf(df))
-      .join(priorKeys(df).withColumn("_ihit", lit(true)), Seq("_ik"), "left")
-      .filter(col("_ihit").isNotNull)
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, col("_ik"), lit(null).cast("string")))
-      .drop("_ik", "_ihit")
-
   /** Prior-membership is independent of upstream survival, so `alive`
     * does not change who hits — dead rows just keep their earlier
     * rejection (Disposition.step only stamps alive rows). */
   def mark(df: DataFrame, alive: Column, tag: String): Marked =
-    if (useBloom) {
-      val k = bloomKeep(df)
-      Marked(df, k, !k,
+    if (useBloom)
+      Marked(df, bloomKeep(df),
         Rejection.duplicate(name, keyOf(df), lit(null).cast("string")))
-    } else {
+    else {
       val kC = s"_ik$tag"; val hC = s"_ihit$tag"
       val d = df.withColumn(kC, keyOf(df))
         .join(priorKeys(df).withColumnRenamed("_ik", kC).withColumn(hC, lit(true)),
           Seq(kC), "left")
-      Marked(d, col(hC).isNull, col(hC).isNotNull,
+      Marked(d, col(hC).isNull,
         Rejection.duplicate(name, col(kC), lit(null).cast("string")), Seq(kC, hC))
     }
 }
@@ -162,18 +150,12 @@ final class IncrementalMinHashDedup(
   def apply(df: DataFrame): DataFrame =
     df.join(hits(df).select(col(idCol)), Seq(idCol), "left_anti")
 
-  def rejected(df: DataFrame): DataFrame =
-    df.join(hits(df), Seq(idCol))
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, lit(null).cast("string"), col("_rep")))
-      .drop("_rep")
-
   /** Prior-membership is independent of upstream survival (the prior is
     * a separate frozen corpus), so `alive` does not change who hits. */
   def mark(df: DataFrame, alive: Column, tag: String): Marked = {
     val rC = s"_imr$tag"
     val d = df.join(hits(df).withColumnRenamed("_rep", rC), Seq(idCol), "left")
-    Marked(d, col(rC).isNull, col(rC).isNotNull,
+    Marked(d, col(rC).isNull,
       Rejection.duplicate(name, lit(null).cast("string"), col(rC)), Seq(rC))
   }
 

@@ -1,6 +1,5 @@
 package graft.operators.dedup
 
-import graft.core.{Operator, Rejection}
 import graft.functions.{HashFunctions, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -48,7 +47,7 @@ import org.apache.spark.sql.functions._
   */
 final class MinHashLSHDedup(
     textCol: String = "text",
-    idCol: String = "id",
+    val idCol: String = "id",
     shingleWidth: Int = 3,
     numHashes: Int = 16,
     numBands: Int = 4,
@@ -59,7 +58,7 @@ final class MinHashLSHDedup(
     // val: the YAML-plumbing pin reads it back (the two schemes keep
     // identical rows at the shipped geometry, so output equality alone
     // cannot detect a dropped signature_scheme param)
-    val signatureScheme: String = "kmin") extends graft.core.RejectingOperator {
+    val signatureScheme: String = "kmin") extends graft.core.PairwiseDedup {
 
   require(numHashes % numBands == 0, "numHashes must be divisible by numBands")
   require(signatureScheme == "kmin" || signatureScheme == "oph",
@@ -232,12 +231,6 @@ final class MinHashLSHDedup(
       .dropDuplicates("d1", "d2")
   }
 
-  def apply(df: DataFrame): DataFrame =
-    df.join(verifiedPairs(df).select(col("d2").as(idCol)).distinct(), Seq(idCol), "left_anti")
-
-  def mark(df: DataFrame, alive: org.apache.spark.sql.Column, tag: String): graft.core.Marked =
-    graft.core.PairwiseMark(df, alive, tag, idCol, name, verifiedPairs)
-
   /** Transitive-closure variant: connected components over the verified
     * pair graph, keeping exactly the minimum id of every component
     * ([[ConnectedComponents]]; the default `apply` is the pairwise form —
@@ -318,17 +311,6 @@ final class MinHashLSHDedup(
        |${ConnectedComponents.assignSql("ver")}
        |SELECT comp, count(*) AS size FROM _comp
        |GROUP BY comp ORDER BY comp""".stripMargin
-  }
-
-  /** Dropped rows with the first-seen similar row as representative. */
-  def rejected(df: DataFrame): DataFrame = {
-    val reps = verifiedPairs(df).groupBy(col("d2"))
-      .agg(min(col("d1")).as("_rep"))
-      .withColumnRenamed("d2", idCol)
-    df.join(reps, Seq(idCol))
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, lit(null).cast("string"), col("_rep")))
-      .drop("_rep")
   }
 
   /** Per-row MinHash signatures, for inspection/testing: (id, sig array). */

@@ -1,6 +1,5 @@
 package graft.operators.dedup
 
-import graft.core.Rejection
 import graft.functions.{HashFunctions, TextFunctions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -28,10 +27,10 @@ import org.apache.spark.sql.functions._
   */
 final class NgramContainmentDedup(
     textCol: String = "text",
-    idCol: String = "id",
+    val idCol: String = "id",
     shingleWidth: Int = 3,
     threshold: Double = 0.8,
-    maxDocFreq: Int = 5) extends graft.core.RejectingOperator {
+    maxDocFreq: Int = 5) extends graft.core.PairwiseDedup {
 
   require(threshold > 0.0 && threshold <= 1.0,
     s"threshold $threshold must be in (0, 1] (prefix filtering needs t > 0)")
@@ -81,22 +80,6 @@ final class NgramContainmentDedup(
         size(array_intersect(col("_h1"), col("_h2"))).cast("double") / col("_n2"))
       .filter(col("_c") >= threshold)
       .select(col("d1"), col("d2"), col("_c").as("containment"))
-  }
-
-  def apply(df: DataFrame): DataFrame =
-    df.join(verifiedPairs(df).select(col("d2").as(idCol)).distinct(), Seq(idCol), "left_anti")
-
-  def mark(df: DataFrame, alive: org.apache.spark.sql.Column, tag: String): graft.core.Marked =
-    graft.core.PairwiseMark(df, alive, tag, idCol, name, verifiedPairs)
-
-  /** Dropped rows annotated with their smallest containing doc. */
-  def rejected(df: DataFrame): DataFrame = {
-    val reps = verifiedPairs(df).groupBy(col("d2")).agg(min(col("d1")).as("_rep"))
-      .withColumnRenamed("d2", idCol)
-    df.join(reps, Seq(idCol))
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, lit(null).cast("string"), col("_rep")))
-      .drop("_rep")
   }
 
   // ---- DuckDB twin (pins semantics: verifies EVERY co-occurring pair) ----

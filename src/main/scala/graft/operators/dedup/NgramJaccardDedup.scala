@@ -1,8 +1,7 @@
 package graft.operators.dedup
 
-import graft.core.{Operator, Rejection}
 import graft.functions.{HashFunctions, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exact n-gram Jaccard near-duplicate dedup with AllPairs prefix
@@ -40,10 +39,10 @@ import org.apache.spark.sql.functions._
   */
 final class NgramJaccardDedup(
     textCol: String = "text",
-    idCol: String = "id",
+    val idCol: String = "id",
     shingleWidth: Int = 3,
     threshold: Double = 0.8,
-    val maxDocFreq: Option[Int] = None) extends graft.core.RejectingOperator {
+    val maxDocFreq: Option[Int] = None) extends graft.core.PairwiseDedup {
 
   require(threshold > 0.0 && threshold <= 1.0,
     s"threshold $threshold must be in (0, 1] (prefix filtering needs t > 0)")
@@ -94,21 +93,6 @@ final class NgramJaccardDedup(
       .withColumn("_j", graft.plans.kernels.array_jaccard(col("_h1"), col("_h2")))
       .filter(col("_j") >= threshold)
       .select(col("d1"), col("d2"), col("_j").as("jaccard"))
-  }
-
-  def apply(df: DataFrame): DataFrame =
-    df.join(verifiedPairs(df).select(col("d2").as(idCol)).distinct(), Seq(idCol), "left_anti")
-
-  def mark(df: DataFrame, alive: org.apache.spark.sql.Column, tag: String): graft.core.Marked =
-    graft.core.PairwiseMark(df, alive, tag, idCol, name, verifiedPairs)
-
-  def rejected(df: DataFrame): DataFrame = {
-    val reps = verifiedPairs(df).groupBy(col("d2")).agg(min(col("d1")).as("_rep"))
-      .withColumnRenamed("d2", idCol)
-    df.join(reps, Seq(idCol))
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, lit(null).cast("string"), col("_rep")))
-      .drop("_rep")
   }
 
   // ---- DuckDB twin ----

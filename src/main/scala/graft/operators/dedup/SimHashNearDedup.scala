@@ -1,7 +1,6 @@
 package graft.operators.dedup
 
-import graft.core.{Operator, Rejection}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SimHash near-duplicate dedup at hamming distance ≤ k — the
@@ -20,11 +19,11 @@ import org.apache.spark.sql.functions._
   */
 final class SimHashNearDedup(
     textCol: String = "text",
-    idCol: String = "id",
+    val idCol: String = "id",
     bits: Int = 32,
     k: Int = 3,
     portableHashes: Boolean = true,
-    maxBucketSize: Option[Int] = None) extends graft.core.RejectingOperator {
+    maxBucketSize: Option[Int] = None) extends graft.core.PairwiseDedup {
 
   require(k >= 0 && bits % (k + 1) == 0,
     s"bits ($bits) must divide into k+1 (${k + 1}) equal blocks")
@@ -77,21 +76,6 @@ final class SimHashNearDedup(
         coalesce(bit_count(col("f1").bitwiseXOR(col("f2"))) <= k, lit(false)))
       .dropDuplicates("d1", "d2")
       .select(col("d1"), col("d2"))
-  }
-
-  def apply(df: DataFrame): DataFrame =
-    df.join(verifiedPairs(df).select(col("d2").as(idCol)).distinct(), Seq(idCol), "left_anti")
-
-  def mark(df: DataFrame, alive: org.apache.spark.sql.Column, tag: String): graft.core.Marked =
-    graft.core.PairwiseMark(df, alive, tag, idCol, name, verifiedPairs)
-
-  def rejected(df: DataFrame): DataFrame = {
-    val reps = verifiedPairs(df).groupBy(col("d2")).agg(min(col("d1")).as("_rep"))
-      .withColumnRenamed("d2", idCol)
-    df.join(reps, Seq(idCol))
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, lit(null).cast("string"), col("_rep")))
-      .drop("_rep")
   }
 
   // ---- DuckDB twin ----

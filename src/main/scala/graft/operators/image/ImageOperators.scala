@@ -169,9 +169,9 @@ final class ImagePhashDedup(
   */
 final class ImagePhashNearDedup(
     imageCol: String = "image",
-    idCol: String = "id",
+    val idCol: String = "id",
     k: Int = 8,
-    maxBucketSize: Option[Int] = None) extends graft.core.RejectingOperator {
+    maxBucketSize: Option[Int] = None) extends graft.core.PairwiseDedup {
 
   require(k >= 0 && k < 64, s"k ($k) must be in [0, 64)")
   val name = "image_phash_near_dedup"
@@ -241,20 +241,5 @@ final class ImagePhashNearDedup(
         coalesce(hammingExpr(col("p1"), col("p2")) <= k, lit(false)))
       .dropDuplicates("d1", "d2")
       .select(col("d1"), col("d2"))
-  }
-
-  def apply(df: DataFrame): DataFrame =
-    df.join(verifiedPairs(df).select(col("d2").as(idCol)).distinct(), Seq(idCol), "left_anti")
-
-  def mark(df: DataFrame, alive: Column, tag: String): graft.core.Marked =
-    graft.core.PairwiseMark(df, alive, tag, idCol, name, verifiedPairs)
-
-  def rejected(df: DataFrame): DataFrame = {
-    val reps = verifiedPairs(df).groupBy(col("d2")).agg(min(col("d1")).as("_rep"))
-      .withColumnRenamed("d2", idCol)
-    df.join(reps, Seq(idCol))
-      .withColumn(graft.core.Rejection.ColName,
-        graft.core.Rejection.duplicate(name, lit(null).cast("string"), col("_rep")))
-      .drop("_rep")
   }
 }

@@ -165,26 +165,25 @@ final class LogregQualityRefiner(
     lr = lr, iters = iters, idCol = idCol, fitSampleMod = fitSampleMod,
     posWeight = posWeight, l2 = l2)
 
-  /** Single-slot fit cache keyed by the FIT frame reference: the
-    * sequential flows (apply/rejected on one stage frame) all fit on
-    * that same reference and share one fit, while a disposition
-    * `applyGated` passes a fresh alive-filtered frame and always
-    * refits — mixing the two modes on one frame can never serve
-    * weights fitted on the wrong row set (the mode mix-up a df-keyed
-    * cache allowed).
+  /** Single-slot fit cache keyed by the frame reference AND the alive
+    * flag the fit filters it by: the sequential flows (apply/rejected on
+    * one stage frame, every row alive) share one fit, while a
+    * disposition `applyGated` fits on the alive rows of its chain frame
+    * — mixing the two modes on one frame can never serve weights fitted
+    * on the wrong row set.
     */
-  @volatile private var cachedFit: (DataFrame, Array[Double]) = null
+  @volatile private var cachedFit: (DataFrame, Column, Array[Double]) = null
   /** Test hook: number of fits this instance has run. */
   private[graft] val fitCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def weightsFor(fitFrame: DataFrame): Array[Double] =
+  private def weightsFor(df: DataFrame, alive: Column): Array[Double] =
     synchronized {
       val c = cachedFit
-      if (c != null && (c._1 eq fitFrame)) c._2
+      if (c != null && (c._1 eq df) && c._2 == alive) c._3
       else {
         fitCount.incrementAndGet()
-        val w = trainer.fit(fitFrame).last
-        cachedFit = (fitFrame, w)
+        val w = trainer.fit(df.filter(alive)).last
+        cachedFit = (df, alive, w)
         w
       }
     }
@@ -196,7 +195,7 @@ final class LogregQualityRefiner(
     * filter's `keep` consumes this too — same fit, same expression).
     */
   private[graft] def scoreExpr(df: DataFrame): Column =
-    exprWith(weightsFor(df))
+    scoreExprAlive(df, lit(true))
 
   /** Disposition variant: the fit sees ALIVE rows only (a row rejected
     * upstream never reached this operator in the sequential chain, so
@@ -205,7 +204,7 @@ final class LogregQualityRefiner(
     * every row, the chain's alive flag guards consumption.
     */
   private[graft] def scoreExprAlive(df: DataFrame, alive: Column): Column =
-    exprWith(weightsFor(df.filter(alive)))
+    exprWith(weightsFor(df, alive))
 
   def added(df: DataFrame): Seq[(String, Column)] =
     Seq(outputCol -> scoreExpr(df))
@@ -240,12 +239,8 @@ final class LogregQualityFilter(
   def apply(df: DataFrame): DataFrame =
     df.filter(refiner.scoreExpr(df) >= threshold)
 
-  def rejected(df: DataFrame): DataFrame =
-    df.filter(!(refiner.scoreExpr(df) >= threshold))
-      .withColumn(graft.core.Rejection.ColName, graft.core.Rejection.filtered(name))
-
   def mark(df: DataFrame, alive: Column, tag: String): graft.core.Marked = {
     val k = refiner.scoreExprAlive(df, alive) >= threshold
-    graft.core.Marked(df, k, !k, graft.core.Rejection.filtered(name))
+    graft.core.Marked(df, k, graft.core.Rejection.filtered(name))
   }
 }

@@ -53,15 +53,11 @@ final class BenchmarkDecontaminationFilter(
   def apply(df: DataFrame): DataFrame =
     df.join(contaminatedIds(df), Seq(idCol), "left_anti")
 
-  def rejected(df: DataFrame): DataFrame =
-    df.join(contaminatedIds(df), Seq(idCol), "left_semi")
-      .withColumn(Rejection.ColName, Rejection.filtered(name))
-
   /** Disposition mode: one left join stamps the contaminated flag. */
   def mark(df: DataFrame, alive: Column, tag: String): graft.core.Marked = {
     val cC = s"_ctm$tag"
     val d = df.join(contaminatedIds(df).withColumn(cC, lit(true)), Seq(idCol), "left")
-    graft.core.Marked(d, col(cC).isNull, col(cC).isNotNull,
+    graft.core.Marked(d, col(cC).isNull,
       Rejection.filtered(name), Seq(cC))
   }
 

@@ -148,10 +148,6 @@ final class DomainStatsFilter(
   def apply(df: DataFrame): DataFrame =
     df.join(broadcast(passingDomains(df)), df(domainCol) === col("_ds_dom"), "left_semi")
 
-  def rejected(df: DataFrame): DataFrame =
-    df.join(broadcast(passingDomains(df)), df(domainCol) === col("_ds_dom"), "left_anti")
-      .withColumn(Rejection.ColName, Rejection.filtered(name))
-
   /** Disposition mode: domain stats come from ALIVE rows only — a
     * document rejected upstream must not count toward its domain's
     * volume or drag its mean.
@@ -161,7 +157,7 @@ final class DomainStatsFilter(
     val ok = passingDomains(df.filter(alive)).withColumn(okCol, lit(true))
     val joined = df.join(broadcast(ok), df(domainCol) === ok("_ds_dom"), "left_outer")
       .drop("_ds_dom")
-    Marked(joined, col(okCol).isNotNull, col(okCol).isNull,
+    Marked(joined, col(okCol).isNotNull,
       Rejection.filtered(name), Seq(okCol))
   }
 

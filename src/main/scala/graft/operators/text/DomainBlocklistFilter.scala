@@ -46,17 +46,13 @@ final class DomainBlocklistFilter(
   def apply(df: DataFrame): DataFrame =
     df.join(blockedIds(df), Seq(idCol), "left_anti")
 
-  def rejected(df: DataFrame): DataFrame =
-    df.join(blockedIds(df), Seq(idCol), "left_semi")
-      .withColumn(Rejection.ColName, Rejection.filtered(name))
-
   /** Disposition mode: the blocked set is row-local (URL only), so one
     * left join stamps a blocked flag instead of anti/semi-joining twice.
     */
   def mark(df: DataFrame, alive: Column, tag: String): graft.core.Marked = {
     val bC = s"_blk$tag"
     val d = df.join(blockedIds(df).withColumn(bC, lit(true)), Seq(idCol), "left")
-    graft.core.Marked(d, col(bC).isNull, col(bC).isNotNull,
+    graft.core.Marked(d, col(bC).isNull,
       Rejection.filtered(name), Seq(bC))
   }
 

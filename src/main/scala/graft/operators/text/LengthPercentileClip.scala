@@ -46,15 +46,10 @@ final class LengthPercentileClipFilter(
     df.crossJoin(broadcast(thresholds(df)))
       .filter(inBand).drop("_lc_lo", "_lc_hi")
 
-  def rejected(df: DataFrame): DataFrame =
-    df.crossJoin(broadcast(thresholds(df)))
-      .filter(!inBand).drop("_lc_lo", "_lc_hi")
-      .withColumn(Rejection.ColName, Rejection.filtered(name))
-
   /** Disposition mode: percentiles from ALIVE rows only. */
   def mark(df: DataFrame, alive: Column, tag: String): Marked = {
     val joined = df.crossJoin(broadcast(thresholds(df.filter(alive))))
-    Marked(joined, inBand, !inBand, Rejection.filtered(name),
+    Marked(joined, inBand, Rejection.filtered(name),
       Seq("_lc_lo", "_lc_hi"))
   }
 

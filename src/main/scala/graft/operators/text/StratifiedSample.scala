@@ -43,15 +43,6 @@ final class StratifiedSampleFilter(
       .filter(col("_srn") <= k).drop("_srn")
   }
 
-  def rejected(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col(stratumCol)).orderBy(rankOrder(df): _*)
-    df.withColumn("_srn", row_number().over(w))
-      .filter(col("_srn") > k)
-      .withColumn(Rejection.ColName,
-        Rejection.filtered(name))
-      .drop("_srn")
-  }
-
   /** Alive rows sort first, so dead rows never occupy a sample slot; a
     * dead row that still lands rank ≤ k (stratum with < k alive rows)
     * stays dead because Disposition ANDs survival flags. */
@@ -61,7 +52,7 @@ final class StratifiedSampleFilter(
     val w = Window.partitionBy(col(stratumCol))
       .orderBy(col(aC).desc +: rankOrder(d): _*)
     val ranked = d.withColumn(rnC, row_number().over(w))
-    Marked(ranked, col(rnC) <= k, col(rnC) > k,
+    Marked(ranked, col(rnC) <= k,
       Rejection.filtered(name), Seq(aC, rnC))
   }
 

@@ -58,12 +58,6 @@ final class TemperatureSampleFilter(
       .filter(bucketOf < col("_ts_thr"))
       .drop("_ts_src", "_ts_thr")
 
-  def rejected(df: DataFrame): DataFrame =
-    df.join(broadcast(thresholds(df)), df(sourceCol) === col("_ts_src"))
-      .filter(!(bucketOf < col("_ts_thr")))
-      .drop("_ts_src", "_ts_thr")
-      .withColumn(Rejection.ColName, Rejection.filtered(name))
-
   /** Disposition mode: thresholds from ALIVE rows only (rejected rows
     * must not count toward their source's size).
     */
@@ -72,7 +66,7 @@ final class TemperatureSampleFilter(
     val joined = df.join(broadcast(thr), df(sourceCol) === col("_ts_src"), "left_outer")
       .drop("_ts_src")
     val keep = bucketOf < col("_ts_thr")
-    Marked(joined, keep, !keep, Rejection.filtered(name), Seq("_ts_thr"))
+    Marked(joined, keep, Rejection.filtered(name), Seq("_ts_thr"))
   }
 
   /** DuckDB twin: CTE `_ts(src, thr)` over `table`; keep with

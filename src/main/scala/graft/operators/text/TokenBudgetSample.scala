@@ -91,18 +91,11 @@ final class TokenBudgetSampleFilter(
     cum.filter(col("_cum") <= budgetOf).drop(extras: _*)
   }
 
-  def rejected(df: DataFrame): DataFrame = {
-    val (cum, extras) = withRunningTotal(df, weightOf)
-    cum.filter(col("_cum") > budgetOf)
-      .withColumn(Rejection.ColName, Rejection.filtered(name))
-      .drop(extras: _*)
-  }
-
   /** Disposition mode: dead rows weigh zero, so they never consume
     * budget; their own keep flag is irrelevant (Disposition ANDs alive). */
   def mark(df: DataFrame, alive: Column, tag: String): Marked = {
     val (cum, extras) = withRunningTotal(df, when(alive, weightOf).otherwise(0L))
-    Marked(cum, col("_cum") <= budgetOf, col("_cum") > budgetOf,
+    Marked(cum, col("_cum") <= budgetOf,
       Rejection.filtered(name), extras)
   }
 

@@ -1,8 +1,8 @@
 package graft.operators.vector
 
-import graft.core.{Operator, Rejection}
+import graft.core.Rejection
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Embedding-cosine near-duplicate dedup: a row is DROPPED when an earlier
@@ -22,11 +22,11 @@ import org.apache.spark.sql.functions._
   */
 final class EmbeddingCosineDedup(
     vecCol: String = "embedding",
-    idCol: String = "id",
+    val idCol: String = "id",
     threshold: Double = 0.95,
     bucketCol: Option[String] = None,
     maxBucketSize: Option[Int] = None,
-    anchoredCap: Boolean = false) extends graft.core.RejectingOperator {
+    anchoredCap: Boolean = false) extends graft.core.PairwiseDedup {
   require(maxBucketSize.forall(_ >= 1),
     s"maxBucketSize must be >= 1 when set, got $maxBucketSize")
   require(maxBucketSize.isEmpty || bucketCol.nonEmpty,
@@ -72,21 +72,6 @@ final class EmbeddingCosineDedup(
     joined.withColumn("_cos", VectorFunctions.cosine(col("v1"), col("v2")))
       .filter(col("_cos") >= threshold)
       .select(col("d1"), col("d2"), col("_cos").as("cosine"))
-  }
-
-  def apply(df: DataFrame): DataFrame =
-    df.join(verifiedPairs(df).select(col("d2").as(idCol)).distinct(), Seq(idCol), "left_anti")
-
-  def mark(df: DataFrame, alive: org.apache.spark.sql.Column, tag: String): graft.core.Marked =
-    graft.core.PairwiseMark(df, alive, tag, idCol, name, verifiedPairs)
-
-  def rejected(df: DataFrame): DataFrame = {
-    val reps = verifiedPairs(df).groupBy(col("d2")).agg(min(col("d1")).as("_rep"))
-      .withColumnRenamed("d2", idCol)
-    df.join(reps, Seq(idCol))
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, lit(null).cast("string"), col("_rep")))
-      .drop("_rep")
   }
 
   /** Oracle SQL returning kept ids (brute-force variant only). */
@@ -1221,58 +1206,47 @@ final class AutoBucketedCosineDedup(
   private def plainTier: Boolean =
     nprobe == 1 && maxCellSize.isEmpty && keepPolicy == "first"
 
-  /** SemDeDup drops `(idCol, _rep)` over the given frame under this
-    * stage's trained centroids (the published keep rule — see
+  /** SemDeDup drops `(idCol, _rep)` over the `alive` rows of `df` under
+    * this stage's trained centroids (the published keep rule — see
     * [[EmbeddingCosineDedup.semDeDupKeep]]). Single-slot cache keyed on
-    * the scored frame (the [[modelFor]] discipline): the drops run an
-    * EAGER connected-components loop, so a pipeline consuming both the
-    * kept and the rejected branch would otherwise pay the full
+    * the frame and the alive flag (the [[modelFor]] discipline): the
+    * drops run an EAGER connected-components loop, so `apply` followed
+    * by `rejected` on the same frame would otherwise pay the full
     * pair-join + CC job sequence twice. The cached frame is small
     * (clustered rows only) and backed by the CC checkpoint.
     */
-  @volatile private var cachedDrops: (DataFrame, DataFrame) = null
-  private def semDrops(trainOn: DataFrame)(over: DataFrame): DataFrame =
+  @volatile private var cachedDrops: (DataFrame, Column, DataFrame) = null
+  private def semDrops(df: DataFrame, alive: Column): DataFrame =
     synchronized {
       val c = cachedDrops
-      if (c != null && (c._1 eq over)) c._2
+      if (c != null && (c._1 eq df) && c._2 == alive) c._3
       else {
-        val d = EmbeddingCosineDedup.semDeDupDrops(over, vecCol, idCol,
-          km.centroidsOf(modelFor(trainOn)), nprobe, threshold,
+        val d = EmbeddingCosineDedup.semDeDupDrops(df.filter(alive), vecCol, idCol,
+          km.centroidsOf(modelFor(df)), nprobe, threshold,
           maxCellSize, anchoredCap)
-        cachedDrops = (over, d)
+        cachedDrops = (df, alive, d)
         d
       }
     }
 
   def apply(df: DataFrame): DataFrame =
     if (keepPolicy == "semdedup")
-      df.join(semDrops(df)(df).select(col(idCol)), Seq(idCol), "left_anti")
+      df.join(semDrops(df, lit(true)).select(col(idCol)), Seq(idCol), "left_anti")
     else if (plainTier) inner(withBuckets(df)).drop(bucketCol)
     else probedOp(df)(df)
 
-  def rejected(df: DataFrame): DataFrame =
-    if (keepPolicy == "semdedup")
-      df.join(semDrops(df)(df), Seq(idCol))
-        .withColumn(Rejection.ColName,
-          Rejection.duplicate(name, lit(null).cast("string"), col("_rep")))
-        .drop("_rep")
-    else if (plainTier) inner.rejected(withBuckets(df)).drop(bucketCol)
-    else probedOp(df).rejected(df)
-
-  def mark(df: DataFrame, alive: org.apache.spark.sql.Column, tag: String): graft.core.Marked = {
+  def mark(df: DataFrame, alive: Column, tag: String): graft.core.Marked = {
     if (keepPolicy == "semdedup") {
-      // disposition mode: drops are computed over the ALIVE subset only
-      // (rows rejected upstream never compete — the PairwiseMark
-      // contract), centroids from the full stage input so the cell map
-      // is the same one apply/rejected use
+      // drops are computed over the ALIVE subset only (rows rejected
+      // upstream never compete — the PairwiseDedup contract), centroids
+      // from the full stage input so every flag sees the same cell map
       val repC = s"_sdrep$tag"
-      val reps = semDrops(df)(df.filter(alive)).withColumnRenamed("_rep", repC)
+      val reps = semDrops(df, alive).withColumnRenamed("_rep", repC)
       val d = df.join(reps, Seq(idCol), "left")
-      graft.core.Marked(d, col(repC).isNull, col(repC).isNotNull,
+      graft.core.Marked(d, col(repC).isNull,
         Rejection.duplicate(name, lit(null).cast("string"), col(repC)), Seq(repC))
     } else if (plainTier) {
-      val m = graft.core.PairwiseMark(
-        withBuckets(df), alive, tag, idCol, name, inner.verifiedPairs)
+      val m = inner.mark(withBuckets(df), alive, tag)
       m.copy(internalCols = m.internalCols :+ bucketCol)
     } else probedOp(df).mark(df, alive, tag)
   }
@@ -1293,12 +1267,12 @@ final class AutoBucketedCosineDedup(
   */
 final class ProbedCosineDedup(
     vecCol: String = "embedding",
-    idCol: String = "id",
+    val idCol: String = "id",
     threshold: Double = 0.95,
     centroids: Seq[Seq[Double]] = Nil,
     nprobe: Int = 2,
     maxCellSize: Option[Int] = None,
-    anchoredCap: Boolean = false) extends graft.core.RejectingOperator {
+    anchoredCap: Boolean = false) extends graft.core.PairwiseDedup {
   require(centroids.nonEmpty, "centroids are required")
   require(nprobe >= 1 && nprobe <= centroids.length,
     s"nprobe must be in [1, ${centroids.length}], got $nprobe")
@@ -1311,20 +1285,4 @@ final class ProbedCosineDedup(
   def verifiedPairs(df: DataFrame): DataFrame =
     EmbeddingCosineDedup.probedPairs(df, vecCol, idCol, centroids, nprobe,
       threshold, maxCellSize, anchoredCap)
-
-  def apply(df: DataFrame): DataFrame =
-    df.join(verifiedPairs(df).select(col("d2").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-
-  def mark(df: DataFrame, alive: org.apache.spark.sql.Column, tag: String): graft.core.Marked =
-    graft.core.PairwiseMark(df, alive, tag, idCol, name, verifiedPairs)
-
-  def rejected(df: DataFrame): DataFrame = {
-    val reps = verifiedPairs(df).groupBy(col("d2")).agg(min(col("d1")).as("_rep"))
-      .withColumnRenamed("d2", idCol)
-    df.join(reps, Seq(idCol))
-      .withColumn(Rejection.ColName,
-        Rejection.duplicate(name, lit(null).cast("string"), col("_rep")))
-      .drop("_rep")
-  }
 }

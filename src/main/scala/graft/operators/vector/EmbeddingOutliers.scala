@@ -120,15 +120,11 @@ final class EmbeddingOutlierFilter(
   def apply(df: DataFrame): DataFrame =
     df.join(outlierIds(df), Seq(idCol), "left_anti")
 
-  def rejected(df: DataFrame): DataFrame =
-    df.join(outlierIds(df), Seq(idCol), "left_semi")
-      .withColumn(graft.core.Rejection.ColName, graft.core.Rejection.filtered(name))
-
   def mark(df: DataFrame, alive: Column, tag: String): graft.core.Marked = {
     val flagCol = s"_eo_bad$tag"
     val bad = outlierIds(df.filter(alive)).withColumn(flagCol, lit(true))
     val joined = df.join(bad, Seq(idCol), "left_outer")
-    graft.core.Marked(joined, col(flagCol).isNull, col(flagCol).isNotNull,
+    graft.core.Marked(joined, col(flagCol).isNull,
       graft.core.Rejection.filtered(name), Seq(flagCol))
   }
 }

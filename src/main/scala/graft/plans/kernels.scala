@@ -186,7 +186,7 @@ object kernels {
   case class MinHashSignature(child: Expression, numHashes: Int, portable: Boolean)
       extends UnaryExpression with UnaryRefCodegen {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    private val consts = (0 until numHashes).map(HashFunctions.mixConstants).toArray
+    private val (mixA, mixB, mixC) = HashFunctions.mixConstantArrays(numHashes)
 
     override def nullSafeEval(v: Any): Any = {
       val ss = v.asInstanceOf[ArrayData]
@@ -199,10 +199,8 @@ object kernels {
         var j = 0
         while (j < numHashes) {
           val m =
-            if (portable) {
-              val (a, b, c) = consts(j)
-              a * (h & ((1L << 30) - 1)) + b * (h >>> 30) + c
-            } else splitmix64(h ^ (0xC2B2AE3D27D4EB4FL * (j + 1)))
+            if (portable) HashFunctions.mixedJvm(h, mixA(j), mixB(j), mixC(j))
+            else splitmix64(h ^ (0xC2B2AE3D27D4EB4FL * (j + 1)))
           if (m < mins(j)) mins(j) = m
           j += 1
         }
@@ -304,11 +302,10 @@ object kernels {
       StructField("_h2", LongType, nullable = false),
       StructField("_hb", LongType, nullable = false)))
     override def dataType: DataType = ArrayType(pairType, containsNull = false)
-    // seed constants hoisted once; the mix ARITHMETIC lives in
-    // HashFunctions.mixedJvm (ADVICE r19: this kernel carried a third
-    // hand-inlined copy of the 30-bit-split mix)
-    private val consts0 = HashFunctions.mixConstants(0)
-    private val consts1 = HashFunctions.mixConstants(1)
+    // seed constants hoisted once into long fields; the mix ARITHMETIC
+    // lives in HashFunctions.mixedJvm
+    private val (a0, b0, c0) = HashFunctions.mixConstants(0)
+    private val (a1, b1, c1) = HashFunctions.mixConstants(1)
     override def nullSafeEval(v: Any): Any = {
       val toks = tokenizeJvm(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
       val n = toks.length
@@ -324,8 +321,8 @@ object kernels {
       i = 0
       while (i < n - 1) {
         val h1 = hs(i); val h2 = hs(i + 1)
-        val hb = HashFunctions.mixedJvm(h1, consts0) +
-          HashFunctions.mixedJvm(h2, consts1)
+        val hb = HashFunctions.mixedJvm(h1, a0, b0, c0) +
+          HashFunctions.mixedJvm(h2, a1, b1, c1)
         out(i) = org.apache.spark.sql.catalyst.InternalRow(h1, h2, hb)
         i += 1
       }
@@ -383,7 +380,7 @@ object kernels {
       extends UnaryExpression with UnaryRefCodegen {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullable: Boolean = true
-    private val consts = (0 until numHashes).map(HashFunctions.mixConstants).toArray
+    private val (mixA, mixB, mixC) = HashFunctions.mixConstantArrays(numHashes)
 
     override def nullSafeEval(v: Any): Any = {
       val hs = v.asInstanceOf[ArrayData]
@@ -396,10 +393,8 @@ object kernels {
         var j = 0
         while (j < numHashes) {
           val m =
-            if (portable) {
-              val (a, b, c) = consts(j)
-              a * (h & ((1L << 30) - 1)) + b * (h >>> 30) + c
-            } else splitmix64(h ^ (0xC2B2AE3D27D4EB4FL * (j + 1)))
+            if (portable) HashFunctions.mixedJvm(h, mixA(j), mixB(j), mixC(j))
+            else splitmix64(h ^ (0xC2B2AE3D27D4EB4FL * (j + 1)))
           if (m < mins(j)) mins(j) = m
           j += 1
         }

@@ -39,6 +39,14 @@ object OperatorRegistry {
       def apply(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = f(df)
     }
 
+  /** `cell_cap_mode`: "first" (the default) or "anchored" hot-cell cap. */
+  private def cellCapAnchored(p: Params): Boolean = p.str("cell_cap_mode", "first") match {
+    case "first"    => false
+    case "anchored" => true
+    case other => throw new IllegalArgumentException(
+      s"cell_cap_mode must be 'first' or 'anchored', got '$other'")
+  }
+
   // ---- built-ins (names match the reference's YAML vocabulary where an
   // equivalent exists: configs/example_commoncrawl.yaml, z_image.yaml) ----
 
@@ -154,12 +162,7 @@ object OperatorRegistry {
       // drifted k-means cell (same max_cell_size / cell_cap_mode keys
       // as the auto-bucketed path; first-cap or anchored)
       maxBucketSize = p.long("max_cell_size").map(_.toInt),
-      anchoredCap = p.str("cell_cap_mode", "first") match {
-        case "first"    => false
-        case "anchored" => true
-        case other => throw new IllegalArgumentException(
-          s"cell_cap_mode must be 'first' or 'anchored', got '$other'")
-      })
+      anchoredCap = cellCapAnchored(p))
     case None => new graft.operators.vector.AutoBucketedCosineDedup(
       vecCol = p.str("embedding_field", "embedding"),
       idCol = p.str("id_field", "id"),
@@ -179,12 +182,7 @@ object OperatorRegistry {
       // 1-in-mod id sample, assign the full corpus — Lloyd's scans the
       // sample instead of the whole 100 TB per iteration
       trainSampleMod = p.long("train_sample_mod").map(_.toInt),
-      anchoredCap = p.str("cell_cap_mode", "first") match {
-        case "first"    => false
-        case "anchored" => true
-        case other => throw new IllegalArgumentException(
-          s"cell_cap_mode must be 'first' or 'anchored', got '$other'")
-      },
+      anchoredCap = cellCapAnchored(p),
       // keep_policy (r17): "first" = first-wins (min id survives);
       // "semdedup" = the published SemDeDup rule — near-dup components
       // each keep their farthest-from-centroid member

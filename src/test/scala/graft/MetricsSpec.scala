@@ -1,8 +1,10 @@
 package graft
 
+import graft.core.{Operator, RowFilter, Staging}
 import graft.metrics.{MeteredPipeline, MetricsRollup, MetricsWriter, OperatorCounts}
 import graft.operators.dedup.TextExactDedup
 import graft.operators.text.TextLengthFilter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,6 +40,29 @@ class MetricsSpec extends AnyFunSuite {
     assert(fused.map(c => (c.name, c.input, c.output)) ==
       timed.map(c => (c.name, c.input, c.output)))
     assert(timed.forall(_.timeSec > 0.0))
+  }
+
+  test("timedRun charges each operator only for its own work") {
+    // ~1 s of per-row sleep in the first operator; the filter after it
+    // must not be charged for re-running it
+    val slow = udf { (id: Long) => Thread.sleep(10); id }
+    val expensive = new Operator {
+      val name = "expensive"
+      def apply(df: DataFrame) = df.withColumn("slow", slow(col("id")))
+    }
+    val cheap = new RowFilter {
+      val name = "cheap"
+      def keep(df: DataFrame) = col("slow") % 2 === 0
+    }
+    val input = spark.range(0, 100, 1, 1).toDF("id")
+    val before = Staging.liveCount
+    val (cs, _) = new MeteredPipeline("attr", Seq(expensive, cheap)).timedRun(input)
+    assert(cs.map(c => (c.name, c.input, c.output)) ==
+      Seq(("expensive", 100L, 100L), ("cheap", 100L, 50L)))
+    assert(cs.head.timeSec >= 0.9, s"expensive op read ${cs.head.timeSec} s")
+    assert(cs(1).timeSec < cs.head.timeSec / 3,
+      s"cheap op charged ${cs(1).timeSec} s after a ${cs.head.timeSec} s op")
+    assert(Staging.liveCount == before, "timedRun leaked a staged frame")
   }
 
   test("rollup algebra: first-in/last-out, guarded pass rates, max time") {

@@ -55,7 +55,7 @@ class TrainingMixSpec extends AnyFunSuite {
     val rejIds = f.rejected(pages).collect().map(_.getAs[Long]("id")).toSet
     assert(rejIds.contains(4L), s"null-text row missing from rejects: $rejIds")
     val m = f.mark(pages, lit(true), "t")
-    val marked = m.df.select(col("id"), m.newlyRejected.as("r")).collect()
+    val marked = m.df.select(col("id"), (!m.stillAlive).as("r")).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("r")).toMap
     assert(marked(4L), "null-text row not marked rejected in disposition mode")
   }
