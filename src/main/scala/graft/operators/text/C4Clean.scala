@@ -17,11 +17,14 @@ import org.apache.spark.sql.functions._
   *    brace `{` (code), or if the CLEANED text has fewer than
   *    `minSentences` sentences (paper: 3).
   *
-  * Everything is pure Catalyst array/regex algebra over the split line
-  * list (codegen'd, zero shuffle), with an exact DuckDB list-function
-  * twin per expression so the operator is oracle-gated. The 3-sentence
-  * span dedup from the same paper is covered corpus-globally by
-  * [[LineDedupRefiner]].
+  * The columns here are pure Catalyst array/regex algebra over the
+  * split line list, with an exact DuckDB list-function twin per
+  * expression so the operator is oracle-gated. They are the reference
+  * semantics: the operators evaluate the fused
+  * [[graft.plans.kernels.C4Signals]] kernel, whose hand scans equal
+  * these regexes and `lower()` tests (its scaladoc states each rule).
+  * The 3-sentence span dedup from the same paper is covered
+  * corpus-globally by [[LineDedupRefiner]].
   */
 object C4Clean {
 

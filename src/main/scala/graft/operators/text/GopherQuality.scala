@@ -18,10 +18,13 @@ import org.apache.spark.sql.functions._
   *  6. >= 80% of words containing at least one alphabetic character,
   *  7. >= 2 distinct English stop words present.
   *
-  * All pure Catalyst regex/array algebra over one staged token split
-  * (codegen'd, zero shuffle), each signal with an exact DuckDB twin so
-  * the operator is oracle-gated. Ratios divide exact integers in double,
-  * so the decisions are bit-identical across engines.
+  * The columns here are pure Catalyst regex/array algebra over one
+  * staged token split, each signal with an exact DuckDB twin so the
+  * operator is oracle-gated. They are the reference semantics: the
+  * operators evaluate the fused [[graft.plans.kernels.GopherSignals]]
+  * kernel, whose hand scans equal these regexes (its scaladoc states
+  * each rule). Ratios divide exact integers in double, so the decisions
+  * are bit-identical across engines.
   */
 object GopherQuality {
 

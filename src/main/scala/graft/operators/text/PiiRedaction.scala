@@ -7,15 +7,19 @@ import org.apache.spark.sql.functions._
 /** PII detection + redaction — a standard pass in any public-web
   * training-data pipeline (beyond the reference's own operator set,
   * like the rest of the training-data family): count and mask emails,
-  * IPv4 addresses, and NANP-style phone numbers. Pure Catalyst
-  * regexp expressions (codegen'd, zero shuffle); the patterns are
-  * deliberately conservative and portable (identical semantics in
+  * IPv4 addresses, and NANP-style phone numbers. The `regexp_count` /
+  * `regexp_replace` columns here are the declarative semantics and the
+  * DuckDB twin's source; [[PiiRedactionRefiner]] evaluates them through
+  * the fused [[graft.plans.kernels.PiiSignals]] kernel, which runs the
+  * same compiled patterns only where a match can start. The patterns
+  * are deliberately conservative and portable (identical semantics in
   * Java regex and RE2, so the DuckDB twin re-evaluates them
   * independently).
   *
-  * A production deployment extends [[PiiRedaction.patterns]] with
-  * jurisdiction-specific detectors (IBANs, national ids); the
-  * column contract and redaction order stay fixed.
+  * A new detector (IBANs, national ids) is a new kind in
+  * [[PiiRedaction.patterns]] plus its match-start rule in
+  * `PiiSignals`, which rejects kinds it has no rule for; the column
+  * contract and redaction order stay fixed.
   */
 object PiiRedaction {
 

@@ -71,8 +71,9 @@ final class TextRepetitionRefiner(textCol: String = "text") extends Operator {
   * mass) and the character fraction covered by the most frequent word
   * n-gram for n = 2, 3, 4 — the signals Gopher thresholds to drop
   * machine-generated/boilerplate pages. One fused kernel pass per row
-  * ([[graft.plans.kernels.RepetitionSignals]]); stateless map, no
-  * shuffle, scan speed.
+  * ([[graft.plans.kernels.RepetitionSignals]]: character counts in code
+  * points, top-gram ties in code-point order, as the DuckDB twin);
+  * stateless map, no shuffle, scan speed.
   */
 final class GopherRepetitionRefiner(textCol: String = "text") extends Operator {
   val name = "gopher_repetition"

@@ -225,18 +225,110 @@ object kernels {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
-  private val wsPattern = java.util.regex.Pattern.compile("\\s+")
+  /** Java regex `\s` without flags: `[ \t\n\x0B\f\r]`. */
+  @inline private def isRegexSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
 
-  /** Tokenize exactly like `TextFunctions.tokensOf` (regexp_replace \s+→' ',
-    * trim, lower, split on ' ') but in one JVM pass. trim/lower go through
-    * UTF8String so non-ASCII behavior is bit-identical to Catalyst's
-    * `trim`/`lower` expressions (String.trim would differ on control chars).
+  /** Tokenize exactly like `TextFunctions.tokensOf`
+    * (`lower(trim(regexp_replace(t, '\s+', ' ')))` split on ' ') in one
+    * walk over the chars, with no regex and no whole-text copies:
+    *
+    *  - A token is a maximal run of non-`\s` chars. The replace turns
+    *    every `\s` run into one space, `trim` (ASCII space only) drops
+    *    the two end spaces, and the split yields exactly the runs
+    *    between them.
+    *  - Each token is lowercased alone. Case mapping is per code point
+    *    except final sigma, whose context (cased and case-ignorable
+    *    neighbours) cannot cross a space, so per-token lowering equals
+    *    `lower()` of the whole string. ASCII tokens lowercase A-Z inline;
+    *    any other token goes through the same `CollationSupport.Lower`
+    *    call as Catalyst's `lower`, under the session's ICU case-mapping
+    *    flag (so `İ` → `i̇`, Kelvin `K` → `k`, `Σ` → `ς`/`σ` agree).
     */
-  private[graft] def tokenizeJvm(text: org.apache.spark.unsafe.types.UTF8String): Array[String] = {
-    val replaced = wsPattern.matcher(text.toString).replaceAll(" ")
-    val norm = org.apache.spark.unsafe.types.UTF8String
-      .fromString(replaced).trim().toLowerCase.toString
-    if (norm.isEmpty) Array.empty[String] else norm.split(' ')
+  private[graft] def tokenizeJvm(text: org.apache.spark.unsafe.types.UTF8String): Array[String] =
+    tokenize(text.toString)
+
+  private def tokenize(raw: String): Array[String] = {
+    val n = raw.length
+    var out = new Array[String](16)
+    var k = 0
+    var icu = -1 // spark.sql.icu.caseMappings.enabled, read at the first non-ASCII token
+    var i = 0
+    while (i < n) {
+      while (i < n && isRegexSpace(raw.charAt(i))) i += 1
+      if (i < n) {
+        val s = i
+        var upper = false
+        var ascii = true
+        var c = raw.charAt(i)
+        while (i < n && !isRegexSpace(c)) {
+          if (c >= 0x80) ascii = false else if (c >= 'A' && c <= 'Z') upper = true
+          i += 1
+          if (i < n) c = raw.charAt(i)
+        }
+        val tok =
+          if (!ascii) {
+            if (icu < 0) icu = if (org.apache.spark.sql.internal.SQLConf.get.getConf(
+              org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)) 1 else 0
+            org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(
+              org.apache.spark.unsafe.types.UTF8String.fromString(raw.substring(s, i)),
+              org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID,
+              icu == 1).toString
+          } else if (upper) {
+            val cs = new Array[Char](i - s)
+            var j = 0
+            while (j < cs.length) {
+              val a = raw.charAt(s + j)
+              cs(j) = if (a >= 'A' && a <= 'Z') (a + 32).toChar else a
+              j += 1
+            }
+            new String(cs)
+          } else raw.substring(s, i)
+        if (k == out.length) out = java.util.Arrays.copyOf(out, k * 2)
+        out(k) = tok
+        k += 1
+      }
+    }
+    if (k == out.length) out else java.util.Arrays.copyOf(out, k)
+  }
+
+  /** Start of the tail a `\s*$` regex consumes at the end of the line
+    * `[s, e)` (a `\n`-split line, so it holds no `\n`). Without MULTILINE,
+    * Java's `$` matches at the end of input or before ONE final line
+    * terminator; `\r` is also `\s`, so the tail is an optional final
+    * `\u0085`/`\u2028`/`\u2029`, then a run of `\s` before it.
+    */
+  private def lineTailStart(raw: String, s: Int, e: Int): Int = {
+    var j = e
+    if (j > s) {
+      val c = raw.charAt(j - 1)
+      if (c == '\u0085' || c == '\u2028' || c == '\u2029') j -= 1
+    }
+    while (j > s && isRegexSpace(raw.charAt(j - 1))) j -= 1
+    j
+  }
+
+  /** Whether `raw[s, e)` contains the lowercase ASCII `pat` ignoring ASCII
+    * case — equal to `lower(raw[s, e)).contains(pat)` for the two
+    * patterns used ("javascript", "lorem ipsum"): ASCII lowers to ASCII,
+    * and the only non-ASCII chars that lower to ASCII are Kelvin `K`
+    * (→ `k`, in neither pattern) and `İ` (→ `i` + U+0307, and each
+    * pattern's `i` is followed by `p`, never by U+0307).
+    */
+  private def containsAsciiIgnoreCase(raw: String, s: Int, e: Int, pat: String): Boolean = {
+    val m = pat.length
+    var i = s
+    while (i + m <= e) {
+      var k = 0
+      while (k < m && {
+        val p = pat.charAt(k)
+        val c = raw.charAt(i + k)
+        c == p || (p >= 'a' && p <= 'z' && c == p - 32)
+      }) k += 1
+      if (k == m) return true
+      i += 1
+    }
+    false
   }
 
   /** Fused tokenize → word w-shingle → 60-bit portable hash → distinct.
@@ -920,18 +1012,26 @@ object kernels {
   }
 
   /** The full Gopher document-quality battery (Rae et al. 2021 A1.1) in
-    * ONE JVM pass per row: tokenize once, then every signal plus the keep
-    * verdict from that single token walk. The declarative form
-    * ([[graft.operators.text.GopherQuality]]) re-evaluates the tokenize
-    * tree per signal inside interpreted HOF lambdas (`aggregate` for mean
-    * length, `filter`+rlike for the alpha fraction) — the filter form
-    * paid it ~7× per row. Bit-identical to the declarative columns:
-    * token lengths are code-point counts (Catalyst `length`), regex
-    * counting/matching uses the same java.util.regex patterns and
-    * non-overlapping `find` semantics as `regexp_count`/`rlike`, and
-    * every ratio divides the same exact integers in double. NULL input
-    * must be coalesced to '' by the wrapper (the declarative form is
-    * null-tolerant, not null-propagating).
+    * ONE JVM pass per row, bit-identical to the declarative columns of
+    * [[graft.operators.text.GopherQuality]]. No regex runs; each rule is
+    * a hand scan equal to the regex or `lower()` form it replaces:
+    *
+    *  - tokens come from [[tokenizeJvm]]; a token's length is its
+    *    code-point count (Catalyst `length`), and the alpha test
+    *    `rlike '[a-z]'` is "some char in a..z" of the lowercased token;
+    *  - stopword hits count distinct stopwords present (tokens longer
+    *    than the longest stopword skip the lookup);
+    *  - symbols: `regexp_count('#')` is the `#` count, and
+    *    `regexp_count('\.{3}|…')` (leftmost, non-overlapping) is one per
+    *    `…` plus `floor(run / 3)` per run of dots;
+    *  - lines split on `\n` (split -1: `\n` count + 1 lines). A bullet
+    *    line (`^\s*[•\-\*‣▪]`) has one of those chars after its leading
+    *    `\s` run; an ellipsis line (`(\.{3}|…)\s*$`) ends in `...` or `…`
+    *    right before its `\s*$` tail ([[lineTailStart]]);
+    *  - every ratio divides the same exact integers in double.
+    *
+    * NULL input must be coalesced to '' by the wrapper (the declarative
+    * form is null-tolerant, not null-propagating).
     */
   case class GopherSignals(
       child: Expression, stopwords: Seq[String],
@@ -947,60 +1047,76 @@ object kernels {
       StructField("stopword_hits", LongType, nullable = false),
       StructField("keep", BooleanType, nullable = false)))
 
-    private val hashRun = java.util.regex.Pattern.compile("#")
-    private val ellipsisRun = java.util.regex.Pattern.compile("\\.{3}|…")
-    private val bulletLine = java.util.regex.Pattern.compile("^\\s*[•\\-\\*‣▪]")
-    private val ellipsisLine = java.util.regex.Pattern.compile("(\\.{3}|…)\\s*$")
-    private val alphaChar = java.util.regex.Pattern.compile("[a-z]")
-    private val stopSet = {
-      val s = new java.util.HashSet[String]()
-      stopwords.foreach(s.add)
-      s
+    // distinct stopword -> slot in the per-row seen array
+    private val stopIndex = {
+      val m = new java.util.HashMap[String, Integer]()
+      stopwords.foreach(w => if (!m.containsKey(w)) m.put(w, m.size()))
+      m
     }
+    private val maxStopLen = if (stopwords.isEmpty) -1 else stopwords.map(_.length).max
 
-    private def countMatches(p: java.util.regex.Pattern, s: String): Int = {
-      val m = p.matcher(s)
-      var c = 0
-      while (m.find()) c += 1
-      c
-    }
+    private def isBullet(c: Char): Boolean =
+      c == '•' || c == '-' || c == '*' || c == '‣' || c == '▪'
 
     override def nullSafeEval(v: Any): Any = {
-      val text = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-      val raw = text.toString
-      val toks = tokenizeJvm(text)
+      val raw = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
+      val toks = tokenize(raw)
       val n = toks.length
 
       var lenSum = 0L
       var alphaHits = 0
-      val stopsSeen = new java.util.HashSet[String]()
+      var stopHits = 0L
+      val stopSeen = new Array[Boolean](stopIndex.size())
       var i = 0
       while (i < n) {
         val t = toks(i)
         lenSum += t.codePointCount(0, t.length)
-        if (alphaChar.matcher(t).find()) alphaHits += 1
-        if (stopSet.contains(t)) stopsSeen.add(t)
+        var j = 0
+        while (j < t.length && { val c = t.charAt(j); c < 'a' || c > 'z' }) j += 1
+        if (j < t.length) alphaHits += 1
+        if (t.length <= maxStopLen) {
+          val slot = stopIndex.get(t)
+          if (slot != null && !stopSeen(slot)) { stopSeen(slot) = true; stopHits += 1 }
+        }
         i += 1
       }
       val meanLen = if (n == 0) 0.0 else lenSum.toDouble / n.toDouble
       val alphaFrac = if (n == 0) 0.0 else alphaHits.toDouble / n.toDouble
 
-      val syms = countMatches(hashRun, raw) + countMatches(ellipsisRun, raw)
-      val symbolRatio = if (n == 0) 0.0 else syms.toDouble / n.toDouble
-
-      val lines = raw.split("\n", -1)
+      // one walk over the chars: symbol counts, and each line's bullet
+      // and ellipsis tests when its '\n' (or the end) is reached
+      val len = raw.length
+      var syms = 0
+      var dots = 0
+      var lines = 0
       var bullets = 0
       var ellipses = 0
-      var j = 0
-      while (j < lines.length) {
-        if (bulletLine.matcher(lines(j)).find()) bullets += 1
-        if (ellipsisLine.matcher(lines(j)).find()) ellipses += 1
-        j += 1
+      var lineStart = 0
+      var p = 0
+      while (p <= len) {
+        val c = if (p < len) raw.charAt(p) else '\n'
+        if (c == '.') {
+          dots += 1
+          if (dots == 3) { syms += 1; dots = 0 }
+        } else {
+          dots = 0
+          if (c == '#' || c == '…') syms += 1
+          else if (c == '\n') {
+            lines += 1
+            var b = lineStart
+            while (b < p && isRegexSpace(raw.charAt(b))) b += 1
+            if (b < p && isBullet(raw.charAt(b))) bullets += 1
+            val e = lineTailStart(raw, lineStart, p)
+            if ((e > lineStart && raw.charAt(e - 1) == '…') ||
+                (e - lineStart >= 3 && raw.startsWith("...", e - 3))) ellipses += 1
+            lineStart = p + 1
+          }
+        }
+        p += 1
       }
-      val nl = lines.length
-      val bulletFrac = if (nl == 0) 0.0 else bullets.toDouble / nl.toDouble
-      val ellipsisFrac = if (nl == 0) 0.0 else ellipses.toDouble / nl.toDouble
-      val stopHits = stopsSeen.size().toLong
+      val symbolRatio = if (n == 0) 0.0 else syms.toDouble / n.toDouble
+      val bulletFrac = bullets.toDouble / lines.toDouble
+      val ellipsisFrac = ellipses.toDouble / lines.toDouble
 
       val keep = n >= minWords && n <= maxWords &&
         meanLen >= 3.0 && meanLen <= 10.0 &&
@@ -1013,17 +1129,23 @@ object kernels {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
-  /** C4 page cleaning (Raffel et al. 2020 §2.2) in ONE JVM pass per row:
-    * line split, per-line keep (terminal punctuation + word minimum + no
-    * "javascript"), rebuilt clean text, sentence count over the clean
-    * text, and the page verdict (no "lorem ipsum"/brace, sentence
-    * minimum). The declarative form's per-line keep is a filter lambda
-    * with a nested split+filter per LINE — interpreted HOF cost the
-    * composed curation stack re-pays on every branch that consumes the
-    * alive flag. Bit-identical to
-    * [[graft.operators.text.C4Clean]]'s columns (same java regexes as
-    * rlike/regexp_count, trim is UTF8String trim, words split on single
-    * space). NULL input must be coalesced to '' by the wrapper.
+  /** C4 page cleaning (Raffel et al. 2020 §2.2) in ONE JVM pass per row,
+    * bit-identical to [[graft.operators.text.C4Clean]]'s columns. Each
+    * `\n`-split line (split -1) is tested by hand scans equal to the
+    * declarative per-line keep:
+    *
+    *  - terminal punctuation (`rlike '[.!?"]\s*$'`): the char right
+    *    before the line's `\s*$` tail ([[lineTailStart]]) is one of
+    *    `.!?"`;
+    *  - the word count of `split(trim(l), ' ')` minus empties is the
+    *    number of maximal runs of non-space chars;
+    *  - `lower(l).contains("javascript")` is an ASCII-case-insensitive
+    *    search ([[containsAsciiIgnoreCase]]).
+    *
+    * Kept lines rejoin with `\n`; the sentence count
+    * (`regexp_count(clean, '[.!?]')`) sums the `.!?` chars of kept lines.
+    * The page verdict is no "lorem ipsum" (same search), no `{`, and the
+    * sentence minimum. NULL input must be coalesced to '' by the wrapper.
     */
   case class C4Signals(child: Expression, minWordsPerLine: Int, minSentences: Int)
       extends UnaryExpression with UnaryRefCodegen {
@@ -1034,78 +1156,135 @@ object kernels {
       StructField("sentences", LongType, nullable = false),
       StructField("keep", BooleanType, nullable = false)))
 
-    private val terminal = java.util.regex.Pattern.compile("[.!?\"]\\s*$")
-    private val sentenceMark = java.util.regex.Pattern.compile("[.!?]")
-
     override def nullSafeEval(v: Any): Any = {
-      val text = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-      val raw = text.toString
-      val lines = raw.split("\n", -1)
-      val kept = new java.lang.StringBuilder(raw.length)
+      val raw = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
+      val len = raw.length
+      val kept = new java.lang.StringBuilder(len)
+      var nLines = 0L
       var nKept = 0L
-      var i = 0
-      while (i < lines.length) {
-        val l = lines(i)
-        if (terminal.matcher(l).find()) {
-          // word count: split the trimmed line on single spaces, count
-          // non-empty — same algebra as the declarative nested filter
-          val trimmed = org.apache.spark.unsafe.types.UTF8String
-            .fromString(l).trim().toString
+      var sentences = 0L
+      var s = 0
+      while (s <= len) {
+        val q = raw.indexOf('\n', s)
+        val e = if (q < 0) len else q
+        nLines += 1
+        val t = lineTailStart(raw, s, e)
+        val terminal = t > s && { val c = raw.charAt(t - 1); c == '.' || c == '!' || c == '?' || c == '"' }
+        if (terminal) {
           var words = 0
-          var p = 0
-          val len = trimmed.length
-          while (p < len) {
-            val q = trimmed.indexOf(' ', p)
-            val end = if (q < 0) len else q
-            if (end > p) words += 1
-            p = end + 1
+          var marks = 0
+          var inWord = false
+          var p = s
+          while (p < e) {
+            val c = raw.charAt(p)
+            if (c == ' ') inWord = false
+            else {
+              if (!inWord) { words += 1; inWord = true }
+              if (c == '.' || c == '!' || c == '?') marks += 1
+            }
+            p += 1
           }
           if (words >= minWordsPerLine &&
-              !org.apache.spark.unsafe.types.UTF8String.fromString(l)
-                .toLowerCase.toString.contains("javascript")) {
+              !containsAsciiIgnoreCase(raw, s, e, "javascript")) {
             if (nKept > 0) kept.append('\n')
-            kept.append(l)
+            kept.append(raw, s, e)
             nKept += 1
+            sentences += marks
           }
         }
-        i += 1
+        s = e + 1
       }
-      val clean = kept.toString
-      val m = sentenceMark.matcher(clean)
-      var sentences = 0L
-      while (m.find()) sentences += 1
-      val keep = !text.toLowerCase.toString.contains("lorem ipsum") &&
-        !raw.contains("{") && sentences >= minSentences
+      val keep = !containsAsciiIgnoreCase(raw, 0, len, "lorem ipsum") &&
+        raw.indexOf('{') < 0 && sentences >= minSentences
       new GenericInternalRow(Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(clean),
-        nKept, lines.length.toLong, sentences, keep))
+        org.apache.spark.unsafe.types.UTF8String.fromString(kept.toString),
+        nKept, nLines, sentences, keep))
     }
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
   /** PII battery: per-kind match counts over the ORIGINAL text plus the
-    * chained redaction, one fused evaluation per row. The declarative
-    * form ran 2 independent regexp expressions per kind (count +
-    * replace), each materializing the row's UTF8String separately — 6
-    * conversions and 6 uncached matcher setups per row; fused, the raw
-    * string materializes once and the patterns are compiled once per
-    * operator instance. Counts are per-kind over the original text and
-    * redaction chains in pattern order (later patterns see earlier
-    * replacements) — EXACTLY the declarative/DuckDB algebra; a single
-    * alternation scan would diverge on spans where a lower-priority
-    * match starts before an overlapping higher-priority one.
+    * chained redaction (later patterns see earlier replacements) —
+    * exactly the `regexp_count`/`regexp_replace` algebra of
+    * [[graft.operators.text.PiiRedaction]] and its DuckDB twin. The
+    * compiled patterns stay the matcher of record, but a row tries them
+    * only at the positions where a match can start, each with
+    * `region(p, n)` + `lookingAt()` under transparent bounds (so `\b`
+    * still sees the char before `p`). Visiting candidates in order from
+    * the previous match end reproduces `find()`'s leftmost,
+    * non-overlapping matches:
+    *
+    *  - email: for each `@`, the start of the local-part run
+    *    (`[A-Za-z0-9._%+-]`) ending right before it, clipped at the
+    *    previous match end. `@` is outside that class, so a match must
+    *    consume the whole run up to an `@`; every start in the run
+    *    shares the same domain attempt, so the leftmost one decides.
+    *  - ipv4, phone: an ASCII digit not preceded by an ASCII digit (both
+    *    patterns start with `\b\d`, and `\b` fails between two digits).
+    *
+    * This skips the per-position retries of the greedy local-part class
+    * (O(run²) per run). The start rule is keyed on the pattern's kind,
+    * so only the kinds above are accepted.
     */
   case class PiiSignals(child: Expression, patterns: Seq[(String, String, String)])
       extends UnaryExpression with UnaryRefCodegen {
+    require(patterns.forall { case (k, _, _) => Set("email", "ipv4", "phone")(k) },
+      s"no match-start rule for pii kinds ${patterns.map(_._1).mkString(",")}")
     override def dataType: DataType = StructType(
       patterns.map { case (k, _, _) =>
         StructField(s"${k}_count", LongType, nullable = false)
       } :+ StructField("redacted", StringType, nullable = false))
 
-    @transient private lazy val compiled = patterns.map { case (_, p, r) =>
-      (java.util.regex.Pattern.compile(p),
-        java.util.regex.Matcher.quoteReplacement(r))
+    @transient private lazy val compiled = patterns.map { case (k, p, r) =>
+      (k == "email", java.util.regex.Pattern.compile(p), r)
     }.toArray
+
+    @inline private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+    @inline private def isLocal(c: Char): Boolean =
+      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || isDigit(c) ||
+        c == '.' || c == '_' || c == '%' || c == '+' || c == '-'
+
+    /** Finds the next match at or after `from`; `m` then holds its span. */
+    private def nextMatch(m: java.util.regex.Matcher, s: String,
+        email: Boolean, from: Int): Boolean = {
+      val n = s.length
+      if (email) {
+        var at = s.indexOf('@', from)
+        while (at >= 0) {
+          var p = at
+          while (p > from && isLocal(s.charAt(p - 1))) p -= 1
+          if (p < at && { m.region(p, n); m.lookingAt() }) return true
+          at = s.indexOf('@', at + 1)
+        }
+      } else {
+        var p = from
+        while (p < n) {
+          if (isDigit(s.charAt(p)) && (p == 0 || !isDigit(s.charAt(p - 1))) &&
+              { m.region(p, n); m.lookingAt() }) return true
+          p += 1
+        }
+      }
+      false
+    }
+
+    /** Match count over `s`; with `out`, also appends `s` with every
+      * match replaced by the literal `repl` (only when there is one). */
+    private def matchAll(p: java.util.regex.Pattern, s: String, email: Boolean,
+        repl: String, out: java.lang.StringBuilder): Long = {
+      val m = p.matcher(s).useTransparentBounds(true).useAnchoringBounds(false)
+      var c = 0L
+      var from = 0
+      while (nextMatch(m, s, email, from)) {
+        if (out != null) {
+          if (c == 0) out.ensureCapacity(s.length + 16)
+          out.append(s, from, m.start()).append(repl)
+        }
+        c += 1
+        from = m.end()
+      }
+      if (out != null && c > 0) out.append(s, from, s.length)
+      c
+    }
 
     override def nullSafeEval(v: Any): Any = {
       val raw = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
@@ -1113,30 +1292,21 @@ object kernels {
       var red = raw
       var i = 0
       while (i < compiled.length) {
-        val (p, r) = compiled(i)
+        val (email, p, r) = compiled(i)
+        val sb = new java.lang.StringBuilder()
         if (red eq raw) {
           // count and replace see the same text (no earlier pattern has
-          // replaced anything yet) — one matcher pass does both
-          val m = p.matcher(raw)
-          var c = 0L
-          var sb: java.lang.StringBuilder = null
-          while (m.find()) {
-            if (sb == null) sb = new java.lang.StringBuilder(raw.length)
-            c += 1
-            m.appendReplacement(sb, r)
-          }
+          // replaced anything yet) — one scan does both
+          val c = matchAll(p, raw, email, r, sb)
           out(i) = c
-          if (sb != null) { m.appendTail(sb); red = sb.toString }
+          if (c > 0) red = sb.toString
         } else {
-          val m = p.matcher(raw)
-          var c = 0L
-          while (m.find()) c += 1
-          out(i) = c
+          out(i) = matchAll(p, raw, email, null, null)
           // the replace pass must run even when the ORIGINAL text has no
           // matches: a replacement token ends in a non-word char, so it
           // can CREATE a \b context that didn't exist in the original
           // ("a@b.cc1.2.3.4" → "[EMAIL]1.2.3.4" births an ipv4 match)
-          red = p.matcher(red).replaceAll(r)
+          if (matchAll(p, red, email, r, sb) > 0) red = sb.toString
         }
         i += 1
       }
@@ -1324,13 +1494,24 @@ object kernels {
     * Table A1) in one JVM pass: duplicate line / paragraph fractions
     * (unit count and character mass of beyond-first occurrences) plus
     * the character fraction covered by the single most frequent word
-    * n-gram for n = 2, 3, 4. Deterministic top-gram tie-break: highest
-    * count, then lexicographically smallest gram — mirrored exactly by
-    * the DuckDB twin's ROW_NUMBER ordering. Line/paragraph units split
-    * on "\n" / "\n\n" literally (split(-1) semantics, matching
-    * DuckDB's string_split); character denominators are the unit-char
-    * total for line/para fractions and the normalized-text length for
-    * the n-gram fractions. Empty text → all zeros.
+    * n-gram for n = 2, 3, 4. The semantics are the DuckDB twin's
+    * (`GopherQueries`):
+    *
+    *  - units split on "\n" / "\n\n" literally (split -1, `indexOf`
+    *    walks: leftmost, non-overlapping), counted as ranges of the text;
+    *  - every character count is in code points (DuckDB `len`), the
+    *    n-gram denominator being the normalized text's length;
+    *  - the top gram is the highest count, ties broken by the smallest
+    *    gram text in code-point order (DuckDB's `ORDER BY c DESC, g ASC`
+    *    compares UTF-8 bytes).
+    *
+    * No per-gram strings: the tokens ([[tokenizeJvm]]) are joined once
+    * into the normalized text, each token interned to an int id, and the
+    * 2-, 3- and 4-gram ids built level by level from packed
+    * (prefix id, last token id) long keys in a primitive open-addressing
+    * table ([[RepetitionSignals.Counter]]). A gram's text is the range of
+    * the normalized text its tokens span, compared only to break ties at
+    * the top count. Empty text → all zeros.
     */
   case class RepetitionSignals(child: Expression)
       extends UnaryExpression with UnaryRefCodegen {
@@ -1353,62 +1534,186 @@ object kernels {
   }
 
   object RepetitionSignals {
-    private def dupFracs(units: Array[String]): (Double, Double) = {
-      if (units.isEmpty) return (0.0, 0.0)
-      val counts = new java.util.HashMap[String, Integer]()
-      var totChars = 0L
-      units.foreach { u =>
-        val prev = counts.get(u)
-        counts.put(u, if (prev == null) 1 else prev + 1)
-        totChars += u.length
+
+    /** Open-addressing counter assigning dense ids (first-seen order),
+      * sized for up to `expected` distinct keys before it grows. With a
+      * `base` string a key packs a range `(from << 32) | to` of it and
+      * keys are equal when their ranges hold the same chars; without,
+      * keys are compared as longs.
+      */
+    private[kernels] final class Counter(base: String, expected: Int) {
+      private val cap = Integer.highestOneBit(math.max(expected, 16) - 1) << 1
+      private var slots = new Array[Int](cap * 2) // id + 1; 0 = empty
+      private var keys = new Array[Long](cap)
+      private var hashes = new Array[Int](cap)
+      var counts = new Array[Int](cap)
+      var size = 0
+
+      private def sameKey(id: Int, key: Long, h: Int): Boolean =
+        if (base == null) keys(id) == key
+        else hashes(id) == h && {
+          val a = (keys(id) >>> 32).toInt
+          val c = (key >>> 32).toInt
+          keys(id).toInt - a == key.toInt - c &&
+            base.regionMatches(a, base, c, key.toInt - c)
+        }
+
+      private def hashOf(key: Long): Int =
+        if (base == null) {
+          val z = key * 0x9E3779B97F4A7C15L
+          (z ^ (z >>> 29)).toInt
+        } else {
+          var h = 0
+          var i = (key >>> 32).toInt
+          val e = key.toInt
+          while (i < e) { h = 31 * h + base.charAt(i); i += 1 }
+          h ^ (h >>> 16)
+        }
+
+      /** Counts one occurrence of `key`; returns its id. */
+      def add(key: Long): Int = {
+        val h = hashOf(key)
+        var i = h & (slots.length - 1)
+        while (slots(i) != 0) {
+          val id = slots(i) - 1
+          if (sameKey(id, key, h)) { counts(id) += 1; return id }
+          i = (i + 1) & (slots.length - 1)
+        }
+        val id = size
+        if (id == keys.length) {
+          keys = java.util.Arrays.copyOf(keys, id * 2)
+          hashes = java.util.Arrays.copyOf(hashes, id * 2)
+          counts = java.util.Arrays.copyOf(counts, id * 2)
+        }
+        keys(id) = key; hashes(id) = h; counts(id) = 1
+        slots(i) = id + 1
+        size += 1
+        if (size * 2 > slots.length) rehash()
+        id
       }
+
+      private def rehash(): Unit = {
+        slots = new Array[Int](slots.length * 2)
+        var id = 0
+        while (id < size) {
+          var i = hashes(id) & (slots.length - 1)
+          while (slots(i) != 0) i = (i + 1) & (slots.length - 1)
+          slots(i) = id + 1
+          id += 1
+        }
+      }
+
+      def key(id: Int): Long = keys(id)
+    }
+
+    @inline private def range(from: Int, to: Int): Long = (from.toLong << 32) | to
+
+    /** (dup unit frac, dup char frac) over the `sep`-split units of `s`. */
+    private def dupFracs(s: String, sep: String): (Double, Double) = {
+      val units = new Counter(s, 16)
+      var nUnits = 0L
+      var from = 0
+      var q = 0
+      while (q >= 0) {
+        q = s.indexOf(sep, from)
+        units.add(range(from, if (q < 0) s.length else q))
+        nUnits += 1
+        from = q + sep.length
+      }
+      var totChars = 0L
       var dupUnits = 0L
       var dupChars = 0L
-      counts.forEach { (u, c) =>
-        if (c > 1) { dupUnits += c - 1; dupChars += u.length.toLong * (c - 1) }
+      var id = 0
+      while (id < units.size) {
+        val k = units.key(id)
+        val c = units.counts(id)
+        val chars = s.codePointCount((k >>> 32).toInt, k.toInt).toLong
+        totChars += chars * c
+        if (c > 1) { dupUnits += c - 1; dupChars += chars * (c - 1) }
+        id += 1
       }
-      (dupUnits.toDouble / units.length,
+      (dupUnits.toDouble / nUnits,
         if (totChars == 0) 0.0 else dupChars.toDouble / totChars)
     }
 
-    private def topGramFrac(toks: Array[String], n: Int, denom: Long): Double = {
-      if (toks.length < n || denom == 0) return 0.0
-      val counts = new java.util.HashMap[String, Integer]()
-      var i = 0
-      while (i + n <= toks.length) {
-        val sb = new java.lang.StringBuilder(toks(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-        val g = sb.toString
-        val prev = counts.get(g)
-        counts.put(g, if (prev == null) 1 else prev + 1)
-        i += 1
-      }
-      var bestGram: String = null
-      var bestCnt = 0
-      counts.forEach { (g, c) =>
-        if (c > bestCnt || (c == bestCnt && (bestGram == null || g.compareTo(bestGram) < 0))) {
-          bestGram = g; bestCnt = c
+    /** Code-point order of `s[a, a2)` vs `s[b, b2)`: UTF-16 order except
+      * that surrogates sort above U+E000..U+FFFF. */
+    private def compareCodePoints(s: String, a: Int, a2: Int, b: Int, b2: Int): Int = {
+      val m = math.min(a2 - a, b2 - b)
+      var k = 0
+      while (k < m) {
+        val x = s.charAt(a + k)
+        val y = s.charAt(b + k)
+        if (x != y) {
+          def fix(c: Char): Int =
+            if (c >= 0xE000) c - 0x800 else if (c >= 0xD800) c + 0x2000 else c
+          return fix(x) - fix(y)
         }
+        k += 1
       }
-      bestGram.length.toDouble * bestCnt / denom
+      (a2 - a) - (b2 - b)
     }
 
     /** The 7 battery signals in declaration order — shared by the struct
       * kernel and the single-pass boolean [[RepetitionKeep]].
       */
     private[kernels] def compute(s: String): Array[Double] = {
-      val lines = s.split("\n", -1)
-      val paras = s.split("\n\n", -1)
-      val (dlf, dlcf) = dupFracs(lines)
-      val (dpf, dpcf) = dupFracs(paras)
-      val toks = tokenizeJvm(org.apache.spark.unsafe.types.UTF8String.fromString(s))
-      var denom = 0L
-      toks.foreach(t => denom += t.length)
-      if (toks.length > 1) denom += toks.length - 1 // normalized text length
-      Array(dlf, dlcf, dpf, dpcf,
-        topGramFrac(toks, 2, denom), topGramFrac(toks, 3, denom),
-        topGramFrac(toks, 4, denom))
+      val out = new Array[Double](7)
+      val (dlf, dlcf) = dupFracs(s, "\n")
+      val (dpf, dpcf) = dupFracs(s, "\n\n")
+      out(0) = dlf; out(1) = dlcf; out(2) = dpf; out(3) = dpcf
+
+      // the normalized text: tokens joined by one space, token i at
+      // [starts(i), ends(i))
+      val toks = tokenize(s)
+      val nt = toks.length
+      val sb = new java.lang.StringBuilder()
+      val starts = new Array[Int](nt)
+      val ends = new Array[Int](nt)
+      var i = 0
+      while (i < nt) {
+        if (i > 0) sb.append(' ')
+        starts(i) = sb.length
+        sb.append(toks(i))
+        ends(i) = sb.length
+        i += 1
+      }
+      val norm = sb.toString
+      val denom = norm.codePointCount(0, norm.length).toLong
+
+      val words = new Counter(norm, nt)
+      val tokIds = new Array[Int](nt)
+      i = 0
+      while (i < nt) { tokIds(i) = words.add(range(starts(i), ends(i))); i += 1 }
+
+      var ids = tokIds // ids of the (n-1)-grams starting at each position
+      var n = 2
+      while (n <= 4 && nt >= n) {
+        val grams = new Counter(null, nt - n + 1)
+        val next = new Array[Int](nt - n + 1)
+        var best = -1
+        var bestCnt = 0
+        i = 0
+        while (i < next.length) {
+          next(i) = grams.add((ids(i).toLong << 32) | tokIds(i + n - 1))
+          i += 1
+        }
+        i = 0
+        while (i < next.length) {
+          val c = grams.counts(next(i))
+          if (c > bestCnt || (c == bestCnt && next(i) != next(best) &&
+              compareCodePoints(norm, starts(i), ends(i + n - 1),
+                starts(best), ends(best + n - 1)) < 0)) {
+            best = i; bestCnt = c
+          }
+          i += 1
+        }
+        val gramChars = norm.codePointCount(starts(best), ends(best + n - 1))
+        out(2 + n) = gramChars.toDouble * bestCnt / denom
+        ids = next
+        n += 1
+      }
+      out
     }
   }
 

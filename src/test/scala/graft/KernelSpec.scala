@@ -336,7 +336,42 @@ class KernelSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.lit("")),
         Seq("a" -> -5L, "e" -> -5L, "th" -> -6L), 4).as("v"))
         .filter(col("v") >= 0L).count() > 0)
+      // the four web-text kernels, each read by a filter so column
+      // pruning cannot drop it: pii_signals over the nullable text, the
+      // others over their coalesced (non-nullable) children
+      assert(docs.filter(kernels.pii_signals(col("text"),
+        graft.operators.text.PiiRedaction.patterns).getField("redacted").isNotNull)
+        .count() > 0)
+      assert(docs.filter(kernels.gopher_signals(col("text"),
+        graft.operators.text.GopherQuality.StopWords, 10L, 100000L, 2)
+        .getField("word_count") > 0L).count() > 0)
+      assert(docs.filter(kernels.c4_signals(col("text"), 5, 3)
+        .getField("lines_total") > 0L).count() > 0)
+      assert(docs.filter(kernels.repetition_keep(col("text"), Seq.fill(7)(1.0)))
+        .count() > 0)
     } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+  }
+
+  test("repetition battery counts code points and breaks ties in code-point order") {
+    // the DuckDB twin's len() counts code points and its `g ASC` compares
+    // UTF-8 bytes; UTF-16 units disagree on surrogate pairs
+    def signals(text: String): Seq[Double] = {
+      val r = kernels.RepetitionSignals(Literal(UTF8String.fromString(text), StringType))
+        .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      (0 until 7).map(r.getDouble)
+    }
+    // "😀😀\n😀😀\nab": lines of 2, 2 and 2 code points, one duplicate;
+    // top 2-gram "😀😀 ab" (5 code points) over the normalized 8
+    assert(signals("\uD83D\uDE00\uD83D\uDE00\n\uD83D\uDE00\uD83D\uDE00\nab") ==
+      Seq(1.0 / 3, 2.0 / 6, 0.0, 0.0, 5.0 * 1 / 8, 8.0 * 1 / 8, 0.0))
+    // "x 😀 y" twice: top 2-gram (3) x2, 3-gram (5) x2, and the 4-gram
+    // tie goes to "x 😀 y q" (7), all over 13
+    assert(signals("x \uD83D\uDE00 y x \uD83D\uDE00 y q") ==
+      Seq(0.0, 0.0, 0.0, 0.0, 3.0 * 2 / 13, 5.0 * 2 / 13, 7.0 * 1 / 13))
+    // all 2-grams tie: U+FF01 sorts before U+1F600 by code point (not by
+    // UTF-16 unit), so "a ！！" (4) wins over "a 😀" (3)
+    assert(signals("a \uD83D\uDE00 a \uFF01\uFF01") ==
+      Seq(0.0, 0.0, 0.0, 0.0, 4.0 * 1 / 8, 5.0 * 1 / 8, 8.0 * 1 / 8))
   }
 
   test("PqEncodePacked matches a by-hand argmin on random vectors (direct eval)") {
