@@ -166,31 +166,19 @@ final class MinHashLSHDedup(
     * join — the prior is the whole accumulated corpus, so its duplicate
     * mass is where a bucket goes hot (every increment row colliding
     * with a 10⁶-member prior bucket pays 10⁶ verifications). Same
-    * count-only broadcast anti-join discipline as [[apply]]'s
-    * `maxBucketSize` — counts on the wire, never a hash-array exchange
-    * keyed on the hot bucket. The increment side stays full: its size
-    * is the per-run/trigger batch, already bounded by the caller.
+    * count-only broadcast anti-join as [[apply]]'s `maxBucketSize`
+    * ([[hotBuckets]]), unstaged: the prior bands feed one join side.
+    * The increment side stays full: its size is the per-run/trigger
+    * batch, already bounded by the caller.
     */
   def pairsAgainst(increment: DataFrame, prior: DataFrame,
       priorMaxBucketSize: Option[Int]): DataFrame = {
     require(priorMaxBucketSize.forall(_ >= 1),
       s"priorMaxBucketSize must be >= 1 when set, got $priorMaxBucketSize")
-    val pbands0 = banded(prior)
-    val pbands = priorMaxBucketSize match {
-      case None => pbands0
-      case Some(cap) =>
-        val hot = pbands0.select(col("_b"), col("_bkey"))
-          .groupBy(col("_b"), col("_bkey")).agg(count(lit(1)).as("_bn"))
-          .filter(col("_bn") > cap).select(col("_b"), col("_bkey"))
-        pbands0.join(broadcast(hot), Seq("_b", "_bkey"), "left_anti")
-    }
-    val left = pbands.select(col("_b"), col("_bkey"), col("_id").as("d1"), col("_h").as("h1"))
-    val right = banded(increment).select(col("_b"), col("_bkey"), col("_id").as("d2"), col("_h").as("h2"))
-    left.join(right, Seq("_b", "_bkey"))
-      .withColumn("_j", graft.plans.kernels.array_jaccard(col("h1"), col("h2")))
-      .filter(col("_j") >= threshold)
-      .select(col("d1"), col("d2"), col("_j").as("jaccard"))
-      .dropDuplicates("d1", "d2")
+    val pbands = banded(prior)
+    val capped = priorMaxBucketSize.fold(pbands)(cap =>
+      pbands.join(broadcast(hotBuckets(pbands, cap)), Seq("_b", "_bkey"), "left_anti"))
+    verify(capped, banded(increment), ordered = false)
   }
 
   private def lshPairs(df: DataFrame): DataFrame = {
@@ -198,33 +186,47 @@ final class MinHashLSHDedup(
     val bands = maxBucketSize match {
       case Some(cap) =>
         // drop pathological buckets (e.g. empty-ish texts all colliding).
-        // Counts only on the wire: the groupBy side is column-pruned to
-        // (_b, _bkey) — a map-side partial count — and the (few) hot keys
-        // broadcast back as an anti-join. The previous window form
-        // shuffled every (_id, _h, band) row partitioned by exactly the
-        // hot key the cap exists to protect against; under memory
-        // pressure that skewed full-array exchange spilled pathologically
-        // (161× swing in the r9 driver bench). Plan-checked in PlanSpec:
-        // no Window, no _h-carrying exchange keyed on the band.
         // hot-key list STAGED (r19): `bands` feeds both join sides, so
         // an unstaged hot list re-ran the whole count pass (scan +
         // shingle/signature kernels) once per side — 4 banded passes per
         // gate. The list itself is a handful of (_b, _bkey) rows; the
         // signature-array frame stays deliberately uncached (measured
         // REJECTED — see OPTIMIZATION_r19.md).
-        val hot = graft.core.Staging.stage(bands0.select(col("_b"), col("_bkey"))
-          .groupBy(col("_b"), col("_bkey")).agg(count(lit(1)).as("_bn"))
-          .filter(col("_bn") > cap).select(col("_b"), col("_bkey")))
+        val hot = graft.core.Staging.stage(hotBuckets(bands0, cap))
         bands0.join(broadcast(hot), Seq("_b", "_bkey"), "left_anti")
       case None => bands0
     }
-    val left = bands.select(col("_b"), col("_bkey"), col("_id").as("d1"), col("_h").as("h1"))
-    val right = bands.select(col("_b"), col("_bkey"), col("_id").as("d2"), col("_h").as("h2"))
-    // verify inside the join stage, BEFORE the pair-dedup shuffle: the
-    // candidate multiset (≤ numBands copies per pair) re-verifies, but
-    // the full shingle-hash arrays never ride an exchange — only
-    // (d1, d2, jaccard) of TRUE pairs reaches dropDuplicates
-    left.join(right, Seq("_b", "_bkey")).filter(col("d1") < col("d2"))
+    verify(bands, bands, ordered = true)
+  }
+
+  /** The (_b, _bkey) groups of `bands` holding more than `cap` rows.
+    * Counts only on the wire: the groupBy side is column-pruned to
+    * (_b, _bkey) — a map-side partial count — and callers broadcast the
+    * (few) hot keys back as an anti-join. The previous window form
+    * shuffled every (_id, _h, band) row partitioned by exactly the hot
+    * key the cap exists to protect against; under memory pressure that
+    * skewed full-array exchange spilled pathologically (161× swing in
+    * the r9 driver bench). Plan-checked in PlanSpec: no Window, no
+    * _h-carrying exchange keyed on the band.
+    */
+  private def hotBuckets(bands: DataFrame, cap: Int): DataFrame =
+    bands.select(col("_b"), col("_bkey"))
+      .groupBy(col("_b"), col("_bkey")).agg(count(lit(1)).as("_bn"))
+      .filter(col("_bn") > cap).select(col("_b"), col("_bkey"))
+
+  /** Verified pairs (d1 from `left`, d2 from `right`, jaccard) of two
+    * band frames: the band-key equi-join, `d1 < d2` when `ordered`, the
+    * exact Jaccard check, then the pair dedup. Verification runs inside
+    * the join stage, BEFORE the pair-dedup shuffle: the candidate
+    * multiset (≤ numBands copies per pair) re-verifies, but the full
+    * shingle-hash arrays never ride an exchange — only (d1, d2, jaccard)
+    * of TRUE pairs reaches dropDuplicates.
+    */
+  private def verify(left: DataFrame, right: DataFrame, ordered: Boolean): DataFrame = {
+    val cand = left.select(col("_b"), col("_bkey"), col("_id").as("d1"), col("_h").as("h1"))
+      .join(right.select(col("_b"), col("_bkey"), col("_id").as("d2"), col("_h").as("h2")),
+        Seq("_b", "_bkey"))
+    (if (ordered) cand.filter(col("d1") < col("d2")) else cand)
       .withColumn("_j", graft.plans.kernels.array_jaccard(col("h1"), col("h2")))
       .filter(col("_j") >= threshold)
       .select(col("d1"), col("d2"), col("_j").as("jaccard"))
@@ -265,9 +267,7 @@ final class MinHashLSHDedup(
   }
 
   /** Oracle SQL for [[applyBestRepresentative]] (kept ids, ORDER BY id). */
-  def keepBestRepresentativeSql(table: String, scoreCol: String): String = {
-    require(!(preCollapseExact && maxBucketSize.isDefined),
-      "oracle QUALIFY counts raw rows; cap-over-collapsed-buckets has no SQL twin")
+  def keepBestRepresentativeSql(table: String, scoreCol: String): String =
     s"""WITH RECURSIVE ${verCtes(table)},
        |${ConnectedComponents.assignSql("ver")},
        |_sc AS (SELECT c.id, c.comp, t.$scoreCol AS sc
@@ -278,18 +278,14 @@ final class MinHashLSHDedup(
        |SELECT $idCol FROM $table
        |WHERE $idCol NOT IN (SELECT id FROM _sc WHERE id NOT IN (SELECT id FROM _reps))
        |ORDER BY $idCol""".stripMargin
-  }
 
   /** Oracle SQL for [[applyTransitive]] (kept ids, ORDER BY id). */
-  def keepTransitiveSql(table: String): String = {
-    require(!(preCollapseExact && maxBucketSize.isDefined),
-      "oracle QUALIFY counts raw rows; cap-over-collapsed-buckets has no SQL twin")
+  def keepTransitiveSql(table: String): String =
     s"""WITH RECURSIVE ${verCtes(table)},
        |${ConnectedComponents.assignSql("ver")}
        |SELECT $idCol FROM $table
        |WHERE $idCol NOT IN (SELECT id FROM _comp WHERE id <> comp)
        |ORDER BY $idCol""".stripMargin
-  }
 
   /** Duplicate-component size table `(comp, size)` — the dedup AUDIT
     * view: the size distribution of near-dup clusters is what drives
@@ -304,14 +300,11 @@ final class MinHashLSHDedup(
       .groupBy(col("comp")).agg(count(lit(1)).as("size"))
 
   /** Oracle SQL for [[clusterStats]] (ORDER BY comp). */
-  def clusterStatsSql(table: String): String = {
-    require(!(preCollapseExact && maxBucketSize.isDefined),
-      "oracle QUALIFY counts raw rows; cap-over-collapsed-buckets has no SQL twin")
+  def clusterStatsSql(table: String): String =
     s"""WITH RECURSIVE ${verCtes(table)},
        |${ConnectedComponents.assignSql("ver")}
        |SELECT comp, count(*) AS size FROM _comp
        |GROUP BY comp ORDER BY comp""".stripMargin
-  }
 
   /** Per-row MinHash signatures, for inspection/testing: (id, sig array). */
   def signatures(df: DataFrame): DataFrame =
@@ -356,12 +349,20 @@ final class MinHashLSHDedup(
        |$sigBody""".stripMargin
   }
 
-  /** `${pfx}bands(id, h, b, bkey)` CTE over `${pfx}sig` (no cap). */
-  private[dedup] def bandsCte(pfx: String): String =
+  /** `${pfx}bands(id, h, b, bkey)` CTE over `${pfx}sig`; with `cap`,
+    * buckets holding more than `cap` rows drop (the Spark-side
+    * hot-bucket anti-join). */
+  private[dedup] def bandsCte(pfx: String, cap: Option[Int] = None): String =
     s"""${pfx}bands AS (SELECT id, h, b,
        |    CAST(b AS VARCHAR) ${(0 until rowsPerBand).map(i =>
             s"|| '_' || CAST(m[b*$rowsPerBand+${i + 1}] AS VARCHAR)").mkString(" ")} AS bkey
-       |  FROM ${pfx}sig CROSS JOIN (SELECT unnest(range(0, $numBands)) AS b) ${pfx}bs)""".stripMargin
+       |  FROM ${pfx}sig CROSS JOIN (SELECT unnest(range(0, $numBands)) AS b) ${pfx}bs${cap.map(c =>
+            s"\n  QUALIFY count(*) OVER (PARTITION BY b, bkey) <= $c").getOrElse("")})""".stripMargin
+
+  /** Exact Jaccard of two hashed shingle sets — the twin of kernels.ArrayJaccard. */
+  private def jaccardSql(a: String, b: String): String =
+    s"CAST(len(list_intersect($a, $b)) AS DOUBLE) / " +
+      s"(CAST(len($a) + len($b) AS DOUBLE) - CAST(len(list_intersect($a, $b)) AS DOUBLE))"
 
   /** Oracle SQL for [[IncrementalMinHashDedup]]: increment ids KEPT
     * given the prior table (kept = no verified prior near-dup through a
@@ -369,21 +370,13 @@ final class MinHashLSHDedup(
     * Spark-side prior hot-bucket drop as a QUALIFY over pbands. */
   def keepAgainstSql(incTable: String, priorTable: String,
       priorMaxBucketSize: Option[Int] = None): String = {
-    val jac = s"CAST(len(list_intersect(p.h, q.h)) AS DOUBLE) / " +
-      s"(CAST(len(p.h) + len(q.h) AS DOUBLE) - CAST(len(list_intersect(p.h, q.h)) AS DOUBLE))"
-    val pb = priorMaxBucketSize match {
-      case None => "pbands p"
-      case Some(cap) =>
-        s"""(SELECT * FROM pbands
-           |    QUALIFY count(*) OVER (PARTITION BY b, bkey) <= $cap) p""".stripMargin
-    }
     s"""WITH ${sigCtes(priorTable, "p")},
        |${sigCtes(incTable, "q")},
-       |${bandsCte("p")},
+       |${bandsCte("p", priorMaxBucketSize)},
        |${bandsCte("q")},
        |xver AS (SELECT DISTINCT q.id AS d2
-       |  FROM $pb JOIN qbands q ON p.b = q.b AND p.bkey = q.bkey
-       |  WHERE $jac >= $threshold)
+       |  FROM pbands p JOIN qbands q ON p.b = q.b AND p.bkey = q.bkey
+       |  WHERE ${jaccardSql("p.h", "q.h")} >= $threshold)
        |SELECT $idCol FROM $incTable WHERE $idCol NOT IN (SELECT d2 FROM xver)
        |ORDER BY $idCol""".stripMargin
   }
@@ -394,26 +387,19 @@ final class MinHashLSHDedup(
        |SELECT id AS $idCol, ${(1 to take).map(i => s"m[$i] AS m$i").mkString(", ")}
        |FROM sig ORDER BY id""".stripMargin
 
-  /** Oracle SQL returning kept ids, ORDER BY id. Requires portableHashes.
+  /** CTE chain ending in `ver(d1, d2)` — the verified duplicate pairs.
     * Verification is on the hashed shingle sets `h` — exactly what the
-    * Spark side verifies (kernels.ArrayJaccard over ShingleHashes output).
-    * The QUALIFY clause mirrors the Spark-side `maxBucketSize` hot-bucket
-    * anti-join (same semantics: buckets with count > cap are dropped).
-    */
-  /** CTE chain ending in `ver(d1, d2)` — the verified duplicate pairs. */
+    * Spark side verifies (kernels.ArrayJaccard over ShingleHashes
+    * output). The `maxBucketSize` QUALIFY counts raw rows, so a cap over
+    * pre-collapsed buckets has no SQL twin. */
   private def verCtes(table: String): String = {
-    val cap = maxBucketSize.map(c =>
-      s"\n  QUALIFY count(*) OVER (PARTITION BY b, bkey) <= $c").getOrElse("")
+    require(!(preCollapseExact && maxBucketSize.isDefined),
+      "oracle QUALIFY counts raw rows; cap-over-collapsed-buckets has no SQL twin")
     s"""${sigCtes(table)},
-       |bands AS (SELECT id, h, b,
-       |    CAST(b AS VARCHAR) ${(0 until rowsPerBand).map(i =>
-            s"|| '_' || CAST(m[b*$rowsPerBand+${i + 1}] AS VARCHAR)").mkString(" ")} AS bkey
-       |  FROM sig CROSS JOIN (SELECT unnest(range(0, $numBands)) AS b) bs$cap),
+       |${bandsCte("", maxBucketSize)},
        |cand AS (SELECT DISTINCT a.id AS d1, b.id AS d2, a.h AS h1, b.h AS h2
        |  FROM bands a JOIN bands b ON a.b = b.b AND a.bkey = b.bkey AND a.id < b.id),
-       |ver AS (SELECT d1, d2,
-       |    CAST(len(list_intersect(h1, h2)) AS DOUBLE)
-       |      / (CAST(len(h1) + len(h2) AS DOUBLE) - CAST(len(list_intersect(h1, h2)) AS DOUBLE)) AS jacc
+       |ver AS (SELECT d1, d2, ${jaccardSql("h1", "h2")} AS jacc
        |  FROM cand
        |  WHERE jacc >= $threshold)""".stripMargin
   }
@@ -483,11 +469,9 @@ final class MinHashLSHDedup(
        |FROM _smp GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
 
-  def keepSql(table: String): String = {
-    require(!(preCollapseExact && maxBucketSize.isDefined),
-      "oracle QUALIFY counts raw rows; cap-over-collapsed-buckets has no SQL twin")
+  /** Oracle SQL returning kept ids, ORDER BY id. Requires portableHashes. */
+  def keepSql(table: String): String =
     s"""WITH ${verCtes(table)}
        |SELECT $idCol FROM $table WHERE $idCol NOT IN (SELECT d2 FROM ver)
        |ORDER BY $idCol""".stripMargin
-  }
 }

@@ -175,43 +175,6 @@ object kernels {
     z ^ (z >>> 31)
   }
 
-  /** MinHash signature over an array of shingle STRINGS (hashing inlined).
-    *
-    * portable=true: base = 60-bit md5-prefix hash, then the overflow-free
-    * integer mix of [[HashFunctions.mixConstants]] per seed — matches the
-    * DuckDB twin exactly. portable=false: splitmix64 finalization of
-    * `base ^ const_j` over the same md5 base (production family, no SQL
-    * twin needed).
-    */
-  case class MinHashSignature(child: Expression, numHashes: Int, portable: Boolean)
-      extends UnaryExpression with UnaryRefCodegen {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    private val (mixA, mixB, mixC) = HashFunctions.mixConstantArrays(numHashes)
-
-    override def nullSafeEval(v: Any): Any = {
-      val ss = v.asInstanceOf[ArrayData]
-      val n = ss.numElements()
-      if (n == 0) return null
-      val mins = Array.fill(numHashes)(Long.MaxValue)
-      var i = 0
-      while (i < n) {
-        val h = portableHashJvm(ss.getUTF8String(i))
-        var j = 0
-        while (j < numHashes) {
-          val m =
-            if (portable) HashFunctions.mixedJvm(h, mixA(j), mixB(j), mixC(j))
-            else splitmix64(h ^ (0xC2B2AE3D27D4EB4FL * (j + 1)))
-          if (m < mins(j)) mins(j) = m
-          j += 1
-        }
-        i += 1
-      }
-      new GenericArrayData(mins)
-    }
-    override def nullable: Boolean = true
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-
   /** Scalar 60-bit portable hash of ONE string, bit-identical to the
     * declarative `conv(substring(md5(cast(cast)))).cast(long)` chain
     * (`HashFunctions.portableHash64` routes here) but one MessageDigest
@@ -463,9 +426,11 @@ object kernels {
 
   /** MinHash signature from an ALREADY-HASHED shingle array (the output of
     * [[ShingleHashes]]): per seed j, min over elements of the mixed hash.
-    * Same hash families as [[MinHashSignature]] (portable: overflow-free
-    * integer mix matching the DuckDB twin; else splitmix64) — base values
-    * are identical because ShingleHashes uses the same 60-bit md5 prefix.
+    * Portable: the overflow-free integer mix of
+    * [[HashFunctions.mixConstants]] per seed, matching the DuckDB twin
+    * and the declarative `array_min(transform(hs, HashFunctions.mixed))`;
+    * else splitmix64 finalization of `base ^ const_j` (production family,
+    * no SQL twin needed).
     * Empty array → null (a doc with no shingles has no signature).
     */
   case class MinHashFromHashes(child: Expression, numHashes: Int, portable: Boolean)
@@ -2087,8 +2052,6 @@ object kernels {
     expr2col(RepetitionKeep(colExpr(
       org.apache.spark.sql.functions.coalesce(
         text, org.apache.spark.sql.functions.lit(""))), maxes))
-  def minhash_signature(hs: Column, numHashes: Int, portable: Boolean): Column =
-    expr2col(MinHashSignature(colExpr(hs), numHashes, portable))
   def minhash_from_hashes(hs: Column, numHashes: Int, portable: Boolean): Column =
     expr2col(MinHashFromHashes(colExpr(hs), numHashes, portable))
 

@@ -24,21 +24,7 @@ object PipelineRunner {
     val p = conf.params
     conf.tpe match {
       case "ParquetLoader" | "HuggingFaceLoader" =>
-        // `mode` (PERMISSIVE default / DROPMALFORMED / FAILFAST) is the
-        // malformed-record policy for the text formats: raw web-scale
-        // jsonl ALWAYS contains broken lines, and the permissive read
-        // surfaces them as `_corrupt_record` rows instead of killing
-        // the job — RunnerSpec pins both policies.
-        p.str("format", "parquet") match {
-          case "parquet" => spark.read.parquet(p.str("path").get)
-          case "csv" => spark.read.option("header", p.bool("header", true).toString)
-            .option("mode", p.str("mode", "PERMISSIVE"))
-            .option("inferSchema", "true").csv(p.str("path").get)
-          case "jsonl" | "json" => spark.read
-            .option("mode", p.str("mode", "PERMISSIVE")).json(p.str("path").get)
-          case "orc" => spark.read.orc(p.str("path").get)
-          case other => throw new IllegalArgumentException(s"unknown format: $other")
-        }
+        loadFiles(spark, conf, Seq(p.str("path").get))
       case "CommonCrawlLoader" | "WarcLoader" =>
         // S2: the DSv2 warc source — one partition per (unsplittable)
         // warc file, record parse + readability extraction in the scan
@@ -50,8 +36,14 @@ object PipelineRunner {
     }
   }
 
-  /** Load an explicit file list (resume path: planning-time pruning, not
-    * a post-scan filter — skipped files are never opened).
+  /** Read a path list in the loader's `format` — the whole source, or an
+    * explicit file list (resume path: planning-time pruning, not a
+    * post-scan filter — skipped files are never opened). `mode`
+    * (PERMISSIVE default / DROPMALFORMED / FAILFAST) is the
+    * malformed-record policy for the text formats: raw web-scale jsonl
+    * ALWAYS contains broken lines, and the permissive read surfaces them
+    * as `_corrupt_record` rows instead of killing the job — RunnerSpec
+    * pins both policies.
     */
   private def loadFiles(spark: SparkSession, conf: LoaderConf, files: Seq[String]): DataFrame = {
     val p = conf.params
@@ -128,9 +120,9 @@ object PipelineRunner {
 
   private def runScoped(spark: SparkSession, conf: PipelineConf): RunResult = {
     val t0 = System.nanoTime()
-    val wpEarly = conf.writer.params
-    val outputPathEarly = wpEarly.str("output_path", "output")
-    val tableNameEarly = wpEarly.str("table_name", "default")
+    val wp = conf.writer.params
+    val outputPath = wp.str("output_path", "output")
+    val tableName = wp.str("table_name", "default")
 
     var df = load(spark, conf.loader)
 
@@ -148,7 +140,7 @@ object PipelineRunner {
         if (remaining.isEmpty) {
           val run = MetricsRollup.run(MetricsWriter.newRunId(), Seq.empty,
             (System.nanoTime() - t0) / 1e9)
-          return RunResult(run, outputPathEarly, tableNameEarly)
+          return RunResult(run, outputPath, tableName)
         }
         if (remaining.size != all.size) df = loadFiles(spark, conf.loader, remaining)
         remaining
@@ -169,7 +161,7 @@ object PipelineRunner {
     val resolvedStages = conf.stages.map(st => st.copy(operators =
       st.operators.map(o =>
         o.copy(params = resolveReportParams(spark, df, o.params,
-          s"$outputPathEarly/_reports", reportCache)))))
+          s"$outputPath/_reports", reportCache)))))
 
     val rejects = conf.executor.rejectedEnabled
     if (rejects) df = Disposition.init(df)
@@ -212,9 +204,6 @@ object PipelineRunner {
         (st.name, counts)
       }
 
-    val wp = conf.writer.params
-    val outputPath = wp.str("output_path", "output")
-    val tableName = wp.str("table_name", "default")
     val writer: DataFrame => Unit = conf.writer.tpe match {
       case "ParquetDataWriter" => new ParquetDataWriter(
         outputPath, tableName,

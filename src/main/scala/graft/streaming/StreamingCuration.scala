@@ -20,38 +20,74 @@ import org.apache.spark.sql.types.StructType
   * Refiners and filters are narrow transformations, so the SAME operator
   * objects run unchanged on a streaming frame — asserted in
   * StreamingSpec.
+  *
+  * The `foreachBatch` twins keep their cross-trigger state in EPOCH
+  * STORES, one contract for all of them:
+  *
+  *  - layout: one child per micro-batch, `dir/epoch=N` ([[epochDir]]);
+  *  - commit marker: an epoch counts only once its child holds the
+  *    writer's `_SUCCESS` ([[committedEpochs]]) — a crash mid-write
+  *    leaves `_temporary` debris, never a half-read epoch;
+  *  - overwrite per epoch: a trigger writes its epoch with OVERWRITE,
+  *    so a crash-replayed epoch replaces its own partial write instead
+  *    of duplicating it;
+  *  - the current epoch is excluded on read: a replay sees exactly the
+  *    pre-epoch state and re-derives the same result, instead of
+  *    matching against (and dropping) its own earlier partial write.
+  *    Accumulating stores read every committed epoch but the current
+  *    one ([[committedPrior]]). Cumulative-snapshot stores read ONE
+  *    snapshot: an idempotent fold takes the newest committed epoch
+  *    EXCLUDING the current one ([[latestCommittedEpoch]]); a
+  *    non-idempotent fold takes the newest STRICTLY BELOW it
+  *    ([[latestCommittedEpochBelow]]).
   */
 object StreamingCuration {
+  import org.apache.hadoop.fs.Path
 
-  /** The accumulated epoch-partitioned prior store, with the current
-    * epoch's own partition excluded (the r16 replay discipline), or
-    * None when the store holds nothing COMMITTED to read. Bare
-    * directory existence is NOT enough (ADVICE r16): a first-epoch
-    * crash can leave `epoch=0/_temporary` only — the dir exists, but
-    * schema inference over zero data files throws and wedges the very
-    * replay loop the epoch-overwrite discipline makes safe. Committed
-    * means some `epoch=*` child carries the writer's `_SUCCESS`
-    * marker; the read is then still resolved eagerly (forcing schema
-    * inference) so a committed-but-empty store (a zero-row epoch
-    * writes `_SUCCESS` and no data files) also falls back cleanly.
+  private val EpochPrefix = "epoch="
+
+  /** The store child of epoch `e` — every epoch-store read and write. */
+  private def epochDir(dir: String, e: Long): String = s"$dir/$EpochPrefix$e"
+
+  /** The committed epochs of the store at `dir` (its [[epochDir]]
+    * children holding `_SUCCESS`), or Nil when `dir` does not exist.
+    */
+  private def committedEpochs(spark: SparkSession, dir: String): Seq[Long] = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) Nil
+    else fs.listStatus(path).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory && name.startsWith(EpochPrefix) &&
+          fs.exists(new Path(st.getPath, "_SUCCESS")))
+        name.stripPrefix(EpochPrefix).toLongOption
+      else None
+    }
+  }
+
+  /** The accumulated prior store with the current epoch's own partition
+    * excluded, or None when the store holds nothing COMMITTED to read.
+    * Bare directory existence is NOT enough (ADVICE r16): a first-epoch
+    * crash leaves only `_temporary` debris, and schema inference over
+    * zero data files throws and wedges the very replay loop the
+    * overwrite discipline makes safe. The read is then still resolved
+    * eagerly (forcing schema inference) so a committed-but-empty store
+    * (a zero-row epoch writes `_SUCCESS` and no data files) also falls
+    * back cleanly.
     */
   private[graft] def committedPrior(spark: SparkSession, dir: String,
-      epoch: Long): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = fs.exists(path) && fs.listStatus(path).exists { st =>
-      st.isDirectory && st.getPath.getName.startsWith("epoch=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
-    }
-    if (!committed) None
+      epoch: Long): Option[DataFrame] =
+    if (committedEpochs(spark, dir).isEmpty) None
     else {
+      val path = new Path(dir)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // distinguish committed-but-EMPTY (zero data files — schema
       // inference throws, the clean no-prior fallback) from a store
       // that HAS data but fails analysis (schema drift, a corrupt
       // layout): swallowing the latter would silently disable
       // cross-trigger dedup while looking healthy — that failure must
       // surface, not read as "no prior yet"
-      def hasDataFile(p: org.apache.hadoop.fs.Path): Boolean = {
+      def hasDataFile(p: Path): Boolean = {
         val it = fs.listStatus(p).iterator
         var found = false
         while (!found && it.hasNext) {
@@ -69,6 +105,70 @@ object StreamingCuration {
           if (hasDataFile(path)) throw e else None
       }
     }
+
+  /** Newest committed epoch STRICTLY BELOW `epoch` — the read side of a
+    * cumulative store whose fold is NOT idempotent (exact integer adds):
+    * a sequential stream reads epoch−1 exactly like
+    * [[latestCommittedEpoch]] would, but a fresh-checkpoint restart that
+    * renumbers from 0 over an existing store must NOT fold its replayed
+    * batch into a HIGHER stale snapshot that already contains it —
+    * epochs above the new stream's head are dead retention,
+    * re-accumulated as the new run overtakes and overwrites them, never
+    * read.
+    */
+  private[graft] def latestCommittedEpochBelow(spark: SparkSession,
+      dir: String, epoch: Long): Option[Long] =
+    committedEpochs(spark, dir).filter(_ < epoch).maxOption
+
+  /** Newest committed epoch other than `excluding` — the read side of a
+    * cumulative store whose fold is IDEMPOTENT (HLL register max), so
+    * re-folding from a higher stale snapshot republishes the same state.
+    */
+  private[graft] def latestCommittedEpoch(spark: SparkSession, dir: String,
+      excluding: Long): Option[Long] =
+    committedEpochs(spark, dir).filter(_ != excluding).maxOption
+
+  /** One trigger of a prior-dedup twin: `selfDedup` the batch, then —
+    * when the store holds a committed prior — drop what `againstPrior`
+    * (built from the prior's `storeCols`) finds; survivors go to `outDir`
+    * and their `storeCols` to `priorDir`.
+    */
+  private def priorDedupForeachBatch(stream: DataFrame, outDir: String,
+      priorDir: String, storeCols: Seq[String],
+      selfDedup: DataFrame => DataFrame,
+      againstPrior: DataFrame => DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val store = storeCols.map(col)
+    stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
+      val selfDeduped = selfDedup(batch)
+      val kept = committedPrior(batch.sparkSession, priorDir, epoch) match {
+        case None => selfDeduped
+        case Some(prior) => againstPrior(prior.select(store: _*))(selfDeduped)
+      }
+      val out = kept.persist()
+      try {
+        out.write.mode("overwrite").parquet(epochDir(outDir, epoch))
+        out.select(store: _*).write.mode("overwrite").parquet(epochDir(priorDir, epoch))
+      } finally out.unpersist()
+      ()
+    }
+  }
+
+  /** First-cap admission: `rows` rank by `idCol` within each `keys`
+    * group and are admitted while the prior's members of that group
+    * plus the rank fit `cap` — a group closes once full, so membership
+    * is prefix-stable under ordered arrival. Returns `rows`' columns.
+    */
+  private def admitFirstCap(rows: DataFrame, prior: DataFrame, keys: Seq[String],
+      idCol: String, cap: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val priorCounts = prior.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_prior_n"))
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(idCol))
+    rows.withColumn("_rank", row_number().over(w))
+      .join(priorCounts, keys, "left")
+      .filter(col("_rank") + coalesce(col("_prior_n"), lit(0L)) <= cap)
+      .select(rows.columns.map(col): _*)
   }
 
   /** Incremental file source over a directory of parquet shards —
@@ -115,12 +215,11 @@ object StreamingCuration {
     *
     * At scale, point `priorDir` at the signature table you'd persist
     * anyway; restart-safety comes from the checkpointed source offsets
-    * plus the r16 epoch-overwrite store discipline: both stores write
-    * `epoch=N` OVERWRITE partitions and the prior read excludes the
-    * current epoch's own partition, so a crash-replay re-derives the
-    * same drops instead of self-matching against its previous partial
-    * write (which would drop every replayed row as a "duplicate" of
-    * itself) or inflating the stores.
+    * plus the epoch-store contract (object doc): both stores are epoch
+    * stores, so a crash-replay re-derives the same drops instead of
+    * self-matching against its previous partial write (which would drop
+    * every replayed row as a "duplicate" of itself) or inflating the
+    * stores.
     */
   def nearDedupForeachBatch(
       stream: DataFrame,
@@ -147,27 +246,13 @@ object StreamingCuration {
       textCol = textCol, idCol = idCol, shingleWidth = shingleWidth,
       numHashes = numHashes, numBands = numBands, threshold = threshold,
       signatureScheme = signatureScheme)
-    stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val spark = batch.sparkSession
-      val selfDeduped = lsh(batch)
-      val kept = committedPrior(spark, priorDir, epoch) match {
-        case None => selfDeduped
-        case Some(prior) => new graft.operators.dedup.IncrementalMinHashDedup(
-          prior = Some(prior.select(col(idCol), col(textCol))),
-          textCol = textCol, idCol = idCol,
-          shingleWidth = shingleWidth, numHashes = numHashes,
-          numBands = numBands, threshold = threshold,
-          priorMaxBucketSize = priorMaxBucketSize,
-          signatureScheme = signatureScheme)(selfDeduped)
-      }
-      val out = kept.persist()
-      try {
-        out.write.mode("overwrite").parquet(s"$outDir/epoch=$epoch")
-        out.select(col(idCol), col(textCol))
-          .write.mode("overwrite").parquet(s"$priorDir/epoch=$epoch")
-      } finally out.unpersist()
-      ()
-    }
+    priorDedupForeachBatch(stream, outDir, priorDir, Seq(idCol, textCol), lsh(_),
+      prior => new graft.operators.dedup.IncrementalMinHashDedup(
+        prior = Some(prior), textCol = textCol, idCol = idCol,
+        shingleWidth = shingleWidth, numHashes = numHashes,
+        numBands = numBands, threshold = threshold,
+        priorMaxBucketSize = priorMaxBucketSize,
+        signatureScheme = signatureScheme).apply)
   }
 
   /** Streaming bigram-LM quality scoring (r15) — the drift-monitor twin
@@ -185,8 +270,8 @@ object StreamingCuration {
     * half-updated model.
     *
     * Restart story: checkpointed source offsets; the training corpus
-    * accumulates as `corpusDir/epoch=N` partitions written with
-    * OVERWRITE, so a replayed epoch overwrites rather than duplicates —
+    * `corpusDir` is an epoch store (object doc), so a replayed epoch
+    * overwrites rather than duplicates —
     * bigram counts never inflate across a crash (score appends to
     * `outDir` stay at-least-once, the standard foreachBatch caveat). On
     * startup the scorer adopts the highest-versioned COMPLETE snapshot
@@ -274,7 +359,7 @@ object StreamingCuration {
       try {
         // epoch-keyed OVERWRITE: a replayed epoch replaces its own
         // partition, so the accumulated corpus never double-counts
-        in.write.mode("overwrite").parquet(s"$corpusDir/epoch=$epoch")
+        in.write.mode("overwrite").parquet(epochDir(corpusDir, epoch))
         model.get().score(in).write.mode("append").parquet(outDir)
         retrainEvery.filter(n => (epoch + 1) % n == 0).foreach { _ =>
           val old = model.get()
@@ -291,11 +376,9 @@ object StreamingCuration {
     * exact-signature duplicates (hyperplane LSH first-wins), then drops
     * rows whose bucket holds a prior-corpus vector at cosine ≥
     * `threshold`, and writes survivors to both the output and the
-    * prior store. Restart story: checkpointed source offsets + the r16
-    * epoch-overwrite store discipline (`epoch=N` OVERWRITE partitions,
-    * prior read excludes the current epoch's own partition — see
-    * [[nearDedupForeachBatch]]); the prior store is the (id, vector)
-    * table a production pipeline persists anyway.
+    * prior store. Restart story: checkpointed source offsets + the
+    * epoch-store contract (object doc); the prior store is the (id,
+    * vector) table a production pipeline persists anyway.
     */
   def semanticDedupForeachBatch(
       stream: DataFrame,
@@ -309,25 +392,10 @@ object StreamingCuration {
       seed: Long = 7L): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val self = new graft.operators.vector.EmbeddingSimHash(
       vecCol, idCol, idCol, bits, dims, seed)
-    stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val spark = batch.sparkSession
-      val selfDeduped = self(batch)
-      val kept = committedPrior(spark, priorDir, epoch) match {
-        case None => selfDeduped
-        case Some(prior) => new graft.operators.vector.IncrementalEmbeddingDedup(
-          prior = Some(prior.select(col(idCol), col(vecCol))),
-          vecCol = vecCol,
-          idCol = idCol, threshold = threshold, bits = bits, dims = dims,
-          seed = seed)(selfDeduped)
-      }
-      val out = kept.persist()
-      try {
-        out.write.mode("overwrite").parquet(s"$outDir/epoch=$epoch")
-        out.select(col(idCol), col(vecCol))
-          .write.mode("overwrite").parquet(s"$priorDir/epoch=$epoch")
-      } finally out.unpersist()
-      ()
-    }
+    priorDedupForeachBatch(stream, outDir, priorDir, Seq(idCol, vecCol), self(_),
+      prior => new graft.operators.vector.IncrementalEmbeddingDedup(
+        prior = Some(prior), vecCol = vecCol, idCol = idCol,
+        threshold = threshold, bits = bits, dims = dims, seed = seed).apply)
   }
 
   /** Streaming PROBED semantic dedup (r16) — the incremental twin of
@@ -343,14 +411,12 @@ object StreamingCuration {
     * kill later lookalikes; with ids arriving in order, the union of
     * per-trigger kept sets equals the one-shot batch
     * ProbedCosineDedup under the same frozen centroids (pinned in
-    * StreamingSpec). Both stores write `epoch=N` OVERWRITE partitions
-    * and the prior read excludes the current epoch — the anchor
-    * miner's replay discipline, so a crash-replay re-derives the same
-    * drops.
+    * StreamingSpec). Both stores are epoch stores (object doc), so a
+    * crash-replay re-derives the same drops.
     *
     * Store layout (r17, VERDICT r16 #4): the prior store is ALSO
-    * partitioned by the probed cell (`epoch=N/_pc=C/`), and each
-    * trigger reads only the cells its own batch probes (a bounded
+    * partitioned by the probed cell (`_pc=C/` inside each epoch), and
+    * each trigger reads only the cells its own batch probes (a bounded
     * `isin` over ≤ numBuckets values, collected from the batch) — so
     * the per-trigger prior scan is pruned to the touched cells instead
     * of re-reading the whole history, and partition pruning does the
@@ -398,7 +464,6 @@ object StreamingCuration {
     val centroids = km.centroidsOf(km.fit(refCorpus)) // frozen ONCE
     stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
       val spark = batch.sparkSession
-      import org.apache.spark.sql.expressions.Window
       val in = batch.persist()
       try {
         val cells = in.filter(col(vecCol).isNotNull)
@@ -415,20 +480,9 @@ object StreamingCuration {
               .select(col(idCol), col(vecCol), col("_pc"))
           case None => cells.limit(0)
         }
-        // first-cap admission (cap set): prior admitted members + id
-        // rank within this batch must fit the cap; uncapped, every
-        // probed assignment participates (the r16 semantics)
-        val admitted = (maxCellSize match {
-          case None => cells
-          case Some(cap) =>
-            val priorCounts = prior.groupBy(col("_pc"))
-              .agg(count(lit(1)).as("_n"))
-            val w = Window.partitionBy(col("_pc")).orderBy(col(idCol))
-            cells.withColumn("_rn", row_number().over(w))
-              .join(priorCounts, Seq("_pc"), "left")
-              .filter(col("_rn") + coalesce(col("_n"), lit(0L)) <= cap)
-              .select(col(idCol), col(vecCol), col("_pc"))
-        }).persist()
+        // uncapped, every probed assignment participates (the r16 semantics)
+        val admitted = maxCellSize.fold(cells)(
+          admitFirstCap(cells, prior, Seq("_pc"), idCol, _)).persist()
         try {
           admitted.count() // materialize: pairs + the store write consume it
           // in-batch pairwise drops (smaller id wins) + cross-trigger
@@ -454,9 +508,9 @@ object StreamingCuration {
             .select(col(idCol))
           val kept = in.join(
             selfDrops.unionByName(crossDrops).distinct(), Seq(idCol), "left_anti")
-          kept.write.mode("overwrite").parquet(s"$outDir/epoch=$epoch")
+          kept.write.mode("overwrite").parquet(epochDir(outDir, epoch))
           admitted.write.partitionBy("_pc")
-            .mode("overwrite").parquet(s"$priorDir/epoch=$epoch")
+            .mode("overwrite").parquet(epochDir(priorDir, epoch))
         } finally admitted.unpersist()
       } finally in.unpersist()
       ()
@@ -480,9 +534,8 @@ object StreamingCuration {
     * ids arrive in order; StreamingSpec pins it), mine pairs of the
     * admitted rows against prior ∪ admitted (cosine ≥ `threshold`,
     * deduped across bands, `(least, greatest)`-normalized), and write
-    * both stores as `epoch=N` OVERWRITE partitions — a replayed epoch
-    * replaces its own output, never duplicates (the r16 corpus-store
-    * discipline).
+    * both epoch stores (object doc) — a replayed epoch replaces its own
+    * output, never duplicates.
     */
   def anchorMiningForeachBatch(
       stream: DataFrame,
@@ -499,31 +552,16 @@ object StreamingCuration {
     require(maxBucketSize > 0, "maxBucketSize is required")
     val stats = AnnSearch.bandStatsOf(refCorpus, vecCol, bands)
     stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val spark = batch.sparkSession
-      import org.apache.spark.sql.expressions.Window
       val banded = AnnSearch.bandedFrozen(batch, vecCol, idCol, bands, stats)
-      // the prior read EXCLUDES this epoch's own partition: a replayed
-      // epoch would otherwise see its own previous partial write, count
-      // its rows against the cap, reject them all, and the overwrite
-      // would then DROP them from the store — with the exclusion the
-      // replay sees exactly the pre-epoch state and re-derives the same
-      // admission, so the epoch=N overwrite is genuinely idempotent
-      // (committedPrior also rides out a crash that left only an
-      // uncommitted first epoch — ADVICE r16)
-      val prior = committedPrior(spark, priorDir, epoch) match {
+      // the excluded current epoch matters most here: a replay that saw
+      // its own partial write would count its rows against the cap,
+      // reject them all, and the overwrite would DROP them from the store
+      val prior = committedPrior(batch.sparkSession, priorDir, epoch) match {
         case Some(p) => p.select(col(idCol), col(vecCol), col("_band"), col("_bk"))
         case None    => banded.limit(0)
       }
-      val priorCounts = prior.groupBy(col("_band"), col("_bk"))
-        .agg(count(lit(1)).as("_pc"))
-      // first-cap admission: batch rows rank by id within their bucket
-      // and are admitted only while prior members + rank fit the cap
-      val w = Window.partitionBy(col("_band"), col("_bk")).orderBy(col(idCol))
-      val kept = banded.withColumn("_rn", row_number().over(w))
-        .join(priorCounts, Seq("_band", "_bk"), "left")
-        .filter(col("_rn") + coalesce(col("_pc"), lit(0L)) <= maxBucketSize)
-        .select(col(idCol), col(vecCol), col("_band"), col("_bk"))
-        .persist()
+      val kept = admitFirstCap(banded, prior, Seq("_band", "_bk"), idCol,
+        maxBucketSize).persist()
       try {
         kept.count() // materialize once; pairs + the store write consume it
         val newSide = kept.select(col("_band"), col("_bk"),
@@ -538,8 +576,8 @@ object StreamingCuration {
           .select(least(col("_na"), col("_nb")).as("a"),
             greatest(col("_na"), col("_nb")).as("b"), col("_cos").as("cosine"))
           .dropDuplicates("a", "b")
-        pairs.write.mode("overwrite").parquet(s"$outDir/epoch=$epoch")
-        kept.write.mode("overwrite").parquet(s"$priorDir/epoch=$epoch")
+        pairs.write.mode("overwrite").parquet(epochDir(outDir, epoch))
+        kept.write.mode("overwrite").parquet(epochDir(priorDir, epoch))
       } finally kept.unpersist()
       ()
     }
@@ -596,54 +634,6 @@ object StreamingCuration {
     }
   }
 
-  /** Newest committed `epoch=*` partition STRICTLY BELOW `epoch` — the
-    * read side of a cumulative store whose fold is NOT idempotent
-    * (exact integer adds): a sequential stream reads epoch−1 exactly
-    * like [[latestCommittedEpoch]] would, but a fresh-checkpoint
-    * restart that renumbers from 0 over an existing store must NOT
-    * fold its replayed batch into a HIGHER stale snapshot that already
-    * contains it — epochs above the new stream's head are dead
-    * retention, re-accumulated as the new run overtakes and overwrites
-    * them, never read.
-    */
-  private[graft] def latestCommittedEpochBelow(spark: SparkSession,
-      dir: String, epoch: Long): Option[Long] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else fs.listStatus(path).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("epoch=") &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
-        st.getPath.getName.stripPrefix("epoch=").toLong
-    }.filter(_ < epoch) match {
-      case Seq() => None
-      case es    => Some(es.max)
-    }
-  }
-
-  /** Newest `epoch=*` partition of `dir` carrying a `_SUCCESS` marker,
-    * excluding `excluding` — the read side of a CUMULATIVE
-    * epoch-snapshot store (each partition holds fold-up-to-that-epoch
-    * state, so only the latest committed one is ever read; the fold
-    * must be IDEMPOTENT — HLL register max — for this to be
-    * restart-safe; a non-idempotent fold uses
-    * [[latestCommittedEpochBelow]]).
-    */
-  private[graft] def latestCommittedEpoch(spark: SparkSession, dir: String,
-      excluding: Long): Option[Long] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else fs.listStatus(path).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("epoch=") &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
-        st.getPath.getName.stripPrefix("epoch=").toLong
-    }.filter(_ != excluding) match {
-      case Seq() => None
-      case es    => Some(es.max)
-    }
-  }
-
   /** Streaming CARDINALITY — per-group HLL registers accumulated across
     * triggers. Each trigger sketches its OWN batch
     * ([[graft.functions.HllSketch]] registers, one row per group),
@@ -656,8 +646,9 @@ object StreamingCuration {
     * trigger's published estimates equal the one-shot batch sketch
     * EXACTLY (StreamingSpec pins double equality, not approximation)
     * and (b) a crash-replayed epoch overwrites its own partial
-    * partition and re-folds from the snapshot BELOW it, republishing
-    * the same state — the replay guarantee the dedup twins get from id
+    * partition and re-folds from the newest OTHER committed snapshot
+    * ([[latestCommittedEpoch]]), republishing the same state even when
+    * that snapshot is a higher stale one — the replay guarantee the dedup twins get from id
     * anti-joins falls out of the algebra here. State per group is 2^p
     * bytes regardless of stream length: the canonical streaming-sketch
     * shape (a keyed-state distinct count would hold every key ever
@@ -677,7 +668,7 @@ object StreamingCuration {
         .agg(HllSketch.hllRegisters(
           HashFunctions.portableHash64(col(keyCol)), p).as("regs"))
       val prior = latestCommittedEpoch(spark, storeDir, excluding = epoch)
-        .map(e => spark.read.parquet(s"$storeDir/epoch=$e"))
+        .map(e => spark.read.parquet(epochDir(storeDir, e)))
       val merged = (prior match {
         case Some(snap) => snap.select(col(groupCol), col("regs")).unionByName(regs)
           .groupBy(col(groupCol))
@@ -685,10 +676,10 @@ object StreamingCuration {
         case None => regs
       }).persist() // consumed twice: snapshot write + estimate publish
       try {
-        merged.write.mode("overwrite").parquet(s"$storeDir/epoch=$epoch")
+        merged.write.mode("overwrite").parquet(epochDir(storeDir, epoch))
         merged.select(col(groupCol),
             round(HllSketch.estimateRegisters(col("regs"), p), 6).as("estimate"))
-          .write.mode("overwrite").parquet(s"$outDir/epoch=$epoch")
+          .write.mode("overwrite").parquet(epochDir(outDir, epoch))
       } finally merged.unpersist()
       ()
     }
@@ -704,9 +695,10 @@ object StreamingCuration {
     * d = 64, so the fold is O(d²) driver work regardless of stream
     * age), OVERWRITEs the epoch's snapshot partition, and publishes the
     * epoch's fitted model (component rows + eigenvalues + offsets) to
-    * `outDir/epoch=N`. Because integer addition commutes and the fit is
-    * deterministic from the moments, the published model after trigger
-    * N equals a batch [[graft.operators.vector.Pca.fit]] over the union
+    * the epoch's child of `outDir`. Because integer addition commutes
+    * and the fit is deterministic from the moments, the published model
+    * after trigger N equals a batch [[graft.operators.vector.Pca.fit]]
+    * over the union
     * of all batches BIT-FOR-BIT (StreamingSpec pins double equality) —
     * and a crash-replayed epoch overwrites its own partial partition
     * and re-folds from the newest snapshot STRICTLY BELOW it
@@ -739,7 +731,7 @@ object StreamingCuration {
       // batch into a higher stale snapshot that already contains it
       val prior = latestCommittedEpochBelow(spark, storeDir, epoch)
         .map { e =>
-          val r = spark.read.parquet(s"$storeDir/epoch=$e").head()
+          val r = spark.read.parquet(epochDir(storeDir, e)).head()
           // getAs returns a mutable ArraySeq at runtime — .toSeq before
           // it crosses into the immutable-Seq-typed merge
           (r.getAs[Long]("n"),
@@ -749,7 +741,7 @@ object StreamingCuration {
       val (n, sums, prods) =
         Pca.mergeMomentRows(prior.toSeq :+ batchRow, d)
       Seq((n, sums.toSeq, prods.toSeq)).toDF("n", "sums", "prods")
-        .coalesce(1).write.mode("overwrite").parquet(s"$storeDir/epoch=$epoch")
+        .coalesce(1).write.mode("overwrite").parquet(epochDir(storeDir, epoch))
       // the epoch's model artifact: q rows (k, eigenvalue, offset,
       // component). A stream that has seen zero fittable vectors
       // publishes an EMPTY (schema-complete) model — the no-model
@@ -762,7 +754,7 @@ object StreamingCuration {
             (k, m.eigenvalues(k), m.offsets(k), m.components(k).toSeq))
         }
       model.toDF("k", "eigenvalue", "offset", "component")
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/epoch=$epoch")
+        .coalesce(1).write.mode("overwrite").parquet(epochDir(outDir, epoch))
       ()
     }
   }
@@ -835,20 +827,25 @@ object StreamingCuration {
   def markSeenWithIds(pairs: org.apache.spark.sql.Dataset[(String, String)])
       : org.apache.spark.sql.Dataset[DedupDecision] = {
     import pairs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     pairs.groupByKey(_._1)
       .flatMapGroupsWithState[String, DedupDecision](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, String)], state: GroupState[String]) =>
-          val batch = rows.toList
-          var rep = state.getOption.orNull
-          val out = batch.map { case (_, id) =>
-            if (rep == null) { rep = id; DedupDecision(key, id, kept = true, id) }
-            else DedupDecision(key, id, kept = false, rep)
-          }
-          if (rep != null) state.update(rep)
-          out.iterator
-      }
+        OutputMode.Append(), GroupStateTimeout.NoTimeout)(firstSeen)
+  }
+
+  /** The first-seen decision over one key's rows: the stored
+    * representative (or else the key's first row here) is kept, every
+    * other row is rejected against it, and the state holds it after.
+    */
+  private def firstSeen(key: String, rows: Iterator[(String, String)],
+      state: org.apache.spark.sql.streaming.GroupState[String]): Iterator[DedupDecision] = {
+    var rep = state.getOption.orNull
+    val out = rows.toList.map { case (_, id) =>
+      if (rep == null) { rep = id; DedupDecision(key, id, kept = true, id) }
+      else DedupDecision(key, id, kept = false, rep)
+    }
+    if (rep != null) state.update(rep)
+    out.iterator
   }
 
   /** [[markSeenWithIds]] with BOUNDED state: a key's first-seen
@@ -883,13 +880,8 @@ object StreamingCuration {
       state.remove()
       Iterator.empty
     } else {
-      val batch = rows.toList
-      var rep = state.getOption.orNull
-      val out = batch.map { case (_, id) =>
-        if (rep == null) { rep = id; DedupDecision(key, id, kept = true, id) }
-        else DedupDecision(key, id, kept = false, rep)
-      }
-      if (rep != null) { state.update(rep); state.setTimeoutDuration(ttl) }
-      out.iterator
+      val out = firstSeen(key, rows, state)
+      if (state.exists) state.setTimeoutDuration(ttl)
+      out
     }
 }

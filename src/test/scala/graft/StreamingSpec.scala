@@ -694,6 +694,30 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("_pc"), s"unexpected error: $e")
   }
 
+  test("epoch store listing: committed epoch=N children only; below vs excluding") {
+    import java.nio.file.{Files, Path}
+    val dir = Files.createTempDirectory("graft_epochs").resolve("store")
+    def child(name: String, committed: Boolean): Path = {
+      val d = Files.createDirectories(dir.resolve(name))
+      if (committed) Files.createFile(d.resolve("_SUCCESS"))
+      d
+    }
+    Seq("epoch=0", "epoch=1", "epoch=3").foreach(child(_, committed = true))
+    // a crashed epoch: only the writer's _temporary debris, no marker
+    Files.createDirectories(child("epoch=4", committed = false).resolve("_temporary"))
+    // a committed child outside the epoch= layout (read as 7 if the
+    // prefix rule were lost)
+    child("7", committed = true)
+    val d = dir.toString
+    assert(StreamingCuration.latestCommittedEpochBelow(spark, d, 3L) == Some(1L))
+    assert(StreamingCuration.latestCommittedEpoch(spark, d, excluding = 3L) == Some(1L))
+    assert(StreamingCuration.latestCommittedEpoch(spark, d, excluding = 9L) == Some(3L),
+      "epoch=4 (uncommitted) and the non-epoch child must not count")
+    assert(StreamingCuration.latestCommittedEpochBelow(spark, d, 0L).isEmpty)
+    assert(StreamingCuration.latestCommittedEpoch(
+      spark, dir.resolveSibling("absent").toString, excluding = 0L).isEmpty)
+  }
+
   test("streaming anchor mining: union of per-trigger pairs equals the batch first-cap twin; frozen stats never drift") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
