@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Pipeline, Tables}
+import graft.core.Tables
 import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,11 +31,11 @@ object SparkEntry {
     import graft.operators.text.{TextLengthFilter, UrlFilter}
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
       .withColumn("url", concat(lit("https://"), col("source"), lit(".example.com/"), col("doc_id").cast("string")))
-    val pipeline = Pipeline("flagship", Seq(
+    Seq(
       new UrlFilter(blockedDomains = Seq("src3.example.com")),
       new TextLengthFilter(minLength = 10, maxLength = None, textCol = "text", lengthCol = Some("n_chars")),
-      TextExactDedup(textCol = "text", idCol = "doc_id", orderCol = "doc_id")))
-    pipeline.run(docs).passed
+      TextExactDedup(textCol = "text", idCol = "doc_id", orderCol = "doc_id"))
+      .foldLeft(docs)((df, op) => op(df))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

@@ -243,24 +243,3 @@ object Disposition {
     df.filter(!col(AliveCol)).drop(AliveCol)
 }
 
-/** Result of running a pipeline: the passed rows plus each row-dropping
-  * operator's annotated reject branch (written separately, partitioned by
-  * operator — reference framework/executor.py:100-124).
-  */
-final case class PipelineResult(passed: DataFrame, rejected: Seq[(String, DataFrame)])
-
-/** An ordered operator chain. Order is execution order, exactly like the
-  * reference's config order (framework/executor.py:145-158) — narrow
-  * transforms fuse into one Spark stage; only dedups introduce a shuffle.
-  */
-final case class Pipeline(name: String, ops: Seq[Operator]) {
-  def run(input: DataFrame): PipelineResult = {
-    var df = input
-    val rejects = Seq.newBuilder[(String, DataFrame)]
-    ops.foreach {
-      case r: RejectingOperator => rejects += r.name -> r.rejected(df); df = r(df)
-      case o                    => df = o(df)
-    }
-    PipelineResult(df, rejects.result())
-  }
-}

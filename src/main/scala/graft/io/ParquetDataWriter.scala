@@ -1,6 +1,6 @@
 package graft.io
 
-import graft.core.{PipelineResult, Rejection}
+import graft.core.Rejection
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -96,15 +96,9 @@ final class ParquetDataWriter(
   * the rejecting operator from the provenance struct.
   */
 object RejectedWriter {
-  def write(result: PipelineResult, outputPath: String, tableName: String): Unit = {
-    val w = new ParquetDataWriter(s"${outputPath}_rejected", s"${tableName}_rejected",
-      partitionBy = Some("operator"),
-      partitionKeyExtractor = Some(s"${Rejection.ColName}.operator"))
-    result.rejected.foreach { case (_, df) => w.write(df) }
-  }
-
-  /** Disposition-mode sink: ALL operators' rejects arrive in one frame
-    * (uniform schema, provenance struct set) — one partitioned append.
+  /** ALL operators' rejects arrive in one [[graft.core.Disposition]]
+    * frame (uniform schema, provenance struct set) — one partitioned
+    * append.
     */
   def writeAll(rejected: DataFrame, outputPath: String, tableName: String): Unit =
     new ParquetDataWriter(s"${outputPath}_rejected", s"${tableName}_rejected",

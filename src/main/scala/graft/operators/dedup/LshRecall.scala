@@ -1,5 +1,6 @@
 package graft.operators.dedup
 
+import graft.operators.Readout
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,14 +14,10 @@ import org.apache.spark.sql.functions._
   * `P[probe] = 1-(1-j^r)^b`, this measures it on YOUR corpus.
   *
   * `sampleMod` is REQUIRED (no default): the exact truth tier is
-  * quadratic in hot-shingle doc frequency, so every caller must choose
-  * the deterministic 1-in-m id-sample the tuner runs over (1 = full
-  * corpus, an explicit opt-in to the uncapped join). Sampling is
-  * `idCol % sampleMod == 0` — reproducible, engine-portable, and a pair
-  * survives iff BOTH endpoints do, so measured recall stays an unbiased
-  * estimate of corpus recall (banding probes pairs independently).
-  * With an empty sampled truth set the recall is NULL, not a
-  * divide-by-zero (ANSI).
+  * quadratic in hot-shingle doc frequency. Sampling and recall follow
+  * the [[graft.operators.Readout]] contract (`idCol % sampleMod == 0`,
+  * recall NULL on an empty sampled truth set); banding probes pairs
+  * independently, so the sampled recall estimates corpus recall.
   *
   * Scale shape: truth pairs ride the prefix-filtered posting join
   * (output-bounded); band keys are the standard per-row signature
@@ -56,9 +53,7 @@ final class LshRecall(
     truth.agg(count(lit(1)).as("true_pairs"))
       .crossJoin(caught.agg(count(lit(1)).as("caught_pairs")))
       .select(col("true_pairs"), col("caught_pairs"),
-        when(col("true_pairs") > 0,
-          round(col("caught_pairs").cast("double") /
-            col("true_pairs").cast("double"), 6)).as("recall"))
+        Readout.recall(col("caught_pairs"), col("true_pairs")).as("recall"))
   }
 
   /** DuckDB twin: same truth join, same signature/band algebra. */
@@ -83,9 +78,7 @@ final class LshRecall(
        |  JOIN lrbands y ON y.id = t.d2 AND y.bkey = x.bkey)
        |SELECT (SELECT count(*) FROM lrtruth) AS true_pairs,
        |  (SELECT count(*) FROM lrcaught) AS caught_pairs,
-       |  CASE WHEN (SELECT count(*) FROM lrtruth) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM lrcaught) AS DOUBLE) /
-       |      CAST((SELECT count(*) FROM lrtruth) AS DOUBLE), 6)
-       |  END AS recall""".stripMargin
+       |  ${Readout.recallSql("(SELECT count(*) FROM lrcaught)",
+                             "(SELECT count(*) FROM lrtruth)")} AS recall""".stripMargin
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators.dedup
 
+import graft.operators.Readout
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -10,11 +11,9 @@ import org.apache.spark.sql.functions._
   * pipelines use most a config row instead of only the
   * [[LshRecall]] readout. For a FIXED `numHashes`-long signature,
   * every divisor geometry `(bands b, rows_per_band numHashes/b)` is
-  * evaluated at once; `chosen` flags the smallest b (fewest bands =
-  * cheapest candidate mass) meeting `targetRecall`, else the smallest
-  * b achieving the maximum measured recall, defaulting to b=1 on a
-  * degenerate sample (zero true pairs) so the config row always
-  * exists. One row per geometry: `(bands, rows_per_band, true_pairs,
+  * evaluated at once; `chosen` follows the [[graft.operators.Readout]]
+  * rule over the band count (fewest bands = cheapest candidate mass),
+  * default b=1. One row per geometry: `(bands, rows_per_band, true_pairs,
   * caught_pairs, cand_pairs, recall, chosen)` — recall from ground
   * truth, candidate mass from bucket counts, side by side: the full
   * S-curve trade `P[probe] = 1-(1-j^r)^b` measured on YOUR corpus.
@@ -75,7 +74,6 @@ final class MinHashOperatingPoint(
   }
 
   def report(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val in = if (sampleMod == 1) df else df.filter(col(idCol) % sampleMod === 0)
     // staged: consumed by the two truth-side joins AND the mass explode —
     // unstaged, the shingle+minhash kernel would re-run per consumer
@@ -111,19 +109,8 @@ final class MinHashOperatingPoint(
       .select(col("bands"), col("rows_per_band"), col("true_pairs"),
         col("caught_pairs"),
         coalesce(col("_mass"), lit(0L)).as("cand_pairs"),
-        when(col("true_pairs") > 0,
-          round(col("caught_pairs").cast("double") /
-            col("true_pairs").cast("double"), 6)).as("recall"))
-    val ws = Window.partitionBy() // the divisor-count-row level table
-    scored
-      .withColumn("_mp", min(when(col("recall") >= targetRecall, col("bands"))).over(ws))
-      .withColumn("_mr", max(col("recall")).over(ws))
-      .withColumn("_mb", min(when(col("recall") === col("_mr"), col("bands"))).over(ws))
-      .select(col("bands"), col("rows_per_band"), col("true_pairs"),
-        col("caught_pairs"), col("cand_pairs"), col("recall"),
-        // degenerate sample: default to the cheapest geometry (b=1)
-        (col("bands") === coalesce(col("_mp"), col("_mb"), lit(1))).as("chosen"))
-      .orderBy(col("bands"))
+        Readout.recall(col("caught_pairs"), col("true_pairs")).as("recall"))
+    Readout.chosen(scored, "bands", targetRecall, default = 1)
   }
 
   // ---- DuckDB twin: same signature algebra, same geometry spine ----
@@ -174,19 +161,9 @@ final class MinHashOperatingPoint(
        |$massCtes,
        |_lv AS ($levels),
        |_sc AS (SELECT bands, rows_per_band, true_pairs, caught_pairs, cand_pairs,
-       |    CASE WHEN true_pairs > 0 THEN
-       |      round(CAST(caught_pairs AS DOUBLE) / CAST(true_pairs AS DOUBLE), 6)
-       |    END AS recall
+       |    ${Readout.recallSql("caught_pairs", "true_pairs")} AS recall
        |  FROM _lv),
-       |_s1 AS (SELECT *,
-       |    min(CASE WHEN recall >= CAST($targetRecall AS DOUBLE) THEN bands END)
-       |      OVER () AS mp,
-       |    max(recall) OVER () AS mr
-       |  FROM _sc),
-       |_s2 AS (SELECT *,
-       |    min(CASE WHEN recall = mr THEN bands END) OVER () AS mb FROM _s1)
-       |SELECT bands, rows_per_band, true_pairs, caught_pairs, cand_pairs, recall,
-       |  bands = coalesce(mp, mb, 1) AS chosen
-       |FROM _s2 ORDER BY bands""".stripMargin
+       |${Readout.chosenSql(Seq("bands", "rows_per_band", "true_pairs",
+            "caught_pairs", "cand_pairs", "recall"), "bands", targetRecall, 1)}""".stripMargin
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators.vector
 
 import graft.functions.VectorFunctions
+import graft.operators.Readout
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -200,16 +201,61 @@ object AnnSearch {
   private def scaledCoordSql(vecExpr: String, c: Int): String =
     s"CAST(floor(CAST($vecExpr[${c + 1}] AS DOUBLE) * 1000000.0) AS BIGINT)"
 
-  /** Mutual (reciprocal) k-NN pairs within ONE vector set: `(a, b)` with
-    * a < b where b is in a's bucket-restricted top-k AND a is in b's —
-    * the standard alignment/anchor-mining primitive (mutual neighbors
-    * are far more likely true semantic matches than one-directional
-    * ones, cf. reciprocal-rank re-ranking in retrieval).
+  /** Mutual (reciprocal) k-NN pairs within ONE vector set over a single
+    * coordinate band — the one-band form of [[mutualKnnLshOr]] (same
+    * buckets, same heap; one band needs no pair dedup).
+    */
+  def mutualKnnLsh(df: DataFrame, vecCol: String, idCol: String,
+      k: Int, coords: Seq[Int], maxBucketSize: Int): DataFrame =
+    mutualKnnLshOr(df, vecCol, idCol, k, Seq(coords), maxBucketSize)
+
+  /** Reciprocity over a per-query top-k list (`q` the query id column,
+    * `id` the neighbor id, optional `level` a key both directions must
+    * share): `(level?, a, b, extra…)` with a < b, b in a's list AND a in
+    * b's. A semi-join on the reversed key — nothing wider than the edge
+    * list shuffles.
+    */
+  private def reciprocal(top: DataFrame, q: String, id: String,
+      level: Option[String] = None, extra: Seq[String] = Nil): DataFrame = {
+    val fwd = top.select(level.map(col).toSeq ++
+      Seq(col(q).as("a"), col(id).as("b")) ++ extra.map(col): _*)
+    val rev = top.select(level.map(l => col(l).as("_rl")).toSeq ++
+      Seq(col(id).as("_ra"), col(q).as("_rb")): _*)
+    val on = (level.map(l => col(l) === col("_rl")).toSeq ++
+      Seq(col("a") === col("_ra"), col("b") === col("_rb"))).reduce(_ && _)
+    fwd.join(rev, on, "left_semi").filter(col("a") < col("b"))
+  }
+
+  /** Exact mutual top-k ground truth over a readout sample
+    * `(idCol, vecCol)` (the [[graft.operators.Readout]] sampling
+    * contract): unrestricted candidates — the sample broadcasts, a
+    * bounded BroadcastNestedLoopJoin, never a CartesianProduct — then
+    * the same heap and reciprocity as the bucketed tiers. `(a, b)`.
+    */
+  private def exactMutualTruth(sample: DataFrame, vecCol: String, idCol: String,
+      k: Int): DataFrame = {
+    val q = sample.select(col(idCol).as("_qid"), col(vecCol).as("_qv"))
+    val top = perQueryTopK(sample.select(col(idCol), col(vecCol)).crossJoin(broadcast(q))
+      .filter(col(idCol) =!= col("_qid")), vecCol, idCol, k)
+    reciprocal(top, "query_id", idCol)
+  }
+
+  /** OR-AMPLIFIED mutual k-NN (VERDICT r14 #1): `(a, b)` with a < b
+    * where b is in a's bucket-restricted top-k AND a is in b's — the
+    * standard alignment/anchor-mining primitive (mutual neighbors are
+    * far more likely true semantic matches than one-directional ones,
+    * cf. reciprocal-rank re-ranking in retrieval) — with candidates
+    * unioned over `bands.length` INDEPENDENT coordinate bands, deduped
+    * before the bounded heap. A pair co-buckets in at least one of L
+    * bands with probability 1−(1−p)^L, the standard OR-amplification
+    * recall curve (single-band sign-LSH on near-uniform corpora sits
+    * near the 1/2^bits co-bucket floor — measured 0.088–0.137 on the
+    * fixtures; see [[mutualKnnRecall]] for the per-corpus readout).
     *
     * Unlike [[knnJoinLsh]] (whose query side is broadcast-small), BOTH
-    * sides of the bucket equi-join here are the full set, so candidate
-    * mass is Σ(bucket size)² — quadratic in the hottest bucket. Two
-    * defenses, both mandatory:
+    * sides of each band's bucket equi-join are the full set, so
+    * candidate mass is Σ(bucket size)² — quadratic in the hottest
+    * bucket. Two defenses, both mandatory:
     *
     *  - **Mean-centered sign buckets.** Real embedding distributions are
     *    anisotropic (CLIP/SigLIP vectors concentrate in a narrow cone,
@@ -220,92 +266,12 @@ object AnnSearch {
     *    safe while `|v|·n < 9.2e12`, i.e. unit-norm vectors to ~10¹²
     *    rows). Each bit splits the corpus near its mass center, so a
     *    cone maps across all 2^|coords| buckets instead of one.
-    *  - **Count-only hot-bucket cap** (`maxBucketSize`, REQUIRED): the
-    *    same discipline as the capped MinHash path — a column-pruned
-    *    count per bucket, the (few) over-cap bucket ids broadcast back
-    *    as a left-anti join. Vectors in a pathological bucket yield no
-    *    pairs (documented contract, mirrored by the twin's QUALIFY);
-    *    nothing array-sized ever shuffles partitioned by a hot key.
-    *
-    * After the capped bucket join: the bounded-heap top-k, then a
-    * self-join of the (n·k)-row edge list on the reversed pair key.
-    * Nothing larger than n·k rows shuffles after the bucket join.
-    */
-  def mutualKnnLsh(df: DataFrame, vecCol: String, idCol: String,
-      k: Int, coords: Seq[Int], maxBucketSize: Int): DataFrame = {
-    require(maxBucketSize > 0,
-      "maxBucketSize is required: the bucket self-join is quadratic in the hottest bucket")
-    val kept = centeredCappedBuckets(df, vecCol, idCol, coords, maxBucketSize)
-    val a = kept.select(col("_bk"), col(idCol).as("_qid"), col(vecCol).as("_qv"))
-    val b = kept.select(col("_bk"), col(idCol), col(vecCol))
-    val cand = b.join(a, Seq("_bk")).filter(col(idCol) =!= col("_qid"))
-    val top = perQueryTopK(cand, vecCol, idCol, k)
-    val fwd = top.select(col("query_id").as("a"), col(idCol).as("b"), col("cosine"))
-    val rev = top.select(col(idCol).as("_ra"), col("query_id").as("_rb"))
-    fwd.join(rev, col("a") === col("_ra") && col("b") === col("_rb"), "left_semi")
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"), col("cosine"))
-  }
-
-  /** `(idCol, vecCol, _bk)` with mean-centered sign bucket ids, hot
-    * buckets (> cap) removed via the count-only broadcast anti-join.
-    * NULL vectors are excluded up front (they have no meaningful bucket
-    * or cosine). The per-coordinate scaled sums are a one-row bounded
-    * aggregate broadcast onto the scan.
-    */
-  private def centeredCappedBuckets(df: DataFrame, vecCol: String, idCol: String,
-      coords: Seq[Int], maxBucketSize: Int): DataFrame = {
-    val base = df.filter(col(vecCol).isNotNull).select(col(idCol), col(vecCol))
-    val sumCols = coords.zipWithIndex.map { case (c, kk) =>
-      sum(scaledCoord(col(vecCol), c)).as(s"_ms$kk") }
-    // stats (one row) and the hot-key list staged (r19): the kept frame
-    // feeds BOTH self-join sides, so unstaged each side re-ran the full
-    // stats aggregate and the bucket-count pass over the vector scan —
-    // the vector frame itself stays deliberately uncached (measured:
-    // array caches read slower than the pruned re-scan)
-    val stats = graft.core.Staging.stage(
-      base.agg(count(lit(1)).as("_mn"), sumCols: _*))
-    val bits = coords.zipWithIndex.map { case (c, kk) =>
-      when(scaledCoord(col(vecCol), c) * col("_mn") >= col(s"_ms$kk"),
-        lit(1L << kk)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    val bucketed = base.crossJoin(broadcast(stats))
-      .withColumn("_bk", bits)
-      .select(col(idCol), col(vecCol), col("_bk"))
-    val hot = graft.core.Staging.stage(bucketed.select(col("_bk"))
-      .groupBy(col("_bk")).agg(count(lit(1)).as("_bn"))
-      .filter(col("_bn") > maxBucketSize).select(col("_bk")))
-    bucketed.join(broadcast(hot), Seq("_bk"), "left_anti")
-  }
-
-  /** DuckDB CTE chain ending in `mb(id, v, bk)` — the mean-centered,
-    * cap-filtered bucket table twin of [[centeredCappedBuckets]] over
-    * `src` (a table or prior CTE with columns `$idCol`, `$vecCol`).
-    */
-  def centeredBucketCtesSql(src: String, vecCol: String, idCol: String,
-      coords: Seq[Int], maxBucketSize: Int): String = {
-    val sums = coords.zipWithIndex.map { case (c, kk) =>
-      s"sum(${scaledCoordSql(vecCol, c)}) AS ms$kk" }.mkString(", ")
-    val bits = coords.zipWithIndex.map { case (c, kk) =>
-      s"(CASE WHEN ${scaledCoordSql(vecCol, c)} * mn >= ms$kk THEN CAST(${1L << kk} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-    }.mkString("(", " + ", ")")
-    s"""kst AS (SELECT count(*) AS mn, $sums
-       |  FROM $src WHERE $vecCol IS NOT NULL),
-       |kb AS (SELECT $idCol AS id, $vecCol AS v, $bits AS bk
-       |  FROM $src, kst WHERE $vecCol IS NOT NULL),
-       |mb AS (SELECT id, v, bk FROM kb
-       |  QUALIFY count(*) OVER (PARTITION BY bk) <= $maxBucketSize)""".stripMargin
-  }
-
-  /** OR-AMPLIFIED mutual k-NN (VERDICT r14 #1): [[mutualKnnLsh]] with
-    * candidates unioned over `bands.length` INDEPENDENT coordinate
-    * bands — each band mean-centered and hot-bucket-capped exactly like
-    * the single-band tier, then the candidate pairs deduplicated before
-    * the bounded heap. A pair co-buckets in at least one of L bands
-    * with probability 1−(1−p)^L, the standard OR-amplification recall
-    * curve (single-band sign-LSH on near-uniform corpora sits near the
-    * 1/2^bits co-bucket floor — measured 0.088–0.137 on the fixtures;
-    * see [[mutualKnnRecall]] for the per-corpus readout).
+    *  - **Count-only hot-bucket cap** (`maxBucketSize`, REQUIRED): a
+    *    column-pruned count per (band, bucket), the (few) over-cap keys
+    *    broadcast back as a left-anti join. Vectors in a pathological
+    *    bucket yield no pairs in that band (documented contract,
+    *    mirrored by the twin's QUALIFY); nothing array-sized ever
+    *    shuffles partitioned by a hot key.
     *
     * Scale shape (the MinHash banding discipline): ONE stats aggregate
     * over the union of band coordinates broadcasts onto the scan; band
@@ -313,9 +279,9 @@ object AnnSearch {
     * width — through ONE count-only hot-key pass and ONE banded
     * equi-join; candidate mass is bounded by L · n · cap; nothing
     * larger than the pruned n·k·partitions edge rows shuffles after the
-    * bucket join, and pair dedup happens inside the bounded heap (plus
-    * one prune-sized dropDuplicates), never on the raw candidate
-    * stream.
+    * bucket join. With more than one band a pair can arrive once per
+    * shared band, so the heap dedups repeats (plus one prune-sized
+    * dropDuplicates), never the raw candidate stream.
     */
   def mutualKnnLshOr(df: DataFrame, vecCol: String, idCol: String,
       k: Int, bands: Seq[Seq[Int]], maxBucketSize: Int): DataFrame = {
@@ -328,19 +294,47 @@ object AnnSearch {
       col(vecCol).as("_qv"))
     val b = kept.select(col("_band"), col("_bk"), col(idCol), col(vecCol))
     val cand = b.join(a, Seq("_band", "_bk")).filter(col(idCol) =!= col("_qid"))
-    val top = perQueryTopK(cand, vecCol, idCol, k, dedup = true)
-    val fwd = top.select(col("query_id").as("a"), col(idCol).as("b"), col("cosine"))
-    val rev = top.select(col(idCol).as("_ra"), col("query_id").as("_rb"))
-    fwd.join(rev, col("a") === col("_ra") && col("b") === col("_rb"), "left_semi")
-      .filter(col("a") < col("b"))
+    val top = perQueryTopK(cand, vecCol, idCol, k, dedup = bands.length > 1)
+    reciprocal(top, "query_id", idCol, extra = Seq("cosine"))
       .select(col("a"), col("b"), col("cosine"))
+  }
+
+  /** The one-row centering stats over `base`: `_mn` (row count) and
+    * `_ms_c<c>` (the exact LONG sum of the floored scaled coord) per
+    * coordinate of the union of `bands`.
+    */
+  private def centerStats(base: DataFrame, vecCol: String,
+      bands: Seq[Seq[Int]]): DataFrame =
+    base.agg(count(lit(1)).as("_mn"), bands.flatten.distinct.sorted.map(c =>
+      sum(scaledCoord(col(vecCol), c)).as(s"_ms_c$c")): _*)
+
+  /** `(idCol, vecCol, _band, _bk)`: `base` exploded to one row per band,
+    * bit `kk` of band `bi`'s bucket the mean-centered sign
+    * `floor(v[c]·1e6) · n ≥ sumOf(c)` — `n`/`sumOf` are a broadcast
+    * stats row's columns (batch) or frozen literals (streaming), the
+    * same integer arithmetic either way. Band ids ride one fused
+    * explode generator.
+    */
+  private def centeredBands(base: DataFrame, vecCol: String, idCol: String,
+      bands: Seq[Seq[Int]], n: Column, sumOf: Int => Column): DataFrame = {
+    val bandStructs = bands.zipWithIndex.map { case (coords, bi) =>
+      val bits = coords.zipWithIndex.map { case (c, kk) =>
+        when(scaledCoord(col(vecCol), c) * n >= sumOf(c),
+          lit(1L << kk)).otherwise(lit(0L))
+      }.reduce(_ + _)
+      struct(lit(bi).as("_band"), bits.as("_bk"))
+    }
+    base.select(col(idCol), col(vecCol), explode(array(bandStructs: _*)).as("_bb"))
+      .select(col(idCol), col(vecCol),
+        col("_bb._band").as("_band"), col("_bb._bk").as("_bk"))
   }
 
   /** `(idCol, vecCol, _band, _bk)`: per-band mean-centered sign buckets
     * with per-(band, bucket) hot caps. ONE bounded stats aggregate over
     * the union of all bands' coordinates (broadcast), band ids fused
     * into one explode generator, ONE count-only hot-key pass + anti-join
-    * over the (band, bucket) key — the MinHash banding shape.
+    * over the (band, bucket) key — the MinHash banding shape. NULL
+    * vectors are excluded up front (no meaningful bucket or cosine).
     */
   private def centeredCappedBandBuckets(df: DataFrame, vecCol: String,
       idCol: String, bands: Seq[Seq[Int]], maxBucketSize: Int,
@@ -350,24 +344,15 @@ object AnnSearch {
     // bucket-count pass runs once, not once per side (r19 A/B:
     // or_operating_point −21 %); single-consumer callers (band_stats)
     // pass false — for them the eager materialization is pure overhead
-    // (measured +18 % on a 0.5 s gate).
+    // (measured +18 % on a 0.5 s gate). The vector frame itself stays
+    // deliberately uncached (measured: array caches read slower than the
+    // pruned re-scan).
     def aux(fr: DataFrame): DataFrame =
       if (stageAux) graft.core.Staging.stage(fr) else fr
     val base = df.filter(col(vecCol).isNotNull).select(col(idCol), col(vecCol))
-    val allCoords = bands.flatten.distinct.sorted
-    val sumCols = allCoords.map(c => sum(scaledCoord(col(vecCol), c)).as(s"_ms_c$c"))
-    val stats = aux(base.agg(count(lit(1)).as("_mn"), sumCols: _*))
-    val bandStructs = bands.zipWithIndex.map { case (coords, bi) =>
-      val bits = coords.zipWithIndex.map { case (c, kk) =>
-        when(scaledCoord(col(vecCol), c) * col("_mn") >= col(s"_ms_c$c"),
-          lit(1L << kk)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(bi).as("_band"), bits.as("_bk"))
-    }
-    val bucketed = base.crossJoin(broadcast(stats))
-      .select(col(idCol), col(vecCol), explode(array(bandStructs: _*)).as("_bb"))
-      .select(col(idCol), col(vecCol),
-        col("_bb._band").as("_band"), col("_bb._bk").as("_bk"))
+    val stats = aux(centerStats(base, vecCol, bands))
+    val bucketed = centeredBands(base.crossJoin(broadcast(stats)), vecCol, idCol,
+      bands, col("_mn"), c => col(s"_ms_c$c"))
     val hot = aux(bucketed.select(col("_band"), col("_bk"))
       .groupBy(col("_band"), col("_bk")).agg(count(lit(1)).as("_bn"))
       .filter(col("_bn") > maxBucketSize).select(col("_band"), col("_bk")))
@@ -392,10 +377,7 @@ object AnnSearch {
   def bandStatsOf(df: DataFrame, vecCol: String,
       bands: Seq[Seq[Int]]): CenteredBandStats = {
     val allCoords = bands.flatten.distinct.sorted
-    val row = df.filter(col(vecCol).isNotNull)
-      .agg(count(lit(1)).as("_mn"),
-        allCoords.map(c => sum(scaledCoord(col(vecCol), c)).as(s"_ms_c$c")): _*)
-      .head()
+    val row = centerStats(df.filter(col(vecCol).isNotNull), vecCol, bands).head()
     CenteredBandStats(row.getLong(0),
       allCoords.zipWithIndex.map { case (c, i) =>
         c -> (if (row.isNullAt(i + 1)) 0L else row.getLong(i + 1))
@@ -411,17 +393,8 @@ object AnnSearch {
       bands: Seq[Seq[Int]], stats: CenteredBandStats): DataFrame = {
     require(bands.nonEmpty && bands.forall(_.nonEmpty),
       "at least one non-empty coordinate band is required")
-    val base = df.filter(col(vecCol).isNotNull).select(col(idCol), col(vecCol))
-    val bandStructs = bands.zipWithIndex.map { case (coords, bi) =>
-      val bits = coords.zipWithIndex.map { case (c, kk) =>
-        when(scaledCoord(col(vecCol), c) * lit(stats.n) >= lit(stats.sums(c)),
-          lit(1L << kk)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(bi).as("_band"), bits.as("_bk"))
-    }
-    base.select(col(idCol), col(vecCol), explode(array(bandStructs: _*)).as("_bb"))
-      .select(col(idCol), col(vecCol),
-        col("_bb._band").as("_band"), col("_bb._bk").as("_bk"))
+    centeredBands(df.filter(col(vecCol).isNotNull).select(col(idCol), col(vecCol)),
+      vecCol, idCol, bands, lit(stats.n), c => lit(stats.sums(c)))
   }
 
   /** Batch twin of the streaming anchor miner
@@ -463,38 +436,23 @@ object AnnSearch {
     * the streaming miner applies.
     */
   def anchorCandidatesFirstCapSql(table: String, vecCol: String, idCol: String,
-      bands: Seq[Seq[Int]], maxBucketSize: Int, threshold: Double): String = {
-    val allCoords = bands.flatten.distinct.sorted
-    val sums = allCoords.map(c =>
-      s"sum(${scaledCoordSql(vecCol, c)}) AS ms_c$c").mkString(", ")
-    val arms = bands.zipWithIndex.map { case (coords, bi) =>
-      val bits = coords.zipWithIndex.map { case (c, kk) =>
-        s"(CASE WHEN ${scaledCoordSql(vecCol, c)} * mn >= ms_c$c THEN CAST(${1L << kk} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-      }.mkString("(", " + ", ")")
-      s"""SELECT $idCol AS id, $vecCol AS v, $bi AS band, $bits AS bk
-         |  FROM $table, acst WHERE $vecCol IS NOT NULL""".stripMargin
-    }.mkString("\n  UNION ALL ")
-    s"""WITH acst AS (SELECT count(*) AS mn, $sums
-       |  FROM $table WHERE $vecCol IS NOT NULL),
-       |ackb AS ($arms),
+      bands: Seq[Seq[Int]], maxBucketSize: Int, threshold: Double): String =
+    s"""WITH ${bandArmCtesSql(table, vecCol, idCol, bands, "ac")},
        |ack AS (SELECT id, v, band, bk FROM ackb
        |  QUALIFY row_number() OVER (PARTITION BY band, bk ORDER BY id) <= $maxBucketSize),
        |acp AS (SELECT a.id AS d1, b.id AS d2,
-       |    ${graft.functions.VectorFunctions.cosineSql("a.v", "b.v")} AS cos
+       |    ${VectorFunctions.cosineSql("a.v", "b.v")} AS cos
        |  FROM ack a JOIN ack b ON a.band = b.band AND a.bk = b.bk AND a.id < b.id)
        |SELECT DISTINCT d1 AS a, d2 AS b, round(cos, 6) AS cosine
        |FROM acp WHERE cos >= $threshold ORDER BY a, b""".stripMargin
-  }
 
-  /** DuckDB CTE chain ending in `${p}mb(id, v, band, bk)` — the banded
-    * twin of [[centeredCappedBandBuckets]] over `src`. `p` prefixes the
-    * CTE names so two chains (e.g. single-band + amplified in one
-    * recall oracle) can coexist.
+  /** DuckDB twin of [[centeredBands]] over the stats of `src`: the
+    * one-row `${p}st(mn, ms_c<c>…)` and the uncapped
+    * `${p}kb(id, v, band, bk)` — one UNION ALL arm per band.
     */
-  def centeredBandBucketCtesSql(src: String, vecCol: String, idCol: String,
-      bands: Seq[Seq[Int]], maxBucketSize: Int, p: String): String = {
-    val allCoords = bands.flatten.distinct.sorted
-    val sums = allCoords.map(c =>
+  private def bandArmCtesSql(src: String, vecCol: String, idCol: String,
+      bands: Seq[Seq[Int]], p: String): String = {
+    val sums = bands.flatten.distinct.sorted.map(c =>
       s"sum(${scaledCoordSql(vecCol, c)}) AS ms_c$c").mkString(", ")
     val arms = bands.zipWithIndex.map { case (coords, bi) =>
       val bits = coords.zipWithIndex.map { case (c, kk) =>
@@ -505,10 +463,59 @@ object AnnSearch {
     }.mkString("\n  UNION ALL ")
     s"""${p}st AS (SELECT count(*) AS mn, $sums
        |  FROM $src WHERE $vecCol IS NOT NULL),
-       |${p}kb AS ($arms),
+       |${p}kb AS ($arms)""".stripMargin
+  }
+
+  /** DuckDB CTE chain ending in `${p}mb(id, v, band, bk)` — the banded
+    * twin of [[centeredCappedBandBuckets]] over `src`. `p` prefixes the
+    * CTE names so two chains (e.g. single-band + amplified in one
+    * recall oracle) can coexist.
+    */
+  def centeredBandBucketCtesSql(src: String, vecCol: String, idCol: String,
+      bands: Seq[Seq[Int]], maxBucketSize: Int, p: String): String =
+    s"""${bandArmCtesSql(src, vecCol, idCol, bands, p)},
        |${p}mb AS (SELECT id, v, band, bk FROM ${p}kb
        |  QUALIFY count(*) OVER (PARTITION BY band, bk) <= $maxBucketSize)""".stripMargin
-  }
+
+  /** DuckDB twin of the top-k + [[reciprocal]] tail: over the candidate
+    * query `cand(qid, vid, cos)`, `${p}rk` ranks each query's
+    * candidates by (cos DESC, vid), `${p}t` keeps the top `k`, and
+    * `${p}p(a, b, cos)` is the reciprocal a < b pair list.
+    */
+  private def mutualCtesSql(p: String, cand: String, k: Int): String =
+    s"""${p}c AS ($cand),
+       |${p}rk AS (SELECT qid, vid, cos,
+       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rn FROM ${p}c),
+       |${p}t AS (SELECT qid, vid, cos FROM ${p}rk WHERE rn <= $k),
+       |${p}p AS (SELECT t1.qid AS a, t1.vid AS b, t1.cos FROM ${p}t t1
+       |  JOIN ${p}t t2 ON t1.qid = t2.vid AND t1.vid = t2.qid
+       |  WHERE t1.qid < t1.vid)""".stripMargin
+
+  /** Banded candidates over the `${p}mb` chain (bands below `maxBand`
+    * when given): DISTINCT over pairs, like the dedup heap.
+    */
+  private def bandedCandSql(p: String, maxBand: Option[Int] = None): String =
+    s"""SELECT DISTINCT q.id AS qid, e.id AS vid,
+       |    ${VectorFunctions.cosineSql("e.v", "q.v")} AS cos
+       |  FROM ${p}mb e JOIN ${p}mb q
+       |    ON e.band = q.band AND e.bk = q.bk AND e.id <> q.id${maxBand.fold("")(l => s"\n  WHERE e.band < $l")}""".stripMargin
+
+  /** DuckDB twin of [[exactMutualTruth]] over the sample `src`
+    * (`$idCol`, `$vecCol`): `tp(a, b, cos)`.
+    */
+  private def exactMutualTruthSql(src: String, vecCol: String, idCol: String,
+      k: Int): String =
+    mutualCtesSql("t", s"""SELECT q.$idCol AS qid, e.$idCol AS vid,
+       |    ${VectorFunctions.cosineSql(s"e.$vecCol", s"q.$vecCol")} AS cos
+       |  FROM $src e, $src q WHERE e.$idCol <> q.$idCol""".stripMargin, k)
+
+  /** The readout sample relation `ms($idCol, $vecCol)` (the
+    * [[graft.operators.Readout]] sampling contract).
+    */
+  private def sampleCteSql(table: String, vecCol: String, idCol: String,
+      sampleMod: Int): String =
+    s"""ms AS (SELECT $idCol, $vecCol FROM $table
+       |  WHERE $vecCol IS NOT NULL AND $idCol % $sampleMod = 0)""".stripMargin
 
   /** Full DuckDB oracle for [[mutualKnnLshOr]]: (a, b, cosine r6),
     * ORDER BY a, b — the candidate union is DISTINCT over pairs before
@@ -517,16 +524,8 @@ object AnnSearch {
   def mutualKnnOrSql(table: String, vecCol: String, idCol: String,
       k: Int, bands: Seq[Seq[Int]], maxBucketSize: Int): String =
     s"""WITH ${centeredBandBucketCtesSql(table, vecCol, idCol, bands, maxBucketSize, "o")},
-       |mc AS (SELECT DISTINCT q.id AS qid, e.id AS vid,
-       |    ${graft.functions.VectorFunctions.cosineSql("e.v", "q.v")} AS cos
-       |  FROM omb e JOIN omb q
-       |    ON e.band = q.band AND e.bk = q.bk AND e.id <> q.id),
-       |mr AS (SELECT qid, vid, cos,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rn FROM mc),
-       |mt AS (SELECT qid, vid, cos FROM mr WHERE rn <= $k)
-       |SELECT t1.qid AS a, t1.vid AS b, round(t1.cos, 6) AS cosine
-       |FROM mt t1 JOIN mt t2 ON t1.qid = t2.vid AND t1.vid = t2.qid
-       |WHERE t1.qid < t1.vid ORDER BY a, b""".stripMargin
+       |${mutualCtesSql("m", bandedCandSql("o"), k)}
+       |SELECT a, b, round(cos, 6) AS cosine FROM mp ORDER BY a, b""".stripMargin
 
   /** Per-band candidate-mass readout for [[mutualKnnLshOr]] — the
     * bounded-candidate-mass evidence the recall gate is graded against
@@ -565,20 +564,17 @@ object AnnSearch {
   /** CONSUMABLE operating point for the OR-amplified mutual-kNN tier —
     * the band-count twin of [[multiProbeOperatingPoint]]: recall of the
     * amplified pipeline at EVERY band count L = 1..`bands.length` over
-    * one deterministic sample, `chosen` flags the smallest L meeting
-    * `targetRecall` (else the smallest L achieving max measured
-    * recall; on a degenerate sample with ZERO true pairs every recall
-    * is NULL and the flag defaults to L=1 — the consumer always gets
-    * exactly one config row). One row per L: `(bands, true_pairs, pairs, hits, recall,
-    * chosen)` — the L to paste into the production [[mutualKnnLshOr]]
-    * call, traded against the ~L× candidate mass
-    * ([[mutualKnnBandStats]]).
+    * one deterministic sample; `chosen` follows the
+    * [[graft.operators.Readout]] rule, default L=1. One row per L:
+    * `(bands, true_pairs, pairs, hits, recall, chosen)` — the L to paste
+    * into the production [[mutualKnnLshOr]] call, traded against the
+    * ~L× candidate mass ([[mutualKnnBandStats]]).
     *
     * Scale shape: ONE banded candidate pass (each candidate tags its
     * band; a band-b candidate participates in every L > b via a bounded
     * explode), pair-dedup + ONE (query, L)-partitioned rank window,
-    * reciprocity semi-joins on L·n·k-bounded edge lists, truth and the
-    * sample staged. The per-L work never rescans the corpus.
+    * reciprocity semi-joins on L·n·k-bounded edge lists, truth staged.
+    * The per-L work never rescans the corpus.
     */
   def mutualKnnOrOperatingPoint(df: DataFrame, vecCol: String, idCol: String,
       k: Int, bands: Seq[Seq[Int]], maxBucketSize: Int, targetRecall: Double,
@@ -593,16 +589,7 @@ object AnnSearch {
     // parquet re-scan (see multiProbeOperatingPoint); truth IS staged
     val sample = df.filter(col(vecCol).isNotNull && col(idCol) % sampleMod === 0)
       .select(col(idCol), col(vecCol))
-    // exact mutual ground truth on the sample (broadcast BNLJ, bounded)
-    val a = sample.select(col(idCol).as("_qid"), col(vecCol).as("_qv"))
-    val b = sample.select(col(idCol), col(vecCol))
-    val tTop = perQueryTopK(b.crossJoin(broadcast(a))
-      .filter(col(idCol) =!= col("_qid")), vecCol, idCol, k)
-    val tFwd = tTop.select(col("query_id").as("a"), col(idCol).as("b"))
-    val tRev = tTop.select(col(idCol).as("_ra"), col("query_id").as("_rb"))
-    val truth = graft.core.Staging.stage(
-      tFwd.join(tRev, col("a") === col("_ra") && col("b") === col("_rb"), "left_semi")
-        .filter(col("a") < col("b")))
+    val truth = graft.core.Staging.stage(exactMutualTruth(sample, vecCol, idCol, k))
     // one banded candidate pass; a band-b candidate serves every L > b
     val kept = centeredCappedBandBuckets(sample, vecCol, idCol, bands, maxBucketSize)
     val ca = kept.select(col("_band"), col("_bk"), col(idCol).as("_qid"),
@@ -619,16 +606,10 @@ object AnnSearch {
     val w = Window.partitionBy(col("_qid"), col("_nl"))
       .orderBy(col("_cos").desc, col(idCol))
     val top = cand.withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
-    val fwd = top.select(col("_nl"), col("_qid").as("a"), col(idCol).as("b"))
-    val rev = top.select(col("_nl").as("_rl"), col(idCol).as("_ra"),
-      col("_qid").as("_rb"))
     // consumed twice (per-L counts + the truth hit join): stage the
     // L·n·k-bounded long-typed pair list, or the whole banded candidate
     // pipeline recomputes per consumer
-    val pairs = graft.core.Staging.stage(fwd.join(rev,
-        col("_nl") === col("_rl") && col("a") === col("_ra") && col("b") === col("_rb"),
-        "left_semi")
-      .filter(col("a") < col("b")))
+    val pairs = graft.core.Staging.stage(reciprocal(top, "_qid", idCol, Some("_nl")))
     val perL = pairs.groupBy(col("_nl"))
       .agg(count(lit(1)).as("_pairs"))
     val hitsL = pairs.join(truth, Seq("a", "b"), "left_semi")
@@ -641,22 +622,8 @@ object AnnSearch {
       .select(col("bands"), col("true_pairs"),
         coalesce(col("_pairs"), lit(0L)).as("pairs"),
         coalesce(col("_h"), lit(0L)).as("hits"),
-        when(col("true_pairs") > 0,
-          round(coalesce(col("_h"), lit(0L)).cast("double") /
-            col("true_pairs").cast("double"), 6))
-          .as("recall"))
-    val ws = Window.partitionBy() // the nb-row level table
-    scored
-      .withColumn("_mp", min(when(col("recall") >= targetRecall, col("bands"))).over(ws))
-      .withColumn("_mr", max(col("recall")).over(ws))
-      .withColumn("_mb", min(when(col("recall") === col("_mr"), col("bands"))).over(ws))
-      .select(col("bands"), col("true_pairs"), col("pairs"), col("hits"),
-        col("recall"),
-        // degenerate sample (zero true pairs -> all-NULL recall): default
-        // to the cheapest level so a consumer always gets a config row
-        (col("bands") === coalesce(col("_mp"), col("_mb"), lit(1)))
-          .as("chosen"))
-      .orderBy(col("bands"))
+        Readout.recall(coalesce(col("_h"), lit(0L)), col("true_pairs")).as("recall"))
+    Readout.chosen(scored, "bands", targetRecall, default = 1)
   }
 
   /** DuckDB twin of [[mutualKnnOrOperatingPoint]]. */
@@ -665,67 +632,29 @@ object AnnSearch {
       sampleMod: Int): String = {
     val nb = bands.length
     val perL = (1 to nb).map { l =>
-      s"""oc$l AS (SELECT DISTINCT q.id AS qid, e.id AS vid,
-         |    ${graft.functions.VectorFunctions.cosineSql("e.v", "q.v")} AS cos
-         |  FROM omb e JOIN omb q
-         |    ON e.band = q.band AND e.bk = q.bk AND e.id <> q.id
-         |  WHERE e.band < $l),
-         |orr$l AS (SELECT qid, vid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rn
-         |  FROM oc$l),
-         |ot$l AS (SELECT qid, vid FROM orr$l WHERE rn <= $k),
-         |opr$l AS (SELECT t1.qid AS a, t1.vid AS b FROM ot$l t1
-         |  JOIN ot$l t2 ON t1.qid = t2.vid AND t1.vid = t2.qid
-         |  WHERE t1.qid < t1.vid),
+      s"""${mutualCtesSql(s"o$l", bandedCandSql("o", Some(l)), k)},
          |ol$l AS (SELECT $l AS bands,
-         |    CAST((SELECT count(*) FROM opr$l) AS BIGINT) AS pairs,
-         |    CAST((SELECT count(*) FROM opr$l JOIN tp USING (a, b)) AS BIGINT) AS hits)""".stripMargin
+         |    CAST((SELECT count(*) FROM o${l}p) AS BIGINT) AS pairs,
+         |    CAST((SELECT count(*) FROM o${l}p JOIN tp USING (a, b)) AS BIGINT) AS hits)""".stripMargin
     }.mkString(",\n")
     val union = (1 to nb).map(l => s"SELECT * FROM ol$l").mkString("\n  UNION ALL ")
-    s"""WITH ms AS (SELECT $idCol, $vecCol FROM $table
-       |  WHERE $vecCol IS NOT NULL AND $idCol % $sampleMod = 0),
+    s"""WITH ${sampleCteSql(table, vecCol, idCol, sampleMod)},
        |${centeredBandBucketCtesSql("ms", vecCol, idCol, bands, maxBucketSize, "o")},
-       |tc AS (SELECT q.$idCol AS qid, e.$idCol AS vid,
-       |    ${graft.functions.VectorFunctions.cosineSql(s"e.$vecCol", s"q.$vecCol")} AS cos
-       |  FROM ms e, ms q WHERE e.$idCol <> q.$idCol),
-       |tr AS (SELECT qid, vid,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rn FROM tc),
-       |tt AS (SELECT qid, vid FROM tr WHERE rn <= $k),
-       |tp AS (SELECT t1.qid AS a, t1.vid AS b FROM tt t1
-       |  JOIN tt t2 ON t1.qid = t2.vid AND t1.vid = t2.qid WHERE t1.qid < t1.vid),
+       |${exactMutualTruthSql("ms", vecCol, idCol, k)},
        |$perL,
        |_lv AS ($union),
        |_tpc AS (SELECT CAST(count(*) AS BIGINT) AS true_pairs FROM tp),
        |_sc AS (SELECT bands, true_pairs, pairs, hits,
-       |    CASE WHEN true_pairs > 0 THEN
-       |      round(CAST(hits AS DOUBLE) / CAST(true_pairs AS DOUBLE), 6)
-       |    END AS recall
+       |    ${Readout.recallSql("hits", "true_pairs")} AS recall
        |  FROM _lv CROSS JOIN _tpc),
-       |_s1 AS (SELECT *,
-       |    min(CASE WHEN recall >= CAST($targetRecall AS DOUBLE) THEN bands END)
-       |      OVER () AS mp,
-       |    max(recall) OVER () AS mr
-       |  FROM _sc),
-       |_s2 AS (SELECT *,
-       |    min(CASE WHEN recall = mr THEN bands END) OVER () AS mb FROM _s1)
-       |SELECT bands, true_pairs, pairs, hits, recall,
-       |  bands = coalesce(mp, mb, 1) AS chosen
-       |FROM _s2 ORDER BY bands""".stripMargin
+       |${Readout.chosenSql(Seq("bands", "true_pairs", "pairs",
+            "hits", "recall"), "bands", targetRecall, 1)}""".stripMargin
   }
 
-  /** Full DuckDB oracle for [[mutualKnnLsh]]: (a, b, cosine r6), ORDER BY a, b. */
+  /** Full DuckDB oracle for [[mutualKnnLsh]]: the one-band [[mutualKnnOrSql]]. */
   def mutualKnnSql(table: String, vecCol: String, idCol: String,
       k: Int, coords: Seq[Int], maxBucketSize: Int): String =
-    s"""WITH ${centeredBucketCtesSql(table, vecCol, idCol, coords, maxBucketSize)},
-       |mc AS (SELECT q.id AS qid, e.id AS vid,
-       |    ${graft.functions.VectorFunctions.cosineSql("e.v", "q.v")} AS cos
-       |  FROM mb e JOIN mb q ON e.bk = q.bk AND e.id <> q.id),
-       |mr AS (SELECT qid, vid, cos,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rn FROM mc),
-       |mt AS (SELECT qid, vid, cos FROM mr WHERE rn <= $k)
-       |SELECT t1.qid AS a, t1.vid AS b, round(t1.cos, 6) AS cosine
-       |FROM mt t1 JOIN mt t2 ON t1.qid = t2.vid AND t1.vid = t2.qid
-       |WHERE t1.qid < t1.vid ORDER BY a, b""".stripMargin
+    mutualKnnOrSql(table, vecCol, idCol, k, Seq(coords), maxBucketSize)
 
   /** Recall readout for the bucketed mutual-kNN tier: on a deterministic
     * 1-in-`sampleMod` id-sample, mutual pairs from the SINGLE-band
@@ -733,13 +662,9 @@ object AnnSearch {
     * (all `bands`) vs ground truth from the exact all-pairs tier (same
     * top-k + reciprocity semantics, candidates unrestricted) — the
     * measured 1−(1−p)^L readout that grades [[mutualKnnLshOr]].
-    * `sampleMod` is REQUIRED for the same reason as
-    * [[graft.operators.dedup.LshRecall]]: the truth tier is quadratic in
-    * the sample, so it must be bounded by construction (the sample side
-    * broadcasts — a bounded BroadcastNestedLoopJoin, never a
-    * CartesianProduct). One row: (true_pairs, single_pairs, or_pairs,
-    * single_hits, or_hits, single_recall, or_recall) — recalls NULL
-    * when no true pairs exist (ANSI-safe).
+    * Sampling and recall follow the [[graft.operators.Readout]]
+    * contract. One row: (true_pairs, single_pairs, or_pairs,
+    * single_hits, or_hits, single_recall, or_recall).
     *
     * Measured at the shipped gate settings (4 bands of 4 coords, k=5,
     * cap 1000, sampleMod 4): single-band recall 0.114 / 0.088 / 0.137
@@ -766,15 +691,7 @@ object AnnSearch {
     val amplified = graft.core.Staging.stage(
       mutualKnnLshOr(sample, vecCol, idCol, k, bands, maxBucketSize)
         .select(col("a"), col("b")))
-    val a = sample.select(col(idCol).as("_qid"), col(vecCol).as("_qv"))
-    val b = sample.select(col(idCol), col(vecCol))
-    val cand = b.crossJoin(broadcast(a)).filter(col(idCol) =!= col("_qid"))
-    val top = perQueryTopK(cand, vecCol, idCol, k)
-    val fwd = top.select(col("query_id").as("a"), col(idCol).as("b"))
-    val rev = top.select(col(idCol).as("_ra"), col("query_id").as("_rb"))
-    val truth = graft.core.Staging.stage(
-      fwd.join(rev, col("a") === col("_ra") && col("b") === col("_rb"), "left_semi")
-        .filter(col("a") < col("b")))
+    val truth = graft.core.Staging.stage(exactMutualTruth(sample, vecCol, idCol, k))
     val sHits = single.join(truth, Seq("a", "b"), "left_semi")
     val oHits = amplified.join(truth, Seq("a", "b"), "left_semi")
     truth.agg(count(lit(1)).as("true_pairs"))
@@ -784,60 +701,33 @@ object AnnSearch {
       .crossJoin(oHits.agg(count(lit(1)).as("or_hits")))
       .select(col("true_pairs"), col("single_pairs"), col("or_pairs"),
         col("single_hits"), col("or_hits"),
-        when(col("true_pairs") > 0,
-          round(col("single_hits").cast("double") / col("true_pairs").cast("double"), 6))
+        Readout.recall(col("single_hits"), col("true_pairs"))
           .as("single_recall"),
-        when(col("true_pairs") > 0,
-          round(col("or_hits").cast("double") / col("true_pairs").cast("double"), 6))
+        Readout.recall(col("or_hits"), col("true_pairs"))
           .as("or_recall"))
   }
 
-  /** DuckDB oracle for [[mutualKnnRecall]] — the single-band CTE chain
-    * (kst/kb/mb) and the amplified band chain (o-prefixed) coexist via
-    * distinct CTE names.
+  /** DuckDB oracle for [[mutualKnnRecall]] — the single-band (l-prefixed)
+    * and amplified (o-prefixed) band chains and the exact truth (t)
+    * coexist via distinct CTE names.
     */
   def mutualKnnRecallSql(table: String, vecCol: String, idCol: String, k: Int,
-      bands: Seq[Seq[Int]], maxBucketSize: Int, sampleMod: Int): String =
-    s"""WITH ms AS (SELECT $idCol, $vecCol FROM $table
-       |  WHERE $vecCol IS NOT NULL AND $idCol % $sampleMod = 0),
-       |${centeredBucketCtesSql("ms", vecCol, idCol, bands.head, maxBucketSize)},
-       |lc AS (SELECT q.id AS qid, e.id AS vid,
-       |    ${graft.functions.VectorFunctions.cosineSql("e.v", "q.v")} AS cos
-       |  FROM mb e JOIN mb q ON e.bk = q.bk AND e.id <> q.id),
-       |lr AS (SELECT qid, vid,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rn FROM lc),
-       |lt AS (SELECT qid, vid FROM lr WHERE rn <= $k),
-       |lp AS (SELECT t1.qid AS a, t1.vid AS b FROM lt t1
-       |  JOIN lt t2 ON t1.qid = t2.vid AND t1.vid = t2.qid WHERE t1.qid < t1.vid),
+      bands: Seq[Seq[Int]], maxBucketSize: Int, sampleMod: Int): String = {
+    def hits(p: String) = s"(SELECT count(*) FROM $p JOIN tp USING (a, b))"
+    s"""WITH ${sampleCteSql(table, vecCol, idCol, sampleMod)},
+       |${centeredBandBucketCtesSql("ms", vecCol, idCol, bands.take(1), maxBucketSize, "l")},
+       |${mutualCtesSql("l", bandedCandSql("l"), k)},
        |${centeredBandBucketCtesSql("ms", vecCol, idCol, bands, maxBucketSize, "o")},
-       |oc AS (SELECT DISTINCT q.id AS qid, e.id AS vid,
-       |    ${graft.functions.VectorFunctions.cosineSql("e.v", "q.v")} AS cos
-       |  FROM omb e JOIN omb q
-       |    ON e.band = q.band AND e.bk = q.bk AND e.id <> q.id),
-       |orr AS (SELECT qid, vid,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rn FROM oc),
-       |ot AS (SELECT qid, vid FROM orr WHERE rn <= $k),
-       |op AS (SELECT t1.qid AS a, t1.vid AS b FROM ot t1
-       |  JOIN ot t2 ON t1.qid = t2.vid AND t1.vid = t2.qid WHERE t1.qid < t1.vid),
-       |tc AS (SELECT q.$idCol AS qid, e.$idCol AS vid,
-       |    ${graft.functions.VectorFunctions.cosineSql(s"e.$vecCol", s"q.$vecCol")} AS cos
-       |  FROM ms e, ms q WHERE e.$idCol <> q.$idCol),
-       |tr AS (SELECT qid, vid,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rn FROM tc),
-       |tt AS (SELECT qid, vid FROM tr WHERE rn <= $k),
-       |tp AS (SELECT t1.qid AS a, t1.vid AS b FROM tt t1
-       |  JOIN tt t2 ON t1.qid = t2.vid AND t1.vid = t2.qid WHERE t1.qid < t1.vid)
+       |${mutualCtesSql("o", bandedCandSql("o"), k)},
+       |${exactMutualTruthSql("ms", vecCol, idCol, k)}
        |SELECT (SELECT count(*) FROM tp) AS true_pairs,
        |  (SELECT count(*) FROM lp) AS single_pairs,
        |  (SELECT count(*) FROM op) AS or_pairs,
-       |  (SELECT count(*) FROM lp JOIN tp USING (a, b)) AS single_hits,
-       |  (SELECT count(*) FROM op JOIN tp USING (a, b)) AS or_hits,
-       |  CASE WHEN (SELECT count(*) FROM tp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM lp JOIN tp USING (a, b)) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM tp) AS DOUBLE), 6) END AS single_recall,
-       |  CASE WHEN (SELECT count(*) FROM tp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM op JOIN tp USING (a, b)) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM tp) AS DOUBLE), 6) END AS or_recall""".stripMargin
+       |  ${hits("lp")} AS single_hits,
+       |  ${hits("op")} AS or_hits,
+       |  ${Readout.recallSql(hits("lp"), "(SELECT count(*) FROM tp)")} AS single_recall,
+       |  ${Readout.recallSql(hits("op"), "(SELECT count(*) FROM tp)")} AS or_recall""".stripMargin
+  }
 
   /** Top-k within the query's LSH bucket (exact cosine as refinement). */
   def lshTopK(df: DataFrame, queryDf: DataFrame, vecCol: String,
@@ -946,10 +836,9 @@ object AnnSearch {
     * banding. One row: `(queries, k, truth_pairs, single_hits,
     * multi_hits, single_recall, multi_recall)`.
     *
-    * Queries sample with Spark `%` (the [[mutualKnnRecall]] convention
-    * — NOT pmod, which disagrees with the twin's `%` on negative ids),
-    * and every tier EXCLUDES the query row from its own candidates:
-    * queries come from the corpus, so a guaranteed self-hit in truth +
+    * Queries sample and recall follow the [[graft.operators.Readout]]
+    * contract, and every tier EXCLUDES the query row from its own
+    * candidates: queries come from the corpus, so a guaranteed self-hit in truth +
     * single + multi would floor both recalls at 1/k and skew the
     * (coords, probes) tuning readout.
     */
@@ -979,13 +868,9 @@ object AnnSearch {
       // an empty slice must still report k like the SQL twin does
       .select(col("queries"), lit(k).cast("long").as("k"), col("truth_pairs"),
         col("single_hits"), col("multi_hits"),
-        // empty truth (no queries sampled / empty set): NULL recall, not
-        // an ANSI divide-by-zero
-        when(col("truth_pairs") > 0L,
-          round(col("single_hits").cast("double") / col("truth_pairs").cast("double"), 6))
+        Readout.recall(col("single_hits"), col("truth_pairs"))
           .as("single_recall"),
-        when(col("truth_pairs") > 0L,
-          round(col("multi_hits").cast("double") / col("truth_pairs").cast("double"), 6))
+        Readout.recall(col("multi_hits"), col("truth_pairs"))
           .as("multi_recall"))
   }
 
@@ -1018,12 +903,9 @@ object AnnSearch {
   /** CONSUMABLE operating point for the sign-bucket tier (VERDICT r14
     * #4): evaluate recall@k at EVERY probe level 0..`maxProbes` over the
     * same deterministic query sample, and flag the level a pipeline
-    * should ship — the smallest level whose recall meets `targetRecall`,
-    * else the smallest level achieving the maximum measured recall; on
-    * a degenerate sample (zero truth pairs, all-NULL recall) the flag
-    * defaults to probes=0 so the chosen config row always exists. One
-    * row per level: `(probes, truth_pairs, hits, recall, chosen)` — a
-    * config row, not prose; the chosen row's `probes` is the value to
+    * should ship by the [[graft.operators.Readout]] chosen rule, default
+    * probes=0. One row per level: `(probes, truth_pairs, hits, recall,
+    * chosen)` — a config row, not prose; the chosen row's `probes` is the value to
     * paste into the production `lshTopK`/`knnJoinMultiProbe` call.
     *
     * Scale shape: the corpus is scanned ONCE for candidates (not once
@@ -1082,21 +964,8 @@ object AnnSearch {
       .join(broadcast(hitsPerLevel), col("probes") === col("_level"), "left")
       .select(col("probes"), col("truth_pairs"),
         coalesce(col("_h"), lit(0L)).as("hits"),
-        when(col("truth_pairs") > 0,
-          round(coalesce(col("_h"), lit(0L)).cast("double") /
-            col("truth_pairs").cast("double"), 6))
-          .as("recall"))
-    val ws = Window.partitionBy() // whole (maxProbes+1)-row level table
-    scored
-      .withColumn("_mp", min(when(col("recall") >= targetRecall, col("probes"))).over(ws))
-      .withColumn("_mr", max(col("recall")).over(ws))
-      .withColumn("_mb", min(when(col("recall") === col("_mr"), col("probes"))).over(ws))
-      .select(col("probes"), col("truth_pairs"), col("hits"), col("recall"),
-        // degenerate sample (zero truth pairs): default to probes=0 so the
-        // chosen config row always exists
-        (col("probes") === coalesce(col("_mp"), col("_mb"), lit(0)))
-          .as("chosen"))
-      .orderBy(col("probes"))
+        Readout.recall(coalesce(col("_h"), lit(0L)), col("truth_pairs")).as("recall"))
+    Readout.chosen(scored, "probes", targetRecall, default = 0)
   }
 
   /** DuckDB twin of [[multiProbeOperatingPoint]]. */
@@ -1129,20 +998,10 @@ object AnnSearch {
        |_lv AS ($union),
        |_tp AS (SELECT CAST(count(*) AS BIGINT) AS truth_pairs FROM _truth),
        |_sc AS (SELECT probes, truth_pairs, hits,
-       |    CASE WHEN truth_pairs > 0 THEN
-       |      round(CAST(hits AS DOUBLE) / CAST(truth_pairs AS DOUBLE), 6)
-       |    END AS recall
+       |    ${Readout.recallSql("hits", "truth_pairs")} AS recall
        |  FROM _lv CROSS JOIN _tp),
-       |_s1 AS (SELECT *,
-       |    min(CASE WHEN recall >= CAST($targetRecall AS DOUBLE) THEN probes END)
-       |      OVER () AS mp,
-       |    max(recall) OVER () AS mr
-       |  FROM _sc),
-       |_s2 AS (SELECT *,
-       |    min(CASE WHEN recall = mr THEN probes END) OVER () AS mb FROM _s1)
-       |SELECT probes, truth_pairs, hits, recall,
-       |  probes = coalesce(mp, mb, 0) AS chosen
-       |FROM _s2 ORDER BY probes""".stripMargin
+       |${Readout.chosenSql(Seq("probes", "truth_pairs", "hits",
+            "recall"), "probes", targetRecall, 0)}""".stripMargin
   }
 
   /** DuckDB twin of [[multiProbeRecall]] — the oracle re-ranks the exact
@@ -1174,12 +1033,8 @@ object AnnSearch {
        |  CAST(count(*) AS BIGINT) AS truth_pairs,
        |  CAST(count(sid) AS BIGINT) AS single_hits,
        |  CAST(count(mid) AS BIGINT) AS multi_hits,
-       |  CASE WHEN count(*) > 0 THEN
-       |    round(CAST(count(sid) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-       |  END AS single_recall,
-       |  CASE WHEN count(*) > 0 THEN
-       |    round(CAST(count(mid) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-       |  END AS multi_recall
+       |  ${Readout.recallSql("count(sid)", "count(*)")} AS single_recall,
+       |  ${Readout.recallSql("count(mid)", "count(*)")} AS multi_recall
        |FROM _truth
        |LEFT JOIN _single ON qid = sq AND tid = sid
        |LEFT JOIN _multi ON qid = mq AND tid = mid""".stripMargin

@@ -1,6 +1,7 @@
 package graft.operators.vector
 
 import graft.core.Rejection
+import graft.operators.Readout
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -184,20 +185,13 @@ object EmbeddingCosineDedup {
     * exact all-pairs truth at the same threshold. Bucket-caught pairs
     * are a SUBSET of truth by construction (same cosine test, the
     * bucket only restricts candidates), so recall = bucket_pairs /
-    * true_pairs with no hit join. `sampleMod` REQUIRED — the truth tier
-    * is quadratic in the sample (broadcast BNLJ, bounded). One row:
-    * `(true_pairs, bucket_pairs, recall)`; recall NULL on empty truth.
+    * true_pairs with no hit join. One row: `(true_pairs, bucket_pairs,
+    * recall)`.
     */
   def bucketedRecall(df: DataFrame, vecCol: String, idCol: String,
       bucketCol: String, threshold: Double, sampleMod: Int): DataFrame = {
-    require(sampleMod >= 1, "sampleMod is required: the truth tier is quadratic in the sample")
-    val sample = df.filter(col(vecCol).isNotNull && col(idCol) % sampleMod === 0)
-      .select(col(idCol), col(vecCol), col(bucketCol))
-    val l = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"))
-    val r = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"))
-    val truth = l.crossJoin(broadcast(r))
-      .filter(col("d1") < col("d2") &&
-        VectorFunctions.cosine(col("v1"), col("v2")) >= threshold)
+    val (sample, truth) = sampledTruth(df, vecCol, idCol, threshold, sampleMod,
+      extra = Seq(bucketCol))
     val bl = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"),
       col(bucketCol).as("_bk"))
     val br = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"),
@@ -205,32 +199,114 @@ object EmbeddingCosineDedup {
     val caught = bl.join(br, Seq("_bk"))
       .filter(col("d1") < col("d2") &&
         VectorFunctions.cosine(col("v1"), col("v2")) >= threshold)
-    truth.agg(count(lit(1)).as("true_pairs"))
-      .crossJoin(caught.agg(count(lit(1)).as("bucket_pairs")))
-      .select(col("true_pairs"), col("bucket_pairs"),
-        when(col("true_pairs") > 0,
-          round(col("bucket_pairs").cast("double") / col("true_pairs").cast("double"), 6))
-          .as("recall"))
+    recallRow(truth, "bucket" -> caught).withColumnRenamed("bucket_recall", "recall")
   }
 
-  /** DuckDB twin of [[bucketedRecall]] over `src` (table or CTE with
-    * `$idCol`, `$vecCol`, `$bucketCol`).
+  /** The readout sample `(idCol, vecCol, extra…)` — the
+    * [[graft.operators.Readout]] sampling contract over non-null vectors
+    * — and its exact truth: every `d1 < d2` sample pair at cosine ≥
+    * `threshold`. Quadratic in the sample, so the sample side
+    * broadcasts (a bounded BroadcastNestedLoopJoin). Callers that read
+    * the truth more than once stage it.
     */
-  def bucketedRecallSql(src: String, vecCol: String, idCol: String,
-      bucketCol: String, threshold: Double, sampleMod: Int): String =
-    s"""rs AS (SELECT $idCol AS id, $vecCol AS v, $bucketCol AS bk FROM $src
+  private def sampledTruth(df: DataFrame, vecCol: String, idCol: String,
+      threshold: Double, sampleMod: Int,
+      extra: Seq[String] = Nil): (DataFrame, DataFrame) = {
+    require(sampleMod >= 1, "sampleMod is required: the truth tier is quadratic in the sample")
+    val sample = df.filter(col(vecCol).isNotNull && col(idCol) % sampleMod === 0)
+      .select((Seq(col(idCol), col(vecCol)) ++ extra.map(col)): _*)
+    val l = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"))
+    val r = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"))
+    val truth = l.crossJoin(broadcast(r))
+      .filter(col("d1") < col("d2") &&
+        VectorFunctions.cosine(col("v1"), col("v2")) >= threshold)
+    (sample, truth)
+  }
+
+  /** DuckDB twin of [[sampledTruth]] over `table`: `rs(id, v)` and
+    * `rtp(d1, d2)`.
+    */
+  private def sampledTruthSql(table: String, vecCol: String, idCol: String,
+      threshold: Double, sampleMod: Int): String =
+    s"""rs AS (SELECT $idCol AS id, $vecCol AS v FROM $table
        |  WHERE $vecCol IS NOT NULL AND $idCol % $sampleMod = 0),
        |rtp AS (SELECT a.id AS d1, b.id AS d2 FROM rs a, rs b
        |  WHERE a.id < b.id
-       |    AND ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |rbp AS (SELECT a.id AS d1, b.id AS d2 FROM rs a JOIN rs b
-       |  ON a.bk = b.bk AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold)
-       |SELECT (SELECT count(*) FROM rtp) AS true_pairs,
-       |  (SELECT count(*) FROM rbp) AS bucket_pairs,
-       |  CASE WHEN (SELECT count(*) FROM rtp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM rbp) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM rtp) AS DOUBLE), 6) END AS recall""".stripMargin
+       |    AND ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold)""".stripMargin
+
+  /** One readout row over pair sets that are subsets of `truth` by
+    * construction (same cosine test, candidates only restricted):
+    * `true_pairs`, each `<name>_pairs` count, then each `<name>_recall`
+    * ([[graft.operators.Readout.recall]]) — no hit join needed.
+    */
+  private def recallRow(truth: DataFrame, caught: (String, DataFrame)*): DataFrame =
+    caught.foldLeft(truth.agg(count(lit(1)).as("true_pairs"))) {
+      case (row, (n, pairs)) => row.crossJoin(pairs.agg(count(lit(1)).as(s"${n}_pairs")))
+    }.select((col("true_pairs") +: caught.map(c => col(s"${c._1}_pairs"))) ++
+      caught.map(c => Readout.recall(col(s"${c._1}_pairs"), col("true_pairs"))
+        .as(s"${c._1}_recall")): _*)
+
+  /** The readout SELECT over count subqueries: `true_pairs` from `rtp`,
+    * each `<name>_pairs` from its CTE, then each `<name>_recall`.
+    */
+  private def recallRowSql(caught: (String, String)*): String = {
+    def n(cte: String) = s"(SELECT count(*) FROM $cte)"
+    ((s"${n("rtp")} AS true_pairs" +: caught.map { case (nm, c) => s"${n(c)} AS ${nm}_pairs" }) ++
+      caught.map { case (nm, c) => s"${Readout.recallSql(n(c), n("rtp"))} AS ${nm}_recall" })
+      .mkString("SELECT ", ",\n  ", "")
+  }
+
+  /** DuckDB probe assignment over `src(id, v)` (the sample `rs` or
+    * [[vectorsSql]] of the whole table): centroids `_pct(cidx, ce)` are
+    * the first `k` rows of `table` by `idCol` (the deterministic oracle
+    * init), `_ppd` ranks every centroid per row by `(l2sq, cidx)` —
+    * the exact [[graft.plans.kernels.NearestCentroids]] selection — and
+    * `_pa(id, v, pc, prn)` keeps the `nprobe` nearest.
+    */
+  private def probedCellsSql(table: String, vecCol: String, idCol: String,
+      k: Int, nprobe: Int, src: String): String =
+    s"""_pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
+       |    $vecCol AS ce
+       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
+       |_ppd AS (SELECT s.id, s.v, c.cidx, c.ce,
+       |    row_number() OVER (PARTITION BY s.id
+       |      ORDER BY ${VectorFunctions.l2sqSql("s.v", "c.ce")}, c.cidx) AS prn
+       |  FROM $src s CROSS JOIN _pct c),
+       |_pa AS (SELECT id, v, cidx AS pc, prn FROM _ppd WHERE prn <= $nprobe)""".stripMargin
+
+  /** Every non-null vector of `table` as `(id, v)`. */
+  private def vectorsSql(table: String, vecCol: String, idCol: String): String =
+    s"(SELECT $idCol AS id, $vecCol AS v FROM $table WHERE $vecCol IS NOT NULL)"
+
+  /** `_pac(id, v, pc)`: the `cap` smallest ids of each probed cell. */
+  private def firstCapSql(cap: Int): String =
+    s"""_pac AS (SELECT id, v, pc FROM _pa
+       |  QUALIFY row_number() OVER (PARTITION BY pc ORDER BY id) <= $cap)""".stripMargin
+
+  /** Verified pairs `name(d1, d2)` from `l` × `r` sharing a probed cell,
+    * d1 < d2, cosine ≥ `threshold` — DISTINCT (a pair can share several
+    * cells).
+    */
+  private def cellPairsSql(name: String, l: String, r: String, threshold: Double,
+      where: String = ""): String =
+    s"""$name AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM $l a JOIN $r b
+       |  ON a.pc = b.pc AND a.id < b.id
+       |  WHERE $where${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold)""".stripMargin
+
+  /** `rpp(d1, d2)` under a cap policy ([[probedPairs]]): uncapped, the
+    * first-cap (anchors pair among themselves) or anchored (anchors
+    * pair against every member).
+    */
+  private def policyPairsSql(threshold: Double, maxCellSize: Option[Int],
+      anchoredCap: Boolean): String = {
+    require(!anchoredCap || maxCellSize.nonEmpty, "anchoredCap requires maxCellSize")
+    maxCellSize match {
+      case None => cellPairsSql("rpp", "_pa", "_pa", threshold)
+      case Some(cap) =>
+        s"""${firstCapSql(cap)},
+           |${cellPairsSql("rpp", "_pac", if (anchoredCap) "_pa" else "_pac", threshold)}""".stripMargin
+    }
+  }
 
   /** Side-by-side recall readout for the PROBED tier (r16): on the same
     * deterministic 1-in-`sampleMod` sample, duplicate pairs caught under
@@ -240,9 +316,7 @@ object EmbeddingCosineDedup {
     * (same cosine test; probing only widens candidates), so recalls are
     * plain count ratios with no hit join — and single ⊆ probed, so the
     * readout is monotone by construction. One row: `(true_pairs,
-    * single_pairs, probed_pairs, single_recall, probed_recall)`; recalls
-    * NULL on empty truth. `sampleMod` REQUIRED — the truth tier is
-    * quadratic in the sample (broadcast BNLJ, bounded).
+    * single_pairs, probed_pairs, single_recall, probed_recall)`.
     *
     * Measured at the shipped gate settings (first-8 cells, nprobe=2,
     * t=0.35, 1-in-2 sample): single → probed recall 0.295 → 0.738
@@ -253,64 +327,22 @@ object EmbeddingCosineDedup {
   def probedRecall(df: DataFrame, vecCol: String, idCol: String,
       centroids: Seq[Seq[Double]], nprobe: Int, threshold: Double,
       sampleMod: Int): DataFrame = {
-    require(sampleMod >= 1, "sampleMod is required: the truth tier is quadratic in the sample")
-    val sample = df.filter(col(vecCol).isNotNull && col(idCol) % sampleMod === 0)
-      .select(col(idCol), col(vecCol))
-    val l = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"))
-    val r = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"))
-    val truth = l.crossJoin(broadcast(r))
-      .filter(col("d1") < col("d2") &&
-        VectorFunctions.cosine(col("v1"), col("v2")) >= threshold)
-    val single = probedPairs(sample, vecCol, idCol, centroids, 1, threshold)
-    val probed = probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold)
-    truth.agg(count(lit(1)).as("true_pairs"))
-      .crossJoin(single.agg(count(lit(1)).as("single_pairs")))
-      .crossJoin(probed.agg(count(lit(1)).as("probed_pairs")))
-      .select(col("true_pairs"), col("single_pairs"), col("probed_pairs"),
-        when(col("true_pairs") > 0,
-          round(col("single_pairs").cast("double") / col("true_pairs").cast("double"), 6))
-          .as("single_recall"),
-        when(col("true_pairs") > 0,
-          round(col("probed_pairs").cast("double") / col("true_pairs").cast("double"), 6))
-          .as("probed_recall"))
+    val (sample, truth) = sampledTruth(df, vecCol, idCol, threshold, sampleMod)
+    recallRow(truth,
+      "single" -> probedPairs(sample, vecCol, idCol, centroids, 1, threshold),
+      "probed" -> probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold))
   }
 
-  /** DuckDB twin of [[probedRecall]]: centroids are the first `k` rows of
-    * `table` by `idCol` (the deterministic oracle init), probe rank is
-    * `row_number() OVER (ORDER BY l2sq, cidx)` — the exact
-    * [[graft.plans.kernels.NearestCentroids]] selection.
+  /** DuckDB twin of [[probedRecall]] (first-k centroid init — see
+    * [[probedCellsSql]]); the CTE list only, the caller adds `WITH`.
     */
   def probedRecallSql(table: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int, threshold: Double, sampleMod: Int): String =
-    s"""_pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |rs AS (SELECT $idCol AS id, $vecCol AS v FROM $table
-       |  WHERE $vecCol IS NOT NULL AND $idCol % $sampleMod = 0),
-       |_ppd AS (SELECT rs.id, rs.v, c.cidx,
-       |    row_number() OVER (PARTITION BY rs.id
-       |      ORDER BY ${VectorFunctions.l2sqSql("rs.v", "c.ce")}, c.cidx) AS prn
-       |  FROM rs CROSS JOIN _pct c),
-       |_pa AS (SELECT id, v, cidx AS pc, prn FROM _ppd WHERE prn <= $nprobe),
-       |rtp AS (SELECT a.id AS d1, b.id AS d2 FROM rs a, rs b
-       |  WHERE a.id < b.id
-       |    AND ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |rsp AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM _pa a JOIN _pa b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE a.prn = 1 AND b.prn = 1
-       |    AND ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |rpp AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM _pa a JOIN _pa b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold)
-       |SELECT (SELECT count(*) FROM rtp) AS true_pairs,
-       |  (SELECT count(*) FROM rsp) AS single_pairs,
-       |  (SELECT count(*) FROM rpp) AS probed_pairs,
-       |  CASE WHEN (SELECT count(*) FROM rtp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM rsp) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM rtp) AS DOUBLE), 6) END AS single_recall,
-       |  CASE WHEN (SELECT count(*) FROM rtp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM rpp) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM rtp) AS DOUBLE), 6) END AS probed_recall""".stripMargin
+    s"""${sampledTruthSql(table, vecCol, idCol, threshold, sampleMod)},
+       |${probedCellsSql(table, vecCol, idCol, k, nprobe, "rs")},
+       |${cellPairsSql("rsp", "_pa", "_pa", threshold, "a.prn = 1 AND b.prn = 1\n    AND ")},
+       |${cellPairsSql("rpp", "_pa", "_pa", threshold)}
+       |${recallRowSql("single" -> "rsp", "probed" -> "rpp")}""".stripMargin
 
   /** Full DuckDB oracle for [[ProbedCosineDedup]]'s kept set (first-k
     * centroid init): ids with no earlier co-probed row at cosine ≥
@@ -320,36 +352,11 @@ object EmbeddingCosineDedup {
     */
   def probedKeepSql(table: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int, threshold: Double,
-      maxCellSize: Option[Int] = None, anchoredCap: Boolean = false): String = {
-    require(!anchoredCap || maxCellSize.nonEmpty, "anchoredCap requires maxCellSize")
-    // first-cap: both pair sides rank-capped. anchored: only the d1
-    // side is capped (the anchors); d2 ranges over every probed member.
-    val capped = maxCellSize.fold("")(cap =>
-      if (anchoredCap) ""
-      else s"  QUALIFY row_number() OVER (PARTITION BY cidx ORDER BY id) <= $cap")
-    val lhs = maxCellSize match {
-      case Some(cap) if anchoredCap =>
-        s""",
-           |_paa AS (SELECT id, v, pc FROM _pa
-           |  QUALIFY row_number() OVER (PARTITION BY pc ORDER BY id) <= $cap)""".stripMargin
-      case _ => ""
-    }
-    val lTable = if (anchoredCap && maxCellSize.nonEmpty) "_paa" else "_pa"
-    s"""WITH _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |_ppd AS (SELECT t.$idCol AS id, t.$vecCol AS v, c.cidx,
-       |    row_number() OVER (PARTITION BY t.$idCol
-       |      ORDER BY ${VectorFunctions.l2sqSql(s"t.$vecCol", "c.ce")}, c.cidx) AS prn
-       |  FROM $table t CROSS JOIN _pct c WHERE t.$vecCol IS NOT NULL),
-       |_pa AS (SELECT id, v, cidx AS pc FROM _ppd WHERE prn <= $nprobe
-       |$capped)$lhs,
-       |rpp AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM $lTable a JOIN _pa b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold)
+      maxCellSize: Option[Int] = None, anchoredCap: Boolean = false): String =
+    s"""WITH ${probedCellsSql(table, vecCol, idCol, k, nprobe, vectorsSql(table, vecCol, idCol))},
+       |${policyPairsSql(threshold, maxCellSize, anchoredCap)}
        |SELECT $idCol FROM $table
        |WHERE $idCol NOT IN (SELECT d2 FROM rpp) ORDER BY $idCol""".stripMargin
-  }
 
   /** Side-by-side recall readout for the HOT-CELL-CAPPED probed tier
     * (r17, VERDICT r16 #1): on the same deterministic 1-in-`sampleMod`
@@ -359,70 +366,28 @@ object EmbeddingCosineDedup {
     * removes candidates; probing only restricts the same cosine test),
     * so both recalls are plain count ratios with no hit join and
     * `capped_recall <= probed_recall` always. One row: `(true_pairs,
-    * probed_pairs, capped_pairs, probed_recall, capped_recall)`;
-    * recalls NULL on empty truth. `sampleMod` REQUIRED — the truth tier
-    * is quadratic in the sample (broadcast BNLJ, bounded).
+    * probed_pairs, capped_pairs, probed_recall, capped_recall)`.
     */
   def cappedRecall(df: DataFrame, vecCol: String, idCol: String,
       centroids: Seq[Seq[Double]], nprobe: Int, threshold: Double,
       maxCellSize: Int, sampleMod: Int): DataFrame = {
-    require(sampleMod >= 1, "sampleMod is required: the truth tier is quadratic in the sample")
-    val sample = df.filter(col(vecCol).isNotNull && col(idCol) % sampleMod === 0)
-      .select(col(idCol), col(vecCol))
-    val l = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"))
-    val r = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"))
-    val truth = l.crossJoin(broadcast(r))
-      .filter(col("d1") < col("d2") &&
-        VectorFunctions.cosine(col("v1"), col("v2")) >= threshold)
-    val probed = probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold)
-    val capped = probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold,
-      Some(maxCellSize))
-    truth.agg(count(lit(1)).as("true_pairs"))
-      .crossJoin(probed.agg(count(lit(1)).as("probed_pairs")))
-      .crossJoin(capped.agg(count(lit(1)).as("capped_pairs")))
-      .select(col("true_pairs"), col("probed_pairs"), col("capped_pairs"),
-        when(col("true_pairs") > 0,
-          round(col("probed_pairs").cast("double") / col("true_pairs").cast("double"), 6))
-          .as("probed_recall"),
-        when(col("true_pairs") > 0,
-          round(col("capped_pairs").cast("double") / col("true_pairs").cast("double"), 6))
-          .as("capped_recall"))
+    val (sample, truth) = sampledTruth(df, vecCol, idCol, threshold, sampleMod)
+    recallRow(truth,
+      "probed" -> probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold),
+      "capped" -> probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold,
+        Some(maxCellSize)))
   }
 
   /** DuckDB twin of [[cappedRecall]] (first-k centroid init). */
   def cappedRecallSql(table: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int, threshold: Double, maxCellSize: Int,
       sampleMod: Int): String =
-    s"""WITH _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |rs AS (SELECT $idCol AS id, $vecCol AS v FROM $table
-       |  WHERE $vecCol IS NOT NULL AND $idCol % $sampleMod = 0),
-       |_ppd AS (SELECT rs.id, rs.v, c.cidx,
-       |    row_number() OVER (PARTITION BY rs.id
-       |      ORDER BY ${VectorFunctions.l2sqSql("rs.v", "c.ce")}, c.cidx) AS prn
-       |  FROM rs CROSS JOIN _pct c),
-       |_pa AS (SELECT id, v, cidx AS pc FROM _ppd WHERE prn <= $nprobe),
-       |_pac AS (SELECT id, v, pc FROM _pa
-       |  QUALIFY row_number() OVER (PARTITION BY pc ORDER BY id) <= $maxCellSize),
-       |rtp AS (SELECT a.id AS d1, b.id AS d2 FROM rs a, rs b
-       |  WHERE a.id < b.id
-       |    AND ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |rpp AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM _pa a JOIN _pa b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |rcp AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM _pac a JOIN _pac b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold)
-       |SELECT (SELECT count(*) FROM rtp) AS true_pairs,
-       |  (SELECT count(*) FROM rpp) AS probed_pairs,
-       |  (SELECT count(*) FROM rcp) AS capped_pairs,
-       |  CASE WHEN (SELECT count(*) FROM rtp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM rpp) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM rtp) AS DOUBLE), 6) END AS probed_recall,
-       |  CASE WHEN (SELECT count(*) FROM rtp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM rcp) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM rtp) AS DOUBLE), 6) END AS capped_recall""".stripMargin
+    s"""WITH ${sampledTruthSql(table, vecCol, idCol, threshold, sampleMod)},
+       |${probedCellsSql(table, vecCol, idCol, k, nprobe, "rs")},
+       |${firstCapSql(maxCellSize)},
+       |${cellPairsSql("rpp", "_pa", "_pa", threshold)},
+       |${cellPairsSql("rcp", "_pac", "_pac", threshold)}
+       |${recallRowSql("probed" -> "rpp", "capped" -> "rcp")}""".stripMargin
 
   /** SemDeDup-style representative selection (Abbas et al. 2023,
     * arXiv:2303.09540 — the published semantic-dedup keep rule): build
@@ -481,43 +446,29 @@ object EmbeddingCosineDedup {
     */
   def semDeDupKeepSql(table: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int, threshold: Double,
-      maxCellSize: Option[Int] = None, anchoredCap: Boolean = false): String = {
-    require(!anchoredCap || maxCellSize.nonEmpty, "anchoredCap requires maxCellSize")
-    val capped = maxCellSize.fold("")(cap =>
-      if (anchoredCap) ""
-      else s"  QUALIFY row_number() OVER (PARTITION BY cidx ORDER BY id) <= $cap")
-    val lhs = maxCellSize match {
-      case Some(cap) if anchoredCap =>
-        s""",
-           |_paa AS (SELECT id, v, pc FROM _pa
-           |  QUALIFY row_number() OVER (PARTITION BY pc ORDER BY id) <= $cap)""".stripMargin
-      case _ => ""
-    }
-    val lTable = if (anchoredCap && maxCellSize.nonEmpty) "_paa" else "_pa"
-    s"""WITH RECURSIVE _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |_ppd AS (SELECT t.$idCol AS id, t.$vecCol AS v, c.cidx, c.ce,
-       |    row_number() OVER (PARTITION BY t.$idCol
-       |      ORDER BY ${VectorFunctions.l2sqSql(s"t.$vecCol", "c.ce")}, c.cidx) AS prn
-       |  FROM $table t CROSS JOIN _pct c WHERE t.$vecCol IS NOT NULL),
-       |_pa AS (SELECT id, v, cidx AS pc FROM _ppd WHERE prn <= $nprobe
-       |$capped)$lhs,
-       |rpp AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM $lTable a JOIN _pa b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |${graft.operators.dedup.ConnectedComponents.assignSql("rpp")},
-       |_pri AS (SELECT id, v, ce FROM _ppd WHERE prn = 1),
-       |_scored AS (SELECT c.id, c.comp,
-       |    ${VectorFunctions.cosineSql("p.v", "p.ce")} AS csim
-       |  FROM _comp c JOIN _pri p ON p.id = c.id),
+      maxCellSize: Option[Int] = None, anchoredCap: Boolean = false): String =
+    s"""${semScoredCtesSql(table, vecCol, idCol, k, nprobe, threshold, maxCellSize, anchoredCap)},
        |_keep AS (SELECT id FROM _scored
        |  QUALIFY row_number() OVER (PARTITION BY comp ORDER BY csim, id) = 1)
        |SELECT $idCol FROM $table
        |WHERE $idCol NOT IN (
        |  SELECT id FROM _scored WHERE id NOT IN (SELECT id FROM _keep))
        |ORDER BY $idCol""".stripMargin
-  }
+
+  /** The SemDeDup twins' shared chain: probed pairs under the cap
+    * policy, their components, and `_scored(id, comp, csim)` — each
+    * clustered row's cosine to its primary centroid.
+    */
+  private def semScoredCtesSql(table: String, vecCol: String, idCol: String,
+      k: Int, nprobe: Int, threshold: Double, maxCellSize: Option[Int],
+      anchoredCap: Boolean): String =
+    s"""WITH RECURSIVE ${probedCellsSql(table, vecCol, idCol, k, nprobe, vectorsSql(table, vecCol, idCol))},
+       |${policyPairsSql(threshold, maxCellSize, anchoredCap)},
+       |${graft.operators.dedup.ConnectedComponents.assignSql("rpp")},
+       |_pri AS (SELECT id, v, ce FROM _ppd WHERE prn = 1),
+       |_scored AS (SELECT c.id, c.comp,
+       |    ${VectorFunctions.cosineSql("p.v", "p.ce")} AS csim
+       |  FROM _comp c JOIN _pri p ON p.id = c.id)""".stripMargin
 
   /** Near-dup COMPONENT audit for the semantic tier — the
     * [[graft.operators.dedup.MinHashLSHDedup]] `clusterStats` pattern:
@@ -551,42 +502,13 @@ object EmbeddingCosineDedup {
   /** DuckDB twin of [[semanticClusterStats]] (first-k centroid init). */
   def semanticClusterStatsSql(table: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int, threshold: Double,
-      maxCellSize: Option[Int] = None, anchoredCap: Boolean = false): String = {
-    require(!anchoredCap || maxCellSize.nonEmpty, "anchoredCap requires maxCellSize")
-    val capped = maxCellSize.fold("")(cap =>
-      if (anchoredCap) ""
-      else s"  QUALIFY row_number() OVER (PARTITION BY cidx ORDER BY id) <= $cap")
-    val lhs = maxCellSize match {
-      case Some(cap) if anchoredCap =>
-        s""",
-           |_paa AS (SELECT id, v, pc FROM _pa
-           |  QUALIFY row_number() OVER (PARTITION BY pc ORDER BY id) <= $cap)""".stripMargin
-      case _ => ""
-    }
-    val lTable = if (anchoredCap && maxCellSize.nonEmpty) "_paa" else "_pa"
-    s"""WITH RECURSIVE _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |_ppd AS (SELECT t.$idCol AS id, t.$vecCol AS v, c.cidx, c.ce,
-       |    row_number() OVER (PARTITION BY t.$idCol
-       |      ORDER BY ${VectorFunctions.l2sqSql(s"t.$vecCol", "c.ce")}, c.cidx) AS prn
-       |  FROM $table t CROSS JOIN _pct c WHERE t.$vecCol IS NOT NULL),
-       |_pa AS (SELECT id, v, cidx AS pc FROM _ppd WHERE prn <= $nprobe
-       |$capped)$lhs,
-       |rpp AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM $lTable a JOIN _pa b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |${graft.operators.dedup.ConnectedComponents.assignSql("rpp")},
-       |_pri AS (SELECT id, v, ce FROM _ppd WHERE prn = 1),
-       |_scored AS (SELECT c.id, c.comp,
-       |    ${VectorFunctions.cosineSql("p.v", "p.ce")} AS csim
-       |  FROM _comp c JOIN _pri p ON p.id = c.id)
+      maxCellSize: Option[Int] = None, anchoredCap: Boolean = false): String =
+    s"""${semScoredCtesSql(table, vecCol, idCol, k, nprobe, threshold, maxCellSize, anchoredCap)}
        |SELECT comp, CAST(count(*) OVER (PARTITION BY comp) AS BIGINT) AS size,
        |  id AS semdedup_keeper
        |FROM _scored
        |QUALIFY row_number() OVER (PARTITION BY comp ORDER BY csim, id) = 1
        |ORDER BY comp""".stripMargin
-  }
 
   /** Side-by-side recall readout for the two CAP POLICIES at the same
     * cap (r17): on the same deterministic 1-in-`sampleMod` sample,
@@ -599,81 +521,31 @@ object EmbeddingCosineDedup {
     * always. The gap between the last two is the recall the linear
     * a·(2c−a−1) mass buys back from the quadratic-capped min(c,cap)²
     * policy. One row: `(true_pairs, probed_pairs, capped_pairs,
-    * anchored_pairs, probed_recall, capped_recall, anchored_recall)`;
-    * recalls NULL on empty truth. `sampleMod` REQUIRED — the truth
-    * tier is quadratic in the sample (broadcast BNLJ, bounded).
+    * anchored_pairs, probed_recall, capped_recall, anchored_recall)`.
     */
   def anchoredRecall(df: DataFrame, vecCol: String, idCol: String,
       centroids: Seq[Seq[Double]], nprobe: Int, threshold: Double,
       maxCellSize: Int, sampleMod: Int): DataFrame = {
-    require(sampleMod >= 1, "sampleMod is required: the truth tier is quadratic in the sample")
-    val sample = df.filter(col(vecCol).isNotNull && col(idCol) % sampleMod === 0)
-      .select(col(idCol), col(vecCol))
-    val l = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"))
-    val r = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"))
-    val truth = l.crossJoin(broadcast(r))
-      .filter(col("d1") < col("d2") &&
-        VectorFunctions.cosine(col("v1"), col("v2")) >= threshold)
-    val probed = probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold)
-    val capped = probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold,
-      Some(maxCellSize))
-    val anchored = probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold,
-      Some(maxCellSize), anchoredCap = true)
-    def recallCol(c: String): org.apache.spark.sql.Column =
-      when(col("true_pairs") > 0,
-        round(col(c).cast("double") / col("true_pairs").cast("double"), 6))
-    truth.agg(count(lit(1)).as("true_pairs"))
-      .crossJoin(probed.agg(count(lit(1)).as("probed_pairs")))
-      .crossJoin(capped.agg(count(lit(1)).as("capped_pairs")))
-      .crossJoin(anchored.agg(count(lit(1)).as("anchored_pairs")))
-      .select(col("true_pairs"), col("probed_pairs"), col("capped_pairs"),
-        col("anchored_pairs"),
-        recallCol("probed_pairs").as("probed_recall"),
-        recallCol("capped_pairs").as("capped_recall"),
-        recallCol("anchored_pairs").as("anchored_recall"))
+    val (sample, truth) = sampledTruth(df, vecCol, idCol, threshold, sampleMod)
+    recallRow(truth,
+      "probed" -> probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold),
+      "capped" -> probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold,
+        Some(maxCellSize)),
+      "anchored" -> probedPairs(sample, vecCol, idCol, centroids, nprobe, threshold,
+        Some(maxCellSize), anchoredCap = true))
   }
 
   /** DuckDB twin of [[anchoredRecall]] (first-k centroid init). */
   def anchoredRecallSql(table: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int, threshold: Double, maxCellSize: Int,
       sampleMod: Int): String =
-    s"""WITH _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |rs AS (SELECT $idCol AS id, $vecCol AS v FROM $table
-       |  WHERE $vecCol IS NOT NULL AND $idCol % $sampleMod = 0),
-       |_ppd AS (SELECT rs.id, rs.v, c.cidx,
-       |    row_number() OVER (PARTITION BY rs.id
-       |      ORDER BY ${VectorFunctions.l2sqSql("rs.v", "c.ce")}, c.cidx) AS prn
-       |  FROM rs CROSS JOIN _pct c),
-       |_pa AS (SELECT id, v, cidx AS pc FROM _ppd WHERE prn <= $nprobe),
-       |_pac AS (SELECT id, v, pc FROM _pa
-       |  QUALIFY row_number() OVER (PARTITION BY pc ORDER BY id) <= $maxCellSize),
-       |rtp AS (SELECT a.id AS d1, b.id AS d2 FROM rs a, rs b
-       |  WHERE a.id < b.id
-       |    AND ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |rpp AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM _pa a JOIN _pa b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |rcp AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM _pac a JOIN _pac b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
-       |rap AS (SELECT DISTINCT a.id AS d1, b.id AS d2 FROM _pac a JOIN _pa b
-       |  ON a.pc = b.pc AND a.id < b.id
-       |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold)
-       |SELECT (SELECT count(*) FROM rtp) AS true_pairs,
-       |  (SELECT count(*) FROM rpp) AS probed_pairs,
-       |  (SELECT count(*) FROM rcp) AS capped_pairs,
-       |  (SELECT count(*) FROM rap) AS anchored_pairs,
-       |  CASE WHEN (SELECT count(*) FROM rtp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM rpp) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM rtp) AS DOUBLE), 6) END AS probed_recall,
-       |  CASE WHEN (SELECT count(*) FROM rtp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM rcp) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM rtp) AS DOUBLE), 6) END AS capped_recall,
-       |  CASE WHEN (SELECT count(*) FROM rtp) > 0 THEN
-       |    round(CAST((SELECT count(*) FROM rap) AS DOUBLE)
-       |      / CAST((SELECT count(*) FROM rtp) AS DOUBLE), 6) END AS anchored_recall""".stripMargin
+    s"""WITH ${sampledTruthSql(table, vecCol, idCol, threshold, sampleMod)},
+       |${probedCellsSql(table, vecCol, idCol, k, nprobe, "rs")},
+       |${firstCapSql(maxCellSize)},
+       |${cellPairsSql("rpp", "_pa", "_pa", threshold)},
+       |${cellPairsSql("rcp", "_pac", "_pac", threshold)},
+       |${cellPairsSql("rap", "_pac", "_pa", threshold)}
+       |${recallRowSql("probed" -> "rpp", "capped" -> "rcp", "anchored" -> "rap")}""".stripMargin
 
   /** Candidate-mass evidence for the ANCHORED cap (r17): per probed
     * cell, member count `c`, anchor count `a = min(c, cap)`, and the
@@ -709,17 +581,11 @@ object EmbeddingCosineDedup {
   /** DuckDB twin of [[anchoredCapStats]] (first-k centroid init). */
   def anchoredCapStatsSql(table: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int, maxCellSize: Int): String =
-    s"""WITH _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |_ppd AS (SELECT t.$idCol AS id, c.cidx,
-       |    row_number() OVER (PARTITION BY t.$idCol
-       |      ORDER BY ${VectorFunctions.l2sqSql(s"t.$vecCol", "c.ce")}, c.cidx) AS prn
-       |  FROM $table t CROSS JOIN _pct c WHERE t.$vecCol IS NOT NULL),
-       |_cc AS (SELECT cidx, CAST(count(*) AS BIGINT) AS c,
+    s"""WITH ${probedCellsSql(table, vecCol, idCol, k, nprobe, vectorsSql(table, vecCol, idCol))},
+       |_cc AS (SELECT pc, CAST(count(*) AS BIGINT) AS c,
        |    CAST(least(count(*), $maxCellSize) AS BIGINT) AS a
-       |  FROM _ppd WHERE prn <= $nprobe GROUP BY cidx)
-       |SELECT cidx AS cluster, c AS rows_probed, a AS rows_anchored,
+       |  FROM _pa GROUP BY pc)
+       |SELECT pc AS cluster, c AS rows_probed, a AS rows_anchored,
        |  c * (c - 1) AS cand_pairs_probed,
        |  a * (a - 1) AS cand_pairs_capped,
        |  a * (c * 2 - a - 1) AS cand_pairs_anchored
@@ -729,10 +595,9 @@ object EmbeddingCosineDedup {
     * the `max_cell_size` member of the tuner family: anchored-cap
     * recall at EVERY candidate cap over one deterministic sample,
     * per-cap candidate mass from cell counts, and a `chosen` config row
-    * (smallest cap meeting `targetRecall` against the all-pairs truth,
-    * else the smallest achieving the maximum measured recall — probing
-    * itself bounds that maximum, so an unreachable target degrades to
-    * the best the nprobe setting can do). One row per cap:
+    * (the [[graft.operators.Readout]] rule, default `caps.head` — probing
+    * itself bounds the maximum recall, so an unreachable target degrades
+    * to the best the nprobe setting can do). One row per cap:
     * `(max_cell_size, true_pairs, caught_pairs, cand_pairs, recall,
     * chosen)` — the column names let `max_cell_size: {from_report:
     * semantic_cap_operating_point}` consume the chosen row directly.
@@ -752,16 +617,9 @@ object EmbeddingCosineDedup {
       centroids: Seq[Seq[Double]], nprobe: Int, threshold: Double,
       caps: Seq[Int], targetRecall: Double, sampleMod: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(sampleMod >= 1, "sampleMod is required: the truth tier is quadratic in the sample")
     require(caps.nonEmpty && caps.forall(_ >= 1), s"caps must be >= 1, got $caps")
     require(caps == caps.distinct.sorted, s"caps must be distinct ascending, got $caps")
-    val sample = df.filter(col(vecCol).isNotNull && col(idCol) % sampleMod === 0)
-      .select(col(idCol), col(vecCol))
-    val tl = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"))
-    val tr = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"))
-    val truth = tl.crossJoin(broadcast(tr))
-      .filter(col("d1") < col("d2") &&
-        VectorFunctions.cosine(col("v1"), col("v2")) >= threshold)
+    val (sample, truth) = sampledTruth(df, vecCol, idCol, threshold, sampleMod)
     val probed = sample.select(col(idCol), col(vecCol),
       explode(graft.plans.kernels.nearest_centroids(col(vecCol), centroids, nprobe))
         .as("_pc"))
@@ -793,21 +651,8 @@ object EmbeddingCosineDedup {
       .join(broadcast(mass), col("max_cell_size") === col("_mcap"), "left")
       .select(col("max_cell_size"), col("true_pairs"), col("caught_pairs"),
         coalesce(col("_mass"), lit(0L)).as("cand_pairs"),
-        when(col("true_pairs") > 0,
-          round(col("caught_pairs").cast("double") /
-            col("true_pairs").cast("double"), 6)).as("recall"))
-    val ws = Window.partitionBy() // the |caps|-row level table
-    scored
-      .withColumn("_mp",
-        min(when(col("recall") >= targetRecall, col("max_cell_size"))).over(ws))
-      .withColumn("_mr", max(col("recall")).over(ws))
-      .withColumn("_mb",
-        min(when(col("recall") === col("_mr"), col("max_cell_size"))).over(ws))
-      .select(col("max_cell_size"), col("true_pairs"), col("caught_pairs"),
-        col("cand_pairs"), col("recall"),
-        (col("max_cell_size") === coalesce(col("_mp"), col("_mb"),
-          lit(caps.head))).as("chosen"))
-      .orderBy(col("max_cell_size"))
+        Readout.recall(col("caught_pairs"), col("true_pairs")).as("recall"))
+    Readout.chosen(scored, "max_cell_size", targetRecall, default = caps.head)
   }
 
   /** DuckDB twin of [[anchoredCapOperatingPoint]] (first-k centroid
@@ -824,22 +669,11 @@ object EmbeddingCosineDedup {
     }.mkString(",\n")
     val union = caps.map(cap => s"SELECT * FROM oc$cap")
       .mkString("\n  UNION ALL ")
-    s"""WITH _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |rs AS (SELECT $idCol AS id, $vecCol AS v FROM $table
-       |  WHERE $vecCol IS NOT NULL AND $idCol % $sampleMod = 0),
-       |_ppd AS (SELECT rs.id, rs.v, c.cidx,
-       |    row_number() OVER (PARTITION BY rs.id
-       |      ORDER BY ${VectorFunctions.l2sqSql("rs.v", "c.ce")}, c.cidx) AS prn
-       |  FROM rs CROSS JOIN _pct c),
-       |_pa AS (SELECT id, v, cidx AS pc FROM _ppd WHERE prn <= $nprobe),
+    s"""WITH ${sampledTruthSql(table, vecCol, idCol, threshold, sampleMod)},
+       |${probedCellsSql(table, vecCol, idCol, k, nprobe, "rs")},
        |_par AS (SELECT id, v, pc,
        |    row_number() OVER (PARTITION BY pc ORDER BY id) AS arn FROM _pa),
        |_cc AS (SELECT pc, CAST(count(*) AS BIGINT) AS c FROM _pa GROUP BY pc),
-       |rtp AS (SELECT a.id AS d1, b.id AS d2 FROM rs a, rs b
-       |  WHERE a.id < b.id
-       |    AND ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
        |rcand AS (SELECT a.id AS d1, b.id AS d2, min(a.arn) AS mincap
        |  FROM _par a JOIN _pa b ON a.pc = b.pc AND a.id < b.id
        |  WHERE ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold
@@ -848,20 +682,10 @@ object EmbeddingCosineDedup {
        |_lv AS ($union),
        |_tpc AS (SELECT CAST(count(*) AS BIGINT) AS true_pairs FROM rtp),
        |_sc AS (SELECT max_cell_size, true_pairs, caught_pairs, cand_pairs,
-       |    CASE WHEN true_pairs > 0 THEN
-       |      round(CAST(caught_pairs AS DOUBLE) / CAST(true_pairs AS DOUBLE), 6)
-       |    END AS recall
+       |    ${Readout.recallSql("caught_pairs", "true_pairs")} AS recall
        |  FROM _lv CROSS JOIN _tpc),
-       |_s1 AS (SELECT *,
-       |    min(CASE WHEN recall >= CAST($targetRecall AS DOUBLE) THEN max_cell_size END)
-       |      OVER () AS mp,
-       |    max(recall) OVER () AS mr
-       |  FROM _sc),
-       |_s2 AS (SELECT *,
-       |    min(CASE WHEN recall = mr THEN max_cell_size END) OVER () AS mb FROM _s1)
-       |SELECT max_cell_size, true_pairs, caught_pairs, cand_pairs, recall,
-       |  max_cell_size = coalesce(mp, mb, ${caps.head}) AS chosen
-       |FROM _s2 ORDER BY max_cell_size""".stripMargin
+       |${Readout.chosenSql(Seq("max_cell_size", "true_pairs", "caught_pairs",
+            "cand_pairs", "recall"), "max_cell_size", targetRecall, caps.head)}""".stripMargin
   }
 
   /** CONSUMABLE operating point for the probed semantic-dedup tier
@@ -869,9 +693,8 @@ object EmbeddingCosineDedup {
     * mutual-kNN band count, MinHash geometry): recall of nprobe-cluster
     * probing at EVERY level 1..`maxNprobe` over one deterministic
     * sample, per-level candidate mass from bucket counts, and a
-    * `chosen` config row — the smallest nprobe meeting `targetRecall`,
-    * else the smallest achieving the maximum measured recall, default
-    * nprobe=1 on a degenerate sample. One row per level: `(nprobe,
+    * `chosen` config row (the [[graft.operators.Readout]] rule, default
+    * nprobe=1). One row per level: `(nprobe,
     * true_pairs, caught_pairs, cand_pairs, recall, chosen)`;
     * caught ⊆ truth by construction (same cosine test), so recall is a
     * plain ratio with no hit join, monotone in nprobe.
@@ -881,9 +704,8 @@ object EmbeddingCosineDedup {
     * nearest-cells array), a verified pair's minimal level is
     * min-over-shared-cells of max(rank_a, rank_b), and per-level counts
     * ride a bounded level explode — never a per-level corpus rescan
-    * (the multiProbeOperatingPoint discipline). Truth (quadratic,
-    * broadcast BNLJ, `sampleMod` REQUIRED) computes once and stages;
-    * mass rides per-(cell, level) counts, never a join.
+    * (the multiProbeOperatingPoint discipline). Truth computes once and
+    * stages; mass rides per-(cell, level) counts, never a join.
     *
     * Measured at the gate settings (sf0.001, 8 cells, t=0.35): recall
     * 0.295 / 0.738 / 0.967 / 1.0 at nprobe 1..4 with ordered candidate
@@ -894,18 +716,10 @@ object EmbeddingCosineDedup {
   def probedOperatingPoint(df: DataFrame, vecCol: String, idCol: String,
       centroids: Seq[Seq[Double]], maxNprobe: Int, threshold: Double,
       targetRecall: Double, sampleMod: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(sampleMod >= 1, "sampleMod is required: the truth tier is quadratic in the sample")
     require(maxNprobe >= 1 && maxNprobe <= centroids.length,
       s"maxNprobe must be in [1, ${centroids.length}], got $maxNprobe")
-    val sample = df.filter(col(vecCol).isNotNull && col(idCol) % sampleMod === 0)
-      .select(col(idCol), col(vecCol))
-    val tl = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"))
-    val tr = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"))
-    val truth = graft.core.Staging.stage(tl.crossJoin(broadcast(tr))
-      .filter(col("d1") < col("d2") &&
-        VectorFunctions.cosine(col("v1"), col("v2")) >= threshold)
-      .select(col("d1"), col("d2")))
+    val (sample, truth0) = sampledTruth(df, vecCol, idCol, threshold, sampleMod)
+    val truth = graft.core.Staging.stage(truth0.select(col("d1"), col("d2")))
     val probed = sample.select(col(idCol), col(vecCol),
         posexplode(graft.plans.kernels.nearest_centroids(
           col(vecCol), centroids, maxNprobe)).as(Seq("_rk", "_pc")))
@@ -935,18 +749,8 @@ object EmbeddingCosineDedup {
       .select(col("nprobe"), col("true_pairs"),
         coalesce(col("_c"), lit(0L)).as("caught_pairs"),
         coalesce(col("_mass"), lit(0L)).as("cand_pairs"),
-        when(col("true_pairs") > 0,
-          round(coalesce(col("_c"), lit(0L)).cast("double") /
-            col("true_pairs").cast("double"), 6)).as("recall"))
-    val ws = Window.partitionBy() // the maxNprobe-row level table
-    scored
-      .withColumn("_mp", min(when(col("recall") >= targetRecall, col("nprobe"))).over(ws))
-      .withColumn("_mr", max(col("recall")).over(ws))
-      .withColumn("_mb", min(when(col("recall") === col("_mr"), col("nprobe"))).over(ws))
-      .select(col("nprobe"), col("true_pairs"), col("caught_pairs"),
-        col("cand_pairs"), col("recall"),
-        (col("nprobe") === coalesce(col("_mp"), col("_mb"), lit(1))).as("chosen"))
-      .orderBy(col("nprobe"))
+        Readout.recall(coalesce(col("_c"), lit(0L)), col("true_pairs")).as("recall"))
+    Readout.chosen(scored, "nprobe", targetRecall, default = 1)
   }
 
   /** DuckDB twin of [[probedOperatingPoint]] (first-k centroid init). */
@@ -961,19 +765,8 @@ object EmbeddingCosineDedup {
     }.mkString(",\n")
     val union = (1 to maxNprobe).map(lv => s"SELECT * FROM ol$lv")
       .mkString("\n  UNION ALL ")
-    s"""WITH _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |rs AS (SELECT $idCol AS id, $vecCol AS v FROM $table
-       |  WHERE $vecCol IS NOT NULL AND $idCol % $sampleMod = 0),
-       |_ppd AS (SELECT rs.id, rs.v, c.cidx,
-       |    row_number() OVER (PARTITION BY rs.id
-       |      ORDER BY ${VectorFunctions.l2sqSql("rs.v", "c.ce")}, c.cidx) AS prn
-       |  FROM rs CROSS JOIN _pct c),
-       |_pa AS (SELECT id, v, cidx AS pc, prn FROM _ppd WHERE prn <= $maxNprobe),
-       |rtp AS (SELECT a.id AS d1, b.id AS d2 FROM rs a, rs b
-       |  WHERE a.id < b.id
-       |    AND ${VectorFunctions.cosineSql("a.v", "b.v")} >= $threshold),
+    s"""WITH ${sampledTruthSql(table, vecCol, idCol, threshold, sampleMod)},
+       |${probedCellsSql(table, vecCol, idCol, k, maxNprobe, "rs")},
        |rcand AS (SELECT a.id AS d1, b.id AS d2,
        |    min(greatest(a.prn, b.prn)) AS lvl
        |  FROM _pa a JOIN _pa b ON a.pc = b.pc AND a.id < b.id
@@ -983,20 +776,10 @@ object EmbeddingCosineDedup {
        |_lv AS ($union),
        |_tpc AS (SELECT CAST(count(*) AS BIGINT) AS true_pairs FROM rtp),
        |_sc AS (SELECT nprobe, true_pairs, caught_pairs, cand_pairs,
-       |    CASE WHEN true_pairs > 0 THEN
-       |      round(CAST(caught_pairs AS DOUBLE) / CAST(true_pairs AS DOUBLE), 6)
-       |    END AS recall
+       |    ${Readout.recallSql("caught_pairs", "true_pairs")} AS recall
        |  FROM _lv CROSS JOIN _tpc),
-       |_s1 AS (SELECT *,
-       |    min(CASE WHEN recall >= CAST($targetRecall AS DOUBLE) THEN nprobe END)
-       |      OVER () AS mp,
-       |    max(recall) OVER () AS mr
-       |  FROM _sc),
-       |_s2 AS (SELECT *,
-       |    min(CASE WHEN recall = mr THEN nprobe END) OVER () AS mb FROM _s1)
-       |SELECT nprobe, true_pairs, caught_pairs, cand_pairs, recall,
-       |  nprobe = coalesce(mp, mb, 1) AS chosen
-       |FROM _s2 ORDER BY nprobe""".stripMargin
+       |${Readout.chosenSql(Seq("nprobe", "true_pairs", "caught_pairs",
+            "cand_pairs", "recall"), "nprobe", targetRecall, 1)}""".stripMargin
   }
 
   /** Candidate-mass evidence for the probed tier — the
@@ -1025,20 +808,14 @@ object EmbeddingCosineDedup {
   /** DuckDB twin of [[probedClusterStats]] (first-k centroid init). */
   def probedClusterStatsSql(table: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int): String =
-    s"""WITH _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |_ppd AS (SELECT t.$idCol AS id, c.cidx,
-       |    row_number() OVER (PARTITION BY t.$idCol
-       |      ORDER BY ${VectorFunctions.l2sqSql(s"t.$vecCol", "c.ce")}, c.cidx) AS prn
-       |  FROM $table t CROSS JOIN _pct c WHERE t.$vecCol IS NOT NULL)
-       |SELECT cidx AS cluster,
+    s"""WITH ${probedCellsSql(table, vecCol, idCol, k, nprobe, vectorsSql(table, vecCol, idCol))}
+       |SELECT pc AS cluster,
        |  CAST(count(CASE WHEN prn = 1 THEN 1 END) AS BIGINT) AS rows_primary,
        |  CAST(count(*) AS BIGINT) AS rows_probed,
        |  CAST(count(CASE WHEN prn = 1 THEN 1 END)
        |    * (count(CASE WHEN prn = 1 THEN 1 END) - 1) AS BIGINT) AS cand_pairs_primary,
        |  CAST(count(*) * (count(*) - 1) AS BIGINT) AS cand_pairs_probed
-       |FROM _ppd WHERE prn <= $nprobe GROUP BY cidx ORDER BY cidx""".stripMargin
+       |FROM _pa GROUP BY pc ORDER BY pc""".stripMargin
 
   /** Post-cap candidate-mass evidence for the hot-cell-capped probed
     * tier (r17, VERDICT r16 #1): per probed cell, member count before
@@ -1072,20 +849,15 @@ object EmbeddingCosineDedup {
   /** DuckDB twin of [[probedCappedStats]] (first-k centroid init). */
   def probedCappedStatsSql(table: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int, maxCellSize: Int): String =
-    s"""WITH _pct AS (SELECT row_number() OVER (ORDER BY $idCol) - 1 AS cidx,
-       |    $vecCol AS ce
-       |  FROM (SELECT $idCol, $vecCol FROM $table ORDER BY $idCol LIMIT $k)),
-       |_ppd AS (SELECT t.$idCol AS id, c.cidx,
-       |    row_number() OVER (PARTITION BY t.$idCol
-       |      ORDER BY ${VectorFunctions.l2sqSql(s"t.$vecCol", "c.ce")}, c.cidx) AS prn
-       |  FROM $table t CROSS JOIN _pct c WHERE t.$vecCol IS NOT NULL)
-       |SELECT cidx AS cluster,
+    s"""WITH ${probedCellsSql(table, vecCol, idCol, k, nprobe, vectorsSql(table, vecCol, idCol))}
+       |SELECT pc AS cluster,
        |  CAST(count(*) AS BIGINT) AS rows_probed,
        |  CAST(least(count(*), $maxCellSize) AS BIGINT) AS rows_capped,
        |  CAST(count(*) * (count(*) - 1) AS BIGINT) AS cand_pairs_probed,
        |  CAST(least(count(*), $maxCellSize)
        |    * (least(count(*), $maxCellSize) - 1) AS BIGINT) AS cand_pairs_capped
-       |FROM _ppd WHERE prn <= $nprobe GROUP BY cidx ORDER BY cidx""".stripMargin
+       |FROM _pa GROUP BY pc ORDER BY pc""".stripMargin
+
 }
 
 /** YAML-safe semantic dedup: trains a seeded k-means bucketing over the

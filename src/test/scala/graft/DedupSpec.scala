@@ -537,6 +537,27 @@ class DedupSpec extends AnyFunSuite {
     assert(chosen.head.getDouble(4) == rows.map(_.getDouble(4)).max)
   }
 
+  test("chosen-level rule: smallest level meeting the target, else smallest max-recall level, else the default") {
+    import spark.implicits._
+    def chosen(rows: Seq[(Int, Option[Double])], target: Double, default: Int): Seq[Int] =
+      graft.operators.Readout.chosen(rows.toDF("level", "recall"), "level", target, default)
+        .filter(col("chosen")).collect().map(_.getInt(0)).toSeq
+    // target met at two levels (3 and 4): the smaller
+    assert(chosen(Seq(1 -> Some(0.2), 2 -> Some(0.5), 3 -> Some(0.9), 4 -> Some(0.95)),
+      target = 0.8, default = 1) == Seq(3))
+    // target unmet, the maximum recall ties at levels 2 and 4: the smaller
+    assert(chosen(Seq(1 -> Some(0.3), 2 -> Some(0.6), 3 -> Some(0.5), 4 -> Some(0.6)),
+      target = 0.9, default = 1) == Seq(2))
+    // every recall NULL (no truth on the sample): the given default —
+    // probes 0, band/nprobe count 1, a cap ladder's head, and a default
+    // that is not the smallest level
+    val none: Option[Double] = None
+    assert(chosen((0 to 3).map(_ -> none), target = 0.5, default = 0) == Seq(0))
+    assert(chosen((1 to 4).map(_ -> none), target = 0.5, default = 1) == Seq(1))
+    assert(chosen(Seq(25, 50, 100).map(_ -> none), target = 0.5, default = 25) == Seq(25))
+    assert(chosen(Seq(25, 50, 100).map(_ -> none), target = 0.5, default = 50) == Seq(50))
+  }
+
   test("semantic dedup recall: bucket pairs subset truth; one-bucket recall is exactly 1") {
     import spark.implicits._
     val emb = table("embeddings")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Pipeline
+import graft.core.Disposition
 import graft.io.{ParquetDataWriter, RejectedWriter}
 import graft.metrics.{HtmlReport, MetricsRollup, OperatorCounts}
 import graft.operators.dedup.TextExactDedup
@@ -93,20 +93,23 @@ class WriterSpec extends AnyFunSuite {
     val prefixDedup = new graft.operators.dedup.ExactDedup("prefix_dedup",
       d => graft.functions.TextFunctions.normalizeText(substring(col("text"), 1, 30)),
       orderCol = "doc_id", repCol = "doc_id")
-    val pipeline = Pipeline("p", Seq(
+    val stages = Seq(
       new TextLengthFilter(minLength = 100, maxLength = Some(400),
         textCol = "text", lengthCol = Some("n_chars")),
-      prefixDedup))
-    val result = pipeline.run(docs)
-    new ParquetDataWriter(dir, "docs").write(result.passed)
-    RejectedWriter.write(result, dir, "docs")
+      prefixDedup)
+    val annotated = stages.zipWithIndex.foldLeft(Disposition.init(docs)) {
+      case (d, (op, i)) => Disposition.step(d, op, s"_t$i")
+    }
+    new ParquetDataWriter(dir, "docs").write(Disposition.passed(annotated))
+    RejectedWriter.writeAll(Disposition.rejected(annotated), dir, "docs")
 
     val passed = spark.read.parquet(s"$dir/docs")
     val rejected = spark.read.parquet(s"${dir}_rejected/docs_rejected")
     assert(passed.count() + rejected.count() == docs.count())
     // rejects partitioned by rejecting operator; expect one partition per
     // operator that actually rejected rows, and at least the filter + dedup
-    val expected = result.rejected.collect { case (n, df) if df.count() > 0 => n }.toSet
+    val expected = stages.map(_.name).filter(n => Disposition.rejected(annotated)
+      .filter(col(s"${graft.core.Rejection.ColName}.operator") === n).count() > 0).toSet
     assert(expected == Set("text_length_filter", "prefix_dedup"))
     val ops = rejected.select(col("operator")).distinct()
       .collect().map(_.getString(0)).toSet
