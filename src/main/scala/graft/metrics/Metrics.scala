@@ -1,6 +1,12 @@
 package graft.metrics
 
 import graft.core.{Operator, Staging}
+import graft.io.DriverCommit
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -204,7 +210,9 @@ object MeteredPipeline {
 /** W3: the three metrics parquet datasets with the reference's exact
   * column sets (framework/metrics/writer.py:28-82): `runs/`, `stages/`,
   * `operators/`. Latency/custom fields the fused engine cannot observe
-  * are written as 0.0 / NULL, schema-compatible.
+  * are written as 0.0 / NULL, schema-compatible. Each run appends one
+  * parquet file per dataset, written and committed on the driver with no
+  * Spark job (see [[write]]).
   */
 object MetricsWriter {
 
@@ -241,40 +249,59 @@ object MetricsWriter {
     s"run_${ts}_${java.util.UUID.randomUUID.toString.take(8)}"
   }
 
-  def operatorRows(spark: SparkSession, run: RunRollup, at: java.sql.Timestamp): DataFrame = {
-    val rows = for (s <- run.stages; c <- s.operators) yield Row(
+  def operatorRows(run: RunRollup, at: java.sql.Timestamp): Seq[Row] =
+    for (s <- run.stages; c <- s.operators) yield Row(
       run.runId, s.stageName, c.name, "spark", at, c.input, c.output, c.passRate,
       c.timeSec, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
       if (c.timeSec > 0) c.input / c.timeSec else 0.0, 0L, null)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), operatorSchema)
-  }
 
-  def stageRows(spark: SparkSession, run: RunRollup, at: java.sql.Timestamp): DataFrame = {
-    val rows = run.stages.map { s =>
+  def stageRows(run: RunRollup, at: java.sql.Timestamp): Seq[Row] =
+    run.stages.map { s =>
       val tps = s.operators.map(c => if (c.timeSec > 0) c.input / c.timeSec else 0.0).filter(_ > 0)
       Row(run.runId, s.stageName, at, 1L, s.input, s.output, s.passRate, s.timeSec,
         if (tps.nonEmpty) tps.sum / tps.size else 0.0,
         if (tps.nonEmpty) tps.min else 0.0,
         if (tps.nonEmpty) tps.max else 0.0, 0L)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), stageSchema)
-  }
 
-  def runRows(spark: SparkSession, run: RunRollup,
-      start: java.sql.Timestamp, end: java.sql.Timestamp, configJson: String): DataFrame = {
-    val rows = Seq(Row(run.runId, start, end, run.durationSec, run.stages.size.toLong,
+  def runRows(run: RunRollup, start: java.sql.Timestamp, end: java.sql.Timestamp,
+      configJson: String): Seq[Row] =
+    Seq(Row(run.runId, start, end, run.durationSec, run.stages.size.toLong,
       run.input, run.output, run.passRate, run.avgThroughput, 0L, configJson))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), runSchema)
-  }
 
-  /** Write runs/ stages/ operators/ under `path` (append mode — one file
-    * set per run, like the reference's per-timestamp files). */
+  /** Append one file to each of runs/ stages/ operators/ under `path`
+    * (one file set per run, like the reference's per-timestamp files).
+    * The rows are a handful of driver values, so they are written on the
+    * driver with no Spark job: Spark's own parquet writer (same bytes as
+    * a `DataFrame` write — INT96 timestamps, the session's codec, the
+    * Spark row schema in the footer) writes `part-00000-<uuid>-c000<ext>`
+    * under a hidden `_` name and a rename commits it ([[DriverCommit]]).
+    * No `_SUCCESS` marker is written: the rename is the commit.
+    */
   def write(spark: SparkSession, run: RunRollup, path: String,
       configJson: String = "{}"): Unit = {
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    runRows(spark, run, now, now, configJson)
-      .write.mode("append").parquet(s"$path/runs")
-    stageRows(spark, run, now).write.mode("append").parquet(s"$path/stages")
-    operatorRows(spark, run, now).write.mode("append").parquet(s"$path/operators")
+    writeFile(spark, s"$path/runs", runSchema, runRows(run, now, now, configJson))
+    writeFile(spark, s"$path/stages", stageSchema, stageRows(run, now))
+    writeFile(spark, s"$path/operators", operatorSchema, operatorRows(run, now))
+  }
+
+  private[graft] def writeFile(spark: SparkSession, dir: String, schema: StructType,
+      rows: Seq[Row]): Unit = {
+    val sqlConf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft-metrics", 0), TaskType.MAP, 0), 0))
+    val d = new Path(dir)
+    val fs = d.getFileSystem(job.getConfiguration)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    DriverCommit.commit(fs, d, name) { tmp =>
+      val w = factory.newInstance(tmp.toString, schema, ctx)
+      try rows.foreach(r => w.write(toCatalyst(r).asInstanceOf[InternalRow]))
+      finally w.close()
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.runner
 
+import graft.io.DriverCommit
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -12,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   * offset checkpointing; this is the batch CLI twin.)
   *
   * Layout: `{path}/processed/part-*.txt`, one absolute file URI per
-  * line. Each successful run commits ONE part via temp-file + rename
-  * (atomic on HDFS and local FS), so a crash mid-commit leaves either
+  * line. Each successful run commits ONE part via a hidden temp file +
+  * rename ([[DriverCommit]]), so a crash mid-commit leaves either
   * no manifest entry (files reprocessed — appends are idempotent per
   * file set because the whole file list commits together) or a complete
   * one.
@@ -36,17 +37,18 @@ object ResumeManifest {
     }
   }
 
-  /** Commit `files` as processed (temp write + atomic rename). */
+  /** Commit `files` as processed ([[DriverCommit]]: hidden temp write +
+    * rename; a failed rename throws, so the run fails instead of
+    * reporting success without its manifest entry).
+    */
   def record(spark: SparkSession, base: String, files: Seq[String]): Unit = {
     if (files.isEmpty) return
     val d = dir(base)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(d)
-    val name = s"part-${java.util.UUID.randomUUID().toString}.txt"
-    val tmp = new Path(d, s"_tmp-$name")
-    val out = fs.create(tmp, true)
-    try out.write((files.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.rename(tmp, new Path(d, name))
+    DriverCommit.commit(fs, d, s"part-${java.util.UUID.randomUUID().toString}.txt") { tmp =>
+      val out = fs.create(tmp, true)
+      try out.write((files.mkString("\n") + "\n").getBytes("UTF-8"))
+      finally out.close()
+    }
   }
 }

@@ -96,5 +96,49 @@ class MetricsSpec extends AnyFunSuite {
     val r = runs.select(col("total_input_records"), col("total_output_records"),
       col("num_stages")).head()
     assert(r.getLong(0) == stage.input && r.getLong(1) == stage.output && r.getLong(2) == 1L)
+
+    // a second run appends one more file per dataset
+    val run2 = MetricsRollup.run(MetricsWriter.newRunId(), Seq(stage), 2.5)
+    MetricsWriter.write(spark, run2, dir)
+    val runs2 = spark.read.parquet(s"$dir/runs")
+    assert(runs2.select("run_id").collect().map(_.getString(0)).toSet ==
+      Set(run.runId, run2.runId))
+    assert(spark.read.parquet(s"$dir/operators").count() == 4)
+    assert(spark.read.parquet(s"$dir/stages").count() == 2)
+
+    // the commit leaves no hidden temp file (nor its checksum) behind
+    val names = Seq("runs", "stages", "operators")
+      .flatMap(d => new java.io.File(s"$dir/$d").listFiles().map(_.getName))
+    assert(!names.exists(n => n.startsWith("_") || n.startsWith("._")), names)
+    assert(names.count(_.startsWith("part-")) == 6, names)
+
+    // a partial file left by a crash mid-commit keeps its hidden name
+    // and is never read
+    java.nio.file.Files.write(java.nio.file.Paths.get(
+      s"$dir/runs/_part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet"),
+      "not parquet".getBytes("UTF-8"))
+    assert(spark.read.parquet(s"$dir/runs").count() == 2)
+
+    // values round-trip: microsecond timestamps, NULLs, derived rates
+    val rt = java.nio.file.Files.createTempDirectory("graft_metrics_rt").toString
+    val at = java.sql.Timestamp.valueOf("2026-03-04 05:06:07.123456")
+    val rtRun = MetricsRollup.run("run_rt", Seq(MetricsRollup.stage("s",
+      Seq(OperatorCounts(0, "a", 100, 80, 2.0), OperatorCounts(1, "b", 80, 40, 0.0)))), 4.0)
+    MetricsWriter.writeFile(spark, s"$rt/operators", MetricsWriter.operatorSchema,
+      MetricsWriter.operatorRows(rtRun, at))
+    MetricsWriter.write(spark, rtRun, rt, configJson = """{"k":1}""")
+    val rtOps = spark.read.parquet(s"$rt/operators")
+      .filter(col("timestamp") === lit(at)).orderBy("operator_name").collect()
+    assert(rtOps.map(_.getString(2)).toSeq == Seq("a", "b"))
+    assert(rtOps.forall(_.getTimestamp(4) == at))
+    assert(rtOps.forall(_.isNullAt(17)))
+    assert(rtOps.map(_.getDouble(15)).toSeq == Seq(50.0, 0.0)) // throughput = in / time
+    assert(rtOps.head.getDouble(7) == 80.0 && rtOps.head.getLong(5) == 100L)
+    val rr = spark.read.parquet(s"$rt/runs").head()
+    assert(rr.getString(0) == "run_rt" && rr.getTimestamp(1) == rr.getTimestamp(2))
+    assert(rr.getDouble(3) == 4.0 && rr.getDouble(8) == 25.0 && rr.getString(10) == """{"k":1}""")
+    val st = spark.read.parquet(s"$rt/stages").head()
+    assert(st.getLong(4) == 100L && st.getLong(5) == 40L && st.getDouble(7) == 2.0)
+    assert(st.getDouble(8) == 50.0 && st.getDouble(9) == 50.0 && st.getDouble(10) == 50.0)
   }
 }

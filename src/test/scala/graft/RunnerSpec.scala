@@ -76,6 +76,43 @@ class RunnerSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/report.html")))
   }
 
+  test("job budget: a filters-only run is 2 jobs, and the metrics sink runs none") {
+    def jobsOf(conf: PipelineConf): Int = {
+      val sc = spark.sparkContext
+      val group = s"job-budget-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, "job budget")
+      try PipelineRunner.run(spark, conf) finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    def outDir(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString + "/o"
+    // web_clean's shape (parquet load, filters, partitioned write, metrics
+    // and report on, rejects off): the load's schema job and the write
+    val out = outDir("graft_budget")
+    val filtersOnly = PipelineConf.fromYaml(
+      s"""data_loader:
+         |  type: ParquetLoader
+         |  params: {format: parquet, path: "$sfDir/documents.parquet"}
+         |stages:
+         |  - name: main
+         |    operators:
+         |      - {name: text_length_filter, params: {min_length: 100, max_length: 4000, text_field: text}}
+         |      - {name: c4_quality_filter, params: {text_field: text}}
+         |data_writer:
+         |  type: ParquetDataWriter
+         |  params: {output_path: "$out", table_name: docs, partition_by: lang}
+         |executor:
+         |  rejected_samples: {enabled: false}
+         |  metrics: {enabled: true, output_path: "$out/_metrics", report_path: "$out/report.html"}
+         |""".stripMargin)
+    assert(jobsOf(filtersOnly) == 2)
+    // the dedup config with rejects on: metrics add no job
+    val metricsOff = PipelineConf.fromYaml(yaml(outDir("graft_budget_off"))
+      .replace("  metrics:\n    enabled: true", "  metrics:\n    enabled: false"))
+    assert(!metricsOff.executor.metricsEnabled)
+    assert(jobsOf(PipelineConf.fromYaml(yaml(outDir("graft_budget_on")))) == jobsOf(metricsOff))
+  }
+
   test("metrics.publish_path publishes the report as index.html (HF-Space twin)") {
     val out = java.nio.file.Files.createTempDirectory("graft_pub").toString + "/o"
     val pub = java.nio.file.Files.createTempDirectory("graft_site").toString

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Disposition
-import graft.io.{ParquetDataWriter, RejectedWriter}
+import graft.io.{DriverCommit, ParquetDataWriter, RejectedWriter}
 import graft.metrics.{HtmlReport, MetricsRollup, OperatorCounts}
 import graft.operators.dedup.TextExactDedup
 import graft.operators.text.TextLengthFilter
@@ -338,6 +338,29 @@ class WriterSpec extends AnyFunSuite {
         new org.apache.hadoop.fs.Path(s"$base/_temporary/attempt-9/shard-0001.bin"),
         new org.apache.hadoop.fs.Path(s"$base/shard-0001.bin"), conf)
     }
+  }
+
+  test("driver commit: the hidden temp is renamed into place; a failed rename or write is loud") {
+    import org.apache.hadoop.fs.{LocalFileSystem, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(tmp())
+    val fs = dir.getFileSystem(conf)
+    def put(p: Path): Unit = { val o = fs.create(p, true); try o.write(1) finally o.close() }
+    def visible = fs.listStatus(dir).map(_.getPath.getName).filterNot(_.startsWith(".")).toSet
+    assert(DriverCommit.commit(fs, dir, "part-a.txt")(put) == new Path(dir, "part-a.txt"))
+    assert(visible == Set("part-a.txt"))
+    // a rename that returns false fails the commit instead of losing the file
+    val noRename = new LocalFileSystem {
+      override def rename(src: Path, dst: Path): Boolean = false
+    }
+    noRename.initialize(java.net.URI.create("file:///"), conf)
+    intercept[java.io.IOException](DriverCommit.commit(noRename, dir, "part-b.txt")(put))
+    // a write that throws propagates
+    intercept[IllegalStateException](DriverCommit.commit(fs, dir, "part-c.txt") { p =>
+      put(p); throw new IllegalStateException("write failed")
+    })
+    // neither failure leaves its temp file or a committed file behind
+    assert(visible == Set("part-a.txt"))
   }
 
   test("token shards: re-run with fewer shards leaves NO stale shard files") {
