@@ -9,6 +9,14 @@ import java.nio.file.{Files, Paths}
   * — writes `out_dir/<query>_<suffix>.txt` per query. Reads the same
   * `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` env as Bench so plans
   * reflect the bench configuration.
+  *
+  * Adaptive execution is OFF in this session, so a dump is the static
+  * plan and the same text on every run: a plan-identity witness. With
+  * AQE on, a frame a query stages while planning (an
+  * `InMemoryRelation`, e.g. a frozen model's tables) prints its AQE
+  * final plan, whose node order, broadcast sides and reused exchanges
+  * change run to run. A dump therefore shows what Catalyst optimizes
+  * and plans, not the runtime re-plans AQE makes on top of it.
   */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
@@ -23,6 +31,7 @@ object ExplainPlans {
       .builder(s"local[$cpus]", cpus.toInt, codegenCacheEntries = 10000)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try names.foreach { n =>
       // scoped: frames a query stages while planning release per query
       val plan = graft.core.Staging.scoped {

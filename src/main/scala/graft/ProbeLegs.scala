@@ -72,7 +72,7 @@ object ProbeLegs {
     lazy val lmModel: graft.operators.text.BigramLmModel = {
       val m = new graft.operators.text.BigramLm("text", "doc_id")
         .freeze(srcSlice.select(col("doc_id"), col("text")))
-      Seq(m.cost, m.ctx, m.vocab).foreach(Staging.adopt)
+      m.tables.foreach(Staging.adopt)
       m
     }
     // Multimodal inputs at replication: vectors through the

@@ -32,23 +32,18 @@ object LogregQuality {
   // ---- frozen snapshots: train offline, score the stream ----
 
   /** Write trained weights as versioned snapshot `modelDir/v<version>`:
-    * a `_BASIS` marker (the feature-basis names — written FIRST, the
-    * marker-first discipline: a crash mid-freeze leaves an unadoptable
-    * dir, never a complete-looking one under the wrong basis) then the
-    * one-row-per-slot weights table whose `_SUCCESS` gates adoption.
+    * a `_BASIS` marker (the feature-basis names) then the
+    * one-row-per-slot weights table whose `_SUCCESS` gates adoption —
+    * the [[graft.core.Snapshots]] layout and write order.
     */
   def freeze(corpus: DataFrame, weights: Array[Double], textCol: String,
       modelDir: String, version: Long): String = {
     val spark = corpus.sparkSession
-    val names = "bias" +: docStatFeatures(textCol).map(_.name)
+    val names = basis(textCol)
     require(weights.length == names.length,
       s"freeze: ${names.length} weights expected, got ${weights.length}")
     val dir = s"$modelDir/v$version"
-    val marker = new org.apache.hadoop.fs.Path(dir, "_BASIS")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(marker, true)
-    try out.write(names.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.core.Snapshots.mark(spark, dir, "_BASIS", names.mkString(","))
     import spark.implicits._
     weights.toSeq.zipWithIndex
       .map { case (w, slot) => (slot, names(slot), w) }
@@ -66,34 +61,17 @@ object LogregQuality {
     */
   def latestFrozen(spark: org.apache.spark.sql.SparkSession,
       modelDir: String, textCol: String): Option[Array[Double]] = {
-    val expected = ("bias" +: docStatFeatures(textCol).map(_.name)).mkString(",")
-    val root = new org.apache.hadoop.fs.Path(modelDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
-      .flatMap { d =>
-        val n = d.getName
-        if (n.length > 1 && n.head == 'v' && n.drop(1).forall(_.isDigit))
-          Some((n.drop(1).toLong, d))
-        else None
-      }
-      .filter { case (_, d) =>
-        fs.exists(new org.apache.hadoop.fs.Path(d, "weights/_SUCCESS")) && {
-          val m = new org.apache.hadoop.fs.Path(d, "_BASIS")
-          fs.exists(m) && {
-            val in = fs.open(m)
-            val got = try new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8).trim
-            finally in.close()
-            got == expected
-          }
-        }
-      }
-      .sortBy(-_._1).headOption.map { case (_, d) =>
-        spark.read.parquet(s"$d/weights").orderBy("slot")
-          .select("w").collect().map(_.getDouble(0))
-      }
+    val expected = basis(textCol).mkString(",")
+    graft.core.Snapshots.latest(spark, modelDir, Seq("weights"), "_BASIS")(
+      _.contains(expected)).map { d =>
+      spark.read.parquet(s"$d/weights").orderBy("slot")
+        .select("w").collect().map(_.getDouble(0))
+    }
   }
+
+  // the snapshot's slot names: the bias, then the doc-stat features
+  private def basis(textCol: String): Seq[String] =
+    "bias" +: docStatFeatures(textCol).map(_.name)
 
   /** The fixed doc-stat feature basis over a raw text column:
     * token count / distinct-token ratio / mean token length / en

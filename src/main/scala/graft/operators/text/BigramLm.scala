@@ -50,104 +50,57 @@ object BigramLm {
   private[text] def mixPairSql(h1: String, h2: String): String =
     s"(${HashFunctions.mixedSql(h1, 0)} + ${HashFunctions.mixedSql(h2, 1)})"
 
-  /** Highest-versioned COMPLETE snapshot directory under `modelDir`, if
-    * any — the restart probe for [[graft.streaming.StreamingCuration
-    * .bigramLmScoreForeachBatch]]. A snapshot is complete when all its
-    * table dirs carry a `_SUCCESS` marker ([[BigramLm.freeze]] writes
-    * `cost` last, but each is checked so a half-written artifact is
-    * never adopted) AND, when `family` is given, its `_FAMILY` marker
-    * matches — a modelDir reused across a `smoothing` change would
-    * otherwise pass the table probe on a MIXED snapshot (per-table
-    * overwrite leaves the other family's stale tables behind, so
-    * cost/_c9 could hold KN costs while backoff reads a stale add-one
-    * vocab: schema-compatible, silently wrong). Markerless snapshots
-    * (pre-marker artifacts) are accepted for back-compat. Hadoop FS,
-    * so the probe works on any store.
+  /** Each frozen smoothing's model tables, by name — the one list the
+    * freeze, the load, the snapshot probe and [[BigramLmModel]] read.
+    * `cost` (each TRAINING bigram's integer cost, `(_chb, _c9)`) comes
+    * first and is written last, derived from the others:
+    *  - addone: `ctx (_xh1, _cw)` total count per context, `vocab (_v)`
+    *    the one-row bigram-participating vocab size;
+    *  - kn: `ctx (_xh1, _cw, _nt)` total and distinct-continuation
+    *    counts per context, `cont (_yh2, _pc)` distinct left contexts
+    *    per word, `tot (_t, _n1, _n2)` the one-row (types, count-1
+    *    types, count-2 types) scalar.
+    */
+  val FrozenTables: Map[String, Seq[String]] = Map(
+    "addone" -> Seq("cost", "ctx", "vocab"),
+    "kn"     -> Seq("cost", "ctx", "cont", "tot"))
+
+  private[text] def frozenTables(smoothing: String): Seq[String] =
+    FrozenTables.getOrElse(smoothing, throw new IllegalArgumentException(
+      s"unsupported frozen smoothing '$smoothing' (addone | kn)"))
+
+  /** Highest-versioned COMPLETE `smoothing` snapshot under `modelDir`,
+    * if any — the restart probe for [[graft.streaming.StreamingCuration
+    * .bigramLmScoreForeachBatch]], over the [[graft.core.Snapshots]]
+    * layout. Complete: every table of [[FrozenTables]]`(smoothing)`
+    * carries `_SUCCESS` ([[BigramLm.freeze]] writes `cost` last, but
+    * each is checked so a half-written artifact is never adopted), AND
+    * the `_FAMILY` marker names `smoothing` — a modelDir reused across a
+    * `smoothing` change would otherwise pass the table probe on a MIXED
+    * snapshot (per-table overwrite leaves the other family's stale
+    * tables behind, so cost/_c9 could hold KN costs while backoff reads
+    * a stale add-one vocab: schema-compatible, silently wrong).
+    * Markerless snapshots (pre-marker artifacts) are accepted for
+    * back-compat and load as the `smoothing` asked for.
     */
   def latestSnapshot(spark: org.apache.spark.sql.SparkSession,
-      modelDir: String,
-      tables: Seq[String] = Seq("cost", "ctx", "vocab"),
-      family: Option[String] = None): Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(modelDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
-      .flatMap { d =>
-        val n = d.getName
-        if (n.length > 1 && n.head == 'v' && n.drop(1).forall(_.isDigit))
-          Some((n.drop(1).toLong, d))
-        else None
-      }
-      .filter { case (_, d) =>
-        tables.forall(t =>
-          fs.exists(new org.apache.hadoop.fs.Path(d, s"$t/_SUCCESS"))) &&
-          family.forall(f => readFamily(fs, d).forall(_ == f))
-      }
-      .sortBy(-_._1).headOption.map(_._2.toString)
-  }
-
-  /** The KN snapshot's table set, for [[latestSnapshot]]. */
-  val KnTables: Seq[String] = Seq("cost", "ctx", "cont", "tot")
-
-  private def readFamily(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_FAMILY")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
-  }
-
-  /** Stamp a snapshot dir's model family ("addone" | "kn"); written
-    * FIRST by the freeze paths (before any table — ADVICE r17),
-    * overwriting any prior family's marker. Adoption is still gated on
-    * every table's _SUCCESS (cost lands last), so a freeze that crashes
-    * after the marker leaves an unadoptable dir → reject-and-retrain;
-    * marker-last instead left a window where a reused MARKERLESS dir
-    * could end up complete-looking and mixed with no marker at all.
-    */
-  private[text] def writeFamily(spark: org.apache.spark.sql.SparkSession,
-      dir: String, family: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_FAMILY")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(family.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      modelDir: String, smoothing: String): Option[String] =
+    graft.core.Snapshots.latest(spark, modelDir, frozenTables(smoothing),
+      "_FAMILY")(_.forall(_ == smoothing))
 }
 
-/** FROZEN bigram-LM model tables (r15): per-seen-bigram integer costs,
-  * per-context totals, and the vocab scalar — persisted so a streaming
-  * scorer joins micro-batches against them trigger after trigger
-  * without re-deriving the training aggregate. [[release]] unpersists
-  * when the consumer retires the model (e.g. on periodic re-train).
+/** A FROZEN bigram-LM model (r15 add-one, r17 Kneser–Ney): its
+  * smoothing and its persisted tables, in [[BigramLm.FrozenTables]]
+  * order — so a streaming scorer joins micro-batches against them
+  * trigger after trigger without re-deriving the training aggregate.
+  * [[release]] unpersists when the consumer retires the model (e.g. on
+  * periodic re-train).
   */
 final case class BigramLmModel private[text] (
-    cost: DataFrame,  // (_chb, _c9): cost of each TRAINING bigram
-    ctx: DataFrame,   // (_xh1, _cw): total observed count per context
-    vocab: DataFrame, // (_v): one-row bigram-participating vocab size
-    trainedRows: Long) {
-  def release(): Unit = {
-    cost.unpersist(false); ctx.unpersist(false); vocab.unpersist(false)
-  }
-}
-
-/** FROZEN Kneser–Ney model tables (r17): per-seen-bigram integer costs,
-  * per-context `(total, distinct continuations)`, per-word
-  * distinct-context counts, and the `(T, n1, n2)` scalar row — the KN
-  * counterpart of [[BigramLmModel]] for [[BigramLm.scoreAgainstKn]].
-  */
-final case class KnBigramLmModel private[text] (
-    cost: DataFrame, // (_chb, _c9)
-    ctx: DataFrame,  // (_xh1, _cw, _nt)
-    cont: DataFrame, // (_yh2, _pc)
-    tot: DataFrame,  // (_t, _n1, _n2)
-    trainedRows: Long) {
-  def release(): Unit =
-    Seq(cost, ctx, cont, tot).foreach(_.unpersist(false))
+    smoothing: String, tables: Seq[DataFrame]) {
+  def apply(name: String): DataFrame =
+    tables(BigramLm.FrozenTables(smoothing).indexOf(name))
+  def release(): Unit = tables.foreach(_.unpersist(false))
 }
 
 final class BigramLm(
@@ -199,7 +152,7 @@ final class BigramLm(
       .agg(countDistinct(col("_th")).as("_v"))
 
   /** Staged corpus type counts ALONE — for consumers that never read
-    * the per-doc table ([[freezeKn]] derives only model tables from
+    * the per-doc table ([[freeze]] derives only model tables from
     * `cb`): the per-(doc, bigram) frame is the largest intermediate in
     * a freeze, and persisting it for zero readers is pure cache-write
     * overhead (ADVICE r17). Same values as [[stagedCounts]]._2 — the
@@ -243,15 +196,7 @@ final class BigramLm(
     */
   def scores(df: DataFrame): DataFrame = {
     val (db, cb) = stagedCounts(df)
-    val ctx = cb.groupBy(col("_ch1").as("_xh1")).agg(sum(col("_cb")).as("_cw"))
-    val vocab = vocabOf(cb)
-    val p = (col("_cb").cast("double") + lit(1.0)) /
-      (col("_cw").cast("double") + col("_v").cast("double"))
-    val cost = cb.join(ctx, col("_ch1") === col("_xh1"))
-      .crossJoin(broadcast(vocab))
-      .select(col("_hb").as("_chb"),
-        floor(-log(p) * lit(CostScale)).cast("long").as("_c9"))
-    groupedBits(db, cost)
+    groupedBits(db, trainedCost(cb, "addone", modelTable("addone", cb)))
   }
 
   /** Interpolated Kneser–Ney scores (Kneser & Ney 1995; the smoothing
@@ -282,17 +227,11 @@ final class BigramLm(
     */
   def knScores(df: DataFrame): DataFrame = {
     val (db, cb) = stagedCounts(df)
-    val p = knProb(knDiscount)
-    val cost = cb.join(knCtx(cb), col("_ch1") === col("_xh1"))
-      .join(knCont(cb), col("_ch2") === col("_yh2"))
-      .crossJoin(broadcast(knTot(cb)))
-      .select(col("_hb").as("_chb"),
-        floor(-log(p) * lit(CostScale)).cast("long").as("_c9"))
-    groupedBits(db, cost)
+    groupedBits(db, trainedCost(cb, "kn", modelTable("kn", cb)))
   }
 
   // the KN model aggregates over the corpus type counts — shared by
-  // the self-trained scorer and the freeze path
+  // the self-trained scorers and the freeze path
   // context table: total count AND distinct-continuation count per w1
   private def knCtx(cb: DataFrame): DataFrame =
     cb.groupBy(col("_ch1").as("_xh1"))
@@ -393,8 +332,7 @@ final class BigramLm(
     cb.join(ctx, col("_ch1") === col("_xh1"))
       .join(knCont(cb), col("_ch2") === col("_yh2"))
       .crossJoin(broadcast(mknTot(cb)))
-      .select(col("_hb").as("_chb"),
-        floor(-log(mknProb) * lit(CostScale)).cast("long").as("_c9"))
+      .select(col("_hb").as("_chb"), costOf(mknProb).as("_c9"))
 
   /** Per-row modified-KN scores — [[apply]]'s shape over [[mknScores]]. */
   def applyMkn(df: DataFrame): DataFrame = perRow(df, mknScores(df))
@@ -424,8 +362,6 @@ final class BigramLm(
         sum(when(col("_cb") === 2L, 1L).otherwise(0L)).as("_m2c"),
         sum(when(col("_cb") >= 3L, 1L).otherwise(0L)).as("_m3c"))
     val vocab = vocabOf(cb)
-    val pA = (col("_cb").cast("double") + lit(1.0)) /
-      (col("_cw").cast("double") + col("_v").cast("double"))
     // mknTot's scalar row carries (_t, _n1, _n2) — exactly what
     // knDiscount/knProb read — plus the MKN discounts
     val cost = cb.join(ctx, col("_ch1") === col("_xh1"))
@@ -433,9 +369,9 @@ final class BigramLm(
       .crossJoin(broadcast(mknTot(cb)))
       .crossJoin(broadcast(vocab))
       .select(col("_hb").as("_chb"),
-        floor(-log(pA) * lit(CostScale)).cast("long").as("_c9a"),
-        floor(-log(knProb(knDiscount)) * lit(CostScale)).cast("long").as("_c9k"),
-        floor(-log(mknProb) * lit(CostScale)).cast("long").as("_c9m"))
+        costOf(trainedProb("addone")).as("_c9a"),
+        costOf(trainedProb("kn")).as("_c9k"),
+        costOf(mknProb).as("_c9m"))
     def bits(s: Column): Column =
       when(col("_nb") > 0L,
         round(s.cast("double") / col("_nb").cast("double") / lit(1e9), 6))
@@ -498,104 +434,23 @@ final class BigramLm(
        |${selfScoreTailSql(table)}""".stripMargin
   }
 
-  /** Train the KN model on `corpus` and FREEZE it — the [[freeze]]
-    * counterpart for the Kneser–Ney path. Four tables: per-seen-bigram
-    * integer costs, per-context `(total, distinct-continuation)` counts,
-    * per-word distinct-context counts (the continuation table), and one
-    * scalar row `(T, n1, n2)`. Scoring the training corpus itself
-    * through [[scoreAgainstKn]] reproduces [[knScores]] bit-for-bit
-    * (every trained bigram reads its frozen cost). Same snapshot/persist
-    * discipline as [[freeze]].
-    */
-  def freezeKn(corpus: DataFrame,
-      snapshotDir: Option[String] = None): KnBigramLmModel = graft.core.Staging.scoped {
-    // _FAMILY FIRST (ADVICE r17): adoption is gated by the cost-last
-    // _SUCCESS probe, so a half-written freeze stays unadoptable either
-    // way — but marker-last left a crash window where a reused
-    // markerless modelDir could end up with a complete-looking MIXED
-    // snapshot and no marker, which latestSnapshot's markerless
-    // back-compat then accepts. Marker-first fails SAFE: the worst
-    // crash shape is a marker with missing tables → rejected → retrain.
-    snapshotDir.foreach(d => BigramLm.writeFamily(corpus.sparkSession, d, "kn"))
-    // cb only: freezeKn never reads the per-doc table, and staging it
-    // (the freeze's largest intermediate) for zero readers is pure
-    // cache-write overhead (ADVICE r17)
-    val cb = stagedCbOnly(corpus)
-    val ctxS = snapshot(knCtx(cb), snapshotDir, "ctx")
-    val contS = snapshot(knCont(cb), snapshotDir, "cont")
-    val totS = snapshot(knTot(cb), snapshotDir, "tot")
-    val d = knDiscount
-    val p = knProb(d)
-    val cost0 = cb.join(ctxS, col("_ch1") === col("_xh1"))
-      .join(contS, col("_ch2") === col("_yh2"))
-      .crossJoin(broadcast(totS))
-      .select(col("_hb").as("_chb"),
-        floor(-log(p) * lit(CostScale)).cast("long").as("_c9"))
-    val costS = snapshot(cost0, snapshotDir, "cost")
-    val rows = costS.count(); ctxS.count(); contS.count(); totS.count()
-    KnBigramLmModel(costS, ctxS, contS, totS, rows)
-  }
-
   // the shared D and p(w2|w1) expression trees — one definition feeding
-  // knScores, freezeKn, and (via the same SQL rendering) both twins
+  // knScores, the KN freeze, and (via the same SQL rendering) both twins
   private def knDiscount: Column =
     when(col("_n1") + lit(2L) * col("_n2") > 0L,
       col("_n1").cast("double") /
         (col("_n1") + lit(2L) * col("_n2")).cast("double"))
       .otherwise(lit(0.0))
 
-  private def knProb(d: Column): Column =
+  private def knProb: Column = {
+    val d = knDiscount
     greatest(col("_cb").cast("double") - d, lit(0.0)) /
       col("_cw").cast("double") +
       d * col("_nt").cast("double") / col("_cw").cast("double") *
         (col("_pc").cast("double") / col("_t").cast("double"))
-
-  /** Score `df` under a FROZEN KN model. Seen bigrams read their trained
-    * integer cost. Unseen bigrams interpolate: a SEEN context `w1` backs
-    * off to `λ(w1)·p_cont(w2)` with `λ(w1) = D·N1+(w1,·)/c(w1,·)` (the
-    * mass the discount freed); an UNSEEN context scores the continuation
-    * distribution alone. An unseen `w2` takes the minimum observable
-    * continuation mass `1/T` (`N1+(·,w2)` floored at 1 — the count it
-    * would hold had it been seen once). A degenerate D = 0 model (every
-    * trained bigram repeats ≥ 3×, so no discount mass exists) also backs
-    * off to the continuation distribution rather than scoring 0. Empty
-    * model (T = 0): NULL score.
-    *
-    * Scale shape: per-(doc, bigram) map-side combine, then THREE hash
-    * joins against the frozen tables and one broadcast scalar — no
-    * training-corpus scan, no windows.
-    */
-  def scoreAgainstKn(df: DataFrame, m: KnBigramLmModel): DataFrame =
-    perRow(df, frozenKnScores(df, m))
-
-  /** Grouped frozen KN scores `(_blm_id, _blm_n, _blm_bits)`. */
-  def frozenKnScores(df: DataFrame, m: KnBigramLmModel): DataFrame = {
-    val perDoc = occurrences(df).groupBy(col(idCol), col("_hb"))
-      .agg(count(lit(1)).as("_occ"), min(col("_h1")).as("_h1"),
-        min(col("_h2")).as("_h2"))
-    val d = knDiscount
-    val pcont = coalesce(col("_pc"), lit(1L)).cast("double") /
-      col("_t").cast("double")
-    val pBack = when(col("_cw").isNotNull && d > lit(0.0),
-      d * col("_nt").cast("double") / col("_cw").cast("double") * pcont)
-      .otherwise(pcont)
-    val backoff = when(col("_t") > 0L,
-      floor(-log(pBack) * lit(CostScale)).cast("long"))
-    perDoc
-      .join(m.cost, col("_hb") === col("_chb"), "left")
-      .join(m.ctx, col("_h1") === col("_xh1"), "left")
-      .join(m.cont, col("_h2") === col("_yh2"), "left")
-      .crossJoin(broadcast(m.tot))
-      .select(col(idCol), col("_occ"), coalesce(col("_c9"), backoff).as("_c9x"))
-      .groupBy(col(idCol).as("_blm_id"))
-      .agg(sum(col("_occ")).as("_nb"), sum(col("_occ") * col("_c9x")).as("_s"))
-      .select(col("_blm_id"), col("_nb").as("_blm_n"),
-        when(col("_nb") > 0L && col("_s").isNotNull,
-          round(col("_s").cast("double") / col("_nb").cast("double") / lit(1e9), 6))
-          .as("_blm_bits"))
   }
 
-  /** DuckDB twin of [[freezeKn]]+[[scoreAgainstKn]]. */
+  /** DuckDB twin of `freeze(smoothing = "kn")` + [[scoreAgainst]]. */
   def scoreAgainstKnSql(trainTable: String, scoreTable: String): String =
     s"""WITH ${docCountCtesSql(trainTable, "_")},
        |$corpusCbSql,
@@ -614,10 +469,7 @@ final class BigramLm(
        |    FROM _sdb LEFT JOIN _cost ON _hb = _chb
        |      LEFT JOIN _ctx ON _h1 = _xh1
        |      LEFT JOIN _cont ON _h2 = _yh2 CROSS JOIN _tot)),
-       |_sc AS (SELECT $idCol AS _sid, CAST(sum(_occ) AS BIGINT) AS _nb,
-       |    CAST(sum(_occ * _c9x) AS BIGINT) AS _s
-       |  FROM _sx GROUP BY 1)
-       |${finalSelectSql(scoreTable)}""".stripMargin
+       |${frozenScoreTailSql(scoreTable)}""".stripMargin
 
   private def knDiscountSql: String =
     """CASE WHEN _n1 + 2 * _n2 > 0 THEN
@@ -687,6 +539,15 @@ final class BigramLm(
        |  FROM _db JOIN _cost ON _hb = _chb GROUP BY 1)
        |${finalSelectSql(table)}""".stripMargin
 
+  /** `_sc` over the frozen-scored side (`_sx`) plus the final per-row
+    * SELECT — the tail both frozen-model twins share.
+    */
+  private def frozenScoreTailSql(table: String): String =
+    s"""_sc AS (SELECT $idCol AS _sid, CAST(sum(_occ) AS BIGINT) AS _nb,
+       |    CAST(sum(_occ * _c9x) AS BIGINT) AS _s
+       |  FROM _sx GROUP BY 1)
+       |${finalSelectSql(table)}""".stripMargin
+
   private def finalSelectSql(table: String): String =
     s"""SELECT t.$idCol, coalesce(_nb, 0) AS n_bigrams,
        |  CASE WHEN _nb > 0 AND _s IS NOT NULL
@@ -727,12 +588,16 @@ final class BigramLm(
       .select(col(idCol), col("_p._h1").as("_h1"), col("_p._h2").as("_h2"),
         col("_p._hb").as("_hb"))
 
-  /** Train the LM on `corpus` and FREEZE it: the same single-scan
-    * staged pipeline as [[scores]], but the three model tables live
+  /** Train the `smoothing` LM ("addone" | "kn") on `corpus` and FREEZE
+    * it: the same single-scan staged pipeline as [[scores]] /
+    * [[knScores]], but the model tables ([[BigramLm.FrozenTables]]) live
     * beyond the call so a streaming scorer can join micro-batches
     * against them per trigger — the KenLM-style run shape (train once
     * on a reference corpus, score the firehose, re-train periodically).
-    * Caller releases via [[BigramLmModel.release]].
+    * Scoring the training corpus itself through [[scoreAgainst]]
+    * reproduces the self-trained scores bit-for-bit (every trained
+    * bigram reads its frozen cost). Caller releases via
+    * [[BigramLmModel.release]].
     *
     * `snapshotDir`: REQUIRED when `corpus` reads a path that keeps
     * receiving appends (the streaming corpus store). A bare persist is
@@ -741,63 +606,45 @@ final class BigramLm(
     * the written path — the "frozen" tables would silently recompute
     * over data that arrived after the freeze (measured: a trigger's
     * scores drifted to the next trigger's corpus). Snapshotting writes
-    * the tables to versioned parquet — a detached model ARTIFACT, which
-    * is also the restart story: a rebooted scorer re-reads the snapshot
-    * instead of retraining.
+    * the `_FAMILY` marker (the smoothing) and then the tables to
+    * versioned parquet ([[graft.core.Snapshots]]) — a detached model
+    * ARTIFACT, which is also the restart story: a rebooted scorer
+    * re-reads it through [[loadSnapshot]] instead of retraining.
     */
-  def freeze(corpus: DataFrame,
-      snapshotDir: Option[String] = None): BigramLmModel = graft.core.Staging.scoped {
-    // _FAMILY FIRST — see freezeKn: marker-first turns the mixed-
-    // snapshot crash window into a loud reject-and-retrain
-    snapshotDir.foreach(d => BigramLm.writeFamily(corpus.sparkSession, d, "addone"))
-    // cb only (r19): with the vocab scalar now derived from cb, the
-    // freeze never reads the per-doc table — same zero-reader
-    // persist-overhead argument as freezeKn (ADVICE r17)
+  def freeze(corpus: DataFrame, snapshotDir: Option[String] = None,
+      smoothing: String = "addone"): BigramLmModel = graft.core.Staging.scoped {
+    val names = BigramLm.frozenTables(smoothing)
+    snapshotDir.foreach(d =>
+      graft.core.Snapshots.mark(corpus.sparkSession, d, "_FAMILY", smoothing))
+    // cb only: the freeze never reads the per-doc table, and staging it
+    // (the freeze's largest intermediate) for zero readers is pure
+    // cache-write overhead (ADVICE r17)
     val cb = stagedCbOnly(corpus)
-    val ctx0 = cb.groupBy(col("_ch1").as("_xh1")).agg(sum(col("_cb")).as("_cw"))
-    val vocab0 = vocabOf(cb)
-    val ctxS = snapshot(ctx0, snapshotDir, "ctx")
-    val vocabS = snapshot(vocab0, snapshotDir, "vocab")
-    val p = (col("_cb").cast("double") + lit(1.0)) /
-      (col("_cw").cast("double") + col("_v").cast("double"))
-    val cost0 = cb.join(ctxS, col("_ch1") === col("_xh1"))
-      .crossJoin(broadcast(vocabS))
-      .select(col("_hb").as("_chb"),
-        floor(-log(p) * lit(CostScale)).cast("long").as("_c9"))
-    val costS = snapshot(cost0, snapshotDir, "cost")
-    // materialize INSIDE the scope (db/cb still cached), then the staged
+    val model = names.tail.map(n =>
+      n -> snapshot(modelTable(smoothing, cb)(n), snapshotDir, n)).toMap
+    val cost = snapshot(trainedCost(cb, smoothing, model), snapshotDir, "cost")
+    val m = BigramLmModel(smoothing, cost +: names.tail.map(model))
+    // materialize INSIDE the scope (cb still cached), then the staged
     // intermediates release at scope exit while the model tables live on
-    val rows = costS.count(); ctxS.count(); vocabS.count()
-    BigramLmModel(costS, ctxS, vocabS, rows)
+    m.tables.foreach(_.count())
+    m
   }
 
-  /** Re-open a frozen model from a [[freeze]] snapshot directory — the
-    * restart path: a rebooted streaming scorer re-reads the versioned
-    * artifact instead of retraining, so post-crash scores resume under
-    * the model that was live at the crash, not the reference v0. Caller
-    * picks the directory (see [[BigramLm.latestSnapshot]], which also
-    * gates on completeness).
+  /** Re-open a frozen `smoothing` model from a [[freeze]] snapshot
+    * directory — the restart path: a rebooted streaming scorer re-reads
+    * the versioned artifact instead of retraining, so post-crash scores
+    * resume under the model that was live at the crash, not the
+    * reference v0. Caller picks the directory (see
+    * [[BigramLm.latestSnapshot]], which also gates on completeness and
+    * family) and names the smoothing; the `_FAMILY` marker is not read.
     */
   def loadSnapshot(spark: org.apache.spark.sql.SparkSession,
-      dir: String): BigramLmModel = {
-    def open(name: String) = spark.read.parquet(s"$dir/$name")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cost = open("cost"); val ctx = open("ctx"); val vocab = open("vocab")
-    val rows = cost.count(); ctx.count(); vocab.count()
-    BigramLmModel(cost, ctx, vocab, rows)
-  }
-
-  /** Re-open a frozen KN model from a [[freezeKn]] snapshot directory —
-    * the KN restart path (see [[loadSnapshot]]).
-    */
-  def loadKnSnapshot(spark: org.apache.spark.sql.SparkSession,
-      dir: String): KnBigramLmModel = {
-    def open(name: String) = spark.read.parquet(s"$dir/$name")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cost = open("cost"); val ctx = open("ctx")
-    val cont = open("cont"); val tot = open("tot")
-    val rows = cost.count(); ctx.count(); cont.count(); tot.count()
-    KnBigramLmModel(cost, ctx, cont, tot, rows)
+      dir: String, smoothing: String): BigramLmModel = {
+    val m = BigramLmModel(smoothing, BigramLm.frozenTables(smoothing).map(n =>
+      spark.read.parquet(s"$dir/$n")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    m.tables.foreach(_.count())
+    m
   }
 
   /** Persist a model table; with a snapshot dir, write-then-reread so
@@ -812,18 +659,90 @@ final class BigramLm(
     out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
+  /** One of `smoothing`'s model tables (bar `cost`) by name, over the
+    * corpus type counts `cb`.
+    */
+  private def modelTable(smoothing: String, cb: DataFrame)(name: String): DataFrame =
+    (smoothing, name) match {
+      case ("addone", "ctx") =>
+        cb.groupBy(col("_ch1").as("_xh1")).agg(sum(col("_cb")).as("_cw"))
+      case ("addone", "vocab") => vocabOf(cb)
+      case ("kn", "ctx")       => knCtx(cb)
+      case ("kn", "cont")      => knCont(cb)
+      case ("kn", "tot")       => knTot(cb)
+    }
+
+  /** `rows` joined to a model's tables — the one join shape of training
+    * and scoring: `ctx` on the first token hash `w1`, KN's `cont` on the
+    * second `w2`, the one-row scalar (`vocab` | `tot`) broadcast.
+    */
+  private def joinModel(rows: DataFrame, smoothing: String,
+      table: String => DataFrame, w1: String, w2: String, how: String): DataFrame = {
+    val withCtx = rows.join(table("ctx"), col(w1) === col("_xh1"), how)
+    smoothing match {
+      case "addone" => withCtx.crossJoin(broadcast(table("vocab")))
+      case "kn" => withCtx.join(table("cont"), col(w2) === col("_yh2"), how)
+        .crossJoin(broadcast(table("tot")))
+    }
+  }
+
+  /** Per-trained-bigram integer costs `(_chb, _c9)` over `cb` and the
+    * model tables derived from it.
+    */
+  private def trainedCost(cb: DataFrame, smoothing: String,
+      table: String => DataFrame): DataFrame =
+    joinModel(cb, smoothing, table, "_ch1", "_ch2", "inner")
+      .select(col("_hb").as("_chb"), costOf(trainedProb(smoothing)).as("_c9"))
+
+  /** `p(w2|w1)` of a TRAINED bigram over its joined row. */
+  private def trainedProb(smoothing: String): Column = smoothing match {
+    case "addone" => (col("_cb").cast("double") + lit(1.0)) /
+      (col("_cw").cast("double") + col("_v").cast("double"))
+    case "kn" => knProb
+  }
+
+  /** The integer cost of an UNSEEN bigram over its left-joined row;
+    * NULL when the model is empty (V = 0 | T = 0), never a
+    * divide-by-zero.
+    *  - addone: a SEEN context w1 backs off to the add-one floor
+    *    `1/(c(w1,·)+V)`, a fully unseen context to `1/V` (c(w1,·)=0) —
+    *    the exact add-one semantics [[scores]] would assign had the pair
+    *    appeared 0 times in training.
+    *  - kn: a SEEN context backs off to `λ(w1)·p_cont(w2)` with
+    *    `λ(w1) = D·N1+(w1,·)/c(w1,·)` (the mass the discount freed); an
+    *    UNSEEN context scores the continuation distribution alone. An
+    *    unseen `w2` takes the minimum observable continuation mass `1/T`
+    *    (`N1+(·,w2)` floored at 1 — the count it would hold had it been
+    *    seen once). A degenerate D = 0 model (every trained bigram
+    *    repeats ≥ 3×, so no discount mass exists) also backs off to the
+    *    continuation distribution rather than scoring 0.
+    */
+  private def backoffCost(smoothing: String): Column = smoothing match {
+    case "addone" => when(col("_v") > 0L, costOf(lit(1.0) /
+      (coalesce(col("_cw"), lit(0L)).cast("double") + col("_v").cast("double"))))
+    case "kn" =>
+      val d = knDiscount
+      val pcont = coalesce(col("_pc"), lit(1L)).cast("double") /
+        col("_t").cast("double")
+      val pBack = when(col("_cw").isNotNull && d > lit(0.0),
+        d * col("_nt").cast("double") / col("_cw").cast("double") * pcont)
+        .otherwise(pcont)
+      when(col("_t") > 0L, costOf(pBack))
+  }
+
+  // a probability's integer micro-bit cost: floor(-log2 p · 1e9)
+  private def costOf(p: Column): Column =
+    floor(-log(p) * lit(CostScale)).cast("long")
+
   /** Score `df` under a FROZEN model — the streaming-twin scorer. Seen
-    * bigrams read their trained integer cost; an unseen bigram with a
-    * SEEN context w1 backs off to the add-one floor `1/(c(w1,·)+V)`;
-    * a fully unseen context scores `1/V` (c(w1,·)=0) — the exact
-    * add-one semantics [[scores]] would assign had the pair appeared 0
-    * times in training, so scoring the training corpus itself
-    * reproduces [[scores]] bit-for-bit. Empty model (V=0): NULL score,
-    * never a divide-by-zero.
+    * bigrams read their trained integer cost; unseen ones take the
+    * model's backoff cost (see [[backoffCost]]), so scoring the training
+    * corpus itself reproduces the self-trained scores bit-for-bit.
+    * Empty model: NULL score.
     *
     * Scale shape: the batch aggregates per (doc, bigram) first (map-side
-    * combine), then TWO hash joins against the model tables and one
-    * broadcast scalar — no training-corpus scan, no windows.
+    * combine), then one hash join on `cost`, one per context/word table
+    * and one broadcast scalar — no training-corpus scan, no windows.
     */
   def scoreAgainst(df: DataFrame, m: BigramLmModel): DataFrame =
     perRow(df, frozenScores(df, m))
@@ -832,27 +751,19 @@ final class BigramLm(
     * doc with ≥ 1 bigram (the join-ready form, like [[scores]]), so a
     * refiner attaching onto rows with repeated ids never multiplies.
     */
-  def frozenScores(df: DataFrame, m: BigramLmModel): DataFrame = {
-    val perDoc = occurrences(df).groupBy(col(idCol), col("_hb"))
-      .agg(count(lit(1)).as("_occ"), min(col("_h1")).as("_h1"))
-    val backoff = when(col("_v") > 0L,
-      floor(-log(lit(1.0) /
-        (coalesce(col("_cw"), lit(0L)).cast("double") + col("_v").cast("double")))
-        * lit(CostScale)).cast("long"))
-    perDoc
-      .join(m.cost, col("_hb") === col("_chb"), "left")
-      .join(m.ctx, col("_h1") === col("_xh1"), "left")
-      .crossJoin(broadcast(m.vocab))
-      .select(col(idCol), col("_occ"), coalesce(col("_c9"), backoff).as("_c9x"))
+  def frozenScores(df: DataFrame, m: BigramLmModel): DataFrame =
+    joinModel(docCounts(df).join(m("cost"), col("_hb") === col("_chb"), "left"),
+        m.smoothing, m(_), "_h1", "_h2", "left")
+      .select(col(idCol), col("_occ"),
+        coalesce(col("_c9"), backoffCost(m.smoothing)).as("_c9x"))
       .groupBy(col(idCol).as("_blm_id"))
       .agg(sum(col("_occ")).as("_nb"), sum(col("_occ") * col("_c9x")).as("_s"))
       .select(col("_blm_id"), col("_nb").as("_blm_n"),
         when(col("_nb") > 0L && col("_s").isNotNull,
           round(col("_s").cast("double") / col("_nb").cast("double") / lit(1e9), 6))
           .as("_blm_bits"))
-  }
 
-  /** DuckDB twin of freeze+[[scoreAgainst]]: train on `trainTable`,
+  /** DuckDB twin of `freeze` + [[scoreAgainst]] (add-one): train on `trainTable`,
     * score `scoreTable` — the oracle for the frozen-model gate.
     */
   def scoreAgainstSql(trainTable: String, scoreTable: String): String =
@@ -866,10 +777,7 @@ final class BigramLm(
        |        + CAST(_v AS DOUBLE))) * $CostScale) AS BIGINT) END) AS _c9x
        |  FROM _sdb LEFT JOIN _cost ON _hb = _chb
        |    LEFT JOIN _ctx ON _h1 = _xh1 CROSS JOIN _v),
-       |_sc AS (SELECT $idCol AS _sid, CAST(sum(_occ) AS BIGINT) AS _nb,
-       |    CAST(sum(_occ * _c9x) AS BIGINT) AS _s
-       |  FROM _sx GROUP BY 1)
-       |${finalSelectSql(scoreTable)}""".stripMargin
+       |${frozenScoreTailSql(scoreTable)}""".stripMargin
 
   /** `_ctx/_v/_cost` — the add-one model tables and costs over `_cb`/`_db`. */
   private def addoneModelCtesSql: String =
@@ -891,19 +799,16 @@ final class BigramLm(
        |${selfScoreTailSql(table)}""".stripMargin
 }
 
-/** Registry/YAML form: attaches `outCol` (bits per bigram, NULL when the
-  * doc has < 2 tokens) and `countCol` to every input row — ONE join of
-  * the grouped score table onto the input (the NgramLmScoreRefiner
-  * shape), so repeated ids never multiply.
-  */
 /** Registry/YAML form of the FROZEN-model path (r15): train the bigram
   * LM on an EXTERNAL reference corpus (path-loaded, the
   * [[graft.operators.ml.DsirScoreRefiner]] shape) and score every input
   * row against the frozen tables — the production split where the
   * reference distribution is a curated seed set, not the batch being
-  * scored. Unseen bigrams back off per [[BigramLm.scoreAgainst]]. The
-  * model tables are adopted into the consuming call path's staging
-  * scope ([[graft.core.Staging.adopt]]) so Verify/Bench/PipelineRunner
+  * scored. Add-one only: it trains through [[BigramLm.freeze]] at its
+  * default smoothing, and unseen bigrams back off per
+  * [[BigramLm.scoreAgainst]] under that model. The model tables are
+  * adopted into the consuming call path's staging scope
+  * ([[graft.core.Staging.adopt]]) so Verify/Bench/PipelineRunner
   * release them after the run; pass `snapshotDir` when the training
   * path receives appends (see [[BigramLm.freeze]]).
   */
@@ -928,7 +833,7 @@ final class BigramLmFrozenScoreRefiner(
   private def attach(df: DataFrame, alive: Option[Column]): DataFrame = {
     val lm = new BigramLm(textCol, idCol)
     val m = lm.freeze(trainCorpus(df.sparkSession), snapshotDir)
-    Seq(m.cost, m.ctx, m.vocab).foreach(graft.core.Staging.adopt)
+    m.tables.foreach(graft.core.Staging.adopt)
     val gate: Column => Column =
       c => alive.map(a => when(a, c)).getOrElse(c)
     df.join(lm.frozenScores(df, m), col(idCol) === col("_blm_id"), "left")
@@ -954,6 +859,11 @@ object BigramLmFrozenScoreRefiner {
       textCol, idCol, outCol, countCol, snapshotDir)
 }
 
+/** Registry/YAML form: attaches `outCol` (bits per bigram, NULL when the
+  * doc has < 2 tokens) and `countCol` to every input row — ONE join of
+  * the grouped score table onto the input (the NgramLmScoreRefiner
+  * shape), so repeated ids never multiply.
+  */
 final class BigramLmScoreRefiner(
     textCol: String = "text",
     idCol: String = "id",

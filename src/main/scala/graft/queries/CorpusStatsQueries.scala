@@ -117,8 +117,7 @@ object CorpusStatsQueries {
         val model = bigramLmOp.freeze(docs.filter(col("source") === "src0"))
         // tie the frozen tables to the consuming scope: Verify/Bench
         // release them after the gate's write like any staged frame
-        Seq(model.cost, model.ctx, model.vocab)
-          .foreach(graft.core.Staging.adopt)
+        model.tables.foreach(graft.core.Staging.adopt)
         bigramLmOp.scoreAgainst(docs, model).orderBy(col("doc_id"))
       },
       Some(bigramLmOp.scoreAgainstSql(
@@ -132,10 +131,10 @@ object CorpusStatsQueries {
     OracleQuery("bigram_lm_kn_frozen",
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
-        val model = bigramLmOp.freezeKn(docs.filter(col("source") === "src0"))
-        Seq(model.cost, model.ctx, model.cont, model.tot)
-          .foreach(graft.core.Staging.adopt)
-        bigramLmOp.scoreAgainstKn(docs, model).orderBy(col("doc_id"))
+        val model = bigramLmOp.freeze(docs.filter(col("source") === "src0"),
+          smoothing = "kn")
+        model.tables.foreach(graft.core.Staging.adopt)
+        bigramLmOp.scoreAgainst(docs, model).orderBy(col("doc_id"))
       },
       Some(bigramLmOp.scoreAgainstKnSql(
         "(SELECT * FROM documents WHERE source = 'src0')", "documents")

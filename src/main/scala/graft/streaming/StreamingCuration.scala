@@ -255,12 +255,14 @@ object StreamingCuration {
         signatureScheme = signatureScheme).apply)
   }
 
-  /** Streaming bigram-LM quality scoring (r15) — the drift-monitor twin
-    * of [[graft.operators.text.BigramLm]]: the LM trains ONCE on a
-    * reference corpus and FREEZES ([[graft.operators.text.BigramLm.freeze]]);
-    * each micro-batch scores against the frozen tables (two hash joins +
-    * a broadcast scalar — no training-corpus rescan per trigger, the
-    * KenLM-style run shape) and appends `(id, n_bigrams,
+  /** Streaming bigram-LM quality scoring (r15; Kneser–Ney r17) — the
+    * drift-monitor twin of [[graft.operators.text.BigramLm]]: the
+    * `smoothing` LM ("addone" | "kn") trains ONCE on a reference corpus
+    * and FREEZES (`BigramLm.freeze(trainCorpus, Some(v0), smoothing)`);
+    * each micro-batch scores against the frozen tables
+    * ([[graft.operators.text.BigramLm.scoreAgainst]]: hash joins on the
+    * model tables + a broadcast scalar — no training-corpus rescan per
+    * trigger, the KenLM-style run shape) and appends `(id, n_bigrams,
     * bits_per_bigram)` to `outDir`. Raw batches accumulate in
     * `corpusDir`; when `retrainEvery = Some(n)`, every n-th epoch
     * re-trains the model on the accumulated corpus AFTER scoring (so an
@@ -275,17 +277,19 @@ object StreamingCuration {
     * bigram counts never inflate across a crash (score appends to
     * `outDir` stay at-least-once, the standard foreachBatch caveat). On
     * startup the scorer adopts the highest-versioned COMPLETE snapshot
-    * under `modelDir` when one exists
-    * ([[graft.operators.text.BigramLm.latestSnapshot]]), falling back to
+    * of its smoothing under `modelDir` when one exists
+    * (`BigramLm.latestSnapshot(spark, modelDir, smoothing)`, re-opened by
+    * `loadSnapshot(spark, dir, smoothing)`), falling back to
     * `freeze(trainCorpus)` only for a fresh start — a reboot resumes
     * under the model that was live at the crash. One replay edge stays
     * (inherent to post-scoring retrain + at-least-once): a crash between
     * a retrain-epoch's snapshot write and its checkpoint commit replays
     * that epoch's scores under its own retrain. StreamingSpec pins
     * stream score == batch [[graft.operators.text.BigramLm.scoreAgainst]]
-    * under the same frozen model across triggers, the retrain path
-    * against a batch re-freeze, and the restart path (corpus count
-    * stable under replay, latest snapshot adopted).
+    * under the same frozen model across triggers (both smoothings), the
+    * retrain path against a batch re-freeze, and the restart path of
+    * both smoothings (corpus count stable under replay, latest snapshot
+    * adopted, not re-frozen).
     */
   def bigramLmScoreForeachBatch(
       stream: DataFrame,
@@ -300,58 +304,18 @@ object StreamingCuration {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(retrainEvery.forall(_ >= 1),
       s"retrainEvery must be >= 1 when set, got $retrainEvery")
-    require(smoothing == "addone" || smoothing == "kn",
-      s"unsupported smoothing '$smoothing' (addone | kn)")
     val lm = new graft.operators.text.BigramLm(textCol, idCol)
-    // one handle over both model families: freeze/load/score/release —
-    // the foreachBatch body below is smoothing-agnostic
-    trait LmHandle { def score(df: DataFrame): DataFrame; def release(): Unit }
-    def freeze(corpus: DataFrame, dir: String): LmHandle =
-      if (smoothing == "kn") {
-        val m = lm.freezeKn(corpus, Some(dir))
-        new LmHandle {
-          def score(df: DataFrame) = lm.scoreAgainstKn(df, m)
-          def release() = m.release()
-        }
-      } else {
-        val m = lm.freeze(corpus, Some(dir))
-        new LmHandle {
-          def score(df: DataFrame) = lm.scoreAgainst(df, m)
-          def release() = m.release()
-        }
-      }
-    def load(spark: org.apache.spark.sql.SparkSession, dir: String): LmHandle =
-      if (smoothing == "kn") {
-        val m = lm.loadKnSnapshot(spark, dir)
-        new LmHandle {
-          def score(df: DataFrame) = lm.scoreAgainstKn(df, m)
-          def release() = m.release()
-        }
-      } else {
-        val m = lm.loadSnapshot(spark, dir)
-        new LmHandle {
-          def score(df: DataFrame) = lm.scoreAgainst(df, m)
-          def release() = m.release()
-        }
-      }
-    val snapshotTables =
-      if (smoothing == "kn") graft.operators.text.BigramLm.KnTables
-      else Seq("cost", "ctx", "vocab")
-    // adopt only snapshots of THIS smoothing family: a modelDir reused
-    // across a smoothing change passes the bare table probe on a mixed
-    // per-table-overwritten snapshot (see BigramLm.latestSnapshot)
-    val snapshotFamily = Some(if (smoothing == "kn") "kn" else "addone")
     // every model SNAPSHOTS to a versioned dir: a cached plan over the
     // live (appended-to) corpusDir is NOT frozen — Spark's append path
     // refreshes-and-recaches plans rooted in the written path, so the
     // model would silently track data that arrived after its freeze
-    // (see BigramLm.freeze). The snapshot is also the restart artifact.
+    // (see BigramLm.freeze). The snapshot is also the restart artifact;
+    // the probe adopts only snapshots of THIS smoothing family.
     val model = new java.util.concurrent.atomic.AtomicReference(
       graft.operators.text.BigramLm
-        .latestSnapshot(trainCorpus.sparkSession, modelDir, snapshotTables,
-          snapshotFamily) match {
-        case Some(dir) => load(trainCorpus.sparkSession, dir)
-        case None      => freeze(trainCorpus, s"$modelDir/v0")
+        .latestSnapshot(trainCorpus.sparkSession, modelDir, smoothing) match {
+        case Some(dir) => lm.loadSnapshot(trainCorpus.sparkSession, dir, smoothing)
+        case None      => lm.freeze(trainCorpus, Some(s"$modelDir/v0"), smoothing)
       })
     stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
       val spark = batch.sparkSession
@@ -360,10 +324,11 @@ object StreamingCuration {
         // epoch-keyed OVERWRITE: a replayed epoch replaces its own
         // partition, so the accumulated corpus never double-counts
         in.write.mode("overwrite").parquet(epochDir(corpusDir, epoch))
-        model.get().score(in).write.mode("append").parquet(outDir)
+        lm.scoreAgainst(in, model.get()).write.mode("append").parquet(outDir)
         retrainEvery.filter(n => (epoch + 1) % n == 0).foreach { _ =>
           val old = model.get()
-          model.set(freeze(spark.read.parquet(corpusDir), s"$modelDir/v${epoch + 1}"))
+          model.set(lm.freeze(spark.read.parquet(corpusDir),
+            Some(s"$modelDir/v${epoch + 1}"), smoothing))
           old.release()
         }
       } finally in.unpersist()

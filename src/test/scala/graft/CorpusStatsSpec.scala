@@ -473,25 +473,26 @@ class CorpusStatsSpec extends AnyFunSuite {
   test("frozen KN model: training-corpus scores reproduce knScores; backoff arms fire; empty model is NULL") {
     val lm = new graft.operators.text.BigramLm("text", "doc_id")
     val train = Seq((1L, "a b a b c"), (2L, "a b d"), (3L, "b c a")).toDF("doc_id", "text")
-    val m = lm.freezeKn(train)
+    val m = lm.freeze(train, smoothing = "kn")
     try {
       // scoring the training corpus through the frozen tables must
       // reproduce the self-trained KN scores bit-for-bit
       def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => r.getLong(0) -> (r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-      assert(pairs(lm.scoreAgainstKn(train, m)) == pairs(lm.applyKn(train)))
+      assert(pairs(lm.scoreAgainst(train, m)) == pairs(lm.applyKn(train)))
       // backoff arms: (x y) = unseen words (1/T floor through unseen
       // context); (a z) = seen context, unseen word; (a b) = trained
       val novel = Seq((10L, "x y"), (11L, "a z"), (12L, "a b")).toDF("doc_id", "text")
-      val sc = pairs(lm.scoreAgainstKn(novel, m))
+      val sc = pairs(lm.scoreAgainst(novel, m))
       assert(sc.values.forall(v => v._1 == 1L && v._2.isDefined))
       // the trained bigram must be cheaper than both backoff cases
       assert(sc(12L)._2.get < sc(11L)._2.get && sc(12L)._2.get < sc(10L)._2.get)
       // empty model: every score NULL, counts intact
-      val em = lm.freezeKn(Seq.empty[(Long, String)].toDF("doc_id", "text"))
+      val em = lm.freeze(Seq.empty[(Long, String)].toDF("doc_id", "text"),
+        smoothing = "kn")
       try {
-        val esc = pairs(lm.scoreAgainstKn(novel, em))
+        val esc = pairs(lm.scoreAgainst(novel, em))
         assert(esc.values.forall(v => v._1 == 1L && v._2.isEmpty))
       } finally em.release()
     } finally m.release()
@@ -502,30 +503,26 @@ class CorpusStatsSpec extends AnyFunSuite {
     val train = Seq((1L, "a b a b c"), (2L, "a b d")).toDF("doc_id", "text")
     val base = java.nio.file.Files.createTempDirectory("graft_blmfam")
     val v0 = base.resolve("v0").toString
-    val addoneTables = Seq("cost", "ctx", "vocab")
-    val knTables = graft.operators.text.BigramLm.KnTables
     // addone freeze first: the addone probe adopts it, the kn probe
     // must not (kn tables incomplete AND family mismatch)
     val m1 = lm.freeze(train, Some(v0))
     try {
       assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, base.toString, addoneTables, Some("addone")).exists(_.endsWith("v0")))
+        spark, base.toString, "addone").exists(_.endsWith("v0")))
       assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, base.toString, knTables, Some("kn")).isEmpty)
+        spark, base.toString, "kn").isEmpty)
     } finally m1.release()
     // kn re-freeze into the SAME dir: per-table overwrite leaves the
-    // stale vocab/ behind, so WITHOUT the family gate the addone probe
-    // would adopt a mixed snapshot (KN costs + stale add-one vocab)
-    val m2 = lm.freezeKn(train, Some(v0))
+    // stale vocab/ behind (all three addone table dirs still carry
+    // _SUCCESS), so WITHOUT the family gate the addone probe would adopt
+    // a mixed snapshot (KN costs + stale add-one vocab)
+    val m2 = lm.freeze(train, Some(v0), smoothing = "kn")
     try {
       assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, base.toString, knTables, Some("kn")).exists(_.endsWith("v0")))
-      // the bare table probe WOULD pass (all three addone dirs exist)...
+        spark, base.toString, "kn").exists(_.endsWith("v0")))
+      // the family gate is what refuses it
       assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, base.toString, addoneTables).exists(_.endsWith("v0")))
-      // ...and the family gate is what refuses it
-      assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, base.toString, addoneTables, Some("addone")).isEmpty)
+        spark, base.toString, "addone").isEmpty)
     } finally m2.release()
   }
 
@@ -561,14 +558,13 @@ class CorpusStatsSpec extends AnyFunSuite {
     val train = Seq((1L, "a b a b c"), (2L, "a b d")).toDF("doc_id", "text")
     val base = java.nio.file.Files.createTempDirectory("graft_blmfam2")
     val v0 = base.resolve("v0").toString
-    val addoneTables = Seq("cost", "ctx", "vocab")
     val m1 = lm.freeze(train, Some(v0))
     m1.release()
     // simulate the worst crash shape of a kn RE-freeze into the same
     // dir: the marker lands FIRST (r18 write order), then the process
     // dies before any kn table is written — complete addone tables
     // remain under a "kn" marker
-    // via the Hadoop FS (like writeFamily itself) — a raw NIO overwrite
+    // via the Hadoop FS (like Snapshots.mark itself) — a raw NIO overwrite
     // would leave the freeze's ._FAMILY.crc stale and fail on checksum
     val fam = new org.apache.hadoop.fs.Path(v0, "_FAMILY")
     val fs = fam.getFileSystem(spark.sessionState.newHadoopConf())
@@ -578,10 +574,32 @@ class CorpusStatsSpec extends AnyFunSuite {
     // (family mismatch) and the kn probe must refuse too (tables
     // missing) — both retrain; neither adopts a mix
     assert(graft.operators.text.BigramLm.latestSnapshot(
-      spark, base.toString, addoneTables, Some("addone")).isEmpty)
+      spark, base.toString, "addone").isEmpty)
     assert(graft.operators.text.BigramLm.latestSnapshot(
-      spark, base.toString, graft.operators.text.BigramLm.KnTables,
-      Some("kn")).isEmpty)
+      spark, base.toString, "kn").isEmpty)
+  }
+
+  test("markerless snapshot: an add-one snapshot without _FAMILY (pre-marker artifact) is still adopted and loads as add-one") {
+    val lm = new graft.operators.text.BigramLm("text", "doc_id")
+    val train = Seq((1L, "a b a b c"), (2L, "a b d")).toDF("doc_id", "text")
+    val novel = Seq((10L, "x y"), (11L, "a z"), (12L, "a b c")).toDF("doc_id", "text")
+    val base = java.nio.file.Files.createTempDirectory("graft_blmnomark")
+    val v0 = base.resolve("v0").toString
+    val m1 = lm.freeze(train, Some(v0))
+    val want = try lm.scoreAgainst(novel, m1).collect().toSet finally m1.release()
+    val fam = new org.apache.hadoop.fs.Path(v0, "_FAMILY")
+    val fs = fam.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.delete(fam, false), "the freeze must have written _FAMILY")
+    val dir = graft.operators.text.BigramLm.latestSnapshot(spark, base.toString, "addone")
+    assert(dir.exists(_.endsWith("v0")), s"markerless add-one snapshot refused: $dir")
+    // the kn probe still refuses it: its tables are not all there
+    assert(graft.operators.text.BigramLm.latestSnapshot(spark, base.toString, "kn").isEmpty)
+    val m2 = lm.loadSnapshot(spark, dir.get, "addone")
+    try {
+      assert(m2.smoothing == "addone" && m2.tables.size == 3)
+      assert(lm.scoreAgainst(novel, m2).collect().toSet == want,
+        "the re-opened snapshot must score like the model that wrote it")
+    } finally m2.release()
   }
 
   test("frozen bigram refiner: external training corpus, backoff arms, registry path, no id multiplication") {

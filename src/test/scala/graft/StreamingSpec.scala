@@ -311,7 +311,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
-  test("streaming KN-smoothed bigram scoring: stream scores equal batch scoreAgainstKn; snapshot is KN-complete") {
+  test("streaming KN-smoothed bigram scoring: stream scores equal batch scoreAgainst under a KN freeze; snapshot is KN-complete") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val lm = new graft.operators.text.BigramLm("text", "doc_id")
@@ -336,7 +336,7 @@ class StreamingSpec extends AnyFunSuite {
         textCol = "text", idCol = "doc_id", smoothing = "kn")
       .option("checkpointLocation", base.resolve("ckpt").toString)
       .start()
-    val model = lm.freezeKn(train)
+    val model = lm.freeze(train, smoothing = "kn")
     try {
       val (b1, b2) = rows.splitAt(3)
       mem.addData(b1: _*); q.processAllAvailable()
@@ -345,14 +345,13 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> ((r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
       val streamed = scoresOf(spark.read.parquet(outDir))
-      val batch = scoresOf(lm.scoreAgainstKn(rows.toDF("doc_id", "text"), model))
+      val batch = scoresOf(lm.scoreAgainst(rows.toDF("doc_id", "text"), model))
       assert(streamed == batch, s"KN stream $streamed must equal batch $batch")
       assert(streamed(4L)._2.isEmpty)
       // the v0 snapshot carries all FOUR KN tables (a reboot with
       // smoothing=kn would adopt it; the 3-table add-one probe must NOT
       // see a KN snapshot as complete-for-addone-and-missing-cont)
-      assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, modelDir, graft.operators.text.BigramLm.KnTables)
+      assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "kn")
         .exists(_.endsWith("v0")))
     } finally { q.stop(); model.release() }
   }
@@ -370,7 +369,7 @@ class StreamingSpec extends AnyFunSuite {
     val corpusDir = base.resolve("corpus").toString
     val modelDir = base.resolve("model").toString
     // fresh start: no snapshots yet
-    assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir).isEmpty)
+    assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "addone").isEmpty)
     val mem = MemoryStream[(Long, String)]
     val q = StreamingCuration.bigramLmScoreForeachBatch(
         mem.toDF().toDF("doc_id", "text"), train,
@@ -383,7 +382,7 @@ class StreamingSpec extends AnyFunSuite {
     // an empty decoy dir without _SUCCESS markers is never adopted
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(modelDir).resolve("v7"))
-    val latest = graft.operators.text.BigramLm.latestSnapshot(spark, modelDir)
+    val latest = graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "addone")
     assert(latest.exists(_.endsWith("v1")), s"latest must be v1, got $latest")
     // reboot: fresh checkpoint REPLAYS epoch 0 with the same rows — the
     // epoch-keyed overwrite must leave the corpus count unchanged, and the
@@ -409,8 +408,75 @@ class StreamingSpec extends AnyFunSuite {
         s"rebooted scorer must score under the v1 snapshot: got $got want $want")
     } finally mB1.release()
     // no new snapshot was written by the reboot (loaded, not re-frozen)
-    assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir)
+    assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "addone")
       .exists(_.endsWith("v1")))
+  }
+
+  test("KN bigram-LM streaming restart: a reboot adopts the latest KN snapshot without re-freezing and scores under it") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val lm = new graft.operators.text.BigramLm("text", "doc_id")
+    val train = Seq(
+      (100L, "the quick brown fox jumps over the lazy dog"),
+      (101L, "the lazy dog sleeps while the quick fox runs")).toDF("doc_id", "text")
+    val b1 = Seq((1L, "the quick brown fox"), (2L, "a lazy dog runs"),
+      (3L, "novel words entirely here"), (4L, "a lazy dog runs home"))
+    // the reboot's batch mixes trained transitions, seen contexts with
+    // unseen words and fully unseen text, so every backoff arm reads
+    // the loaded ctx/cont/tot tables
+    val b2 = Seq((5L, "a lazy dog runs"), (6L, "a lazy cat sleeps"),
+      (7L, "zebras telephone the quick fox"), (8L, "dog"))
+    val base = java.nio.file.Files.createTempDirectory("graft_blmknrestart")
+    val modelDir = base.resolve("model").toString
+    val corpusDir = base.resolve("corpus").toString
+    // first run: epoch 0 scores under v0 (train), then re-freezes on the
+    // accumulated corpus (b1) as v1
+    val mem = MemoryStream[(Long, String)]
+    val q = StreamingCuration.bigramLmScoreForeachBatch(
+        mem.toDF().toDF("doc_id", "text"), train,
+        base.resolve("out1").toString, corpusDir, modelDir,
+        textCol = "text", idCol = "doc_id", retrainEvery = Some(1),
+        smoothing = "kn")
+      .option("checkpointLocation", base.resolve("ckpt1").toString)
+      .start()
+    try { mem.addData(b1: _*); q.processAllAvailable() } finally q.stop()
+    val v1 = graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "kn")
+    assert(v1.exists(_.endsWith("v1")), s"latest KN snapshot must be v1, got $v1")
+    assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "addone").isEmpty,
+      "a KN snapshot is never complete for the add-one probe")
+    val fs = new org.apache.hadoop.fs.Path(modelDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def stamps() = fs.listStatus(new org.apache.hadoop.fs.Path(modelDir))
+      .map(st => st.getPath.getName -> fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(st.getPath, "cost/_SUCCESS")).getModificationTime)
+      .toMap
+    val before = stamps()
+    // reboot on a fresh checkpoint over the same modelDir
+    val out2 = base.resolve("out2").toString
+    val mem2 = MemoryStream[(Long, String)]
+    val q2 = StreamingCuration.bigramLmScoreForeachBatch(
+        mem2.toDF().toDF("doc_id", "text"), train,
+        out2, corpusDir, modelDir, textCol = "text", idCol = "doc_id",
+        smoothing = "kn")
+      .option("checkpointLocation", base.resolve("ckpt2").toString)
+      .start()
+    try { mem2.addData(b2: _*); q2.processAllAvailable() } finally q2.stop()
+    // adopted, not re-frozen: the same snapshots, none rewritten
+    assert(stamps() == before, s"the reboot rewrote a snapshot: ${stamps()} vs $before")
+    def scoresOf(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
+    val mB1 = lm.freeze(b1.toDF("doc_id", "text"), smoothing = "kn")
+    val mTrain = lm.freeze(train, smoothing = "kn")
+    try {
+      val want = scoresOf(lm.scoreAgainst(b2.toDF("doc_id", "text"), mB1))
+      val got = scoresOf(spark.read.parquet(out2))
+      assert(got == want,
+        s"rebooted KN scorer must score under the v1 snapshot: got $got want $want")
+      assert(got != scoresOf(lm.scoreAgainst(b2.toDF("doc_id", "text"), mTrain)),
+        "v0 and v1 must score the reboot batch differently, or adoption is unobservable")
+      assert(got(8L)._2.isEmpty && got.values.count(_._2.isDefined) == 3)
+    } finally { mB1.release(); mTrain.release() }
   }
 
   test("streaming probed dedup: union of per-trigger kept sets equals batch ProbedCosineDedup under frozen centroids") {
