@@ -8,6 +8,24 @@ import org.apache.spark.sql.SparkSession
   * applies minus the master. Shuffle partitions default to the local core
   * count (not Spark's 200) and AQE is on so skewed dedup keys / joins are
   * re-planned at runtime — see SURVEY.md §4.
+  *
+  * The `file` scheme is pinned to the engine's own local filesystem
+  * ([[graft.io.LocalFs]]), in both of Hadoop's forms: `fs.file.impl`
+  * (`FileSystem`, every parquet and metrics write) and
+  * `fs.AbstractFileSystem.file.impl` (`FileContext`, Structured
+  * Streaming's checkpoint files). Spark's jars ship no native
+  * `libhadoop`, so Hadoop's stock local filesystem runs one `chmod`
+  * process per file, `.crc` file and directory it creates, and one
+  * `readlink` process per end of every `FileContext` rename. Unpinned,
+  * the `file` scheme would also go to Hive's `ProxyLocalFileSystem`,
+  * whose `FileSystem` service entry in hive-exec wins by classpath
+  * order. HDFS, S3 and every other scheme are untouched.
+  *
+  * Caveat: Hadoop caches `FileSystem` instances by scheme, authority
+  * and user, not by class. A JVM that calls `FileSystem.get` on a
+  * `file:` URI with a plain `Configuration` before this session is
+  * built keeps the class it got then, for every later `file:` access
+  * through the cache (ProcessSpawnSpec checks the shared test session).
   */
 object GraftSession {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
@@ -45,4 +63,7 @@ object GraftSession {
       // rejects; read nanos as long and convert explicitly (Tables.events).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.LocalFs.Checksummed].getName)
 }
