@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Rejection provenance envelope.
   *
@@ -12,6 +13,11 @@ import org.apache.spark.sql.functions._
   */
 object Rejection {
   val ColName = "_rejection_details"
+
+  /** The envelope's type: four strings, all nullable. */
+  val DetailsType: StructType = StructType(
+    Seq("reason", "operator", "dedup_key", "representative_id")
+      .map(StructField(_, StringType, nullable = true)))
 
   def filtered(op: String): Column = struct(
     lit("filtered").as("reason"),
@@ -202,12 +208,10 @@ trait PairwiseDedup extends RejectingOperator {
   */
 object Disposition {
   val AliveCol = "_graft_alive"
-  private val DetailsType =
-    "struct<reason:string,operator:string,dedup_key:string,representative_id:string>"
 
   def init(df: DataFrame): DataFrame =
     df.withColumn(AliveCol, lit(true))
-      .withColumn(Rejection.ColName, lit(null).cast(DetailsType))
+      .withColumn(Rejection.ColName, lit(null).cast(Rejection.DetailsType))
 
   /** Apply one operator in mark-don't-drop mode. Rejecting operators
     * only update flags for currently-alive rows. Refiner columns are

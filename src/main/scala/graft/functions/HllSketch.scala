@@ -108,80 +108,6 @@ final case class HllSketch(
     copy(child = newChild)
 }
 
-/** Merge aggregate over REGISTER-ARRAY rows (element-wise max) — folds
-  * many persisted sketches (per-epoch store partitions, per-source
-  * shards) back into one, in one pass, without touching the raw keys.
-  * The algebra is idempotent, so re-merging a replayed epoch's
-  * registers is harmless — the streaming twin's replay safety comes
-  * from this, not from id anti-joins.
-  */
-final case class HllMergeAgg(
-    child: Expression,
-    p: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
-
-  require(p >= 7 && p <= 16,
-    s"p must be in [7,16] (the estimator uses the m >= 128 alpha form), got $p")
-  private val m = 1 << p
-
-  override def prettyName: String = "hll_merge"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hll_merge expects ARRAY<INT> registers, got ${other.catalogString}")
-    }
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      require(arr.numElements() == m,
-        s"register array has ${arr.numElements()} entries, sketch p=$p needs $m")
-      var i = 0
-      while (i < m) {
-        val r = arr.getInt(i).toByte
-        if (r > buf(i)) buf(i) = r
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Byte], other: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < m) { if (other(i) > buf(i)) buf(i) = other(i); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Byte]): Any = {
-    val arr = new Array[Int](m)
-    var i = 0
-    while (i < m) { arr(i) = buf(i).toInt; i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-  }
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf.clone()
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes.clone()
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllMergeAgg =
-    copy(child = newChild)
-}
-
 object HllSketch {
 
   /** alpha_m for m ≥ 128 (Flajolet et al. 2007 §4) — the SQL twin
@@ -223,13 +149,6 @@ object HllSketch {
   def hllRegisters(hashed: Column, p: Int): Column =
     Shim.column(HllSketch(Shim.expression(hashed), p, emitRegisters = true)
       .toAggregateExpression())
-
-  /** Merge many REGISTER-ARRAY rows into one sketch (aggregate form —
-    * [[HllMergeAgg]]): fold per-epoch / per-source persisted sketches
-    * without touching raw keys.
-    */
-  def hllMergeRegistersAgg(regs: Column, p: Int): Column =
-    Shim.column(HllMergeAgg(Shim.expression(regs), p).toAggregateExpression())
 
   /** Merge two REGISTER columns (element-wise max) — sketch algebra for
     * union cardinality across corpora.

@@ -111,7 +111,6 @@ object HtmlReport {
       val hi = hOf(in); val ho = hOf(out)
       sb ++= f"""<polygon points="$x0%.1f,4 $x1%.1f,4 $x1%.1f,${4 + ho}%.1f $x0%.1f,${4 + hi}%.1f" fill="#4a90d9" opacity="0.8"/>"""
       if (in > out) {
-        val hd = hi - ho
         sb ++= f"""<polygon points="$x1%.1f,${4 + ho}%.1f $x1%.1f,${4 + hi}%.1f ${x1 - 14}%.1f,${bandH + 22}%.1f" fill="#d9534f" opacity="0.8"/>"""
         sb ++= f"""<text x="${x1 - 14}%.1f" y="${bandH + 36}" text-anchor="middle" font-size="11">-${in - out}</text>"""
       }

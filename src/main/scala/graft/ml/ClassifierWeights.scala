@@ -1,18 +1,17 @@
 package graft.ml
 
-import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 
 /** Weight table for the hashed linear text classifier
   * ([[graft.plans.kernels.LinearClassifierScore]]).
   *
   * Two resolutions:
-  *   - [[ClassifierWeights.Bcast]] — the production path: the table is a
-  *     Spark broadcast, so a 2^21-slot model (16 MB) ships to each
-  *     executor ONCE over the torrent protocol instead of riding every
-  *     task closure.
-  *   - [[ClassifierWeights.Local]] — a plain array inside the plan; fine
-  *     for test/registry-sized tables (the 2^12 gate model is 32 KB).
+  *   - [[ClassifierWeights.Local]] — a plain array inside the plan; what
+  *     the registry and the gates build (the 2^12 gate model is 32 KB).
+  *   - [[ClassifierWeights.Bcast]] — the table as a Spark broadcast, so
+  *     a 2^21-slot model (16 MB) would ship to each executor ONCE
+  *     instead of riding every task closure. Nothing builds one outside
+  *     ClassifierSpec, which pins that it scores like `Local`.
   *
   * `deterministic` builds the synthetic table the oracle gates use: each
   * slot's weight is a closed-form function of its index, so DuckDB can
@@ -54,8 +53,4 @@ object ClassifierWeights {
     while (i < out.length) { out(i) = fb.get(i).toDouble; i += 1 }
     Local(out)
   }
-
-  /** Production resolution: file → broadcast (one copy per executor). */
-  def broadcastFromFile(sc: SparkContext, path: String): Bcast =
-    Bcast(sc.broadcast(fromFile(path).values))
 }

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * event-analytics operator (funnnel/session metrics over the `events`
   * stream). Batch shape: lag + running sum over a per-user window,
   * then one aggregate per (user, session) — textbook SQL, which is
-  * exactly what makes it oracle-checkable; the streaming twin is
-  * Spark's native `session_window` (same semantics, watermark-driven).
+  * exactly what makes it oracle-checkable. On a stream, Spark's native
+  * `session_window` computes the same sessions (StreamingSpec pins the
+  * equality off the exact-gap boundary).
   *
   * Scale shape: ONE shuffle, by user — the window and the follow-up
   * groupBy share the user-keyed partitioning, and AQE handles the

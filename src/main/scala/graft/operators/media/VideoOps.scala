@@ -113,7 +113,6 @@ final class VideoMetadataRefiner(videoCol: String = "video") extends Operator {
   * engine owns.
   */
 trait FrameDecoder extends Serializable {
-  def decoderName: String
   def sample(video: Array[Byte], count: Int): Seq[Array[Byte]]
 }
 

@@ -42,11 +42,9 @@ object BigramLm {
   /** Asymmetric overflow-safe combine of two 60-bit token hashes into
     * one bigram key: the existing audited [[HashFunctions.mixed]] family
     * under distinct seeds (each term < 2^61, sum < 2^62 — safe in both
-    * ANSI Spark and DuckDB; distinct seeds keep "a b" ≠ "b a").
+    * ANSI Spark and DuckDB; distinct seeds keep "a b" ≠ "b a"). The
+    * Spark side is the fused [[graft.plans.kernels.token_bigrams]].
     */
-  private[text] def mixPair(h1: Column, h2: Column): Column =
-    HashFunctions.mixed(h1, 0) + HashFunctions.mixed(h2, 1)
-
   private[text] def mixPairSql(h1: String, h2: String): String =
     s"(${HashFunctions.mixedSql(h1, 0)} + ${HashFunctions.mixedSql(h2, 1)})"
 
@@ -579,7 +577,7 @@ final class BigramLm(
     */
   private def occurrences(df: DataFrame): DataFrame =
     // fully fused tokenize → hash → adjacent-pair kernel (r19): each
-    // token hashes ONCE and the (h1, h2, mixPair) structs materialize
+    // token hashes ONCE and the (h1, h2, bigram key) structs materialize
     // in the same JVM pass — bit-identical (KernelSpec pin) to the
     // former staged-hash-array + interpreted pair-transform HOF, which
     // re-entered element_at per element on the explode's input

@@ -31,14 +31,6 @@ object TextRepetition {
     when(size(grams) === 0, lit(0.0)).otherwise(
       lit(1.0) - size(array_distinct(grams)).cast("double") / size(grams).cast("double"))
 
-  /** 1 − distinct/total over word 2-grams (0 when fewer than 2 tokens).
-    * Convenience form for one-shot use — stage the grams and call
-    * [[dup2gramRatioStaged]] when the expression lands in a hot
-    * projection.
-    */
-  def dup2gramRatio(toks: Column): Column =
-    dup2gramRatioStaged(TextFunctions.shingles(toks, 2))
-
   def dupTokenRatioSql(toksCol: String): String =
     s"(CASE WHEN len($toksCol) = 0 THEN CAST(0.0 AS DOUBLE) ELSE " +
       s"CAST(1.0 AS DOUBLE) - CAST(len(list_distinct($toksCol)) AS DOUBLE) / CAST(len($toksCol) AS DOUBLE) END)"

@@ -311,9 +311,8 @@ object AnnSearch {
   /** `(idCol, vecCol, _band, _bk)`: `base` exploded to one row per band,
     * bit `kk` of band `bi`'s bucket the mean-centered sign
     * `floor(v[c]·1e6) · n ≥ sumOf(c)` — `n`/`sumOf` are a broadcast
-    * stats row's columns (batch) or frozen literals (streaming), the
-    * same integer arithmetic either way. Band ids ride one fused
-    * explode generator.
+    * stats row's columns (batch) or frozen literals, the same integer
+    * arithmetic either way. Band ids ride one fused explode generator.
     */
   private def centeredBands(base: DataFrame, vecCol: String, idCol: String,
       bands: Seq[Seq[Int]], n: Column, sumOf: Int => Column): DataFrame = {
@@ -362,10 +361,9 @@ object AnnSearch {
   /** FROZEN per-band centering stats (r16): the count and per-coordinate
     * scaled sums of a REFERENCE corpus, collected ONCE to the driver
     * (|coords|+1 numbers) so band assignment under them is a pure
-    * per-row LITERAL expression — arrival-invariant, the streaming
-    * anchor miner's frozen band state (the
+    * per-row LITERAL expression — arrival-invariant (the
     * [[graft.operators.text.BigramLm.freeze]] discipline: centering
-    * stats derived from a live stream would re-bucket prior vectors
+    * stats derived from growing input would re-bucket earlier vectors
     * with every append). Sums are the exact LONG sums of the floored
     * scaled coords — the same integer arithmetic the batch tier's
     * broadcast stats row uses, so frozen vs broadcast assignment is
@@ -397,14 +395,10 @@ object AnnSearch {
       vecCol, idCol, bands, lit(stats.n), c => lit(stats.sums(c)))
   }
 
-  /** Batch twin of the streaming anchor miner
-    * ([[graft.streaming.StreamingCuration.anchorMiningForeachBatch]]):
-    * OR-amplified co-bucket candidate pairs under frozen band state with
+  /** OR-amplified co-bucket candidate pairs under frozen band state with
     * FIRST-CAP semantics — per (band, bucket) only the `maxBucketSize`
-    * smallest-`idCol` members participate (arrival order == id order in
-    * the streaming pin; a bucket "closes" once full, so membership is
-    * prefix-stable under appends — the property that makes the
-    * incremental union of per-trigger pairs equal this one-shot batch).
+    * smallest-`idCol` members participate (a bucket "closes" once full,
+    * so membership is prefix-stable under id-ordered appends).
     * Pairs: co-bucketed in ≥ 1 band, `a < b`, cosine ≥ `threshold`,
     * deduped across bands. Scale shape: the cap rank window is
     * (band, bucket)-keyed; the pair join is the banded equi-join;
@@ -432,8 +426,7 @@ object AnnSearch {
 
   /** Full DuckDB oracle for [[anchorCandidatesFirstCap]] with stats
     * frozen from `table` itself: `(a, b, cosine r6)` ORDER BY a, b. The
-    * first-cap is the id-ordered QUALIFY rank — the arrival-order cap
-    * the streaming miner applies.
+    * first-cap is the id-ordered QUALIFY rank.
     */
   def anchorCandidatesFirstCapSql(table: String, vecCol: String, idCol: String,
       bands: Seq[Seq[Int]], maxBucketSize: Int, threshold: Double): String =

@@ -343,10 +343,11 @@ object kernels {
     * OCCURRENCE (multiplicity + order kept) — bit-identical to pairing
     * the adjacent elements of
     * `transform(tokensOf(text), portableHash64)` and mixing with
-    * `BigramLm.mixPair` (`mixed(h1,0) + mixed(h2,1)` — the overflow-safe
-    * 30-bit-split constant mix), but ONE JVM pass per row: each token
-    * hashes once (n md5 calls for n tokens) and the pair structs
-    * materialize straight off the hash array, replacing the interpreted
+    * `mixed(h1,0) + mixed(h2,1)` (the overflow-safe 30-bit-split
+    * constant mix `BigramLm.mixPairSql` spells in SQL), but ONE JVM
+    * pass per row: each token hashes once (n md5 calls for n tokens)
+    * and the pair structs materialize straight off the hash array,
+    * replacing the interpreted
     * `transform(sequence(...), i -> struct(element_at...))` HOF that
     * re-entered per element. < 2 tokens → empty array (no bigrams).
     */

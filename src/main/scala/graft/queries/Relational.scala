@@ -88,8 +88,7 @@ object Relational {
       Some("""SELECT o_orderkey, o_totalprice FROM orders
              |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin)),
 
-    // Event-time tumbling window aggregation (batch twin of the
-    // streaming query in graft.streaming).
+    // Event-time tumbling window aggregation.
     OracleQuery("q6_events_hourly",
       (s, dir) => Tables.events(s, dir)
         .groupBy(

@@ -45,13 +45,6 @@ final case class ExecutorConf(
       * reporter.py:1258). */
     reportPublishPath: Option[String] = None,
     checkpointPath: Option[String] = None,
-    /** "cache" (default): persist the annotated chain once and serve both
-      * writes from it — best when the chain is compute-heavy (decode,
-      * inference). "recompute": no cache, two source scans — best when
-      * the chain is cheap and caching 100 TB of annotated rows costs
-      * more than a second scan.
-      */
-    rejectedMaterialize: String = "cache",
     /** metrics.timed: profile mode — one action per operator boundary so
       * wall time is attributable per operator (the reference's
       * per-operator total_time). Costs recomputation; ignored when
@@ -101,6 +94,13 @@ object PipelineConf {
     val rejM = execM.get("rejected_samples").map(asMap).getOrElse(Map.empty[String, Any])
     val metM = execM.get("metrics").map(asMap).getOrElse(Map.empty[String, Any])
     val ckptM = execM.get("checkpoint").map(asMap).getOrElse(Map.empty[String, Any])
+    // reject routing always persists the annotated chain; `cache` is the
+    // one accepted value, kept so configs that spell it still parse
+    rejM.get("materialize").map(_.toString).filter(_ != "cache").foreach { v =>
+      throw new IllegalArgumentException(
+        s"executor.rejected_samples.materialize: only `cache` is supported, got `$v` " +
+          "(the `recompute` mode was removed; the annotated chain is always persisted)")
+    }
     val executor = ExecutorConf(
       maxSamples = execM.get("max_samples").map(_.asInstanceOf[Number].longValue()),
       rejectedEnabled = rejM.get("enabled").exists(_.asInstanceOf[Boolean]),
@@ -109,7 +109,6 @@ object PipelineConf {
       reportPath = metM.get("report_path").map(_.toString),
       reportPublishPath = metM.get("publish_path").map(_.toString),
       checkpointPath = ckptM.get("path").map(_.toString),
-      rejectedMaterialize = rejM.get("materialize").map(_.toString).getOrElse("cache"),
       metricsTimed = metM.get("timed").exists(_.asInstanceOf[Boolean]))
 
     PipelineConf(

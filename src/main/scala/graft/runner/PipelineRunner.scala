@@ -129,8 +129,9 @@ object PipelineRunner {
     // Batch resume (executor.checkpoint.path): prune input files already
     // committed by previous runs; record this run's file set on success.
     // File-granular — filters/refiners compose exactly across resumes;
-    // GLOBAL dedup state is per-increment in batch mode (use streaming
-    // mode's stateful dedup for cross-increment state).
+    // GLOBAL dedup state is per-increment here (cross-increment dedup
+    // is StreamingCuration.nearDedupForeachBatch, whose epoch-store
+    // prior carries it).
     val ckpt = conf.executor.checkpointPath
     val thisRunFiles: Seq[String] = ckpt match {
       case Some(cp) =>
@@ -233,18 +234,15 @@ object PipelineRunner {
     }
 
     if (rejects) {
-      // Both filtered writes come from the one annotated lineage; the
-      // reject write is a single parquet append partitioned by the
-      // rejecting operator. materialize=cache persists the chain once
-      // (right for compute-heavy chains); materialize=recompute trades a
-      // second source scan for zero cache storage (right when caching
-      // the full annotated frame costs more than re-scanning).
-      val cache = conf.executor.rejectedMaterialize != "recompute"
-      val annotated = if (cache) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+      // Both filtered writes come from the one annotated lineage, which
+      // is persisted once so the second write does not rescan the
+      // source; the reject write is a single parquet append partitioned
+      // by the rejecting operator.
+      val annotated = df.persist(StorageLevel.MEMORY_AND_DISK)
       try {
         writer(Disposition.passed(annotated)) // fills every observation
         RejectedWriter.writeAll(Disposition.rejected(annotated), outputPath, tableName)
-      } finally if (cache) annotated.unpersist()
+      } finally annotated.unpersist()
     } else {
       writer(df) // the one action — fills every observation
     }

@@ -9,8 +9,10 @@ import org.apache.spark.sql.SparkSession
   * within a shard), mapped to Spark's unit of batch work: a run records
   * which source files it fully processed and committed; a resumed run
   * plans only the remaining files, so `output(append) ∪ manifest` makes
-  * kill-and-resume equal a one-shot run. (Streaming mode has real
-  * offset checkpointing; this is the batch CLI twin.)
+  * kill-and-resume equal a one-shot run. Dedup state does not carry
+  * across runs; cross-increment dedup is
+  * [[graft.streaming.StreamingCuration.nearDedupForeachBatch]], whose
+  * epoch-store prior carries it between triggers.
   *
   * Layout: `{path}/processed/part-*.txt`, one absolute file URI per
   * line. Each successful run commits ONE part via a hidden temp file +

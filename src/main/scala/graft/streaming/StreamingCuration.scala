@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.StructType
   *
   *  - layout: one child per micro-batch, `dir/epoch=N` ([[epochDir]]);
   *  - commit marker: an epoch counts only once its child holds the
-  *    writer's `_SUCCESS` ([[committedEpochs]]) — a crash mid-write
+  *    writer's `_SUCCESS` ([[hasCommittedEpoch]]) — a crash mid-write
   *    leaves `_temporary` debris, never a half-read epoch;
   *  - overwrite per epoch: a trigger writes its epoch with OVERWRITE,
   *    so a crash-replayed epoch replaces its own partial write instead
@@ -34,12 +34,8 @@ import org.apache.spark.sql.types.StructType
   *  - the current epoch is excluded on read: a replay sees exactly the
   *    pre-epoch state and re-derives the same result, instead of
   *    matching against (and dropping) its own earlier partial write.
-  *    Accumulating stores read every committed epoch but the current
-  *    one ([[committedPrior]]). Cumulative-snapshot stores read ONE
-  *    snapshot: an idempotent fold takes the newest committed epoch
-  *    EXCLUDING the current one ([[latestCommittedEpoch]]); a
-  *    non-idempotent fold takes the newest STRICTLY BELOW it
-  *    ([[latestCommittedEpochBelow]]).
+  *    A store reads every committed epoch but the current one
+  *    ([[committedPrior]]).
   */
 object StreamingCuration {
   import org.apache.hadoop.fs.Path
@@ -49,19 +45,18 @@ object StreamingCuration {
   /** The store child of epoch `e` — every epoch-store read and write. */
   private def epochDir(dir: String, e: Long): String = s"$dir/$EpochPrefix$e"
 
-  /** The committed epochs of the store at `dir` (its [[epochDir]]
-    * children holding `_SUCCESS`), or Nil when `dir` does not exist.
+  /** Whether the store at `dir` holds a committed epoch: an
+    * [[epochDir]] child holding `_SUCCESS`. False when `dir` does not
+    * exist.
     */
-  private def committedEpochs(spark: SparkSession, dir: String): Seq[Long] = {
+  private def hasCommittedEpoch(spark: SparkSession, dir: String): Boolean = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Nil
-    else fs.listStatus(path).toSeq.flatMap { st =>
+    fs.exists(path) && fs.listStatus(path).exists { st =>
       val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith(EpochPrefix) &&
-          fs.exists(new Path(st.getPath, "_SUCCESS")))
-        name.stripPrefix(EpochPrefix).toLongOption
-      else None
+      st.isDirectory && name.startsWith(EpochPrefix) &&
+        name.stripPrefix(EpochPrefix).toLongOption.nonEmpty &&
+        fs.exists(new Path(st.getPath, "_SUCCESS"))
     }
   }
 
@@ -77,7 +72,7 @@ object StreamingCuration {
     */
   private[graft] def committedPrior(spark: SparkSession, dir: String,
       epoch: Long): Option[DataFrame] =
-    if (committedEpochs(spark, dir).isEmpty) None
+    if (!hasCommittedEpoch(spark, dir)) None
     else {
       val path = new Path(dir)
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -105,28 +100,6 @@ object StreamingCuration {
           if (hasDataFile(path)) throw e else None
       }
     }
-
-  /** Newest committed epoch STRICTLY BELOW `epoch` — the read side of a
-    * cumulative store whose fold is NOT idempotent (exact integer adds):
-    * a sequential stream reads epoch−1 exactly like
-    * [[latestCommittedEpoch]] would, but a fresh-checkpoint restart that
-    * renumbers from 0 over an existing store must NOT fold its replayed
-    * batch into a HIGHER stale snapshot that already contains it —
-    * epochs above the new stream's head are dead retention,
-    * re-accumulated as the new run overtakes and overwrites them, never
-    * read.
-    */
-  private[graft] def latestCommittedEpochBelow(spark: SparkSession,
-      dir: String, epoch: Long): Option[Long] =
-    committedEpochs(spark, dir).filter(_ < epoch).maxOption
-
-  /** Newest committed epoch other than `excluding` — the read side of a
-    * cumulative store whose fold is IDEMPOTENT (HLL register max), so
-    * re-folding from a higher stale snapshot republishes the same state.
-    */
-  private[graft] def latestCommittedEpoch(spark: SparkSession, dir: String,
-      excluding: Long): Option[Long] =
-    committedEpochs(spark, dir).filter(_ != excluding).maxOption
 
   /** One trigger of a prior-dedup twin: `selfDedup` the batch, then —
     * when the store holds a committed prior — drop what `againstPrior`
@@ -387,7 +360,7 @@ object StreamingCuration {
     * of re-reading the whole history, and partition pruning does the
     * skipping at the file level. `maxCellSize` (r17) is the hot-cell
     * first-cap: per cell, admission = prior admitted members + id rank
-    * in this batch ≤ cap (the anchor miner's admission discipline);
+    * in this batch ≤ cap ([[admitFirstCap]]);
     * first-cap membership is prefix-stable under ordered arrival, so
     * the per-trigger union still equals the one-shot batch
     * [[graft.operators.vector.ProbedCosineDedup]] under the same cap —
@@ -482,298 +455,6 @@ object StreamingCuration {
     }
   }
 
-  /** Streaming ANCHOR-PAIR mining (r16, VERDICT r15 #6) — the
-    * incremental twin of the OR-amplified candidate tier: new vectors
-    * landing across triggers mine co-bucket anchor pairs against the
-    * FROZEN band state. Band centering stats come from `refCorpus` ONCE
-    * at setup ([[graft.operators.vector.AnnSearch.bandStatsOf]] —
-    * driver-side literals, so assignment is arrival-invariant and
-    * nothing recaches on append, the BigramLm.freeze lesson); the prior
-    * store accumulates each trigger's capped banded rows. Per trigger:
-    * assign the batch under the frozen stats, admit rows into each
-    * (band, bucket) only up to `maxBucketSize` TOTAL members
-    * (first-cap: a bucket closes once full — membership is
-    * prefix-stable under appends, which is exactly what makes the
-    * per-trigger union equal the one-shot batch
-    * [[graft.operators.vector.AnnSearch.anchorCandidatesFirstCap]] when
-    * ids arrive in order; StreamingSpec pins it), mine pairs of the
-    * admitted rows against prior ∪ admitted (cosine ≥ `threshold`,
-    * deduped across bands, `(least, greatest)`-normalized), and write
-    * both epoch stores (object doc) — a replayed epoch replaces its own
-    * output, never duplicates.
-    */
-  def anchorMiningForeachBatch(
-      stream: DataFrame,
-      refCorpus: DataFrame,
-      outDir: String,
-      priorDir: String,
-      vecCol: String = "embedding",
-      idCol: String = "id",
-      bands: Seq[Seq[Int]] = (0 until 4).map(b => 4 * b until 4 * (b + 1)),
-      maxBucketSize: Int = 1000,
-      threshold: Double = 0.8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.vector.AnnSearch
-    require(maxBucketSize > 0, "maxBucketSize is required")
-    val stats = AnnSearch.bandStatsOf(refCorpus, vecCol, bands)
-    stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val banded = AnnSearch.bandedFrozen(batch, vecCol, idCol, bands, stats)
-      // the excluded current epoch matters most here: a replay that saw
-      // its own partial write would count its rows against the cap,
-      // reject them all, and the overwrite would DROP them from the store
-      val prior = committedPrior(batch.sparkSession, priorDir, epoch) match {
-        case Some(p) => p.select(col(idCol), col(vecCol), col("_band"), col("_bk"))
-        case None    => banded.limit(0)
-      }
-      val kept = admitFirstCap(banded, prior, Seq("_band", "_bk"), idCol,
-        maxBucketSize).persist()
-      try {
-        kept.count() // materialize once; pairs + the store write consume it
-        val newSide = kept.select(col("_band"), col("_bk"),
-          col(idCol).as("_nb"), col(vecCol).as("_vb"))
-        val oldSide = prior.unionByName(kept).select(col("_band"), col("_bk"),
-          col(idCol).as("_na"), col(vecCol).as("_va"))
-        val pairs = oldSide.join(newSide, Seq("_band", "_bk"))
-          .filter(col("_na") =!= col("_nb"))
-          .withColumn("_cos",
-            graft.functions.VectorFunctions.cosine(col("_va"), col("_vb")))
-          .filter(col("_cos") >= threshold)
-          .select(least(col("_na"), col("_nb")).as("a"),
-            greatest(col("_na"), col("_nb")).as("b"), col("_cos").as("cosine"))
-          .dropDuplicates("a", "b")
-        pairs.write.mode("overwrite").parquet(epochDir(outDir, epoch))
-        kept.write.mode("overwrite").parquet(epochDir(priorDir, epoch))
-      } finally kept.unpersist()
-      ()
-    }
-  }
-
-  /** Streaming CDC upsert — the table-maintenance twin of the batch
-    * [[graft.operators.table.CdcMerge]]: each micro-batch nets its own
-    * changes (latest per key by `(tsCol, seqCol)`), folds them into the
-    * versioned snapshot (delete op removes the key, upsert sets the
-    * value, untouched keys carry over), and publishes the new snapshot
-    * as `snapshot=<epoch>` under `snapshotDir` with a `_LATEST` pointer
-    * file written last — readers follow the pointer, so a crash between
-    * writes leaves the previous snapshot fully intact (write-ahead
-    * publish, the lakehouse commit shape in miniature). Restart safety:
-    * checkpointed source offsets + epoch-named snapshot dirs make the
-    * fold idempotent per epoch.
-    */
-  def cdcUpsertForeachBatch(
-      stream: DataFrame,
-      snapshotDir: String,
-      keyCol: String,
-      tsCol: String,
-      seqCol: String,
-      opCol: String,
-      deleteOp: String,
-      payloadCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val cdc = new graft.operators.table.CdcMerge(
-      keyCol, tsCol, seqCol, opCol, deleteOp, payloadCol)
-    stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val spark = batch.sparkSession
-      val root = new org.apache.hadoop.fs.Path(snapshotDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val latestPtr = new org.apache.hadoop.fs.Path(root, "_LATEST")
-      val base: DataFrame =
-        if (!fs.exists(latestPtr))
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField(keyCol,
-                batch.schema(keyCol).dataType),
-              org.apache.spark.sql.types.StructField("value",
-                batch.schema(payloadCol).dataType))))
-        else {
-          val in = fs.open(latestPtr)
-          val prev = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-          spark.read.parquet(s"$snapshotDir/$prev").select(col(keyCol), col("value"))
-        }
-      val merged = cdc.merge(base, batch, baseValueCol = "value")
-        .select(col(keyCol), col("value"))
-      val name = f"snapshot=$epoch%012d"
-      merged.write.mode("overwrite").parquet(s"$snapshotDir/$name")
-      val out = fs.create(latestPtr, true)
-      try out.write(name.getBytes("UTF-8")) finally out.close()
-      ()
-    }
-  }
-
-  /** Streaming CARDINALITY — per-group HLL registers accumulated across
-    * triggers. Each trigger sketches its OWN batch
-    * ([[graft.functions.HllSketch]] registers, one row per group),
-    * merges with the NEWEST committed prior snapshot (element-wise
-    * register max), and OVERWRITEs the epoch's partition with the
-    * CUMULATIVE result — so a trigger reads ONE snapshot regardless of
-    * stream age (per-trigger cost is O(groups · 2^p), never O(epochs);
-    * old partitions are retention, deletable any time). Per-register
-    * max is batch-order invariant AND idempotent, so (a) the last
-    * trigger's published estimates equal the one-shot batch sketch
-    * EXACTLY (StreamingSpec pins double equality, not approximation)
-    * and (b) a crash-replayed epoch overwrites its own partial
-    * partition and re-folds from the newest OTHER committed snapshot
-    * ([[latestCommittedEpoch]]), republishing the same state even when
-    * that snapshot is a higher stale one — the replay guarantee the dedup twins get from id
-    * anti-joins falls out of the algebra here. State per group is 2^p
-    * bytes regardless of stream length: the canonical streaming-sketch
-    * shape (a keyed-state distinct count would hold every key ever
-    * seen).
-    */
-  def hllCardinalityForeachBatch(
-      stream: DataFrame,
-      outDir: String,
-      storeDir: String,
-      keyCol: String,
-      groupCol: String,
-      p: Int = 12): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.functions.{HashFunctions, HllSketch}
-    stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val spark = batch.sparkSession
-      val regs = batch.groupBy(col(groupCol))
-        .agg(HllSketch.hllRegisters(
-          HashFunctions.portableHash64(col(keyCol)), p).as("regs"))
-      val prior = latestCommittedEpoch(spark, storeDir, excluding = epoch)
-        .map(e => spark.read.parquet(epochDir(storeDir, e)))
-      val merged = (prior match {
-        case Some(snap) => snap.select(col(groupCol), col("regs")).unionByName(regs)
-          .groupBy(col(groupCol))
-          .agg(HllSketch.hllMergeRegistersAgg(col("regs"), p).as("regs"))
-        case None => regs
-      }).persist() // consumed twice: snapshot write + estimate publish
-      try {
-        merged.write.mode("overwrite").parquet(epochDir(storeDir, epoch))
-        merged.select(col(groupCol),
-            round(HllSketch.estimateRegisters(col("regs"), p), 6).as("estimate"))
-          .write.mode("overwrite").parquet(epochDir(outDir, epoch))
-      } finally merged.unpersist()
-      ()
-    }
-  }
-
-  /** Streaming PCA — EXACT moment accumulation across triggers (the
-    * incremental-fit twin of [[graft.operators.vector.Pca]]). Each
-    * trigger runs one distributed moment pass over its OWN batch
-    * ([[graft.operators.vector.VectorMomentsAgg]] — n, per-dim sums,
-    * upper-triangle products, all exact BIGINTs), folds it into the
-    * NEWEST committed cumulative snapshot with `addExact` on the driver
-    * (the snapshot is ONE row of `1 + d + d(d+1)/2` longs — 17 KB at
-    * d = 64, so the fold is O(d²) driver work regardless of stream
-    * age), OVERWRITEs the epoch's snapshot partition, and publishes the
-    * epoch's fitted model (component rows + eigenvalues + offsets) to
-    * the epoch's child of `outDir`. Because integer addition commutes
-    * and the fit is deterministic from the moments, the published model
-    * after trigger N equals a batch [[graft.operators.vector.Pca.fit]]
-    * over the union
-    * of all batches BIT-FOR-BIT (StreamingSpec pins double equality) —
-    * and a crash-replayed epoch overwrites its own partial partition
-    * and re-folds from the newest snapshot STRICTLY BELOW it
-    * ([[latestCommittedEpochBelow]] — not merely self-excluding: the
-    * additive fold is not idempotent, so a fresh-checkpoint restart
-    * renumbering from 0 must also never fold a replayed batch into a
-    * higher stale snapshot that already contains it), so any replay
-    * republishes identical state instead of double-counting the
-    * batch. This is the 100 TB PCA run shape: the corpus is never
-    * rescanned — each epoch pays one moment pass over its OWN data and
-    * the refit folds tiny artifacts.
-    */
-  def pcaMomentsForeachBatch(
-      stream: DataFrame,
-      outDir: String,
-      storeDir: String,
-      vecCol: String,
-      d: Int,
-      q: Int = 8,
-      scale: Long = graft.operators.vector.Pca.DefaultScale): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.vector.Pca
-    stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val spark = batch.sparkSession
-      import spark.implicits._
-      val b = Pca.moments(batch, vecCol, d, scale).head()
-      val batchRow = (b.getLong(0), b.getSeq[Long](1), b.getSeq[Long](2))
-      // strictly-below, NOT merely self-excluding: the additive fold is
-      // not idempotent, and a fresh-checkpoint restart renumbering from
-      // epoch 0 over an existing store must never fold its replayed
-      // batch into a higher stale snapshot that already contains it
-      val prior = latestCommittedEpochBelow(spark, storeDir, epoch)
-        .map { e =>
-          val r = spark.read.parquet(epochDir(storeDir, e)).head()
-          // getAs returns a mutable ArraySeq at runtime — .toSeq before
-          // it crosses into the immutable-Seq-typed merge
-          (r.getAs[Long]("n"),
-            r.getAs[scala.collection.Seq[Long]]("sums").toSeq,
-            r.getAs[scala.collection.Seq[Long]]("prods").toSeq)
-        }
-      val (n, sums, prods) =
-        Pca.mergeMomentRows(prior.toSeq :+ batchRow, d)
-      Seq((n, sums.toSeq, prods.toSeq)).toDF("n", "sums", "prods")
-        .coalesce(1).write.mode("overwrite").parquet(epochDir(storeDir, epoch))
-      // the epoch's model artifact: q rows (k, eigenvalue, offset,
-      // component). A stream that has seen zero fittable vectors
-      // publishes an EMPTY (schema-complete) model — the no-model
-      // signal, never a fit error
-      val model =
-        if (n == 0L) Seq.empty[(Int, Double, Double, Seq[Double])]
-        else {
-          val m = Pca.fitFromMoments(n, sums, prods, d, q, scale)
-          m.components.indices.map(k =>
-            (k, m.eigenvalues(k), m.offsets(k), m.components(k).toSeq))
-        }
-      model.toDF("k", "eigenvalue", "offset", "component")
-        .coalesce(1).write.mode("overwrite").parquet(epochDir(outDir, epoch))
-      ()
-    }
-  }
-
-  /** Event-time tumbling-window counts with a watermark (late data beyond
-    * `watermark` dropped) — the streaming twin of the q6_events_hourly
-    * batch query in [[graft.queries.Relational]].
-    */
-  def hourlyEventCounts(events: DataFrame, tsCol: String, typeCol: String,
-      watermark: String = "2 hours"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), "1 hour"), col(typeCol))
-      .agg(count(lit(1)).as("n_events"))
-
-  /** Event-time gap sessionization with a watermark — the streaming
-    * twin of the batch [[graft.operators.events.Sessionize]] (same gap
-    * semantics via Spark's native `session_window`: a session closes
-    * once the watermark passes its end + gap). Emits one row per
-    * closed session: user, window start/end, n_events, sum_value.
-    * State is per (user, open session) and bounded by the watermark —
-    * the scale posture Structured Streaming is built for.
-    */
-  def sessionizeStream(events: DataFrame, tsCol: String, userCol: String,
-      valueCol: String, gap: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(userCol))
-      .agg(count(lit(1)).as("n_events"), sum(col(valueCol)).as("sum_value"))
-      .select(col(userCol), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("sum_value"))
-
-  /** Stream-stream attribution join — the streaming twin of the batch
-    * [[graft.operators.events.AsofJoin]]/[[graft.operators.events.IntervalJoinBucketed]]
-    * family: every left event (purchase) joined to the same key's right
-    * events (clicks) inside the trailing `windowSpec` interval, as a
-    * watermarked stream-stream LEFT OUTER join. Both watermarks bound
-    * the buffered state: a right row is droppable once the watermark
-    * passes its timestamp + window, a left row once its own watermark
-    * passes — Spark derives both bounds from the time-range predicate,
-    * which is why the condition must be expressed on raw event time.
-    * Unmatched left rows emit with nulls AFTER the watermark closes
-    * their window (outer-join completeness needs the lateness bound —
-    * the stream can't know "no click will come" until then).
-    */
-  def attributionJoinStream(left: DataFrame, right: DataFrame,
-      keyCol: String, leftTsCol: String, rightKeyCol: String, rightTsCol: String,
-      window: String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    left.withWatermark(leftTsCol, watermark)
-      .join(right.withWatermark(rightTsCol, watermark),
-        expr(s"$keyCol = $rightKeyCol AND " +
-          s"$rightTsCol >= $leftTsCol - interval $window AND $rightTsCol < $leftTsCol"),
-        "leftOuter")
-
   /** One dedup decision per record: kept = first occurrence of its key,
     * rejects carry the first-seen row's id — provenance identical to the
     * batch Deduplicator's reject annotation.
@@ -812,41 +493,4 @@ object StreamingCuration {
     if (rep != null) state.update(rep)
     out.iterator
   }
-
-  /** [[markSeenWithIds]] with BOUNDED state: a key's first-seen
-    * representative expires after `ttl` of processing-time inactivity
-    * (ProcessingTimeTimeout), so dedup state stays O(keys active within
-    * the TTL window) instead of O(every key ever seen) — the 100 TB
-    * posture for an unbounded stream, where exact forever-dedup state
-    * grows without limit. A key re-arriving after expiry dedups afresh
-    * (standard TTL-dedup semantics). Expiry is evaluated lazily at the
-    * next trigger, per the GroupState contract: a key whose data
-    * arrives in the same trigger its timeout would fire keeps its old
-    * representative for that batch.
-    */
-  def markSeenWithIdsTtl(pairs: org.apache.spark.sql.Dataset[(String, String)],
-      ttl: String): org.apache.spark.sql.Dataset[DedupDecision] = {
-    import pairs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    pairs.groupByKey(_._1)
-      .flatMapGroupsWithState[String, DedupDecision](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout)(ttlDedupFunc(ttl))
-  }
-
-  /** The TTL-dedup state transition, exposed for direct unit testing
-    * with `TestGroupState` (driving real processing-time timers through
-    * a live query is nondeterministic: processing-time timeouts make
-    * the engine schedule continuous batches).
-    */
-  private[graft] def ttlDedupFunc(ttl: String)(
-      key: String, rows: Iterator[(String, String)],
-      state: org.apache.spark.sql.streaming.GroupState[String]): Iterator[DedupDecision] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val out = firstSeen(key, rows, state)
-      if (state.exists) state.setTimeoutDuration(ttl)
-      out
-    }
 }

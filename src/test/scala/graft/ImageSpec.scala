@@ -150,7 +150,7 @@ class ImageSpec extends AnyFunSuite {
     val rej = op.rejected(SyntheticImages.df(spark).filter(col("id") <= 57))
     val produced = rej.schema("_rejection_details").dataType
     assert(produced.asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq ==
-      graft.core.Records.rejectionDetailsSchema.fieldNames.toSeq)
+      graft.core.Rejection.DetailsType.fieldNames.toSeq)
   }
 
   test("quality filter keeps/rejects partition the fixture; ERROR rows rejected") {

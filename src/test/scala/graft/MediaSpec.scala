@@ -160,7 +160,6 @@ class MediaSpec extends AnyFunSuite {
 
     // deterministic fake decoder: frame i = first 4 bytes ++ [i]
     val fake = new FrameDecoder {
-      val decoderName = "fake"
       def sample(video: Array[Byte], count: Int): Seq[Array[Byte]] =
         (0 until count).map(i => video.take(4) :+ i.toByte)
     }
@@ -177,7 +176,6 @@ class MediaSpec extends AnyFunSuite {
     // fixture PNG for drawable id (v + i) % 4 — so frame images repeat
     // across videos and phash dedup must collapse them
     val png = new FrameDecoder {
-      val decoderName = "png_fixture"
       def sample(video: Array[Byte], count: Int): Seq[Array[Byte]] = {
         val v = video.head.toLong
         (0 until count).map(i => SyntheticImages.encode((v + i) % 4))

@@ -206,17 +206,15 @@ class RunnerSpec extends AnyFunSuite {
     assert(written.forall(_ > 0.0))
   }
 
-  test("reject routing with materialize=recompute matches the cached path") {
-    val out = java.nio.file.Files.createTempDirectory("graft_rc").toString + "/o"
-    val conf = PipelineConf.fromYaml(yaml(out).replace(
+  test("materialize: recompute is rejected at parse; materialize: cache still parses") {
+    def withMaterialize(v: String): String = yaml("/unused").replace(
       "  rejected_samples:\n    enabled: true",
-      "  rejected_samples:\n    enabled: true\n    materialize: recompute"))
-    assert(conf.executor.rejectedMaterialize == "recompute")
-    val res = PipelineRunner.run(spark, conf)
-    val written = spark.read.parquet(s"$out/docs")
-    val rejected = spark.read.parquet(s"${out}_rejected/docs_rejected")
-    assert(written.count() + rejected.count() == table("documents").count())
-    assert(res.run.output == written.count())
+      s"  rejected_samples:\n    enabled: true\n    materialize: $v")
+    assert(PipelineConf.fromYaml(withMaterialize("cache")).executor.rejectedEnabled)
+    val e = intercept[IllegalArgumentException](
+      PipelineConf.fromYaml(withMaterialize("recompute")))
+    assert(e.getMessage.contains("materialize") && e.getMessage.contains("recompute"),
+      e.getMessage)
   }
 
   test("batch resume: interrupted run + resume equals one-shot run") {

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** §2.9 incremental mode: file-source backpressure, unbounded keyed dedup
-  * state across triggers, operator reuse on streaming frames, and
-  * watermarked event-time windows.
+  * state across triggers, operator reuse on streaming frames, the
+  * foreachBatch dedup twins over epoch-store priors, and batch operators
+  * run unchanged as streaming readouts.
   */
 class StreamingSpec extends AnyFunSuite {
   import TestSpark._
@@ -761,112 +762,26 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("epoch store listing: committed epoch=N children only; below vs excluding") {
-    import java.nio.file.{Files, Path}
-    val dir = Files.createTempDirectory("graft_epochs").resolve("store")
-    def child(name: String, committed: Boolean): Path = {
-      val d = Files.createDirectories(dir.resolve(name))
-      if (committed) Files.createFile(d.resolve("_SUCCESS"))
-      d
-    }
-    Seq("epoch=0", "epoch=1", "epoch=3").foreach(child(_, committed = true))
-    // a crashed epoch: only the writer's _temporary debris, no marker
-    Files.createDirectories(child("epoch=4", committed = false).resolve("_temporary"))
-    // a committed child outside the epoch= layout (read as 7 if the
-    // prefix rule were lost)
-    child("7", committed = true)
-    val d = dir.toString
-    assert(StreamingCuration.latestCommittedEpochBelow(spark, d, 3L) == Some(1L))
-    assert(StreamingCuration.latestCommittedEpoch(spark, d, excluding = 3L) == Some(1L))
-    assert(StreamingCuration.latestCommittedEpoch(spark, d, excluding = 9L) == Some(3L),
-      "epoch=4 (uncommitted) and the non-epoch child must not count")
-    assert(StreamingCuration.latestCommittedEpochBelow(spark, d, 0L).isEmpty)
-    assert(StreamingCuration.latestCommittedEpoch(
-      spark, dir.resolveSibling("absent").toString, excluding = 0L).isEmpty)
-  }
-
-  test("streaming anchor mining: union of per-trigger pairs equals the batch first-cap twin; frozen stats never drift") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.operators.vector.AnnSearch
-    val rnd = new scala.util.Random(777)
-    val vecs = (0L until 120L).map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
-    val all = vecs.toDF("vec_id", "embedding")
-    // the reference corpus (frozen stats source) is a 40-row slice — NOT
-    // the full stream, so drift would be visible if stats weren't frozen
-    val ref = vecs.take(40).toDF("vec_id", "embedding")
-    val bands = Seq(Seq(0, 1, 2), Seq(3, 4, 5))
-    val (cap, t) = (9, 0.1) // small cap: buckets CLOSE mid-stream
-    val base = java.nio.file.Files.createTempDirectory("graft_anchor_stream")
-    val outDir = base.resolve("out").toString
-    val priorDir = base.resolve("prior").toString
-    val mem = MemoryStream[(Long, Array[Float])]
-    val q = StreamingCuration.anchorMiningForeachBatch(
-        mem.toDF().toDF("vec_id", "embedding"), ref, outDir, priorDir,
-        vecCol = "embedding", idCol = "vec_id", bands = bands,
-        maxBucketSize = cap, threshold = t)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try {
-      // id-ordered arrival across THREE triggers (the first-cap contract)
-      val (b1, rest) = vecs.splitAt(40)
-      val (b2, b3) = rest.splitAt(40)
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-      mem.addData(b3: _*); q.processAllAvailable()
-    } finally q.stop()
-    val stats = AnnSearch.bandStatsOf(ref, "embedding", bands)
-    val want = AnnSearch.anchorCandidatesFirstCap(all, "embedding", "vec_id",
-        bands, cap, t, stats)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val got = spark.read.parquet(outDir).select("a", "b", "cosine")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(want.nonEmpty, "vacuous fixture — no anchor pairs at all")
-    assert(got == want,
-      s"stream pairs (${got.size}) must equal batch twin (${want.size}); " +
-        s"sym-diff keys: ${(got.keySet diff want.keySet) union (want.keySet diff got.keySet)}")
-    // the prior store holds exactly the capped membership of the twin
-    val storeN = spark.read.parquet(priorDir).count()
-    val twinN = {
-      import org.apache.spark.sql.expressions.Window
-      AnnSearch.bandedFrozen(all, "embedding", "vec_id", bands, stats)
-        .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(
-          Window.partitionBy(col("_band"), col("_bk")).orderBy(col("vec_id"))))
-        .filter(col("_rn") <= cap).count()
-    }
-    assert(storeN == twinN, s"prior store $storeN vs twin membership $twinN")
-    // the cap actually engaged (buckets closed mid-stream): without it
-    // the membership would be the full banded row count
-    assert(twinN < 120L * bands.length, "cap never engaged — weak fixture")
-    // replay idempotency: epoch 0 re-processed with the SAME rows and
-    // the SAME epoch number (the crash-replay shape) must re-derive the
-    // identical admission and pair set — the prior read excludes the
-    // epoch's own partition, so the replay sees exactly the pre-epoch
-    // state (without the exclusion the replayed rows would count
-    // against the cap, be rejected, and the overwrite would DROP them)
-    val base2 = java.nio.file.Files.createTempDirectory("graft_anchor_replay")
-    val out2 = base2.resolve("out").toString
-    val prior2 = base2.resolve("prior").toString
-    def runEpoch0(ckpt: String): Unit = {
-      val m = MemoryStream[(Long, Array[Float])]
-      val qq = StreamingCuration.anchorMiningForeachBatch(
-          m.toDF().toDF("vec_id", "embedding"), ref, out2, prior2,
-          vecCol = "embedding", idCol = "vec_id", bands = bands,
-          maxBucketSize = cap, threshold = t)
-        .option("checkpointLocation", base2.resolve(ckpt).toString)
-        .start()
-      try { m.addData(vecs.take(40): _*); qq.processAllAvailable() }
-      finally qq.stop()
-    }
-    runEpoch0("ckpt_a")
-    val pairsOnce = spark.read.parquet(out2).select("a", "b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val storeOnce = spark.read.parquet(prior2).count()
-    runEpoch0("ckpt_b") // the replay: same rows, same epoch number
-    val pairsTwice = spark.read.parquet(out2).select("a", "b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairsTwice == pairsOnce, "replayed epoch must re-derive the same pairs")
-    assert(spark.read.parquet(prior2).count() == storeOnce,
-      "replayed epoch must re-derive the same store membership")
+    import java.nio.file.Files
+    val d = Files.createTempDirectory("graft_epochs").resolve("store").toString
+    // a crashed epoch: only the writer's _temporary debris, no marker
+    Files.createDirectories(java.nio.file.Paths.get(d, "epoch=4", "_temporary"))
+    // a committed child with data outside the epoch= layout: if either
+    // the marker rule or the prefix rule were lost, the store would be
+    // read, and its epoch-less data would fail analysis and throw
+    Seq(1L).toDF("v").write.parquet(s"$d/7")
+    assert(StreamingCuration.committedPrior(spark, d, 9L).isEmpty,
+      "epoch=4 (uncommitted) and the non-epoch child must not count")
+    // committed epochs with data read as a prior that excludes only the
+    // current epoch: epochs above it stay visible (excluding, not below)
+    val s = Files.createTempDirectory("graft_epochs").resolve("store").toString
+    Seq(0L, 1L, 3L).foreach(e => Seq(e).toDF("v").write.parquet(s"$s/epoch=$e"))
+    def priorOf(epoch: Long): Set[Long] =
+      StreamingCuration.committedPrior(spark, s, epoch).get
+        .select("v").as[Long].collect().toSet
+    assert(priorOf(1L) == Set(0L, 3L))
+    assert(priorOf(9L) == Set(0L, 1L, 3L))
   }
 
   test("streaming canonical-url dedup: stream kept set equals the batch operator across triggers") {
@@ -927,275 +842,6 @@ class StreamingSpec extends AnyFunSuite {
       val k3 = out.filter(_._1 == "k3")
       assert(k3.count(_._3) == 1 && k3.count(!_._3) == 1)
       assert(k3.forall(_._4 == k3.find(_._3).get._2))
-    } finally q.stop()
-  }
-
-  test("ttl-bounded dedup state: expiry frees the key, re-arrival dedups afresh") {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val fn = StreamingCuration.ttlDedupFunc("1 hours") _
-    // batch 1: first-seen kept, duplicate rejected, TTL timer registered
-    val s1 = TestGroupState.create[String](org.apache.spark.api.java.Optional.empty(),
-      GroupStateTimeout.ProcessingTimeTimeout, batchProcessingTimeMs = 1000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
-    val out1 = fn("k1", Iterator(("k1", "a"), ("k1", "b")), s1).toList
-    assert(out1 == List(
-      StreamingCuration.DedupDecision("k1", "a", kept = true, "a"),
-      StreamingCuration.DedupDecision("k1", "b", kept = false, "a")))
-    assert(s1.get == "a" && s1.getTimeoutTimestampMs.isPresent)
-    // batch 2 within TTL: duplicate still rejected against the stored rep
-    val s2 = TestGroupState.create[String](org.apache.spark.api.java.Optional.of("a"),
-      GroupStateTimeout.ProcessingTimeTimeout, batchProcessingTimeMs = 2000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
-    assert(fn("k1", Iterator(("k1", "c")), s2).toList ==
-      List(StreamingCuration.DedupDecision("k1", "c", kept = false, "a")))
-    // timeout fires: state removed, nothing emitted
-    val s3 = TestGroupState.create[String](org.apache.spark.api.java.Optional.of("a"),
-      GroupStateTimeout.ProcessingTimeTimeout, batchProcessingTimeMs = 9999999L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty(), hasTimedOut = true)
-    assert(fn("k1", Iterator.empty, s3).isEmpty && s3.isRemoved)
-    // post-expiry re-arrival: fresh first-seen with a NEW representative
-    val s4 = TestGroupState.create[String](org.apache.spark.api.java.Optional.empty(),
-      GroupStateTimeout.ProcessingTimeTimeout, batchProcessingTimeMs = 10000000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
-    assert(fn("k1", Iterator(("k1", "c")), s4).toList ==
-      List(StreamingCuration.DedupDecision("k1", "c", kept = true, "c")))
-    assert(s4.get == "c")
-  }
-
-  test("watermarked session windows close by gap and emit on watermark advance") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "value")
-    val q = StreamingCuration.sessionizeStream(events, "ts", "user_id", "value")
-      .writeStream.format("memory").queryName("session_out")
-      .outputMode("append").start()
-    try {
-      def t(s: String) = java.sql.Timestamp.valueOf(s)
-      // user 7: two events 10 min apart (one session), then 50 min gap (new session)
-      mem.addData(
-        (t("2024-06-01 10:00:00"), 7L, 1.0),
-        (t("2024-06-01 10:10:00"), 7L, 2.0),
-        (t("2024-06-01 11:00:00"), 7L, 4.0))
-      q.processAllAvailable()
-      // push the watermark far past every session's end + gap
-      mem.addData((t("2024-06-02 10:00:00"), 99L, 0.0))
-      q.processAllAvailable()
-      mem.addData((t("2024-06-03 10:00:00"), 99L, 0.0))
-      q.processAllAvailable()
-      val rows = spark.table("session_out")
-        .select(col("user_id"), col("n_events"), col("sum_value"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(rows.contains((7L, 2L, 3.0)), s"first session missing from $rows")
-      assert(rows.contains((7L, 1L, 4.0)), s"second session missing from $rows")
-    } finally q.stop()
-  }
-
-  test("stream-stream attribution join matches clicks in the trailing window, outer-emits after watermark") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val pMem = MemoryStream[(java.sql.Timestamp, Long, Long)]
-    val cMem = MemoryStream[(java.sql.Timestamp, Long, Long)]
-    val purchases = pMem.toDF().toDF("ts", "user_id", "p_id")
-    val clicks = cMem.toDF().toDF("cts", "c_user", "click_id")
-    val q = StreamingCuration.attributionJoinStream(
-      purchases, clicks, "user_id", "ts", "c_user", "cts")
-      .select(col("p_id"), col("click_id"))
-      .writeStream.format("memory").queryName("attr_out")
-      .outputMode("append").start()
-    try {
-      def t(s: String) = java.sql.Timestamp.valueOf(s)
-      cMem.addData(
-        (t("2024-06-01 09:30:00"), 7L, 100L),  // inside p1's 1h window
-        (t("2024-06-01 08:30:00"), 7L, 101L),  // too early for p1
-        (t("2024-06-01 09:40:00"), 8L, 102L))  // other user
-      pMem.addData(
-        (t("2024-06-01 10:00:00"), 7L, 1L),
-        (t("2024-06-01 10:00:00"), 9L, 2L))    // user 9: no clicks at all
-      q.processAllAvailable()
-      // advance BOTH watermarks far past the windows so the unmatched
-      // left row is released by the outer join
-      cMem.addData((t("2024-06-02 10:00:00"), 99L, 999L))
-      pMem.addData((t("2024-06-02 10:00:00"), 99L, 99L))
-      q.processAllAvailable()
-      cMem.addData((t("2024-06-03 10:00:00"), 99L, 998L))
-      pMem.addData((t("2024-06-03 10:00:00"), 99L, 98L))
-      q.processAllAvailable()
-      val rows = spark.table("attr_out")
-        .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
-      assert(rows.contains((1L, 100L)), s"in-window click missing: $rows")
-      assert(!rows.contains((1L, 101L)) && !rows.contains((1L, 102L)), rows)
-      assert(rows.contains((2L, -1L)), s"unmatched purchase not outer-emitted: $rows")
-    } finally q.stop()
-  }
-
-  test("watermarked hourly window counts over an event stream") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val events = mem.toDF().toDF("ts", "event_type")
-    val q = StreamingCuration.hourlyEventCounts(events, "ts", "event_type")
-      .writeStream.format("memory").queryName("hourly_out")
-      .outputMode("update").start()
-    try {
-      def t(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2024-06-01 $h%02d:$m%02d:00")
-      mem.addData((t(10, 5), "click"), (t(10, 40), "click"), (t(10, 50), "view"),
-        (t(11, 10), "click"))
-      q.processAllAvailable()
-      val rows = spark.table("hourly_out")
-        .select(col("window.start").cast("string"), col("event_type"), col("n_events"))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-      assert(rows.contains(("2024-06-01 10:00:00", "click", 2L)))
-      assert(rows.contains(("2024-06-01 10:00:00", "view", 1L)))
-      assert(rows.contains(("2024-06-01 11:00:00", "click", 1L)))
-    } finally q.stop()
-  }
-
-  test("streaming hll cardinality: last trigger's estimates equal the one-shot batch sketch exactly; replay never inflates") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.functions.{HashFunctions, HllSketch}
-    val p = 10
-    // overlapping values across triggers: idempotence of the register
-    // max is what keeps re-seen keys from inflating the estimate
-    val b1 = (0L until 400L).map(v => ("a", v)) ++ (0L until 100L).map(v => ("b", v))
-    val b2 = (200L until 700L).map(v => ("a", v)) ++ (50L until 120L).map(v => ("b", v))
-    val b3 = (600L until 900L).map(v => ("a", v))
-    val all = b1 ++ b2 ++ b3
-    val base = java.nio.file.Files.createTempDirectory("graft_hllstream")
-    val outDir = base.resolve("out").toString
-    val storeDir = base.resolve("store").toString
-    def estsOf(df: org.apache.spark.sql.DataFrame): Map[String, Double] =
-      df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    def batchEsts(rows: Seq[(String, Long)]): Map[String, Double] =
-      estsOf(rows.toDF("src", "v").groupBy(col("src"))
-        .agg(round(HllSketch.hllDistinct(
-          HashFunctions.portableHash64(col("v")), p), 6).as("estimate")))
-    // run 1 processes only b1 (epoch 0 commits), then "crashes"
-    val mem = MemoryStream[(String, Long)]
-    val q = StreamingCuration.hllCardinalityForeachBatch(
-        mem.toDF().toDF("src", "v"), outDir, storeDir, keyCol = "v",
-        groupCol = "src", p = p)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try { mem.addData(b1: _*); q.processAllAvailable() } finally q.stop()
-    // reboot with a fresh checkpoint: epoch 0 REPLAYS b1 against the
-    // store that already holds its partial write — the epoch-overwrite
-    // plus max-idempotence must republish the same estimates, not
-    // double-count; the stream then continues with b2/b3
-    val mem2 = MemoryStream[(String, Long)]
-    val q2 = StreamingCuration.hllCardinalityForeachBatch(
-        mem2.toDF().toDF("src", "v"), outDir, storeDir, keyCol = "v",
-        groupCol = "src", p = p)
-      .option("checkpointLocation", base.resolve("ckpt2").toString)
-      .start()
-    try {
-      mem2.addData(b1: _*); q2.processAllAvailable()
-      mem2.addData(b2: _*); q2.processAllAvailable()
-      mem2.addData(b3: _*); q2.processAllAvailable()
-    } finally q2.stop()
-    assert(estsOf(spark.read.parquet(s"$outDir/epoch=0")
-      .select(col("src"), col("estimate"))) == batchEsts(b1),
-      "replayed epoch 0 must republish its own estimates, prior-free")
-    assert(estsOf(spark.read.parquet(s"$outDir/epoch=1")
-      .select(col("src"), col("estimate"))) == batchEsts(b1 ++ b2))
-    // the final published estimates equal the one-shot batch sketch
-    // EXACTLY — register max is batch-order invariant
-    assert(estsOf(spark.read.parquet(s"$outDir/epoch=2")
-      .select(col("src"), col("estimate"))) == batchEsts(all),
-      "stream-final estimates must equal the one-shot batch sketch")
-    // the store holds exactly the three epoch partitions
-    assert(spark.read.parquet(storeDir).select(col("epoch")).distinct()
-      .collect().map(_.getInt(0)).toSet == Set(0, 1, 2))
-  }
-
-  test("streaming pca: epoch-merged exact moments == batch fit bit-for-bit; crash replay republishes identical state") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.operators.vector.Pca
-    val base = java.nio.file.Files.createTempDirectory("graft_pca_stream")
-    val outDir = base.resolve("out").toString
-    val storeDir = base.resolve("store").toString
-    val d = 8; val nc = 3
-    def vec(i: Long): Seq[Double] = (0 until d).map(j =>
-      math.sin(i * 0.7 + j * 1.3) + (if (j % 2 == 0) 0.3 else -0.1) * (i % 5).toDouble)
-    val b1 = (0L until 40L).map(i => (i, vec(i)))
-    val b2 = (40L until 90L).map(i => (i, vec(i)))
-    val b3 = (90L until 120L).map(i => (i, vec(i)))
-    def asTuples(m: Pca.PcaModel): Seq[(Int, Double, Double, Seq[Double])] =
-      m.components.indices.map(k =>
-        (k, m.eigenvalues(k), m.offsets(k), m.components(k).toSeq))
-    def batchModel(rows: Seq[(Long, Seq[Double])]) = asTuples(
-      Pca.fit(rows.toDF("vec_id", "embedding"), "embedding", d, nc))
-    def published(epoch: Int): Seq[(Int, Double, Double, Seq[Double])] =
-      spark.read.parquet(s"$outDir/epoch=$epoch").orderBy(col("k")).collect()
-        .toSeq.map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2),
-          r.getSeq[Double](3).toSeq))
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = StreamingCuration.pcaMomentsForeachBatch(
-        mem.toDF().toDF("vec_id", "embedding"), outDir, storeDir,
-        "embedding", d, nc)
-      .option("checkpointLocation", base.resolve("ckpt").toString).start()
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    // reboot with a FRESH checkpoint over the TWO-epoch store: the new
-    // stream renumbers from 0, so its replayed b1 folds against a store
-    // whose STALE epoch=1 snapshot already contains b1+b2 — the fold
-    // must read strictly-below snapshots only (integer add is NOT
-    // idempotent: folding into the stale higher epoch would silently
-    // double-count b1 and corrupt every later model — this pin is
-    // load-bearing in a way the HLL max twin's is not)
-    val mem2 = MemoryStream[(Long, Seq[Double])]
-    val q2 = StreamingCuration.pcaMomentsForeachBatch(
-        mem2.toDF().toDF("vec_id", "embedding"), outDir, storeDir,
-        "embedding", d, nc)
-      .option("checkpointLocation", base.resolve("ckpt2").toString).start()
-    try {
-      mem2.addData(b1: _*); q2.processAllAvailable()
-      mem2.addData(b2: _*); q2.processAllAvailable()
-      mem2.addData(b3: _*); q2.processAllAvailable()
-    } finally q2.stop()
-    // each epoch's published model equals the batch fit over the union
-    // so far — bit-for-bit (identical integer moments → identical
-    // Jacobi), not approximately
-    assert(published(0) == batchModel(b1),
-      "replayed epoch 0 must republish the prior-free fit")
-    assert(published(1) == batchModel(b1 ++ b2))
-    assert(published(2) == batchModel(b1 ++ b2 ++ b3))
-    // the cumulative snapshot is ONE row per epoch; three epochs live
-    val snaps = spark.read.parquet(storeDir)
-    assert(snaps.select(col("epoch")).distinct().collect()
-      .map(_.getInt(0)).toSet == Set(0, 1, 2))
-    assert(snaps.filter(col("epoch") === 2).count() == 1)
-  }
-
-  test("streaming cdc upsert: snapshots fold per trigger, _LATEST pointer wins") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val snap = java.nio.file.Files.createTempDirectory("graft_cdc_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt").toString
-    // (key, tsMicros, seq, op, value)
-    val mem = MemoryStream[(Long, Long, Long, String, Double)]
-    val changes = mem.toDF().toDF("k", "tsl", "seq", "op", "v")
-      .withColumn("ts", org.apache.spark.sql.functions.timestamp_micros($"tsl")).drop("tsl")
-    val q = StreamingCuration.cdcUpsertForeachBatch(
-        changes, snap, "k", "ts", "seq", "op", "D", "v")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      mem.addData((1L, 10L, 1L, "U", 1.0), (2L, 10L, 1L, "U", 2.0), (2L, 20L, 2L, "U", 2.5))
-      q.processAllAvailable()
-      def snapshot(): Map[Long, Double] = {
-        val ptr = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"$snap/_LATEST")), "UTF-8").trim
-        spark.read.parquet(s"$snap/$ptr")
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      }
-      assert(snapshot() == Map(1L -> 1.0, 2L -> 2.5)) // within-batch netting
-      mem.addData((1L, 30L, 1L, "U", 9.0), (2L, 30L, 1L, "D", 0.0), (3L, 30L, 1L, "U", 3.0))
-      q.processAllAvailable()
-      assert(snapshot() == Map(1L -> 9.0, 3L -> 3.0)) // update, delete, insert
     } finally q.stop()
   }
 
