@@ -5,9 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Blocklist filtering as a broadcast join — the scale form of
-  * [[UrlFilter]]'s inlined-predicate blocklist (its scaladoc documents
-  * the cutover): a multi-million-domain blocklist can't compile into a
-  * predicate chain, but it broadcasts fine. A row is DROPPED when its
+  * [[UrlFilter]]'s in-kernel hash-set blocklist (its scaladoc documents
+  * the cutover): a multi-million-domain set is too large to ship inside
+  * every task's plan, but it broadcasts fine. A row is DROPPED when its
   * URL's domain OR ANY PARENT DOMAIN appears in the blocklist
   * (subdomain semantics of url_filter.py:217-234): the row's domain is
   * exploded into its suffix chain (a.b.c → a.b.c, b.c, c) and

@@ -17,13 +17,23 @@ import org.apache.spark.sql.functions._
   *      high-quality source (url_filter.py:236-253).
   * Rows with a missing/empty URL are KEPT (url_filter.py:296-299).
   *
-  * All-Catalyst implementation (regexp + array exprs, whole-stage codegen).
+  * `keep` evaluates one whole-stage-codegen'd kernel,
+  * [[graft.plans.kernels.UrlDrop]]: one host extraction, hash-set domain
+  * tests and one longest-first lexicon scan per row. [[declarativeKeep]]
+  * and [[score]] are the same decision as regexp and array Column
+  * algebra. They are the kernel's twin: `TextKernelPropertySpec` pins
+  * the kernel to them, the `url_score` gate checks `score` against the
+  * DuckDB twin, and they document the semantics. They are not the run
+  * path because they re-extract the host once per domain test, inside
+  * CASE/OR branches that subexpression elimination does not reach, and
+  * score through interpreted higher-order functions.
   * Domain = lowercased host extracted by regex (no ports/userinfo in scope).
   *
-  * Scale note: the blocklist is inlined as predicates, which compiles to a
-  * codegen'd chain — right for lists up to a few thousand entries. A
+  * Scale note: the blocklist is a hash set inside the kernel, shipped
+  * with the plan to every task — right for lists up to ~10^5 entries. A
   * multi-million-domain blocklist should instead become a broadcast
-  * left_anti join on the domain-suffix set (same semantics, one broadcast).
+  * left_anti join on the domain-suffix set ([[DomainBlocklistFilter]],
+  * same semantics, one broadcast).
   */
 final class UrlFilter(
     blockedDomains: Seq[String] = Nil,
@@ -62,6 +72,14 @@ final class UrlFilter(
 
   def keep(df: DataFrame): Column = {
     val url = col(urlCol)
+    val quality = if (excludeQualitySources) qualitySourceDomains else Nil
+    when(url.isNull || url === "", lit(true)).otherwise(!graft.plans.kernels.url_drop(
+      url, hostRegex, blockedDomains, quality, checkSubdomains, wordWeights, wordPattern,
+      scoreThreshold))
+  }
+
+  /** The kernel's declarative twin: the same verdict as Column algebra. */
+  def declarativeKeep(url: Column): Column = {
     val domain = domainOf(url)
     val blocked = inDomainSet(domain, blockedDomains)
     val scored = score(url) >= scoreThreshold

@@ -2,8 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, ExpressionInfo,
+  ExprId, GetStructField, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, Join, LogicalPlan,
+  Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
@@ -28,6 +30,10 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   *      (`spark.graft.failOnVectorCartesian=true`) because the
   *      query-side-small brute-force ANN tiers cross-join embeddings
   *      legitimately.
+  *
+  *   3. [[ReuseExposedKernel]], an optimizer rule that makes a Filter or
+  *      Project read a kernel result an earlier operator already exposed
+  *      as a column, instead of evaluating the kernel again.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -83,6 +89,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         } else true).toAggregateExpression()))
 
     ext.injectOptimizerRule(session => new VectorCartesianGuard(session))
+    ext.injectOptimizerRule(_ => ReuseExposedKernel)
   }
 }
 
@@ -125,4 +132,79 @@ class VectorCartesianGuard(session: org.apache.spark.sql.SparkSession)
     }
     plan
   }
+}
+
+/** Each kernel once per row across operator boundaries. Where a Filter
+  * condition or a Project list evaluates a deterministic
+  * [[graft.plans.kernels]] expression, or a struct field of one, and a
+  * descendant Project already exposes an attribute that is
+  * `semanticEquals` to it after alias substitution, the expression is
+  * replaced by that attribute — provided the attribute still reaches the
+  * node (it is in the child's output). `c4_quality_filter` after
+  * `c4_clean` is the case in point: `c4_keep := _c4.keep` over
+  * `_c4 := c4signals(coalesce(text, ''), 5, 3)` equals the filter's
+  * `c4signals(coalesce(text, ''), 5, 3).keep`, so the filter reads
+  * `c4_keep` and the kernel runs once.
+  *
+  * The search walks down through Project, Filter and CollectMetrics,
+  * which pass columns through unchanged (the runner's per-operator
+  * observations are CollectMetrics), and sees the stacked Projects as
+  * well as the form CollapseProject merges. Expression ids keep it
+  * sound: a kernel over a different attribute, or with different
+  * parameters, is not equal. Plans without kernels exit early.
+  *
+  * Disposition mode (reject routing) is out of scope: there each
+  * refiner column is `when(alive, c)`, which differs from `c` on dead
+  * rows, so it is not equal and the rule does not fire.
+  */
+object ReuseExposedKernel extends Rule[LogicalPlan] {
+
+  private def isKernel(e: Expression): Boolean =
+    e.getClass.getName.startsWith("graft.plans.kernels$")
+
+  private def reusable(e: Expression): Boolean = e.deterministic && (e match {
+    case GetStructField(k, _, _) => isKernel(k)
+    case k => isKernel(k)
+  })
+
+  /** Rewrites `exprs` to read the attributes of `child` that expose the
+    * same kernel results, or returns None when nothing matches.
+    */
+  private def rewrite[E <: Expression](exprs: Seq[E], child: LogicalPlan): Option[Seq[E]] = {
+    val defs = scala.collection.mutable.Map.empty[ExprId, Expression]
+    def walk(p: LogicalPlan): Unit = p match {
+      case Project(list, c) =>
+        list.foreach { case a: Alias => defs(a.exprId) = a.child; case _ => () }
+        walk(c)
+      case Filter(_, c) => walk(c)
+      case c: CollectMetrics => walk(c.child)
+      case _ => ()
+    }
+    walk(child)
+    if (defs.isEmpty) return None
+    def expand(e: Expression, seen: Set[ExprId] = Set.empty): Expression = e.transformDown {
+      case a: Attribute if defs.contains(a.exprId) && !seen(a.exprId) =>
+        expand(defs(a.exprId), seen + a.exprId)
+    }
+    val exposed = child.output.flatMap(a =>
+      defs.get(a.exprId).map(d => expand(d, Set(a.exprId)) -> a))
+      .filter { case (d, _) => d.exists(isKernel) }
+    if (exposed.isEmpty) return None
+    var hit = false
+    val out = exprs.map(_.transformDown {
+      case k if reusable(k) =>
+        val ek = expand(k)
+        exposed.find(_._1.semanticEquals(ek)).map { case (_, a) => hit = true; a }.getOrElse(k)
+    }.asInstanceOf[E])
+    if (hit) Some(out) else None
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (!plan.exists(_.expressions.exists(_.exists(isKernel)))) plan
+    else plan.transformUp {
+      case f @ Filter(cond, child) if cond.exists(isKernel) =>
+        rewrite(Seq(cond), child).map(c => f.copy(condition = c.head)).getOrElse(f)
+      case p @ Project(list, child) if list.exists(_.exists(isKernel)) =>
+        rewrite[NamedExpression](list, child).map(l => p.copy(projectList = l)).getOrElse(p)
+    }
 }

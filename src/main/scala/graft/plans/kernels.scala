@@ -2028,6 +2028,91 @@ object kernels {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
+  /** The RefinedWeb URL verdict of [[graft.operators.text.UrlFilter]] in
+    * one pass per row: true when the row is DROPPED. Equal to the
+    * operator's declarative predicate for every non-null, non-empty URL
+    * (the wrapper keeps null and empty URLs):
+    *
+    *  - host: one `find()` of `hostRegex` on the ORIGINAL url, group 1
+    *    (`""` when absent, as `regexp_extract`), then lowered through the
+    *    same `CollationSupport.Lower` call as Catalyst's `lower` under the
+    *    session's ICU flag. Lowering first would differ: a leading Kelvin
+    *    sign would lower to `k` and start a scheme match;
+    *  - blocked / quality source: the host, and with `checkSubdomains`
+    *    every suffix after a `.`, looked up in a hash set — equal to
+    *    `host = d OR host ends with '.' + d` over the list;
+    *  - lexicon score: one `find()` loop of the longest-first
+    *    `wordPattern` over `lower(url)` (group 1, as
+    *    `regexp_extract_all`), folding the match count, the max weight
+    *    (`array_max` order, NaN largest, first max kept) and the
+    *    left-to-right sum; 0 with no match, else
+    *    `least(max·0.8 + least(sum/3, 0.2), 1.0)`, compared with `>=`
+    *    in Spark's double order.
+    *
+    * The declarative form re-extracted the host once per domain test
+    * inside CASE/OR branches that subexpression elimination does not
+    * reach, and scored through interpreted higher-order functions.
+    */
+  case class UrlDrop(child: Expression, hostRegex: String,
+      blocked: Seq[String], quality: Seq[String], checkSubdomains: Boolean,
+      wordWeights: Map[String, Double], wordPattern: String, scoreThreshold: Double)
+      extends UnaryExpression with UnaryRefCodegen {
+    override def dataType: DataType = BooleanType
+    @transient private lazy val hostRe = java.util.regex.Pattern.compile(hostRegex)
+    @transient private lazy val wordRe =
+      if (wordWeights.isEmpty) null else java.util.regex.Pattern.compile(wordPattern)
+    @transient private lazy val useIcu = org.apache.spark.sql.internal.SQLConf.get.getConf(
+      org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+    private val blockedSet = new java.util.HashSet[String](blocked.size * 2)
+    blocked.foreach(blockedSet.add)
+    private val qualitySet = new java.util.HashSet[String](quality.size * 2)
+    quality.foreach(qualitySet.add)
+    private val weights = new java.util.HashMap[String, java.lang.Double]()
+    wordWeights.foreach { case (w, x) => weights.put(w, java.lang.Double.valueOf(x)) }
+
+    private def lowerOf(s: org.apache.spark.unsafe.types.UTF8String) =
+      org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(s,
+        org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID, useIcu)
+
+    private def inSet(host: String, set: java.util.HashSet[String]): Boolean =
+      !set.isEmpty && (set.contains(host) || checkSubdomains && {
+        var dot = host.indexOf('.')
+        while (dot >= 0 && !set.contains(host.substring(dot + 1))) dot = host.indexOf('.', dot + 1)
+        dot >= 0
+      })
+
+    private def cmp(a: Double, b: Double): Int =
+      org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
+    private def least(a: Double, b: Double): Double = if (cmp(b, a) < 0) b else a
+
+    private def score(url: org.apache.spark.unsafe.types.UTF8String): Double =
+      if (wordRe == null) 0.0
+      else {
+        val m = wordRe.matcher(lowerOf(url).toString)
+        var n = 0
+        var max = 0.0
+        var sum = 0.0
+        while (m.find()) {
+          val w = weights.get(m.group(1))
+          val x = if (w == null) 0.0 else w.doubleValue()
+          if (n == 0 || cmp(x, max) > 0) max = x
+          sum += x
+          n += 1
+        }
+        if (n == 0) 0.0 else least(max * 0.8 + least(sum / 3.0, 0.2), 1.0)
+      }
+
+    override def nullSafeEval(v: Any): Any = {
+      val url = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+      val m = hostRe.matcher(url.toString)
+      val raw = if (m.find() && m.group(1) != null) m.group(1) else ""
+      val host = lowerOf(org.apache.spark.unsafe.types.UTF8String.fromString(raw)).toString
+      java.lang.Boolean.valueOf(inSet(host, blockedSet) || inSet(host, qualitySet) ||
+        cmp(score(url), scoreThreshold) >= 0)
+    }
+    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  }
+
   // Column wrappers
   def bpe_token_count(text: Column, merges: Seq[(String, String)]): Column =
     expr2col(BpeTokenCount(colExpr(text), merges))
@@ -2146,6 +2231,13 @@ object kernels {
       colExpr(org.apache.spark.sql.functions.coalesce(
         text, org.apache.spark.sql.functions.lit(""))),
       minWordsPerLine, minSentences))
+  /** UrlFilter's drop verdict; NULL url gives NULL (the operator keeps
+    * null and empty URLs ahead of it). */
+  def url_drop(url: Column, hostRegex: String, blocked: Seq[String], quality: Seq[String],
+      checkSubdomains: Boolean, wordWeights: Map[String, Double], wordPattern: String,
+      scoreThreshold: Double): Column =
+    expr2col(UrlDrop(colExpr(url), hostRegex, blocked, quality, checkSubdomains,
+      wordWeights, wordPattern, scoreThreshold))
 
   private def colExpr(c: Column): Expression = org.apache.spark.sql.graftshim.Shim.expression(c)
   private def expr2col(e: Expression): Column = org.apache.spark.sql.graftshim.Shim.column(e)

@@ -90,10 +90,12 @@ object PipelineConf {
         StageConf(sm("name").toString, ops)
       }
 
-    val execM = root.get("executor").map(asMap).getOrElse(Map.empty[String, Any])
-    val rejM = execM.get("rejected_samples").map(asMap).getOrElse(Map.empty[String, Any])
-    val metM = execM.get("metrics").map(asMap).getOrElse(Map.empty[String, Any])
-    val ckptM = execM.get("checkpoint").map(asMap).getOrElse(Map.empty[String, Any])
+    val execM = known("executor", root.get("executor").map(asMap).getOrElse(Map.empty))
+    def section(key: String): Map[String, Any] =
+      known(s"executor.$key", execM.get(key).map(asMap).getOrElse(Map.empty))
+    val rejM = section("rejected_samples")
+    val metM = section("metrics")
+    val ckptM = section("checkpoint")
     // reject routing always persists the annotated chain; `cache` is the
     // one accepted value, kept so configs that spell it still parse
     rejM.get("materialize").map(_.toString).filter(_ != "cache").foreach { v =>
@@ -116,6 +118,24 @@ object PipelineConf {
       stages,
       WriterConf(writerM("type").toString, params(writerM)),
       executor)
+  }
+
+  /** The keys each executor section reads. Any other key is rejected,
+    * so a misspelled setting fails at parse instead of being dropped.
+    */
+  private val knownKeys: Map[String, Set[String]] = Map(
+    "executor" -> Set("max_samples", "rejected_samples", "metrics", "checkpoint"),
+    "executor.rejected_samples" -> Set("enabled", "materialize"),
+    "executor.metrics" -> Set("enabled", "output_path", "report_path", "publish_path", "timed"),
+    "executor.checkpoint" -> Set("path"))
+
+  private def known(path: String, m: Map[String, Any]): Map[String, Any] = {
+    val keys = knownKeys(path)
+    m.keys.filterNot(keys).toSeq.sorted.headOption.foreach { k =>
+      throw new IllegalArgumentException(
+        s"unknown config key `$path.$k` (known under `$path`: ${keys.toSeq.sorted.mkString(", ")})")
+    }
+    m
   }
 
   private def asMap(v: Any): Map[String, Any] = v match {

@@ -981,4 +981,109 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+
+  // ---- web_clean census: each per-row kernel once in the scan stage ----
+
+  private def webOp(name: String, params: (String, Any)*): graft.core.Operator =
+    graft.runner.OperatorRegistry.create(name, graft.runner.Params(params.toMap))
+
+  private val webBlocked = java.util.Arrays.asList[Any]("badsite.example", "spam.example")
+  private val c4Clean = webOp("c4_clean", "text_field" -> "text")
+  private val c4Quality = webOp("c4_quality_filter", "text_field" -> "text")
+  private def webHead = Seq(
+    webOp("url_filter", "url_field" -> "url", "blocked_domains" -> webBlocked),
+    webOp("text_length_filter", "text_field" -> "text", "min_length" -> 20, "max_length" -> 100000))
+  private def webTail = Seq(
+    webOp("gopher_quality_filter", "text_field" -> "text_c4_clean"),
+    webOp("gopher_repetition_filter", "text_field" -> "text_c4_clean"),
+    webOp("pii_redaction", "text_field" -> "text_c4_clean"))
+
+  /** The static executed plan (AQE off) of `ops` chained the way the
+    * runner chains them with rejects off.
+    */
+  private def webPlan(ops: Seq[graft.core.Operator]): org.apache.spark.sql.execution.SparkPlan = {
+    import org.apache.spark.sql.functions._
+    val in = table("documents").withColumn("url", concat(lit("https://"), col("source"),
+      lit(".example.com/casino/"), col("doc_id").cast("string")))
+    val (df, _) = new graft.metrics.MeteredPipeline("main", ops).instrument(in)
+    withConf("spark.sql.adaptive.enabled", "false")(df.queryExecution.executedPlan)
+  }
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def withoutRule[T](body: => T): T =
+    withConf("spark.sql.optimizer.excludedRules", graft.plans.ReuseExposedKernel.ruleName)(body)
+
+  private def kernelEvals(plan: org.apache.spark.sql.execution.SparkPlan,
+      pick: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, Unit]): Int =
+    plan.collect { case n => n.expressions.map(_.collect(pick).size).sum }.sum
+
+  private val c4Kernel: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, Unit] =
+    { case _: graft.plans.kernels.C4Signals => () }
+
+  test("web_clean census: one C4Signals, one url kernel, every Filter whole-stage codegen'd") {
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    val plan = webPlan(webHead ++ Seq(c4Clean, c4Quality) ++ webTail)
+    assert(kernelEvals(plan, c4Kernel) == 1, plan.treeString)
+    assert(kernelEvals(plan, { case _: graft.plans.kernels.UrlDrop => () }) == 1, plan.treeString)
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(stage)
+    }
+    val codegend = plan.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    val interpreted = plan.collect { case f: FilterExec if !codegend.exists(_ eq f) => f }
+    assert(interpreted.isEmpty, plan.treeString)
+  }
+
+  test("web_clean census: a c4_quality_filter that differs from c4_clean evaluates its own C4Signals") {
+    val stricter = webOp("c4_quality_filter", "text_field" -> "text", "min_sentences" -> 4)
+    val p1 = webPlan(webHead ++ Seq(c4Clean, stricter) ++ webTail)
+    assert(kernelEvals(p1, c4Kernel) == 2, p1.treeString)
+    // before c4_clean nothing exposes the verdict yet
+    val p2 = webPlan(webHead ++ Seq(c4Quality, c4Clean) ++ webTail)
+    assert(kernelEvals(p2, c4Kernel) == 2, p2.treeString)
+  }
+
+  test("ReuseExposedKernel changes no web_clean row; it leaves stream_dedup's trigger plans alone") {
+    import org.apache.spark.sql.functions._
+    def rows(): Seq[String] = {
+      // three terminated lines per page where doc_id % 4 > 0: some pages
+      // pass the C4 verdict, the rest are dropped by it
+      val t = col("text")
+      val in = table("documents")
+        .withColumn("text", when(col("doc_id") % 4 === 0, t).otherwise(concat_ws("\n",
+          concat(t, lit(".")), concat(lit("And "), t, lit("!")), concat(lit("The "), t, lit("?")))))
+        .withColumn("url", concat(lit("http://"), col("source"), lit(".example.com/")))
+      new graft.metrics.MeteredPipeline("main", webHead ++ Seq(c4Clean, c4Quality) :+ webTail.last)
+        .instrument(in)._1.collect().map(_.toString).toSeq.sorted
+    }
+    val on = rows()
+    val off = withoutRule(rows())
+    assert(on.nonEmpty && on.size < table("documents").count() && on == off)
+    assert(withoutRule(kernelEvals(webPlan(webHead ++ Seq(c4Clean, c4Quality) ++ webTail),
+      c4Kernel)) == 2)
+
+    // one stream_dedup trigger: the self-dedup and the against-prior
+    // frames, optimized with and without the rule
+    val docs = table("documents").select(col("doc_id").as("id"), col("text"))
+    val batch = docs.where("id % 3 = 0")
+    val prior = docs.where("id % 3 <> 0")
+    val selfDeduped = new graft.operators.dedup.MinHashLSHDedup(textCol = "text", idCol = "id",
+      shingleWidth = 3, numHashes = 32, numBands = 8, threshold = 0.7,
+      signatureScheme = "oph")(batch)
+    val kept = new graft.operators.dedup.IncrementalMinHashDedup(prior = Some(prior),
+      textCol = "text", idCol = "id", shingleWidth = 3, numHashes = 32, numBands = 8,
+      threshold = 0.7, signatureScheme = "oph")(selfDeduped)
+    val optimizer = spark.sessionState.optimizer
+    Seq(selfDeduped, kept).foreach { df =>
+      val analyzed = df.queryExecution.analyzed
+      val withRule = optimizer.execute(analyzed)
+      val without = withoutRule(optimizer.execute(analyzed))
+      assert(withRule.sameResult(without), s"$withRule\n---\n$without")
+    }
+  }
 }

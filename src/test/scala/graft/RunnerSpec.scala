@@ -217,6 +217,25 @@ class RunnerSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("a misspelled executor key fails at parse and names its full path") {
+    val base = yaml("/unused")
+    def fails(yamlText: String, path: String): Unit = {
+      val e = intercept[IllegalArgumentException](PipelineConf.fromYaml(yamlText))
+      assert(e.getMessage.contains(s"`$path`"), e.getMessage)
+    }
+    fails(base.replace("  rejected_samples:\n    enabled: true",
+      "  rejected_samples:\n    enabled: true\n    materialise: cache"),
+      "executor.rejected_samples.materialise")
+    fails(base.replace("  metrics:\n    enabled: true", "  metrics:\n    enabeld: true"),
+      "executor.metrics.enabeld")
+    fails(base + "  checkpoint: {pth: /tmp/x}\n", "executor.checkpoint.pth")
+    fails(base + "  max_sample: 10\n", "executor.max_sample")
+    // every shipped example config still parses
+    new java.io.File("configs").listFiles().filter(_.getName.endsWith(".yaml")).foreach { f =>
+      PipelineConf.fromYamlFile(f.getPath)
+    }
+  }
+
   test("batch resume: interrupted run + resume equals one-shot run") {
     val base = java.nio.file.Files.createTempDirectory("graft_resume").toString
     val docs = table("documents").select(col("doc_id"), col("text"), col("n_chars"))

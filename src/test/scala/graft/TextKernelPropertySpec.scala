@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{HashFunctions, TextFunctions}
-import graft.operators.text.{C4Clean, GopherQuality, PiiRedaction, TextAnalysis}
+import graft.operators.text.{C4Clean, GopherQuality, PiiRedaction, TextAnalysis, UrlFilter}
 import graft.plans.kernels
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The four web-text kernels and the shared tokenizer against their
+/** The five web-text kernels and the shared tokenizer against their
   * declarative twins on generated adversarial text. Every batch runs on
   * both evaluation paths: a DataFrame over an RDD (so the projection is
   * whole-stage generated; `spark.sql.codegen.fallback=false` makes a
@@ -111,8 +111,8 @@ class TextKernelPropertySpec extends AnyFunSuite {
     (df => df.select(col("id"), ref.as("a")), df => df.select(col("id"), ker.as("b")))
 
   private def holds(reference: DataFrame => DataFrame, kernel: DataFrame => DataFrame,
-      direct: String => Any): Unit =
-    check(Prop.forAllNoShrink(Gen.listOfN(batchSize, genText)) { batch =>
+      direct: String => Any, gen: Gen[String] = genText): Unit =
+    check(Prop.forAllNoShrink(Gen.listOfN(batchSize, gen)) { batch =>
       val bad = mismatches(batch, reference, kernel, direct)
       Prop(bad.isEmpty) :| bad.take(3).mkString("\n")
     })
@@ -250,5 +250,53 @@ class TextKernelPropertySpec extends AnyFunSuite {
         (0 until 7).map(v.getDouble) :+
           kernels.RepetitionKeep(coalesced(s), repetitionMaxes).eval(null))
     })
+  }
+
+  // ---- URLs: schemes, userinfo, ports, case mapping, look-alike suffixes ----
+
+  private val genUrl: Gen[String] = {
+    val label = Gen.oneOf("a", "www", "blocked", "xblocked", "Blocked", "BLOCKED", "net", "NET",
+      "org", "ex\u0130", "EX\u0130", "\u212Aelvin", "kelvin", "\u03A3", "\u0391\u03A3",
+      "wikipedia", "WikiPedia", "casino", "", "x-y")
+    val host = for {
+      n <- Gen.choose(1, 4)
+      ls <- Gen.listOfN(n, label)
+      dot <- Gen.oneOf("", "", ".")
+    } yield ls.mkString(".") + dot
+    val url = for {
+      scheme <- Gen.oneOf("", "http://", "HTTPS://", "ftp+x.y-z://", "1http://",
+        "\u212Ahttp://", "http:/", "h://")
+      user <- Gen.oneOf("", "", "user:pass@", "u@")
+      h <- host
+      port <- Gen.oneOf("", "", ":8080", ":")
+      path <- Gen.oneOf("", "/", "?q=1", "#frag", "?#", "/casino-royale/free-money",
+        "/Casino", "/freemoney?x=poker", "/CASINO/Poker/free-money-money", "/\u212Aasino",
+        "/slot/bet", "/casinocasino-royale", "/money/free/money")
+    } yield scheme + user + h + port + path
+    Gen.frequency(1 -> Gen.const(null), 1 -> Gen.const(""), 20 -> url)
+  }
+
+  test("UrlDrop == UrlFilter.declarativeKeep, both flags both ways, with and without a lexicon") {
+    val blocked = Seq("blocked.net", "exi\u0307.org", "kelvin.org", "\u03B1\u03C2.net", "casino")
+    val lexicon = Map("casino" -> 0.9, "casino-royale" -> 0.3, "free" -> 0.2,
+      "free-money" -> 0.8, "money" -> 0.1, "poker" -> 0.7)
+    // NaN sorts above every weight (array_max / least order); a negative weight
+    val odd = Map("slot" -> Double.NaN, "bet" -> -0.5, "money" -> 0.45, "free" -> 0.05)
+    val quality = Seq("wikipedia.org", "org")
+    Seq((true, false, lexicon), (false, true, odd), (true, true, Map.empty[String, Double]),
+        (false, false, lexicon)).foreach { case (subdomains, excludeQuality, words) =>
+      val op = new UrlFilter(blockedDomains = blocked, wordWeights = words,
+        checkSubdomains = subdomains, excludeQualitySources = excludeQuality,
+        qualitySourceDomains = quality, urlCol = "text")
+      val (r, k) = columns(op.declarativeKeep(col("text")), op.keep(null))
+      // the analyzed keep expression, its url attribute bound per value
+      val keepExpr = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        new StructType().add("text", StringType)).select(op.keep(null))
+        .queryExecution.analyzed.expressions.head
+      assert(keepExpr.exists(_.isInstanceOf[kernels.UrlDrop]))
+      holds(r, k, s => keepExpr.transform {
+        case _: org.apache.spark.sql.catalyst.expressions.AttributeReference => textLit(s)
+      }.eval(null), genUrl)
+    }
   }
 }
