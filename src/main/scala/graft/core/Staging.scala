@@ -32,13 +32,12 @@ import org.apache.spark.storage.StorageLevel
   *  - a long-lived monitor loop wraps each trigger's readout in
   *    [[scoped]] and leaks nothing, with no global-contract knowledge.
   *
-  * Frames staged OUTSIDE any scope land in the session-global registry,
-  * swept by [[releaseAll]] — the pre-r15 contract, kept for ad-hoc/REPL
-  * use: call releaseAll only at a point where no staged output is still
-  * awaiting consumption on ANY thread (releaseAll never touches scoped
-  * frames, so scoped call paths stay safe regardless). [[release]]
-  * drops one specific frame when the creating code knows its own
-  * quiescent point.
+  * Every staged frame belongs to a scope: [[stage]] and [[adopt]] with
+  * no scope open on the calling thread throw, so a frame can never
+  * outlive its call path unnoticed. Each entry point (Verify, Bench,
+  * ExplainPlans, the probe legs, `PipelineRunner.run`, `Cli analyze`,
+  * `Cli report`) opens one. [[release]] drops one specific frame when
+  * the creating code knows its own quiescent point.
   */
 object Staging {
 
@@ -51,39 +50,38 @@ object Staging {
     override def initialValue(): List[Scope] = Nil
   }
 
-  // frames staged outside any scope — the global sweep target
-  private val global = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, java.lang.Boolean]())
-
-  /** Persist + eagerly materialize `df`; register it with the innermost
-    * open scope on this thread (released at that scope's exit), or with
-    * the global registry when no scope is open. Eager because every
-    * staging site needs it (consumers must hit the cache, not re-derive)
-    * and because a lazily-persisted stage could otherwise first
-    * materialize AFTER its release raced past it.
+  /** Persist + eagerly materialize `df` and register it with the
+    * innermost open scope on this thread (released at that scope's
+    * exit). Eager because every staging site needs it (consumers must
+    * hit the cache, not re-derive) and because a lazily-persisted stage
+    * could otherwise first materialize AFTER its release raced past it.
+    * Throws `IllegalStateException`, persisting nothing, when no scope
+    * is open.
     */
   def stage(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+    val s = innermost("stage")
     val p = df.persist(level)
     p.count()
-    scopes.get() match {
-      case s :: _ => s.frames.add(p)
-      case Nil => global.add(p)
-    }
+    s.frames.add(p)
     p
   }
 
   /** Register an ALREADY-persisted frame (e.g. a frozen model table
     * whose lifetime is normally caller-managed) with the innermost open
-    * scope / the global registry, so the surrounding call path's release
-    * point unpersists it like any staged frame.
+    * scope, so the surrounding call path's release point unpersists it
+    * like any staged frame. Throws `IllegalStateException` when no scope
+    * is open.
     */
   def adopt(df: DataFrame): DataFrame = {
-    scopes.get() match {
-      case s :: _ => s.frames.add(df)
-      case Nil => global.add(df)
-    }
+    innermost("adopt").frames.add(df)
     df
+  }
+
+  private def innermost(op: String): Scope = scopes.get() match {
+    case s :: _ => s
+    case Nil => throw new IllegalStateException(
+      s"Staging.$op outside any Staging.scoped block: no scope would release the frame")
   }
 
   /** Run `body` with a fresh scope: frames staged under it (this
@@ -102,26 +100,14 @@ object Staging {
   }
 
   /** Unpersist one staged frame now — for creators that know their own
-    * quiescent point. Removes it from whichever registry holds it (or
-    * no-ops for an unknown frame).
+    * quiescent point. Removes it from this thread's scopes (or no-ops
+    * for an unknown frame).
     */
-  def release(df: DataFrame): Unit = {
-    val inScope = scopes.get().exists(_.frames.remove(df))
-    if (global.remove(df) || inScope) df.unpersist(false)
-  }
+  def release(df: DataFrame): Unit =
+    if (scopes.get().exists(_.frames.remove(df))) df.unpersist(false)
 
-  /** Number of live staged frames on this thread's scopes plus the
-    * global registry (test observability).
+  /** Number of live staged frames on this thread's scopes (test and
+    * benchmark observability).
     */
-  def liveCount: Int = scopes.get().map(_.frames.size).sum + global.size()
-
-  /** Unpersist every GLOBALLY-registered staged frame (non-blocking)
-    * and clear that registry. Never touches scoped frames — scoped call
-    * paths release themselves. Call only when no globally-staged output
-    * is still awaiting consumption.
-    */
-  def releaseAll(): Unit = {
-    global.forEach(df => df.unpersist(false))
-    global.clear()
-  }
+  def liveCount: Int = scopes.get().map(_.frames.size).sum
 }

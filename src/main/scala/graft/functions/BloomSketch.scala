@@ -122,31 +122,12 @@ object BloomSketch {
   /** Membership probe against a DRIVER-COLLECTED sketch — the execution
     * form: the bit array (numBits/64 longs, bounded by the knob, never
     * by the data) embeds in a [[graft.plans.kernels.PortableBloomProbe]]
-    * kernel, so the probe is scan + filter with NO join. The
-    * column-sketch form below cross-joins the one-row sketch and stamps
-    * the full bit array into every probe row's UnsafeRow — 25× slower
-    * at 2¹⁶ bits over 600k rows; keep it for cross-engine oracle SQL
-    * twins only.
+    * kernel, so the probe is scan + filter with NO join. A probe
+    * against a cross-joined sketch COLUMN would stamp the full bit array
+    * into every probe row's UnsafeRow — 25× slower at 2¹⁶ bits over
+    * 600k rows.
     */
   def mightContainLit(bits: Array[Long], hashed: Column, numHashes: Int): Column =
     Shim.column(graft.plans.kernels.PortableBloomProbe(
       Shim.expression(hashed), bits, numHashes))
-
-  /** Membership probe against a SKETCH column — pure builtin Column
-    * arithmetic (codegen'd, no UDF): AND over the `numHashes` bit reads.
-    * `hashed` must be the same pre-hash the sketch was built from.
-    * Prefer [[mightContainLit]] in execution paths — a cross-joined
-    * sketch column copies the whole bit array per probe row.
-    */
-  def mightContain(sketch: Column, hashed: Column, numBits: Int, numHashes: Int): Column = {
-    import org.apache.spark.sql.functions._
-    (0 until numHashes).map { r =>
-      val idx = HashFunctions.mixed(hashed, r) % numBits
-      val word = element_at(sketch, (idx / 64).cast("int") + 1)
-      // functions.shiftright only takes a literal shift — the SQL form
-      // accepts a column one
-      call_function("shiftright", word, (idx % 64).cast("int"))
-        .bitwiseAND(lit(1L)) === lit(1L)
-    }.reduce(_ && _)
-  }
 }

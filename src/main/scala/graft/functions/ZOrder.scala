@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) interleaving for multi-dimensional data layout —
@@ -44,18 +44,4 @@ object ZOrder {
   /** DuckDB twin of [[morton]]. */
   def mortonSql(x: String, y: String): String =
     s"(${spreadSql(x)} | (${spreadSql(y)} << 1))"
-
-  /** Lay `df` out by the Morton code of two dimension columns: range
-    * partition into `numFiles` + sort within partitions, so every
-    * output file covers a compact Z-curve segment (tight min/max on
-    * BOTH dims). This is the write-side operator: follow with
-    * `.write.parquet(...)`; one range exchange total.
-    */
-  def layout(df: DataFrame, xCol: Column, yCol: Column, numFiles: Int): DataFrame = {
-    require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    df.withColumn("_z", morton(xCol, yCol))
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-  }
 }

@@ -45,27 +45,3 @@ final class CatalogTableWriter(
 
   def read(spark: org.apache.spark.sql.SparkSession): DataFrame = spark.table(table)
 }
-
-/** Bucketed-table sink: pre-shuffles data into `numBuckets` hash buckets
-  * on the join/dedup key at WRITE time, so every later equi-join or
-  * aggregation on that key is co-located and plans with NO exchange on
-  * the bucketed side(s) — asserted in PlanSpec. This is the engine's
-  * 100 TB posture for repeatedly-joined tables (pay the shuffle once at
-  * ingest, never again); the same role `repartition` plays within a
-  * single job, made durable.
-  */
-final class BucketedTableWriter(
-    table: String,
-    bucketCol: String,
-    numBuckets: Int) {
-
-  def write(df: DataFrame): Unit =
-    df.write
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(table)
-
-  def read(spark: org.apache.spark.sql.SparkSession): DataFrame = spark.table(table)
-}

@@ -30,8 +30,9 @@ import org.apache.spark.sql.types._
   * Per-operator wall-clock latency percentiles are a record-batch concept
   * that does not survive whole-stage codegen fusion (operators fuse into
   * one stage by design); latency fields are populated only by the
-  * separate [[MeteredPipeline.timedRun]] mode, which executes one action
-  * per boundary to attribute wall time, and are 0.0 in fused mode.
+  * separate [[MeteredPipeline.timedRunThrough]] mode, which executes one
+  * action per boundary to attribute wall time, and are 0.0 in fused
+  * mode.
   */
 final case class OperatorCounts(
     opIndex: Int, name: String, input: Long, output: Long, timeSec: Double) {
@@ -135,20 +136,11 @@ final class MeteredPipeline(val stageName: String, val ops: Seq[Operator]) {
   }
 
   /** Instrumented-mode run: one action per boundary so wall time is
-    * attributable per operator (the reference's per-operator total_time).
-    * Every boundary is staged, so each operator is charged only for its
-    * own work — use for profiling, not production. The last stage is
-    * released before returning.
-    */
-  def timedRun(input: DataFrame): (Seq[OperatorCounts], StageRollup) = {
-    val (out, cs, rollup) = timedRunThrough(input)
-    Staging.release(out)
-    (cs, rollup)
-  }
-
-  /** [[timedRun]] that also returns the stage's output frame, so a
-    * runner can continue the chain (profiling mode). The input and
-    * every boundary are staged ([[Staging.stage]]); operator i is timed
+    * attributable per operator (the reference's per-operator
+    * total_time) — use for profiling, not production. Returns the
+    * stage's output frame too, so a runner can continue the chain. The
+    * input and every boundary are staged ([[Staging.stage]]), so each
+    * operator is charged only for its own work: operator i is timed
     * building and materializing `op(df_i)` over the staged `df_i`,
     * which is then released. The returned frame is the last stage,
     * still staged: the caller releases it (or its scope does).

@@ -1,17 +1,10 @@
 package graft.ml
 
-import org.apache.spark.broadcast.Broadcast
-
 /** Weight table for the hashed linear text classifier
   * ([[graft.plans.kernels.LinearClassifierScore]]).
   *
-  * Two resolutions:
-  *   - [[ClassifierWeights.Local]] — a plain array inside the plan; what
-  *     the registry and the gates build (the 2^12 gate model is 32 KB).
-  *   - [[ClassifierWeights.Bcast]] — the table as a Spark broadcast, so
-  *     a 2^21-slot model (16 MB) would ship to each executor ONCE
-  *     instead of riding every task closure. Nothing builds one outside
-  *     ClassifierSpec, which pins that it scores like `Local`.
+  * [[ClassifierWeights.Local]] is a plain array inside the plan; the
+  * registry and the gates build it (the 2^12 gate model is 32 KB).
   *
   * `deterministic` builds the synthetic table the oracle gates use: each
   * slot's weight is a closed-form function of its index, so DuckDB can
@@ -25,10 +18,6 @@ object ClassifierWeights {
 
   final case class Local(values: Array[Double]) extends ClassifierWeights {
     def get: Array[Double] = values
-  }
-
-  final case class Bcast(bc: Broadcast[Array[Double]]) extends ClassifierWeights {
-    def get: Array[Double] = bc.value
   }
 
   /** Deterministic synthetic table with a closed-form SQL twin:

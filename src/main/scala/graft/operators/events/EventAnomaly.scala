@@ -61,10 +61,8 @@ final class EventAnomaly(
     // Staged via the registry: Verify/Bench/PipelineRunner run under
     // Staging.scoped, which releases at their quiescent points; a
     // long-lived monitor loop calling this per trigger wraps each
-    // trigger's consume in Staging.scoped { ... } (or the frame pins one
-    // cache entry per trigger for the application's life — persist
-    // registers in the CacheManager, which the ContextCleaner cannot GC
-    // away)
+    // trigger's consume in Staging.scoped { ... } (staging outside a
+    // scope throws)
     val counts = graft.core.Staging.stage(counts0)
     val bounds = counts.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
     val hours = bounds.select(explode(

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * degree 10⁶ contributes almost no wedges because nearly all its
   * edges orient INTO it). Two hash joins on vertex ids, no windows.
   *
-  * Output: per-vertex triangle counts (plus [[totalTriangles]]) —
+  * Output: per-vertex triangle counts —
   * exact BIGINTs, so the DuckDB recursive twin hash-matches.
   */
 final class TriangleCount(srcCol: String = "src", dstCol: String = "dst") {
@@ -69,10 +69,6 @@ final class TriangleCount(srcCol: String = "src", dstCol: String = "dst") {
       .select(explode(array(col("a"), col("b"), col("c"))).as("vertex"))
       .groupBy(col("vertex")).agg(count(lit(1)).as("triangles"))
       .orderBy(col("vertex"))
-
-  /** Single-row total (each triangle counted once). */
-  def totalTriangles(edges: DataFrame): DataFrame =
-    triangles(edges).agg(count(lit(1)).as("n_triangles"))
 
   // ---- DuckDB twin: same orientation, same wedge close ----
 

@@ -60,27 +60,6 @@ object ImageOps {
   def decodeSubsampled(bytes: Array[Byte], targetGrid: Int = 64): Option[Decoded] =
     decodeWith(bytes, 1, adaptiveDenom = 4 * targetGrid)
 
-  /** (width, height) from the header alone — no pixel decode. */
-  def readDims(bytes: Array[Byte]): Option[(Int, Int)] = {
-    if (bytes == null || bytes.isEmpty) return None
-    var iis: javax.imageio.stream.ImageInputStream = null
-    var reader: javax.imageio.ImageReader = null
-    var cached = false
-    try {
-      iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
-      val (r, c) = cachedReaderFor(bytes, iis)
-      reader = r
-      cached = c
-      if (reader == null) return None
-      Some((reader.getWidth(0), reader.getHeight(0)))
-    } catch {
-      case _: Throwable => None
-    } finally {
-      if (reader != null && !cached) try reader.dispose() catch { case _: Throwable => () }
-      if (iis != null) try iis.close() catch { case _: Throwable => () }
-    }
-  }
-
   // Reader reuse: ImageIO.getImageReaders walks the service registry per
   // call (~50 us/img measured); PNG/JPEG magic bytes select a cached
   // per-thread reader instead. Unknown magics fall back to the registry
@@ -137,7 +116,7 @@ object ImageOps {
 
   /** `adaptiveDenom > 0` derives the subsample factor from the header
     * dims inside the SAME reader session (k = min(w,h)/denom) — a
-    * separate readDims call would double the stream+reader setup, which
+    * separate header read would double the stream+reader setup, which
     * dominates for small images.
     */
   private def decodeWith(bytes: Array[Byte], subsample: Int,
@@ -546,11 +525,6 @@ object ImageOps {
       ImageIO.write(img, "png", baos)
       baos.toByteArray
     }.orNull)
-
-  def hamming(hexA: String, hexB: String): Int =
-    hexA.zip(hexB).map { case (a, b) =>
-      java.lang.Integer.bitCount(Integer.parseInt(a.toString, 16) ^ Integer.parseInt(b.toString, 16))
-    }.sum
 
   // ---- UDF surface ----
 

@@ -1,21 +1,16 @@
 package graft.operators.media
 
 import graft.core.Operator
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Video as an opaque binary column with typed metadata — the third leg
   * of the multimodal pattern (image: graft.operators.image, audio:
   * [[AudioOps]]). ISO base-media (MP4/MOV) container structure is parsed
   * for real — box walk to `ftyp` (major brand) and `moov/mvhd`
   * (timescale, duration, version 0 and 1 layouts) with `trak` counting —
-  * because the container format is pure framing, no codec needed. Frame
-  * DECODE is behind a pluggable SPI like the image encoder: codec
-  * libraries don't ship in this environment, so [[FrameDecoder]]
-  * implementations supply real decoding in production and a
-  * deterministic fake in tests; the Spark-side plumbing (schema,
-  * batching, null handling) is real either way.
+  * because the container format is pure framing, no codec needed.
+  * Frame decode needs a codec library and is not done here.
   */
 object VideoOps {
 
@@ -103,48 +98,4 @@ final class VideoMetadataRefiner(videoCol: String = "video") extends Operator {
       .withColumn("video_duration_sec", col("_vm._4"))
       .withColumn("video_track_count", col("_vm._5"))
       .drop("_vm")
-}
-
-/** Frame-decode SPI — mirrors [[graft.operators.image.ImageEncoder]]:
-  * one decoder per task via mapPartitions, `sample` returns `count`
-  * evenly-spaced frames as opaque image bytes (empty on failure).
-  * Production backends wrap a real codec; no codec ships here, so tests
-  * use a deterministic fake — the batching/schema plumbing is what this
-  * engine owns.
-  */
-trait FrameDecoder extends Serializable {
-  def sample(video: Array[Byte], count: Int): Seq[Array[Byte]]
-}
-
-/** Adds `video_frames` (array of image-byte blobs) by sampling `count`
-  * frames per video through the [[FrameDecoder]] SPI; null video → null.
-  */
-final class FrameSampleRefiner(
-    decoder: FrameDecoder,
-    videoCol: String = "video",
-    count: Int = 4,
-    outputCol: String = "video_frames") extends Operator {
-
-  val name = "video_frame_sample"
-
-  def apply(df: DataFrame): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outputCol, ArrayType(BinaryType, containsNull = false)))
-    val idx = df.schema.fieldIndex(videoCol)
-    val vField = df.schema(videoCol).dataType
-    val dec = decoder
-    val n = count
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes =
-          if (r.isNullAt(idx)) null
-          else vField match {
-            case _: StructType => Option(r.getStruct(idx).getAs[Array[Byte]]("bytes")).orNull
-            case _             => r.getAs[Array[Byte]](idx)
-          }
-        val frames = if (bytes == null) null else dec.sample(bytes, n)
-        Row.fromSeq(r.toSeq :+ frames)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
 }

@@ -3,7 +3,7 @@ package graft.operators.ml
 import graft.core.Operator
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.ml.ClassifierWeights
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al.,
@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * hashed n-gram bag is under a TARGET domain's bag-of-ngrams model
   * than under the raw corpus's own model,
   * `log w(x) = Σ_b c_x[b] · (log p_target[b] − log q_raw[b])`,
-  * then keep the top-k by score (+ optional Gumbel noise for the
-  * paper's sampled variant). The standard method for "give me the 5%
+  * then keep the top-k by score (an `orderBy(score.desc).limit(k)` over
+  * the attached column). The standard method for "give me the 5%
   * of the crawl that looks like Wikipedia/textbooks" (beyond the
   * reference's operator set, like the rest of the training-data
   * family).
@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   * to collect (the bucket space is the model, 2^12–2^21 doubles). The
   * smoothed log-ratio table then rides to executors inside the scoring
   * kernel exactly like the quality classifier's weight table
-  * ([[ClassifierWeights]] — broadcast it for 2^21-slot production
-  * models), and scoring is a stateless one-JVM-pass-per-row map at
-  * scan speed. Nothing about the fit depends on this corpus pass being
-  * the same job: fit once, reuse the table across runs.
+  * ([[ClassifierWeights]]), and scoring is a stateless
+  * one-JVM-pass-per-row map at scan speed. Nothing about the fit
+  * depends on this corpus pass being the same job: fit once, reuse
+  * the table across runs.
   *
   * Determinism: the portable 60-bit hash buckets both fits and the
   * scorer, so the DuckDB twin recomputes the identical model in SQL.
@@ -78,25 +78,6 @@ final class DsirScoreRefiner(
       graft.plans.kernels.hashed_ngram_logweight(
         TextFunctions.tokensOf(coalesce(col(textCol), lit(""))),
         buckets, bigrams, fittedWeights(df)))
-
-  /** Top-k selection over the scores. `gumbelSalt` non-empty gives the
-    * paper's Gumbel-top-k sampled variant (deterministic: the noise is
-    * a salted-hash uniform, so the sample is reproducible across runs
-    * and partition layouts); empty takes the argmax-k. Rank ties break
-    * by id. */
-  def selectTopK(df: DataFrame, k: Int, idCol: String,
-      gumbelSalt: String = ""): DataFrame = {
-    val scored = apply(df)
-    val key: Column =
-      if (gumbelSalt.isEmpty) col(outputCol)
-      else {
-        val u = (pmod(HashFunctions.hashByName("portable")(
-          concat(col(idCol).cast("string"), lit(gumbelSalt))), lit(1000000L))
-          .cast("double") + lit(0.5)) / lit(1000000.0)
-        col(outputCol) - log(-log(u))
-      }
-    scored.orderBy(key.desc, col(idCol)).limit(k)
-  }
 
   // ---- DuckDB twin ----
 

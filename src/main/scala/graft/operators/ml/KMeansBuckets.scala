@@ -48,8 +48,6 @@ final class KMeansBuckets(
     model.transform(df.withColumn("_kmeans_features", array_to_vector(col(vecCol))))
       .drop("_kmeans_features")
 
-  def fitTransform(df: DataFrame): DataFrame = transform(df, fit(df))
-
   /** Centroids of a trained model, ordered by cluster id. */
   def centroidsOf(model: KMeansModel): Seq[Seq[Double]] =
     model.clusterCenters.toSeq.map(_.toArray.toSeq)

@@ -17,7 +17,7 @@ object LogregQuality {
 
   /** The trained-score projection over a raw text column with the d+1
     * quantized weights inlined as literals — the shared scoring shape
-    * of the refiner, the filter, and the frozen streaming scorer.
+    * of the refiner and the filter.
     */
   def scoreExprWith(textCol: String, w: Array[Double]): Column = {
     val feats = docStatFeatures(textCol)
@@ -28,50 +28,6 @@ object LogregQuality {
     }
     round(lit(1.0) / (lit(1.0) + exp(-z)), 6)
   }
-
-  // ---- frozen snapshots: train offline, score the stream ----
-
-  /** Write trained weights as versioned snapshot `modelDir/v<version>`:
-    * a `_BASIS` marker (the feature-basis names) then the
-    * one-row-per-slot weights table whose `_SUCCESS` gates adoption —
-    * the [[graft.core.Snapshots]] layout and write order.
-    */
-  def freeze(corpus: DataFrame, weights: Array[Double], textCol: String,
-      modelDir: String, version: Long): String = {
-    val spark = corpus.sparkSession
-    val names = basis(textCol)
-    require(weights.length == names.length,
-      s"freeze: ${names.length} weights expected, got ${weights.length}")
-    val dir = s"$modelDir/v$version"
-    graft.core.Snapshots.mark(spark, dir, "_BASIS", names.mkString(","))
-    import spark.implicits._
-    weights.toSeq.zipWithIndex
-      .map { case (w, slot) => (slot, names(slot), w) }
-      .toDF("slot", "name", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/weights")
-    dir
-  }
-
-  /** Adopt the highest-versioned COMPLETE snapshot whose basis matches
-    * the current feature set: weights/_SUCCESS present AND the `_BASIS`
-    * marker equals the expected names (markerless dirs are refused —
-    * this surface never shipped without the marker, so there is no
-    * back-compat window to honor). Returns the weight vector,
-    * slot-ordered.
-    */
-  def latestFrozen(spark: org.apache.spark.sql.SparkSession,
-      modelDir: String, textCol: String): Option[Array[Double]] = {
-    val expected = basis(textCol).mkString(",")
-    graft.core.Snapshots.latest(spark, modelDir, Seq("weights"), "_BASIS")(
-      _.contains(expected)).map { d =>
-      spark.read.parquet(s"$d/weights").orderBy("slot")
-        .select("w").collect().map(_.getDouble(0))
-    }
-  }
-
-  // the snapshot's slot names: the bias, then the doc-stat features
-  private def basis(textCol: String): Seq[String] =
-    "bias" +: docStatFeatures(textCol).map(_.name)
 
   /** The fixed doc-stat feature basis over a raw text column:
     * token count / distinct-token ratio / mean token length / en

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * single struct per key per map partition (`max_by` partial-aggregates
   * map-side — no window, no full-feed sort); `merge` is then one
   * key-equi full-outer join, co-located (zero exchange) when the base
-  * lives in a bucketed table (io.BucketedTables) bucketed on the key.
+  * lives in a table bucketed on the key (`bucketBy` + `saveAsTable`).
   */
 final class CdcMerge(
     keyCol: String,

@@ -49,9 +49,9 @@ object BigramLm {
     s"(${HashFunctions.mixedSql(h1, 0)} + ${HashFunctions.mixedSql(h2, 1)})"
 
   /** Each frozen smoothing's model tables, by name — the one list the
-    * freeze, the load, the snapshot probe and [[BigramLmModel]] read.
+    * freeze and [[BigramLmModel]] read.
     * `cost` (each TRAINING bigram's integer cost, `(_chb, _c9)`) comes
-    * first and is written last, derived from the others:
+    * first and is built last, derived from the others:
     *  - addone: `ctx (_xh1, _cw)` total count per context, `vocab (_v)`
     *    the one-row bigram-participating vocab size;
     *  - kn: `ctx (_xh1, _cw, _nt)` total and distinct-continuation
@@ -66,25 +66,6 @@ object BigramLm {
   private[text] def frozenTables(smoothing: String): Seq[String] =
     FrozenTables.getOrElse(smoothing, throw new IllegalArgumentException(
       s"unsupported frozen smoothing '$smoothing' (addone | kn)"))
-
-  /** Highest-versioned COMPLETE `smoothing` snapshot under `modelDir`,
-    * if any — the restart probe for [[graft.streaming.StreamingCuration
-    * .bigramLmScoreForeachBatch]], over the [[graft.core.Snapshots]]
-    * layout. Complete: every table of [[FrozenTables]]`(smoothing)`
-    * carries `_SUCCESS` ([[BigramLm.freeze]] writes `cost` last, but
-    * each is checked so a half-written artifact is never adopted), AND
-    * the `_FAMILY` marker names `smoothing` — a modelDir reused across a
-    * `smoothing` change would otherwise pass the table probe on a MIXED
-    * snapshot (per-table overwrite leaves the other family's stale
-    * tables behind, so cost/_c9 could hold KN costs while backoff reads
-    * a stale add-one vocab: schema-compatible, silently wrong).
-    * Markerless snapshots (pre-marker artifacts) are accepted for
-    * back-compat and load as the `smoothing` asked for.
-    */
-  def latestSnapshot(spark: org.apache.spark.sql.SparkSession,
-      modelDir: String, smoothing: String): Option[String] =
-    graft.core.Snapshots.latest(spark, modelDir, frozenTables(smoothing),
-      "_FAMILY")(_.forall(_ == smoothing))
 }
 
 /** A FROZEN bigram-LM model (r15 add-one, r17 Kneser–Ney): its
@@ -596,31 +577,16 @@ final class BigramLm(
     * reproduces the self-trained scores bit-for-bit (every trained
     * bigram reads its frozen cost). Caller releases via
     * [[BigramLmModel.release]].
-    *
-    * `snapshotDir`: REQUIRED when `corpus` reads a path that keeps
-    * receiving appends (the streaming corpus store). A bare persist is
-    * NOT frozen against that: Spark's append path calls refreshByPath,
-    * which invalidates and lazily RECACHES every cached plan rooted in
-    * the written path — the "frozen" tables would silently recompute
-    * over data that arrived after the freeze (measured: a trigger's
-    * scores drifted to the next trigger's corpus). Snapshotting writes
-    * the `_FAMILY` marker (the smoothing) and then the tables to
-    * versioned parquet ([[graft.core.Snapshots]]) — a detached model
-    * ARTIFACT, which is also the restart story: a rebooted scorer
-    * re-reads it through [[loadSnapshot]] instead of retraining.
     */
-  def freeze(corpus: DataFrame, snapshotDir: Option[String] = None,
+  def freeze(corpus: DataFrame,
       smoothing: String = "addone"): BigramLmModel = graft.core.Staging.scoped {
     val names = BigramLm.frozenTables(smoothing)
-    snapshotDir.foreach(d =>
-      graft.core.Snapshots.mark(corpus.sparkSession, d, "_FAMILY", smoothing))
     // cb only: the freeze never reads the per-doc table, and staging it
     // (the freeze's largest intermediate) for zero readers is pure
     // cache-write overhead (ADVICE r17)
     val cb = stagedCbOnly(corpus)
-    val model = names.tail.map(n =>
-      n -> snapshot(modelTable(smoothing, cb)(n), snapshotDir, n)).toMap
-    val cost = snapshot(trainedCost(cb, smoothing, model), snapshotDir, "cost")
+    val model = names.tail.map(n => n -> persisted(modelTable(smoothing, cb)(n))).toMap
+    val cost = persisted(trainedCost(cb, smoothing, model))
     val m = BigramLmModel(smoothing, cost +: names.tail.map(model))
     // materialize INSIDE the scope (cb still cached), then the staged
     // intermediates release at scope exit while the model tables live on
@@ -628,34 +594,9 @@ final class BigramLm(
     m
   }
 
-  /** Re-open a frozen `smoothing` model from a [[freeze]] snapshot
-    * directory — the restart path: a rebooted streaming scorer re-reads
-    * the versioned artifact instead of retraining, so post-crash scores
-    * resume under the model that was live at the crash, not the
-    * reference v0. Caller picks the directory (see
-    * [[BigramLm.latestSnapshot]], which also gates on completeness and
-    * family) and names the smoothing; the `_FAMILY` marker is not read.
-    */
-  def loadSnapshot(spark: org.apache.spark.sql.SparkSession,
-      dir: String, smoothing: String): BigramLmModel = {
-    val m = BigramLmModel(smoothing, BigramLm.frozenTables(smoothing).map(n =>
-      spark.read.parquet(s"$dir/$n")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    m.tables.foreach(_.count())
-    m
-  }
-
-  /** Persist a model table; with a snapshot dir, write-then-reread so
-    * its lineage roots at the immutable snapshot path (see [[freeze]]).
-    */
-  private def snapshot(df: DataFrame, dir: Option[String],
-      name: String): DataFrame = {
-    val out = dir.fold(df) { d =>
-      df.write.mode("overwrite").parquet(s"$d/$name")
-      df.sparkSession.read.parquet(s"$d/$name")
-    }
-    out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
+  // a model table outlives the freeze's staging scope
+  private def persisted(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** One of `smoothing`'s model tables (bar `cost`) by name, over the
     * corpus type counts `cb`.
@@ -807,16 +748,14 @@ final class BigramLm(
   * [[BigramLm.scoreAgainst]] under that model. The model tables are
   * adopted into the consuming call path's staging scope
   * ([[graft.core.Staging.adopt]]) so Verify/Bench/PipelineRunner
-  * release them after the run; pass `snapshotDir` when the training
-  * path receives appends (see [[BigramLm.freeze]]).
+  * release them after the run.
   */
 final class BigramLmFrozenScoreRefiner(
     trainCorpus: org.apache.spark.sql.SparkSession => DataFrame,
     textCol: String = "text",
     idCol: String = "id",
     outCol: String = "bigram_lm_bits",
-    countCol: String = "bigram_lm_n",
-    snapshotDir: Option[String] = None) extends graft.core.Operator {
+    countCol: String = "bigram_lm_n") extends graft.core.Operator {
   val name = "bigram_lm_score_frozen"
 
   def apply(df: DataFrame): DataFrame = attach(df, None)
@@ -830,7 +769,7 @@ final class BigramLmFrozenScoreRefiner(
 
   private def attach(df: DataFrame, alive: Option[Column]): DataFrame = {
     val lm = new BigramLm(textCol, idCol)
-    val m = lm.freeze(trainCorpus(df.sparkSession), snapshotDir)
+    val m = lm.freeze(trainCorpus(df.sparkSession))
     m.tables.foreach(graft.core.Staging.adopt)
     val gate: Column => Column =
       c => alive.map(a => when(a, c)).getOrElse(c)
@@ -845,8 +784,8 @@ object BigramLmFrozenScoreRefiner {
   /** Training corpus loaded lazily from a path (the YAML/registry path). */
   def fromPath(path: String, format: String,
       textCol: String = "text", idCol: String = "id",
-      outCol: String = "bigram_lm_bits", countCol: String = "bigram_lm_n",
-      snapshotDir: Option[String] = None): BigramLmFrozenScoreRefiner =
+      outCol: String = "bigram_lm_bits",
+      countCol: String = "bigram_lm_n"): BigramLmFrozenScoreRefiner =
     new BigramLmFrozenScoreRefiner(
       spark => format match {
         case "parquet" => spark.read.parquet(path)
@@ -854,7 +793,7 @@ object BigramLmFrozenScoreRefiner {
         case "csv"     => spark.read.option("header", "true").csv(path)
         case other     => throw new IllegalArgumentException(s"unknown train format: $other")
       },
-      textCol, idCol, outCol, countCol, snapshotDir)
+      textCol, idCol, outCol, countCol)
 }
 
 /** Registry/YAML form: attaches `outCol` (bits per bigram, NULL when the

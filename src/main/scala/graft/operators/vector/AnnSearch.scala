@@ -52,11 +52,11 @@ object AnnSearch {
     * the learned counterpart of [[signBucket]]), probe the `nprobe` cells
     * nearest the query, exact cosine within — the standard
     * inverted-file ANN layout. At 100 TB the table is written partitioned
-    * by the cell id ([[graft.io.BucketedTableWriter]]), so a query reads
-    * `nprobe` partitions instead of the corpus; recall is tuned by
-    * `nprobe` alone. Cell assignment reuses the NearestCentroid kernel;
-    * probe selection is a driver-side argsort over k centroid distances
-    * (tiny), tie-broken by cell index like the kernel.
+    * by the cell id, so a query reads `nprobe` partitions instead of the
+    * corpus; recall is tuned by `nprobe` alone. Cell assignment reuses
+    * the NearestCentroid kernel; probe selection is a driver-side
+    * argsort over k centroid distances (tiny), tie-broken by cell index
+    * like the kernel.
     */
   def ivfTopK(df: DataFrame, queryDf: DataFrame, vecCol: String, idCol: String,
       k: Int, centroids: Seq[Seq[Double]], nprobe: Int): DataFrame = {
@@ -801,24 +801,6 @@ object AnnSearch {
       .join(q, Seq("_qpb"))
     perQueryTopK(if (excludeSelf) cand.filter(col(idCol) =!= col("_qid")) else cand,
       vecCol, idCol, k)
-  }
-
-  /** Multi-probe [[lshTopK]]: same corpus-side bucket id, `probes+1`
-    * query-side buckets probed. Probe ids are distinct by construction
-    * (base + distinct single-bit flips), so no candidate deduplication
-    * is needed.
-    */
-  def multiProbeTopK(df: DataFrame, queryDf: DataFrame, vecCol: String,
-      idCol: String, k: Int, coords: Seq[Int], probes: Int): DataFrame = {
-    val q = broadcast(queryDf.select(col(vecCol).as("_qv"))
-      .withColumn("_qpb",
-        explode(probeBuckets(col("_qv"), coords, probes))))
-    df.withColumn("_b", signBucket(col(vecCol), coords))
-      .join(q, col("_b") === col("_qpb"))
-      .withColumn("cosine", VectorFunctions.cosine(col(vecCol), col("_qv")))
-      .select(col(idCol), col("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
   }
 
   /** Recall readout for the sign-bucket tier: over a deterministic

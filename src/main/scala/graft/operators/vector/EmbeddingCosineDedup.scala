@@ -177,32 +177,7 @@ object EmbeddingCosineDedup {
       .dropDuplicates("d1", "d2")
   }
 
-  /** Recall readout for BUCKET-RESTRICTED cosine dedup (r15) — the
-    * semantic-dedup member of the recall-gate family (MinHash banding →
-    * `lsh_recall_report`, sign-LSH → `multiprobe_recall`, mutual-kNN →
-    * `mutual_knn_recall`): on a deterministic 1-in-`sampleMod` id
-    * sample, duplicate pairs found WITHIN the given bucket column vs
-    * exact all-pairs truth at the same threshold. Bucket-caught pairs
-    * are a SUBSET of truth by construction (same cosine test, the
-    * bucket only restricts candidates), so recall = bucket_pairs /
-    * true_pairs with no hit join. One row: `(true_pairs, bucket_pairs,
-    * recall)`.
-    */
-  def bucketedRecall(df: DataFrame, vecCol: String, idCol: String,
-      bucketCol: String, threshold: Double, sampleMod: Int): DataFrame = {
-    val (sample, truth) = sampledTruth(df, vecCol, idCol, threshold, sampleMod,
-      extra = Seq(bucketCol))
-    val bl = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"),
-      col(bucketCol).as("_bk"))
-    val br = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"),
-      col(bucketCol).as("_bk"))
-    val caught = bl.join(br, Seq("_bk"))
-      .filter(col("d1") < col("d2") &&
-        VectorFunctions.cosine(col("v1"), col("v2")) >= threshold)
-    recallRow(truth, "bucket" -> caught).withColumnRenamed("bucket_recall", "recall")
-  }
-
-  /** The readout sample `(idCol, vecCol, extra…)` — the
+  /** The readout sample `(idCol, vecCol)` — the
     * [[graft.operators.Readout]] sampling contract over non-null vectors
     * — and its exact truth: every `d1 < d2` sample pair at cosine ≥
     * `threshold`. Quadratic in the sample, so the sample side
@@ -210,11 +185,10 @@ object EmbeddingCosineDedup {
     * the truth more than once stage it.
     */
   private def sampledTruth(df: DataFrame, vecCol: String, idCol: String,
-      threshold: Double, sampleMod: Int,
-      extra: Seq[String] = Nil): (DataFrame, DataFrame) = {
+      threshold: Double, sampleMod: Int): (DataFrame, DataFrame) = {
     require(sampleMod >= 1, "sampleMod is required: the truth tier is quadratic in the sample")
     val sample = df.filter(col(vecCol).isNotNull && col(idCol) % sampleMod === 0)
-      .select((Seq(col(idCol), col(vecCol)) ++ extra.map(col)): _*)
+      .select(col(idCol), col(vecCol))
     val l = sample.select(col(idCol).as("d1"), col(vecCol).as("v1"))
     val r = sample.select(col(idCol).as("d2"), col(vecCol).as("v2"))
     val truth = l.crossJoin(broadcast(r))

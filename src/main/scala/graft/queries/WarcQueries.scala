@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.core.Tables
-import graft.sources.Warc
 import org.apache.spark.sql.functions._
 
 /** S2/S3 gate: the WARC loader + HTML extractor run end-to-end over an
@@ -34,7 +33,7 @@ object WarcQueries {
   }
 
   /** Shard count for the generated archive: one WARC file per shard, so
-    * the `binaryFile` scan in [[Warc.load]] gets that many tasks. (The
+    * the `format("warc")` scan gets that many tasks. (The
     * r9 form collected the whole table driver-side into ONE file — a
     * zero-parallelism scan and the repo's only full-table collect; it
     * swung 0.77 s → 37 s under host contention in the driver bench.)
@@ -82,7 +81,7 @@ object WarcQueries {
   val queries: Seq[OracleQuery] = Seq(
     OracleQuery("warc_extract",
       (s, dir) =>
-        Warc.load(s, fixtureDir(s, dir), "CC-FIX")
+        s.read.format("warc").option("crawl_id", "CC-FIX").load(fixtureDir(s, dir))
           .select(col("url"), col("text"), col("text_length"))
           .orderBy(col("url")),
       Some(s"""WITH c AS (SELECT doc_id,

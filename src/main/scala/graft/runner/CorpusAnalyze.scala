@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * distribution (how much of the corpus is recombined boilerplate),
   * and per-source PSI drift against the corpus-wide length shape.
   * Each report writes as parquet under `outDir`; the returned summary
-  * feeds the CLI's JSON line. All aggregations are the bounded,
+  * feeds the CLI's JSON line; frames the reports stage release when
+  * `run` returns. All aggregations are the bounded,
   * partial-aggregated shapes used by the gated operators — the report
   * runs at any corpus size.
   */
@@ -21,7 +22,7 @@ object CorpusAnalyze {
 
   def run(spark: SparkSession, df: DataFrame, outDir: String,
       textCol: String = "text", idCol: String = "doc_id",
-      sourceCol: String = "source"): Summary = {
+      sourceCol: String = "source"): Summary = graft.core.Staging.scoped {
     val toks = TextFunctions.tokenCount(col(textCol))
 
     // per-source inventory: docs, tokens, mean quality (rounded-mean

@@ -163,11 +163,14 @@ object CorpusReports {
       s"unknown report '$other'; available: ${(names ++ embeddingNames).mkString(", ")}")
   }
 
-  /** Run and write `outDir/<name>`; returns the row count. */
+  /** Run and write `outDir/<name>`; returns the row count. Frames the
+    * report stages release once the write is done.
+    */
   def run(spark: SparkSession, name: String, df: DataFrame, outDir: String,
       cols: Cols = Cols("text", "source")): Long = {
-    val out = build(name, df, cols)
-    out.write.mode("overwrite").parquet(s"$outDir/$name")
+    graft.core.Staging.scoped {
+      build(name, df, cols).write.mode("overwrite").parquet(s"$outDir/$name")
+    }
     spark.read.parquet(s"$outDir/$name").count()
   }
 }

@@ -565,8 +565,7 @@ object OperatorRegistry {
       textCol = p.str("text_field", "text"),
       idCol = p.str("id_field", "id"),
       outCol = p.str("output_field", "bigram_lm_bits"),
-      countCol = p.str("count_field", "bigram_lm_n"),
-      snapshotDir = p.str("snapshot_dir")))
+      countCol = p.str("count_field", "bigram_lm_n")))
 
   // smoothing: "addone" (default), "kn" (interpolated Kneser–Ney), or
   // "mkn" (modified KN — three count-dependent discounts, the KenLM

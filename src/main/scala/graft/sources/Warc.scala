@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CommonCrawl WARC source (S2) + HTML text extraction (S3).
@@ -16,10 +16,13 @@ import org.apache.spark.sql.functions._
   * script/style/nav/header/footer/aside subtrees, breaks on block tags,
   * strips tags, and decodes common entities).
   *
-  * Packaging is the SURVEY §7.3 disposition: `binaryFile` scan +
-  * `flatMap` — each WARC file is one task, parallelism = file count, no
-  * driver involvement. (Web-scale fetch/backoff is an ingest concern; the
-  * engine reads already-mirrored archives.)
+  * Packaging: the batch scan is the DataSource V2 `format("warc")`
+  * ([[WarcDataSource]]) and the streaming scan is [[loadStream]]
+  * (`binaryFile` + `flatMap`); either way each WARC file is one task,
+  * parallelism = file count, no driver involvement. [[pathsFor]]
+  * resolves a crawl manifest into the file list the batch scan reads.
+  * (Web-scale fetch/backoff is an ingest concern; the engine reads
+  * already-mirrored archives.)
   */
 object Warc {
 
@@ -214,32 +217,9 @@ object Warc {
     } finally in.close()
   }
 
-  /** Manifest-driven load: resolve the crawl's file list, then scan. */
-  def loadCrawl(
-      spark: SparkSession,
-      crawlId: String,
-      mirrorRoot: String,
-      numFiles: Option[Int] = None,
-      maxSamples: Option[Long] = None): Dataset[WarcDoc] = {
-    val paths = pathsFor(crawlId, mirrorRoot, numFiles, maxSamples)
-    import spark.implicits._
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) => extractDocs(crawlId, path, bytes) }
-  }
-
-  /** The loader: WARC files under `pathGlob` → text records. */
-  def load(spark: SparkSession, pathGlob: String, crawlId: String): Dataset[WarcDoc] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) => extractDocs(crawlId, path, bytes) }
-  }
-
-  /** Streaming twin of [[load]]: new WARC files landing under
-    * `pathGlob` flow through the same per-file parse + extraction as a
+  /** Streaming twin of the batch `format("warc")` scan
+    * ([[WarcDataSource]]): new WARC files landing under `pathGlob` flow
+    * through the same per-file parse + extraction ([[extractDocs]]) as a
     * Structured Streaming source (file-source semantics: exactly-once
     * per file via the checkpointed file log; `maxFilesPerTrigger`
     * bounds a trigger — the reference's loader backpressure).

@@ -228,87 +228,6 @@ object StreamingCuration {
         signatureScheme = signatureScheme).apply)
   }
 
-  /** Streaming bigram-LM quality scoring (r15; Kneser–Ney r17) — the
-    * drift-monitor twin of [[graft.operators.text.BigramLm]]: the
-    * `smoothing` LM ("addone" | "kn") trains ONCE on a reference corpus
-    * and FREEZES (`BigramLm.freeze(trainCorpus, Some(v0), smoothing)`);
-    * each micro-batch scores against the frozen tables
-    * ([[graft.operators.text.BigramLm.scoreAgainst]]: hash joins on the
-    * model tables + a broadcast scalar — no training-corpus rescan per
-    * trigger, the KenLM-style run shape) and appends `(id, n_bigrams,
-    * bits_per_bigram)` to `outDir`. Raw batches accumulate in
-    * `corpusDir`; when `retrainEvery = Some(n)`, every n-th epoch
-    * re-trains the model on the accumulated corpus AFTER scoring (so an
-    * epoch's scores always reflect the model that was live when its data
-    * arrived) and releases the old tables — how a curation pipeline
-    * actually tracks distribution drift without ever scoring under a
-    * half-updated model.
-    *
-    * Restart story: checkpointed source offsets; the training corpus
-    * `corpusDir` is an epoch store (object doc), so a replayed epoch
-    * overwrites rather than duplicates —
-    * bigram counts never inflate across a crash (score appends to
-    * `outDir` stay at-least-once, the standard foreachBatch caveat). On
-    * startup the scorer adopts the highest-versioned COMPLETE snapshot
-    * of its smoothing under `modelDir` when one exists
-    * (`BigramLm.latestSnapshot(spark, modelDir, smoothing)`, re-opened by
-    * `loadSnapshot(spark, dir, smoothing)`), falling back to
-    * `freeze(trainCorpus)` only for a fresh start — a reboot resumes
-    * under the model that was live at the crash. One replay edge stays
-    * (inherent to post-scoring retrain + at-least-once): a crash between
-    * a retrain-epoch's snapshot write and its checkpoint commit replays
-    * that epoch's scores under its own retrain. StreamingSpec pins
-    * stream score == batch [[graft.operators.text.BigramLm.scoreAgainst]]
-    * under the same frozen model across triggers (both smoothings), the
-    * retrain path against a batch re-freeze, and the restart path of
-    * both smoothings (corpus count stable under replay, latest snapshot
-    * adopted, not re-frozen).
-    */
-  def bigramLmScoreForeachBatch(
-      stream: DataFrame,
-      trainCorpus: DataFrame,
-      outDir: String,
-      corpusDir: String,
-      modelDir: String,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      retrainEvery: Option[Int] = None,
-      smoothing: String = "addone")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(retrainEvery.forall(_ >= 1),
-      s"retrainEvery must be >= 1 when set, got $retrainEvery")
-    val lm = new graft.operators.text.BigramLm(textCol, idCol)
-    // every model SNAPSHOTS to a versioned dir: a cached plan over the
-    // live (appended-to) corpusDir is NOT frozen — Spark's append path
-    // refreshes-and-recaches plans rooted in the written path, so the
-    // model would silently track data that arrived after its freeze
-    // (see BigramLm.freeze). The snapshot is also the restart artifact;
-    // the probe adopts only snapshots of THIS smoothing family.
-    val model = new java.util.concurrent.atomic.AtomicReference(
-      graft.operators.text.BigramLm
-        .latestSnapshot(trainCorpus.sparkSession, modelDir, smoothing) match {
-        case Some(dir) => lm.loadSnapshot(trainCorpus.sparkSession, dir, smoothing)
-        case None      => lm.freeze(trainCorpus, Some(s"$modelDir/v0"), smoothing)
-      })
-    stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val spark = batch.sparkSession
-      val in = batch.persist()
-      try {
-        // epoch-keyed OVERWRITE: a replayed epoch replaces its own
-        // partition, so the accumulated corpus never double-counts
-        in.write.mode("overwrite").parquet(epochDir(corpusDir, epoch))
-        lm.scoreAgainst(in, model.get()).write.mode("append").parquet(outDir)
-        retrainEvery.filter(n => (epoch + 1) % n == 0).foreach { _ =>
-          val old = model.get()
-          model.set(lm.freeze(spark.read.parquet(corpusDir),
-            Some(s"$modelDir/v${epoch + 1}"), smoothing))
-          old.release()
-        }
-      } finally in.unpersist()
-      ()
-    }
-  }
-
   /** Streaming SEMANTIC dedup — the embedding twin of
     * [[nearDedupForeachBatch]]: each micro-batch first collapses its own
     * exact-signature duplicates (hyperplane LSH first-wins), then drops

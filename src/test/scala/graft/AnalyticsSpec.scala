@@ -3,9 +3,8 @@ package graft
 import graft.operators.events.Sessionize
 import graft.operators.text.{BpePairCounts, BpeVocabInduction, CorpusOverlapReport}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class AnalyticsSpec extends AnyFunSuite {
+class AnalyticsSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

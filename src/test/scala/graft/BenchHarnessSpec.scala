@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the bench measurement protocol (graft.core.BenchHarness):
   * warmup excluded from the record, interleaved warm-min, wall guard,
@@ -8,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * for guarded legs plus per-run evidence, so one contended rep can
   * never canonize a wall-guard artifact as the official value.
   */
-class BenchHarnessSpec extends AnyFunSuite {
+class BenchHarnessSpec extends ScopedSuite {
 
   // a leg that sleeps `slowMs` on the invocation numbers in `slowOn`
   // (1-based: 1 = warmup, 2 = first warm rep, ...) and `fastMs` otherwise

@@ -3,9 +3,8 @@ package graft
 import graft.ml.ClassifierWeights
 import graft.operators.ml.{QualityClassifier, QualityClassifierFilter, QualityClassifierRefiner}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class ClassifierSpec extends AnyFunSuite {
+class ClassifierSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 
@@ -69,16 +68,6 @@ class ClassifierSpec extends AnyFunSuite {
       val want = 1.0 / (1.0 + math.exp(-mean))
       assert(math.abs(score - want) < 1e-9, s"doc $id: $score vs $want")
     }
-  }
-
-  test("broadcast and local weight resolutions score identically") {
-    val bc = ClassifierWeights.Bcast(spark.sparkContext.broadcast(w.get))
-    val df = table("documents").select("doc_id", "text").limit(20)
-    val a = new QualityClassifierRefiner("text", "s", D, 0.0, true, w)(df)
-      .orderBy("doc_id").select("s").as[Double].collect().toSeq
-    val b = new QualityClassifierRefiner("text", "s", D, 0.0, true, bc)(df)
-      .orderBy("doc_id").select("s").as[Double].collect().toSeq
-    assert(a == b)
   }
 
   test("filter keeps exactly the rows whose score clears the threshold") {

@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.dedup.{NgramContainmentDedup, NgramJaccardDedup}
-import org.scalatest.funsuite.AnyFunSuite
 
-class ContainmentSpec extends AnyFunSuite {
+class ContainmentSpec extends ScopedSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 

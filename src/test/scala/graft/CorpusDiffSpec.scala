@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.text.CorpusDiff
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class CorpusDiffSpec extends AnyFunSuite {
+class CorpusDiffSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

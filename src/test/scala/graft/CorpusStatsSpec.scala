@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.text.{DocumentChunker, DomainStatsFilter, StripAccentsRefiner, TfIdfTopTerms, VocabularyBuilder}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class CorpusStatsSpec extends AnyFunSuite {
+class CorpusStatsSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 
@@ -498,34 +497,6 @@ class CorpusStatsSpec extends AnyFunSuite {
     } finally m.release()
   }
 
-  test("snapshot family marker: a smoothing switch on the same modelDir never adopts the other family's snapshot") {
-    val lm = new graft.operators.text.BigramLm("text", "doc_id")
-    val train = Seq((1L, "a b a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_blmfam")
-    val v0 = base.resolve("v0").toString
-    // addone freeze first: the addone probe adopts it, the kn probe
-    // must not (kn tables incomplete AND family mismatch)
-    val m1 = lm.freeze(train, Some(v0))
-    try {
-      assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, base.toString, "addone").exists(_.endsWith("v0")))
-      assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, base.toString, "kn").isEmpty)
-    } finally m1.release()
-    // kn re-freeze into the SAME dir: per-table overwrite leaves the
-    // stale vocab/ behind (all three addone table dirs still carry
-    // _SUCCESS), so WITHOUT the family gate the addone probe would adopt
-    // a mixed snapshot (KN costs + stale add-one vocab)
-    val m2 = lm.freeze(train, Some(v0), smoothing = "kn")
-    try {
-      assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, base.toString, "kn").exists(_.endsWith("v0")))
-      // the family gate is what refuses it
-      assert(graft.operators.text.BigramLm.latestSnapshot(
-        spark, base.toString, "addone").isEmpty)
-    } finally m2.release()
-  }
-
   test("ladderScores: one staged pass, bit-identical to the three individual scorers") {
     // the lm_smoothing report consumes this — the refactor's ONLY
     // license is value identity, so every doc's (n, bits) triple must
@@ -551,55 +522,6 @@ class CorpusStatsSpec extends AnyFunSuite {
       assert((n, bk) == k(id), s"kn mismatch at $id")
       assert((n, bm) == m(id), s"mkn mismatch at $id")
     }
-  }
-
-  test("marker-first freeze: a family-switch crash before any table fails safe (reject-and-retrain, never mixed adoption)") {
-    val lm = new graft.operators.text.BigramLm("text", "doc_id")
-    val train = Seq((1L, "a b a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_blmfam2")
-    val v0 = base.resolve("v0").toString
-    val m1 = lm.freeze(train, Some(v0))
-    m1.release()
-    // simulate the worst crash shape of a kn RE-freeze into the same
-    // dir: the marker lands FIRST (r18 write order), then the process
-    // dies before any kn table is written — complete addone tables
-    // remain under a "kn" marker
-    // via the Hadoop FS (like Snapshots.mark itself) — a raw NIO overwrite
-    // would leave the freeze's ._FAMILY.crc stale and fail on checksum
-    val fam = new org.apache.hadoop.fs.Path(v0, "_FAMILY")
-    val fs = fam.getFileSystem(spark.sessionState.newHadoopConf())
-    val os = fs.create(fam, true)
-    os.write("kn".getBytes(java.nio.charset.StandardCharsets.UTF_8)); os.close()
-    // the addone probe must refuse the complete-looking addone tables
-    // (family mismatch) and the kn probe must refuse too (tables
-    // missing) — both retrain; neither adopts a mix
-    assert(graft.operators.text.BigramLm.latestSnapshot(
-      spark, base.toString, "addone").isEmpty)
-    assert(graft.operators.text.BigramLm.latestSnapshot(
-      spark, base.toString, "kn").isEmpty)
-  }
-
-  test("markerless snapshot: an add-one snapshot without _FAMILY (pre-marker artifact) is still adopted and loads as add-one") {
-    val lm = new graft.operators.text.BigramLm("text", "doc_id")
-    val train = Seq((1L, "a b a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val novel = Seq((10L, "x y"), (11L, "a z"), (12L, "a b c")).toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_blmnomark")
-    val v0 = base.resolve("v0").toString
-    val m1 = lm.freeze(train, Some(v0))
-    val want = try lm.scoreAgainst(novel, m1).collect().toSet finally m1.release()
-    val fam = new org.apache.hadoop.fs.Path(v0, "_FAMILY")
-    val fs = fam.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.delete(fam, false), "the freeze must have written _FAMILY")
-    val dir = graft.operators.text.BigramLm.latestSnapshot(spark, base.toString, "addone")
-    assert(dir.exists(_.endsWith("v0")), s"markerless add-one snapshot refused: $dir")
-    // the kn probe still refuses it: its tables are not all there
-    assert(graft.operators.text.BigramLm.latestSnapshot(spark, base.toString, "kn").isEmpty)
-    val m2 = lm.loadSnapshot(spark, dir.get, "addone")
-    try {
-      assert(m2.smoothing == "addone" && m2.tables.size == 3)
-      assert(lm.scoreAgainst(novel, m2).collect().toSet == want,
-        "the re-opened snapshot must score like the model that wrote it")
-    } finally m2.release()
   }
 
   test("frozen bigram refiner: external training corpus, backoff arms, registry path, no id multiplication") {

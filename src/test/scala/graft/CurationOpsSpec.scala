@@ -2,12 +2,11 @@ package graft
 
 import graft.operators.text.{BenchmarkDecontaminationFilter, PiiRedaction, PiiRedactionRefiner, TextRepetitionRefiner}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit semantics of the training-data curation additions: benchmark
   * decontamination, PII redaction, repetition signals.
   */
-class CurationOpsSpec extends AnyFunSuite {
+class CurationOpsSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -5,14 +5,13 @@ import graft.operators.text.TextLengthFilter
 import graft.operators.vector.{AnnSearch, EmbeddingCosineDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Algebraic properties of the dedup/filter family on the fixture tables:
   * containment between the approximate and exact near-dup operators,
   * idempotence, and complement partitioning. These are the invariants the
   * operators' scaladocs promise.
   */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends ScopedSuite {
   import TestSpark._
 
   private def ids(df: DataFrame, c: String = "doc_id"): Set[Long] =
@@ -556,25 +555,6 @@ class DedupSpec extends AnyFunSuite {
     assert(chosen((1 to 4).map(_ -> none), target = 0.5, default = 1) == Seq(1))
     assert(chosen(Seq(25, 50, 100).map(_ -> none), target = 0.5, default = 25) == Seq(25))
     assert(chosen(Seq(25, 50, 100).map(_ -> none), target = 0.5, default = 50) == Seq(50))
-  }
-
-  test("semantic dedup recall: bucket pairs subset truth; one-bucket recall is exactly 1") {
-    import spark.implicits._
-    val emb = table("embeddings")
-    // degenerate single bucket: candidates unrestricted -> recall 1.0
-    val one = graft.operators.vector.EmbeddingCosineDedup.bucketedRecall(
-      emb.withColumn("cluster_id", lit(0)), "embedding", "vec_id",
-      "cluster_id", threshold = 0.35, sampleMod = 4).head()
-    assert(one.getLong(0) == one.getLong(1) && one.getDouble(2) == 1.0)
-    // real buckets: caught <= truth (subset by construction)
-    val parted = graft.operators.vector.EmbeddingCosineDedup.bucketedRecall(
-      emb.withColumn("cluster_id", col("vec_id") % 8), "embedding", "vec_id",
-      "cluster_id", threshold = 0.35, sampleMod = 4).head()
-    assert(parted.getLong(1) <= parted.getLong(0))
-    assertThrows[IllegalArgumentException](
-      graft.operators.vector.EmbeddingCosineDedup.bucketedRecall(
-        emb.withColumn("cluster_id", lit(0)), "embedding", "vec_id",
-        "cluster_id", threshold = 0.35, sampleMod = 0))
   }
 
   test("OR-amplified mutual kNN: random vectors match an independent plain-Scala reference") {

@@ -6,7 +6,6 @@ import graft.operators.text.TextLengthFilter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Single-pass reject disposition (core.Disposition + the runner's
   * rejectedEnabled path): mark-don't-drop must agree row-for-row with the
@@ -14,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must read the source exactly once (the reference replays the chain per
   * stage — the scale defect this mode removes).
   */
-class DispositionSpec extends AnyFunSuite {
+class DispositionSpec extends ScopedSuite {
   import TestSpark._
 
   private val filterOp = new TextLengthFilter(100L, Some(400L), "text", Some("n_chars"))

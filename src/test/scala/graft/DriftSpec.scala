@@ -4,9 +4,8 @@ import graft.operators.ml.ClusterSilhouette
 import graft.operators.stats.{DistributionDrift, RaterAgreement}
 import graft.operators.text.JsDivergence
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class DriftSpec extends AnyFunSuite {
+class DriftSpec extends ScopedSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 

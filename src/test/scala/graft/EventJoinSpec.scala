@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.events.{AsofJoin, IntervalJoinBucketed}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class EventJoinSpec extends AnyFunSuite {
+class EventJoinSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -1,13 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The SparkSessionExtensions surface: kernel SQL functions and the
   * opt-in vector-cartesian guard rule. Uses the shared TestSpark
   * session (built WITH GraftExtensions via GraftSession.builder).
   */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import graft.operators.image.ImageOps
 import graft.sources.SyntheticImages
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Drift guard for the committed fixture-image dumps in
   * `tools/fixture_images/` (written by [[DumpImageFixture]]). The
@@ -16,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dump from the runtime fixture and corrupt the oracle. This spec
   * makes that drift fail loudly instead.
   */
-class FixtureDriftSpec extends AnyFunSuite {
+class FixtureDriftSpec extends ScopedSuite {
 
   private val dir = Paths.get("tools", "fixture_images")
 

@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.text.FuzzyJoin
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class FuzzyJoinSpec extends AnyFunSuite {
+class FuzzyJoinSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

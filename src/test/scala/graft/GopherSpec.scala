@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.text.{GopherQuality, GopherQualityFilter, GopherQualityRefiner}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Per-rule coverage of the Gopher quality battery: one crafted document
   * per rule, failing ONLY that rule (except where a rule-breaker can't
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * all seven. Thresholds are the spec defaults with minWords lowered so
   * the fixtures stay readable.
   */
-class GopherSpec extends AnyFunSuite {
+class GopherSpec extends ScopedSuite {
   import TestSpark._
 
   private val base =

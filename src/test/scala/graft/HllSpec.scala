@@ -2,9 +2,8 @@ package graft
 
 import graft.functions.{HashFunctions, HllSketch}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class HllSpec extends AnyFunSuite {
+class HllSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

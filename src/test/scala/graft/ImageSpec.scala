@@ -3,15 +3,20 @@ package graft
 import graft.operators.image.{ImageMetadataRefiner, ImageOps, ImagePhashDedup, ImagePhashNearDedup, ImageQualityFilter, ImageTechnicalQualityRefiner}
 import graft.sources.SyntheticImages
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Image kernel + operator behavior the oracle gate can't see: lossless
   * decode roundtrip (the premise of the numpy-parity oracle), file-size
   * semantics, total-function failure behavior, and the perceptual-hash
   * robustness/discrimination properties that justify exact-match dedup.
   */
-class ImageSpec extends AnyFunSuite {
+class ImageSpec extends ScopedSuite {
   import TestSpark._
+
+  // bit distance between two equal-length hex hashes
+  private def hamming(hexA: String, hexB: String): Int =
+    hexA.zip(hexB).map { case (a, b) =>
+      Integer.bitCount(Integer.parseInt(a.toString, 16) ^ Integer.parseInt(b.toString, 16))
+    }.sum
 
   test("PNG roundtrip is lossless: decoded pixels equal the generator spec") {
     for (id <- Seq(1L, 2L, 3L, 7L)) {
@@ -80,10 +85,10 @@ class ImageSpec extends AnyFunSuite {
         (r << 16) | (g << 8) | b
       } else p
     }
-    val near = ImageOps.hamming(
+    val near = hamming(
       ImageOps.phash(SyntheticImages.encode(3L)).get,
       ImageOps.phash(SyntheticImages.encodeAs(w, h, perturbed, "png")).get)
-    val far = ImageOps.hamming(
+    val far = hamming(
       ImageOps.phash(SyntheticImages.encode(3L)).get,
       ImageOps.phash(SyntheticImages.encode(7L)).get)
     assert(near < 48 && far > 64, s"near=$near far=$far")
@@ -141,7 +146,7 @@ class ImageSpec extends AnyFunSuite {
 
   test("phash discriminates: distinct noise images have distant hashes") {
     def ph(id: Long) = ImageOps.phash(SyntheticImages.encode(id)).get
-    val d = ImageOps.hamming(ph(3L), ph(7L))
+    val d = hamming(ph(3L), ph(7L))
     assert(d > 64, s"noise-vs-noise hamming $d — hash is degenerate")
   }
 
@@ -175,7 +180,7 @@ class ImageSpec extends AnyFunSuite {
     val bytes = SyntheticImages.encodeAs(w, h, px, "png")
     val sub = ImageOps.decodeSubsampled(bytes).get
     assert(sub.width == 256 && sub.height == 256, s"expected 2x subsample, got ${sub.width}x${sub.height}")
-    assert(ImageOps.readDims(bytes).contains((512, 512)))
+    assert(ImageOps.decode(bytes).map(d => (d.width, d.height)).contains((512, 512)))
     // deterministic in the bytes
     assert(ImageOps.phash(bytes).get == ImageOps.phash(bytes).get)
     // The dedup-relevant property is WITHIN-pipeline robustness: both
@@ -209,11 +214,11 @@ class ImageSpec extends AnyFunSuite {
         (r << 16) | (g << 8) | b
       } else p
     }
-    val near = ImageOps.hamming(
+    val near = hamming(
       ImageOps.phash(bytes2).get,
       ImageOps.phash(SyntheticImages.encodeAs(768, 768, px2b, "png")).get)
     assert(near <= 8, s"perturbed large image drifted $near/256 bits under subsampled hashing")
-    val far = ImageOps.hamming(ImageOps.phash(bytes2).get, ImageOps.phash(bytes).get)
+    val far = hamming(ImageOps.phash(bytes2).get, ImageOps.phash(bytes).get)
     assert(far > 40, s"distinct large images only $far/256 bits apart")
     // every committed fixture id is below the threshold: hash identical
     // to the exact path (the oracle VALUES blocks pin this forever)

@@ -3,9 +3,8 @@ package graft
 import graft.core.Disposition
 import graft.operators.dedup.IncrementalExactDedup
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class IncrementalDedupSpec extends AnyFunSuite {
+class IncrementalDedupSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

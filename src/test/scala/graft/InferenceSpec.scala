@@ -4,12 +4,11 @@ import graft.ml.Mlp
 import graft.operators.image._
 import graft.sources.SyntheticImages
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Inference-refiner plumbing: MLP math, wrong-dim defaults, encoder
   * batching/normalization/zero-vector behavior, missing-model nulls.
   */
-class InferenceSpec extends AnyFunSuite {
+class InferenceSpec extends ScopedSuite {
   import TestSpark._
 
   test("mlp forward: hand-computed two-layer network") {

@@ -2,14 +2,13 @@ package graft
 
 import graft.operators.ml.KMeansBuckets
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Trained-model path of KMeansBuckets (the oracle gate covers the
   * fixed-centroid path): the Spark ML model's assignment must agree with
   * our kernel's argmin over the model's own centroids — two independent
   * implementations of the assignment step.
   */
-class KMeansSpec extends AnyFunSuite {
+class KMeansSpec extends ScopedSuite {
   import TestSpark._
 
   test("trained k-means assignment matches kernel argmin over model centroids") {
@@ -33,7 +32,7 @@ class KMeansSpec extends AnyFunSuite {
   test("cluster bucketing keeps every row exactly once (refiner, not a filter)") {
     val emb = table("embeddings")
     val km = new KMeansBuckets(vecCol = "embedding", k = 4, seed = 7L, maxIter = 5)
-    val out = km.fitTransform(emb)
+    val out = km.transform(emb, km.fit(emb))
     assert(out.count() == emb.count())
     assert(out.columns.contains("cluster_id"))
   }

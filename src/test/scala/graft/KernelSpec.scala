@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused kernel expressions must be bit-identical to the declarative
   * Catalyst forms they replace (that's the whole contract that lets the
@@ -16,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * expression eval with ScalaCheck generators, and whole-column parity on
   * the fixture documents table.
   */
-class KernelSpec extends AnyFunSuite {
+class KernelSpec extends ScopedSuite {
   import TestSpark._
 
   /** Minimal ScalaCheck bridge (scalatestplus isn't in the offline cache). */
@@ -403,12 +402,22 @@ class KernelSpec extends AnyFunSuite {
   test("PqEncodePacked kernel is bit-identical to the declarative argmin/pack tree") {
     val pq = new graft.operators.vector.ProductQuantizer()
     val emb = table("embeddings").select(col("vec_id"), col("embedding"))
-    val diff = emb.select(
-        pq.packedCodeDeclarative(col("embedding")).as("a"),
-        pq.packedCode(col("embedding")).as("b"))
-      .filter(col("a") =!= col("b") ||
-        (col("a").isNull =!= col("b").isNull))
-    assert(diff.count() == 0)
+    def codes(c: org.apache.spark.sql.Column) =
+      emb.select(col("vec_id"), c).collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    val kernel = codes(pq.packedCode(col("embedding")))
+    // the declarative tree outgrows one whole-stage method (the JVM's
+    // 64 KB limit); outside whole-stage codegen Spark compiles each
+    // large subexpression as its own method
+    val prev = spark.conf.getOption("spark.sql.codegen.wholeStage")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    val declarative =
+      try codes(pq.packedCodeDeclarative(col("embedding")))
+      finally prev.fold(spark.conf.unset("spark.sql.codegen.wholeStage"))(
+        spark.conf.set("spark.sql.codegen.wholeStage", _))
+    assert(kernel.size == emb.count())
+    val diff = kernel.filter { case (id, k) => declarative.get(id) != Some(k) }
+    assert(declarative.size == kernel.size && diff.isEmpty,
+      s"${diff.size} rows differ, first ${diff.headOption}")
     // centroid-exact vector encodes to exactly those codes through the kernel
     val ks = Seq(3, 0, 15, 7, 1, 9, 12, 5)
     val vec = (0 until 8).flatMap(m => pq.codebook(m)(ks(m)).map(_.toFloat))

@@ -2,9 +2,8 @@ package graft
 
 import graft.functions.{HashFunctions, KmvSketch}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class KmvSpec extends AnyFunSuite {
+class KmvSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -9,7 +9,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{AbstractFileSystem, ChecksumException, CreateFlag, FileContext,
   FileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.io.LocalFs]] behaves like Hadoop's stock local filesystem:
   * same mode bits on created paths through `FileSystem` and
@@ -18,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * symlinks. Each filesystem is built directly (not through
   * `FileSystem.get`), so Hadoop's per-scheme cache is left alone.
   */
-class LocalFsSpec extends AnyFunSuite {
+class LocalFsSpec extends ScopedSuite {
 
   private val conf = new Configuration()
   private val root = new URI("file:///")

@@ -3,7 +3,6 @@ package graft
 import graft.operators.ml.{LogisticRegression, LogregFeature}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The trained-classifier loop: full-batch GD logistic regression with
   * the 1e-6 model-quantization discipline. The oracle gates pin
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * descent, signs, accuracy — on constructed separable data, plus the
   * determinism claims the quantization exists for.
   */
-class LogisticRegressionSpec extends AnyFunSuite {
+class LogisticRegressionSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 
@@ -196,36 +195,19 @@ class LogisticRegressionSpec extends AnyFunSuite {
       "the dead third must move the model for this pin to bite")
   }
 
-  test("frozen snapshot: train offline, score the stream — stream equals batch; guards bite") {
+  test("trained weights score a stream like the batch under scoreExprWith") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val docs = table("documents")
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_lgq_model").toString
     val f = new graft.operators.ml.LogregQualityFilter(
       textCol = "text", idCol = "doc_id", labelCol = "lang",
       labelValue = Some("en"), threshold = 0.384)
     val w = f.refiner.trainer.fit(docs).last
-    // an INCOMPLETE snapshot (marker, no committed weights) is refused
-    val half = s"$modelDir/v9"
-    val fs = new org.apache.hadoop.fs.Path(half)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(new org.apache.hadoop.fs.Path(half))
-    val m = fs.create(new org.apache.hadoop.fs.Path(half, "_BASIS"), true)
-    m.write("bias,tok,uniq,len,ensw".getBytes); m.close()
-    assert(graft.operators.ml.LogregQuality.latestFrozen(spark, modelDir, "text").isEmpty)
-    // freeze v1, then a basis-mismatched v2 — adoption picks v1, not the
-    // higher version under the wrong basis, and not the incomplete v9
-    graft.operators.ml.LogregQuality.freeze(docs, w, "text", modelDir, 1L)
-    val bad = graft.operators.ml.LogregQuality.freeze(docs, w, "text", modelDir, 2L)
-    val bm = fs.create(new org.apache.hadoop.fs.Path(bad, "_BASIS"), true)
-    bm.write("bias,other".getBytes); bm.close()
-    val adopted = graft.operators.ml.LogregQuality.latestFrozen(spark, modelDir, "text")
-    assert(adopted.exists(_.sameElements(w)), s"must adopt v1: $adopted")
-    // stream scoring under the frozen model == batch scoring
+    // stream scoring under the trained weights == batch scoring
     val mem = MemoryStream[(Long, String)]
     val scoredStream = mem.toDF().toDF("doc_id", "text")
       .withColumn("score",
-        graft.operators.ml.LogregQuality.scoreExprWith("text", adopted.get))
+        graft.operators.ml.LogregQuality.scoreExprWith("text", w))
     val q = scoredStream.writeStream.format("memory")
       .queryName("lgq_stream").outputMode("append").start()
     try {

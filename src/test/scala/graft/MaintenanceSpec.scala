@@ -2,12 +2,11 @@ package graft
 
 import graft.operators.table.{CdcMerge, ColumnProfiler, DataQualityChecks}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Table-maintenance operators: CDC netting/merge, SCD2 derivation,
   * single-pass profiler.
   */
-class MaintenanceSpec extends AnyFunSuite {
+class MaintenanceSpec extends ScopedSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 

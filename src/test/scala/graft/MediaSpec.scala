@@ -1,15 +1,14 @@
 package graft
 
-import graft.operators.media.{AudioMetadataRefiner, AudioOps, FrameDecoder, FrameSampleRefiner, VideoMetadataRefiner, VideoOps}
+import graft.operators.media.{AudioMetadataRefiner, AudioOps, VideoMetadataRefiner, VideoOps}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Audio binary-column metadata: real RIFF/WAV parsing, magic-number
   * codec detection, total-function failure behavior, refiner plumbing.
   */
-class MediaSpec extends AnyFunSuite {
+class MediaSpec extends ScopedSuite {
   import TestSpark._
 
   test("wav header round trip: synth → parse recovers the exact parameters") {
@@ -143,7 +142,7 @@ class MediaSpec extends AnyFunSuite {
     assert(VideoOps.parse(lying).isEmpty)
   }
 
-  test("video refiner + frame-sample SPI plumbing over the video struct") {
+  test("video refiner plumbing over the video struct") {
     val schema = StructType(Seq(
       StructField("id", LongType),
       StructField("video", StructType(Seq(StructField("bytes", BinaryType))))))
@@ -157,48 +156,6 @@ class MediaSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) null else r.getString(1))).toMap
     assert(meta(0L) == "isom" && meta(1L) == null && meta(2L) == null)
-
-    // deterministic fake decoder: frame i = first 4 bytes ++ [i]
-    val fake = new FrameDecoder {
-      def sample(video: Array[Byte], count: Int): Seq[Array[Byte]] =
-        (0 until count).map(i => video.take(4) :+ i.toByte)
-    }
-    val frames = new FrameSampleRefiner(fake, "video", count = 3)(df)
-      .select(col("id"), col("video_frames")).collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[Array[Byte]](1))).toMap
-    assert(frames(2L) == null)
-    assert(frames(0L).size == 3 && frames(0L)(2).last == 2.toByte)
   }
 
-  test("sampled video frames flow into the image dedup family") {
-    import graft.sources.SyntheticImages
-    // decoder yielding REAL image bytes: frame i of video v = the
-    // fixture PNG for drawable id (v + i) % 4 — so frame images repeat
-    // across videos and phash dedup must collapse them
-    val png = new FrameDecoder {
-      def sample(video: Array[Byte], count: Int): Seq[Array[Byte]] = {
-        val v = video.head.toLong
-        (0 until count).map(i => SyntheticImages.encode((v + i) % 4))
-      }
-    }
-    val schema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("video", StructType(Seq(StructField("bytes", BinaryType))))))
-    val rows = Seq(Row(0L, Row(Array[Byte](0, 9, 9))), Row(1L, Row(Array[Byte](2, 9, 9))))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    // frames → one row per frame with an image struct → phash exact dedup
-    val frames = new FrameSampleRefiner(png, "video", count = 3)(df)
-      .select(col("id"), posexplode(col("video_frames")).as(Seq("frame_idx", "bytes")))
-      .withColumn("image", struct(col("bytes")))
-      .withColumn("frame_id", col("id") * 100 + col("frame_idx"))
-    // v0 draws images {0,1,2}, v1 draws {2,3,0}: 6 frames, 4 distinct
-    val kept = new graft.operators.image.ImagePhashDedup("image", "frame_id", "frame_id")(frames)
-    assert(frames.count() == 6 && kept.count() == 4)
-    // both duplicate frames reject with provenance back to video 0's frames
-    val rej = new graft.operators.image.ImagePhashDedup("image", "frame_id", "frame_id")
-      .rejected(frames)
-      .select(col("frame_id"), col("_rejection_details.representative_id"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toSet
-    assert(rej == Set(100L -> "2", 102L -> "0"), rej.toString)
-  }
 }

@@ -6,13 +6,12 @@ import graft.operators.dedup.TextExactDedup
 import graft.operators.text.TextLengthFilter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Metrics machinery: observe-based counts against independent count()
   * ground truth, fused-vs-timed mode agreement, rollup algebra edge
   * cases, and W3 writer schema fidelity.
   */
-class MetricsSpec extends AnyFunSuite {
+class MetricsSpec extends ScopedSuite {
   import TestSpark._
 
   private def mkPipeline = new MeteredPipeline("test_stage", Seq(
@@ -36,7 +35,8 @@ class MetricsSpec extends AnyFunSuite {
   test("timedRun counts agree with fused run; times are attributed") {
     val docs = table("documents")
     val (fused, _) = mkPipeline.run(docs)
-    val (timed, _) = mkPipeline.timedRun(docs)
+    val (out, timed, _) = mkPipeline.timedRunThrough(docs)
+    Staging.release(out)
     assert(fused.map(c => (c.name, c.input, c.output)) ==
       timed.map(c => (c.name, c.input, c.output)))
     assert(timed.forall(_.timeSec > 0.0))
@@ -56,7 +56,11 @@ class MetricsSpec extends AnyFunSuite {
     }
     val input = spark.range(0, 100, 1, 1).toDF("id")
     val before = Staging.liveCount
-    val (cs, _) = new MeteredPipeline("attr", Seq(expensive, cheap)).timedRun(input)
+    val (out, cs, _) = new MeteredPipeline("attr", Seq(expensive, cheap))
+      .timedRunThrough(input)
+    // only the returned last stage is still staged
+    assert(Staging.liveCount == before + 1, "timedRun leaked a staged boundary")
+    Staging.release(out)
     assert(cs.map(c => (c.name, c.input, c.output)) ==
       Seq(("expensive", 100L, 100L), ("cheap", 100L, 50L)))
     assert(cs.head.timeSec >= 0.9, s"expensive op read ${cs.head.timeSec} s")

@@ -5,13 +5,12 @@ import graft.operators.stats.LinearFit
 import graft.operators.text.{MixPlan, NgramNovelty}
 import graft.operators.vector.EmbeddingOutliers
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit semantics for the round-11 statistics/model operators (the
   * DuckDB gates pin engine parity; these pin the MATH on crafted
   * inputs where the right answer is known by construction).
   */
-class ModelStatsSpec extends AnyFunSuite {
+class ModelStatsSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.ml.NaiveBayes
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class NaiveBayesSpec extends AnyFunSuite {
+class NaiveBayesSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

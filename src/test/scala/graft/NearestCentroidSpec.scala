@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.ml.NearestCentroidClassifier
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class NearestCentroidSpec extends AnyFunSuite {
+class NearestCentroidSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

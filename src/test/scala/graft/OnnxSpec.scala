@@ -4,7 +4,6 @@ import graft.ml.{Onnx, OnnxImageEncoder}
 import graft.operators.image.ImageEmbeddingRefiner
 import graft.sources.SyntheticImages
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Serializes a REAL ONNX ModelProto byte-for-byte per the public
   * onnx.proto wire format (a file any onnx tooling would load), then
@@ -109,7 +108,7 @@ object OnnxTestModel {
   }
 }
 
-class OnnxSpec extends AnyFunSuite {
+class OnnxSpec extends ScopedSuite {
   import TestSpark._
 
   private val side = 16

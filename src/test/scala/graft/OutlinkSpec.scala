@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.text.OutlinkGraph
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class OutlinkSpec extends AnyFunSuite {
+class OutlinkSpec extends ScopedSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 

@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.vector.Pca
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class PcaSpec extends AnyFunSuite {
+class PcaSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -1,14 +1,13 @@
 package graft
 
 import graft.queries.{NearDup, Relational}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions: the optimizations the engine's 100 TB
   * posture depends on must actually appear in the executed plan — pushed
   * scan filters, pruned scan schemas, broadcast joins for small dims,
   * top-k without a global sort, and exactly one shuffle per dedup.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends ScopedSuite {
   import TestSpark._
 
   private val byName = (Relational.queries ++ NearDup.queries ++
@@ -540,31 +539,6 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("kmeans_assign")
     assert(!p.contains("Join"), p)
     assert(!p.contains("Exchange hashpartitioning"), p)
-  }
-
-  test("bucketed tables join with zero exchanges (pay the shuffle at write time)") {
-    val o = s"graft_bkt_orders_${System.nanoTime()}"
-    val c = s"graft_bkt_customer_${System.nanoTime()}"
-    try {
-      new graft.io.BucketedTableWriter(o, "o_custkey", 8).write(
-        table("orders").select(org.apache.spark.sql.functions.col("o_custkey"),
-          org.apache.spark.sql.functions.col("o_totalprice")))
-      new graft.io.BucketedTableWriter(c, "c_custkey", 8).write(
-        table("customer").select(org.apache.spark.sql.functions.col("c_custkey"),
-          org.apache.spark.sql.functions.col("c_name")))
-      // disable broadcast so the join would otherwise need a shuffle
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table(o).join(spark.table(c),
-        org.apache.spark.sql.functions.col("o_custkey") ===
-          org.apache.spark.sql.functions.col("c_custkey"))
-      val p = planOf(joined)
-      assert(!p.contains("Exchange"), s"bucketed join still shuffles:\n$p")
-      assert(joined.count() > 0)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql(s"DROP TABLE IF EXISTS $o")
-      spark.sql(s"DROP TABLE IF EXISTS $c")
-    }
   }
 
   test("flagship pipeline fuses filters into the scan stage (no mid-chain exchange)") {

@@ -13,7 +13,6 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Local writes start no child process: the session's `file` scheme is
   * [[graft.io.LocalFs]], so neither a created path (`chmod`) nor a
@@ -21,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in-process JFR recording of `jdk.ProcessStart` only, and must record
   * none; a failure prints every recorded spawn with its stack.
   */
-class ProcessSpawnSpec extends AnyFunSuite {
+class ProcessSpawnSpec extends ScopedSuite {
   import TestSpark._
 
   /** The `jdk.ProcessStart` events recorded while `body` runs. The

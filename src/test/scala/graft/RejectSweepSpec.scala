@@ -5,7 +5,6 @@ import graft.runner.{OperatorRegistry, Params}
 import graft.sources.SyntheticImages
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry-wide reject sweep: every registered operator that builds a
   * [[RejectingOperator]] from the fixtures runs through `apply` and
@@ -16,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator fails the classification test until it is swept here or
   * skipped with a reason.
   */
-class RejectSweepSpec extends AnyFunSuite {
+class RejectSweepSpec extends ScopedSuite {
   import TestSpark._
 
   private val docsPath = s"$sfDir/documents.parquet"

@@ -3,9 +3,8 @@ package graft
 import graft.operators.text.{HoldoutSplitRefiner, LengthPercentileClipFilter, TemperatureSampleFilter}
 import graft.operators.vector.{EmbeddingQuantizer, MatryoshkaTruncate}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class ResampleSpec extends AnyFunSuite {
+class ResampleSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -3,12 +3,11 @@ package graft
 import graft.runner.{LoaderConf, OperatorRegistry, Params, PipelineConf, PipelineRunner}
 import graft.sources.SyntheticImages
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** YAML config → registry → runner end-to-end: the reference's
   * `mdf run -c config.yaml` lifecycle (SURVEY.md §3.1) on the fixture.
   */
-class RunnerSpec extends AnyFunSuite {
+class RunnerSpec extends ScopedSuite {
   import TestSpark._
 
   private def yaml(out: String): String =

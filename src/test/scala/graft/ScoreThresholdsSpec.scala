@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.ml.ScoreThresholds
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class ScoreThresholdsSpec extends AnyFunSuite {
+class ScoreThresholdsSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -2,12 +2,11 @@ package graft
 
 import graft.core.Skew
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Salted-join semantics: identical result to the plain join, with the
   * hot key spread across salt values.
   */
-class SkewSpec extends AnyFunSuite {
+class SkewSpec extends ScopedSuite {
   import TestSpark._
 
   test("salted join equals plain join on a skewed dataset") {

@@ -1,13 +1,11 @@
 package graft
 
 import graft.core.Staging
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Scope semantics of the staging registry (ADVICE r14): release is tied
-  * to the creating call path; a global sweep can never touch another
-  * path's frames.
+  * to the creating call path, and every staged frame belongs to a scope.
   */
-class StagingSpec extends AnyFunSuite {
+class StagingSpec extends ScopedSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -32,27 +30,28 @@ class StagingSpec extends AnyFunSuite {
     assert(Staging.liveCount == before)
   }
 
-  test("releaseAll sweeps only global frames, never scoped ones") {
-    Staging.scoped {
-      val scopedF = Staging.stage(frame())
-      // simulate another (unscoped) path registering globally: releaseAll
-      // from anywhere must drop IT but leave the scoped frame cached.
-      // (Other suites' unscoped stages may also sit in the global
-      // registry — the sweep takes them all, so assert on the scoped
-      // remainder, not on exact counts.)
-      var globalF: org.apache.spark.sql.DataFrame = null
-      val t = new Thread(() => globalF = Staging.stage(frame().filter($"v" =!= 2)))
-      t.start(); t.join()
-      assert(globalF.storageLevel.useMemory)
-      Staging.releaseAll()
-      assert(Staging.liveCount == 1,
-        "after the sweep only this thread's scoped frame remains registered")
-      assert(!globalF.storageLevel.useMemory,
-        "the globally-registered frame must be swept")
-      assert(scopedF.storageLevel.useMemory,
-        "a scoped frame must survive a global sweep (the r14 corruption hazard)")
-      assert(scopedF.count() == 3L)
-    }
+  test("stage and adopt outside any scope throw and leave nothing persisted") {
+    // a fresh thread has no open scope: the suite's per-test scope is
+    // confined to the test's own thread
+    val staged = frame().filter($"v" > 1)
+    val adopted = frame().filter($"v" < 3)
+    val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[Any]()
+    val t = new Thread(() => {
+      outcomes.add(scala.util.Try(Staging.stage(staged)))
+      outcomes.add(scala.util.Try(Staging.adopt(adopted)))
+      outcomes.add(Staging.liveCount)
+    })
+    t.start(); t.join()
+    val Seq(s, a, live) = outcomes.toArray.toSeq
+    for (o <- Seq(s, a)) assert(o match {
+      case scala.util.Failure(_: IllegalStateException) => true
+      case _ => false
+    }, s"expected an IllegalStateException, got $o")
+    assert(live == 0, "nothing may register outside a scope")
+    // storageLevel reads the session's cache manager: NONE = not cached
+    for (df <- Seq(staged, adopted)) assert(
+      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "an unscoped frame was persisted")
   }
 
   test("scoped release survives a throwing body; release() drops one frame precisely") {

@@ -2,9 +2,8 @@ package graft
 
 import graft.operators.stats.HistogramQuantile
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class StatsSketchSpec extends AnyFunSuite {
+class StatsSketchSpec extends ScopedSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 

@@ -3,9 +3,8 @@ package graft
 import graft.core.Disposition
 import graft.operators.text.StratifiedSampleFilter
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class StratifiedSampleSpec extends AnyFunSuite {
+class StratifiedSampleSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -5,14 +5,13 @@ import graft.operators.text.TextLengthFilter
 import graft.streaming.StreamingCuration
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** §2.9 incremental mode: file-source backpressure, unbounded keyed dedup
   * state across triggers, operator reuse on streaming frames, the
   * foreachBatch dedup twins over epoch-store priors, and batch operators
   * run unchanged as streaming readouts.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends ScopedSuite {
   import TestSpark._
 
   private def copyPart(fromDir: String, to: java.nio.file.Path): Unit = {
@@ -232,252 +231,6 @@ class StreamingSpec extends AnyFunSuite {
         case None    => spark.conf.unset(key)
       }
     }
-  }
-
-  test("streaming bigram-LM scoring: frozen-model stream scores equal batch scoreAgainst across triggers; retrain tracks the accumulated corpus") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val lm = new graft.operators.text.BigramLm("text", "doc_id")
-    val train = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog"),
-      (101L, "the lazy dog sleeps while the quick fox runs"),
-      (102L, "a slow green turtle walks under the old bridge")).toDF("doc_id", "text")
-    // stream docs mix SEEN transitions, unseen pairs with seen contexts,
-    // and fully-unseen contexts (the three backoff arms), plus a <2-token
-    // doc (NULL score)
-    val rows = Seq(
-      (1L, "the quick brown fox"),
-      (2L, "the purple fox telephones zebras"),
-      (3L, "completely novel vocabulary everywhere tonight"),
-      (4L, "dog"),
-      (5L, "the lazy dog jumps over a slow green turtle"),
-      (6L, "bridge the gap between corpora"))
-    val base = java.nio.file.Files.createTempDirectory("graft_blmstream")
-    val outDir = base.resolve("out").toString
-    val corpusDir = base.resolve("corpus").toString
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingCuration.bigramLmScoreForeachBatch(
-        mem.toDF().toDF("doc_id", "text"), train, outDir, corpusDir,
-        base.resolve("model").toString, textCol = "text", idCol = "doc_id")
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    val model = lm.freeze(train)
-    try {
-      val (b1, b2) = rows.splitAt(3)
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-      def scoresOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
-      val streamed = scoresOf(spark.read.parquet(outDir))
-      val batch = scoresOf(lm.scoreAgainst(rows.toDF("doc_id", "text"), model))
-      assert(streamed == batch, s"stream $streamed must equal batch $batch")
-      assert(streamed(4L)._2.isEmpty, "a 1-token doc has no transitions")
-      assert(streamed(1L)._2.get < streamed(3L)._2.get,
-        "seen transitions must cost fewer bits than fully-novel text")
-      // the raw corpus accumulated for retrains
-      assert(spark.read.parquet(corpusDir).count() == rows.size.toLong)
-    } finally { q.stop(); model.release() }
-
-    // retrain path: with retrainEvery=1, trigger 2 scores under the model
-    // re-trained on trigger 1's accumulated raw corpus
-    val base2 = java.nio.file.Files.createTempDirectory("graft_blmretrain")
-    val out2 = base2.resolve("out").toString
-    val corpus2 = base2.resolve("corpus").toString
-    val mem2 = MemoryStream[(Long, String)]
-    val q2 = StreamingCuration.bigramLmScoreForeachBatch(
-        mem2.toDF().toDF("doc_id", "text"), train, out2, corpus2,
-        base2.resolve("model").toString, textCol = "text", idCol = "doc_id",
-        retrainEvery = Some(1))
-      .option("checkpointLocation", base2.resolve("ckpt").toString)
-      .start()
-    try {
-      val (b1, b2) = rows.splitAt(3)
-      mem2.addData(b1: _*); q2.processAllAvailable()
-      mem2.addData(b2: _*); q2.processAllAvailable()
-      val streamed = spark.read.parquet(out2).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
-      val m1 = lm.freeze(train)
-      val m2 = lm.freeze(b1.toDF("doc_id", "text"))
-      try {
-        val want1 = lm.scoreAgainst(b1.toDF("doc_id", "text"), m1).collect()
-        val want2 = lm.scoreAgainst(b2.toDF("doc_id", "text"), m2).collect()
-        val want = (want1 ++ want2)
-          .map(r => r.getLong(0) -> ((r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
-        assert(streamed == want,
-          s"retrain stream $streamed must equal per-epoch batch $want")
-      } finally { m1.release(); m2.release() }
-    } finally q2.stop()
-  }
-
-  test("streaming KN-smoothed bigram scoring: stream scores equal batch scoreAgainst under a KN freeze; snapshot is KN-complete") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val lm = new graft.operators.text.BigramLm("text", "doc_id")
-    val train = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog"),
-      (101L, "the lazy dog sleeps while the quick fox runs"),
-      (102L, "a slow green turtle walks under the old bridge")).toDF("doc_id", "text")
-    val rows = Seq(
-      (1L, "the quick brown fox"),
-      (2L, "the purple fox telephones zebras"),
-      (3L, "completely novel vocabulary everywhere tonight"),
-      (4L, "dog"),
-      (5L, "the lazy dog jumps over a slow green turtle"),
-      (6L, "bridge the gap between corpora"))
-    val base = java.nio.file.Files.createTempDirectory("graft_blmknstream")
-    val outDir = base.resolve("out").toString
-    val modelDir = base.resolve("model").toString
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingCuration.bigramLmScoreForeachBatch(
-        mem.toDF().toDF("doc_id", "text"), train, outDir,
-        base.resolve("corpus").toString, modelDir,
-        textCol = "text", idCol = "doc_id", smoothing = "kn")
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    val model = lm.freeze(train, smoothing = "kn")
-    try {
-      val (b1, b2) = rows.splitAt(3)
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-      def scoresOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
-      val streamed = scoresOf(spark.read.parquet(outDir))
-      val batch = scoresOf(lm.scoreAgainst(rows.toDF("doc_id", "text"), model))
-      assert(streamed == batch, s"KN stream $streamed must equal batch $batch")
-      assert(streamed(4L)._2.isEmpty)
-      // the v0 snapshot carries all FOUR KN tables (a reboot with
-      // smoothing=kn would adopt it; the 3-table add-one probe must NOT
-      // see a KN snapshot as complete-for-addone-and-missing-cont)
-      assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "kn")
-        .exists(_.endsWith("v0")))
-    } finally { q.stop(); model.release() }
-  }
-
-  test("bigram-LM streaming restart: replayed epoch never duplicates the corpus; a reboot adopts the latest complete snapshot, not v0") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val lm = new graft.operators.text.BigramLm("text", "doc_id")
-    val train = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog"),
-      (101L, "the lazy dog sleeps while the quick fox runs")).toDF("doc_id", "text")
-    val b1 = Seq((1L, "the quick brown fox"), (2L, "a lazy dog runs"),
-      (3L, "novel words entirely here"))
-    val base = java.nio.file.Files.createTempDirectory("graft_blmrestart")
-    val corpusDir = base.resolve("corpus").toString
-    val modelDir = base.resolve("model").toString
-    // fresh start: no snapshots yet
-    assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "addone").isEmpty)
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingCuration.bigramLmScoreForeachBatch(
-        mem.toDF().toDF("doc_id", "text"), train,
-        base.resolve("out1").toString, corpusDir, modelDir,
-        textCol = "text", idCol = "doc_id", retrainEvery = Some(1))
-      .option("checkpointLocation", base.resolve("ckpt1").toString)
-      .start()
-    try { mem.addData(b1: _*); q.processAllAvailable() } finally q.stop()
-    // epoch 0 retrained: v0 (train) and v1 (accumulated corpus = b1) exist;
-    // an empty decoy dir without _SUCCESS markers is never adopted
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(modelDir).resolve("v7"))
-    val latest = graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "addone")
-    assert(latest.exists(_.endsWith("v1")), s"latest must be v1, got $latest")
-    // reboot: fresh checkpoint REPLAYS epoch 0 with the same rows — the
-    // epoch-keyed overwrite must leave the corpus count unchanged, and the
-    // scorer must resume under v1 (trained on b1), not re-freeze train
-    val out2 = base.resolve("out2").toString
-    val mem2 = MemoryStream[(Long, String)]
-    val q2 = StreamingCuration.bigramLmScoreForeachBatch(
-        mem2.toDF().toDF("doc_id", "text"), train,
-        out2, corpusDir, modelDir, textCol = "text", idCol = "doc_id")
-      .option("checkpointLocation", base.resolve("ckpt2").toString)
-      .start()
-    try { mem2.addData(b1: _*); q2.processAllAvailable() } finally q2.stop()
-    assert(spark.read.parquet(corpusDir).count() == b1.size.toLong,
-      "replayed epoch must overwrite its own partition, not append")
-    def scoresOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
-    val mB1 = lm.freeze(b1.toDF("doc_id", "text"))
-    try {
-      val want = scoresOf(lm.scoreAgainst(b1.toDF("doc_id", "text"), mB1))
-      val got = scoresOf(spark.read.parquet(out2))
-      assert(got == want,
-        s"rebooted scorer must score under the v1 snapshot: got $got want $want")
-    } finally mB1.release()
-    // no new snapshot was written by the reboot (loaded, not re-frozen)
-    assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "addone")
-      .exists(_.endsWith("v1")))
-  }
-
-  test("KN bigram-LM streaming restart: a reboot adopts the latest KN snapshot without re-freezing and scores under it") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val lm = new graft.operators.text.BigramLm("text", "doc_id")
-    val train = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog"),
-      (101L, "the lazy dog sleeps while the quick fox runs")).toDF("doc_id", "text")
-    val b1 = Seq((1L, "the quick brown fox"), (2L, "a lazy dog runs"),
-      (3L, "novel words entirely here"), (4L, "a lazy dog runs home"))
-    // the reboot's batch mixes trained transitions, seen contexts with
-    // unseen words and fully unseen text, so every backoff arm reads
-    // the loaded ctx/cont/tot tables
-    val b2 = Seq((5L, "a lazy dog runs"), (6L, "a lazy cat sleeps"),
-      (7L, "zebras telephone the quick fox"), (8L, "dog"))
-    val base = java.nio.file.Files.createTempDirectory("graft_blmknrestart")
-    val modelDir = base.resolve("model").toString
-    val corpusDir = base.resolve("corpus").toString
-    // first run: epoch 0 scores under v0 (train), then re-freezes on the
-    // accumulated corpus (b1) as v1
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingCuration.bigramLmScoreForeachBatch(
-        mem.toDF().toDF("doc_id", "text"), train,
-        base.resolve("out1").toString, corpusDir, modelDir,
-        textCol = "text", idCol = "doc_id", retrainEvery = Some(1),
-        smoothing = "kn")
-      .option("checkpointLocation", base.resolve("ckpt1").toString)
-      .start()
-    try { mem.addData(b1: _*); q.processAllAvailable() } finally q.stop()
-    val v1 = graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "kn")
-    assert(v1.exists(_.endsWith("v1")), s"latest KN snapshot must be v1, got $v1")
-    assert(graft.operators.text.BigramLm.latestSnapshot(spark, modelDir, "addone").isEmpty,
-      "a KN snapshot is never complete for the add-one probe")
-    val fs = new org.apache.hadoop.fs.Path(modelDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def stamps() = fs.listStatus(new org.apache.hadoop.fs.Path(modelDir))
-      .map(st => st.getPath.getName -> fs.getFileStatus(
-        new org.apache.hadoop.fs.Path(st.getPath, "cost/_SUCCESS")).getModificationTime)
-      .toMap
-    val before = stamps()
-    // reboot on a fresh checkpoint over the same modelDir
-    val out2 = base.resolve("out2").toString
-    val mem2 = MemoryStream[(Long, String)]
-    val q2 = StreamingCuration.bigramLmScoreForeachBatch(
-        mem2.toDF().toDF("doc_id", "text"), train,
-        out2, corpusDir, modelDir, textCol = "text", idCol = "doc_id",
-        smoothing = "kn")
-      .option("checkpointLocation", base.resolve("ckpt2").toString)
-      .start()
-    try { mem2.addData(b2: _*); q2.processAllAvailable() } finally q2.stop()
-    // adopted, not re-frozen: the same snapshots, none rewritten
-    assert(stamps() == before, s"the reboot rewrote a snapshot: ${stamps()} vs $before")
-    def scoresOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
-    val mB1 = lm.freeze(b1.toDF("doc_id", "text"), smoothing = "kn")
-    val mTrain = lm.freeze(train, smoothing = "kn")
-    try {
-      val want = scoresOf(lm.scoreAgainst(b2.toDF("doc_id", "text"), mB1))
-      val got = scoresOf(spark.read.parquet(out2))
-      assert(got == want,
-        s"rebooted KN scorer must score under the v1 snapshot: got $got want $want")
-      assert(got != scoresOf(lm.scoreAgainst(b2.toDF("doc_id", "text"), mTrain)),
-        "v0 and v1 must score the reboot batch differently, or adoption is unobservable")
-      assert(got(8L)._2.isEmpty && got.values.count(_._2.isDefined) == 3)
-    } finally { mB1.release(); mTrain.release() }
   }
 
   test("streaming probed dedup: union of per-trigger kept sets equals batch ProbedCosineDedup under frozen centroids") {

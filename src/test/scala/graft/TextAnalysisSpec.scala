@@ -2,12 +2,11 @@ package graft
 
 import graft.operators.text.{TextAnalysis, TextAnalysisRefiner}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants of the text-analysis family (the oracle gate
   * covers cross-engine equality; these pin the intended behavior).
   */
-class TextAnalysisSpec extends AnyFunSuite {
+class TextAnalysisSpec extends ScopedSuite {
   import TestSpark._
 
   private def one(text: String): org.apache.spark.sql.Row =

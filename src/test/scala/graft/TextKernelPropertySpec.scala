@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The five web-text kernels and the shared tokenizer against their
   * declarative twins on generated adversarial text. Every batch runs on
@@ -19,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * whole-stage generated; `spark.sql.codegen.fallback=false` makes a
   * failed compile throw) and direct `eval` of the kernel expression.
   */
-class TextKernelPropertySpec extends AnyFunSuite {
+class TextKernelPropertySpec extends ScopedSuite {
   import TestSpark._
 
   // ---- the adversarial alphabet ----

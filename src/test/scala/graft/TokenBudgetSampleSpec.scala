@@ -3,9 +3,8 @@ package graft
 import graft.core.Disposition
 import graft.operators.text.{TextLengthFilter, TokenBudgetSampleFilter}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class TokenBudgetSampleSpec extends AnyFunSuite {
+class TokenBudgetSampleSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -2,9 +2,8 @@ package graft
 
 import graft.functions.TopKAgg
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class TopKAggSpec extends AnyFunSuite {
+class TopKAggSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

@@ -4,14 +4,13 @@ import graft.core.Disposition
 import graft.operators.text.{CcnetBucketRefiner, SequencePackRefiner}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Sequence packing and CCNet bucketing: packing algebra (contiguous
   * fill, partition independence), bucket ordering/proportions, and the
   * alive-rows-only disposition contract both share with the other
   * corpus-global operators.
   */
-class TrainingExportSpec extends AnyFunSuite {
+class TrainingExportSpec extends ScopedSuite {
   import TestSpark._
 
   private val packOp = new SequencePackRefiner(

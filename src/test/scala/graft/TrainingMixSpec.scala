@@ -3,14 +3,13 @@ package graft
 import graft.operators.text.{C4CleanRefiner, C4QualityFilter, DupNgramRefiner, NgramLmScoreRefiner, SourceWeightedSampleFilter}
 import graft.operators.vector.CrossModalAlignmentRefiner
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit semantics of the round-6 training-data additions: C4 page
   * cleaning (including the NULL-text disposition guarantee), duplicated
   * n-gram span removal, corpus LM scoring, source-weighted sampling,
   * cross-modal alignment.
   */
-class TrainingMixSpec extends AnyFunSuite {
+class TrainingMixSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 

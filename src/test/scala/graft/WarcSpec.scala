@@ -1,13 +1,12 @@
 package graft
 
 import graft.sources.Warc
-import org.scalatest.funsuite.AnyFunSuite
 
 /** WARC parsing + HTML extraction semantics (S2/S3): response-only,
   * text/html-only, ≥100-char bodies, ≥50-char extractions, boilerplate
-  * removal, and the distributed binaryFile+flatMap load path.
+  * removal, and the DataSource V2 `format("warc")` scan.
   */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends ScopedSuite {
   import TestSpark._
 
   private def httpHtml(html: String): String =
@@ -146,15 +145,6 @@ class WarcSpec extends AnyFunSuite {
     assert(a.map(_.text) == b.map(_.text) && a.nonEmpty)
   }
 
-  test("distributed load path: binaryFile + flatMap over a directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc")
-    java.nio.file.Files.write(dir.resolve("a.warc"), warcFile)
-    java.nio.file.Files.write(dir.resolve("b.warc"), warcFile)
-    val ds = Warc.load(spark, dir.toString + "/*.warc", "CC-TEST")
-    assert(ds.count() == 2)
-    assert(ds.collect().forall(_.title == "Sample Article"))
-  }
-
   test("dsv2: spark.read.format(\"warc\") matches the flatMap path, one partition per file") {
     val dir = java.nio.file.Files.createTempDirectory("graft_warc_dsv2")
     java.nio.file.Files.write(dir.resolve("a.warc"), warcFile)
@@ -163,10 +153,15 @@ class WarcSpec extends AnyFunSuite {
       .load(dir.toString + "/*.warc")
     assert(df.schema == graft.sources.WarcDataSource.Schema)
     val rows = df.orderBy("warc_path", "url").collect()
-    val flatMapped = Warc.load(spark, dir.toString + "/*.warc", "CC-TEST")
-      .orderBy("warc_path", "url").collect()
-    assert(rows.map(_.toSeq).toSeq == flatMapped.map(r =>
-      Seq(r.crawl_id, r.warc_path, r.url, r.warc_date, r.title, r.text, r.text_length)).toSeq)
+    // the flatMap path: the pure per-file extraction over each file's bytes
+    val perFile = Seq("a.warc", "b.warc").flatMap { n =>
+      val f = dir.resolve(n)
+      Warc.extractDocs("CC-TEST", new org.apache.hadoop.fs.Path(f.toUri).toString,
+        java.nio.file.Files.readAllBytes(f))
+    }.sortBy(d => (d.warc_path, d.url))
+    assert(perFile.size == 2 && perFile.forall(_.title == "Sample Article"))
+    assert(rows.map(_.toSeq).toSeq == perFile.map(r =>
+      Seq(r.crawl_id, r.warc_path, r.url, r.warc_date, r.title, r.text, r.text_length)))
     // one input partition per (unsplittable) warc file
     assert(df.rdd.getNumPartitions == 2)
     // column pruning reaches the DSv2 scan: ReadSchema carries only url,
@@ -205,7 +200,7 @@ class WarcSpec extends AnyFunSuite {
     assert(df.count() == 1)
   }
 
-  test("manifest: pathsFor resolves warc.paths.gz, caps, and drives loadCrawl") {
+  test("manifest: pathsFor resolves warc.paths.gz, caps, and drives the warc scan") {
     val crawl = "CC-TEST-2024-01"
     val root = java.nio.file.Files.createTempDirectory("graft_cc_mirror")
     val crawlDir = root.resolve(s"crawl-data/$crawl")
@@ -240,9 +235,9 @@ class WarcSpec extends AnyFunSuite {
       Warc.pathsFor("CC-NOPE-2024", root.toString)
     }
 
-    val ds = Warc.loadCrawl(spark, crawl, root.toString)
-    assert(ds.count() == 2)
-    assert(Warc.loadCrawl(spark, crawl, root.toString,
-      numFiles = Some(1)).count() == 1)
+    def scan(paths: Seq[String]) =
+      spark.read.format("warc").option("crawl_id", crawl).load(paths: _*)
+    assert(scan(Warc.pathsFor(crawl, root.toString)).count() == 2)
+    assert(scan(Warc.pathsFor(crawl, root.toString, numFiles = Some(1))).count() == 1)
   }
 }

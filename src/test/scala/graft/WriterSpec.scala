@@ -6,13 +6,12 @@ import graft.metrics.{HtmlReport, MetricsRollup, OperatorCounts}
 import graft.operators.dedup.TextExactDedup
 import graft.operators.text.TextLengthFilter
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** W1 writer semantics (partition layout, nested/JSON key extraction,
   * sanitization, unknown fallback) and the end-to-end pipeline → passed +
   * rejected write → read-back complement check.
   */
-class WriterSpec extends AnyFunSuite {
+class WriterSpec extends ScopedSuite {
   import TestSpark._
 
   private def tmp(): String =
@@ -173,33 +172,6 @@ class WriterSpec extends AnyFunSuite {
     assert(files(s"$base/one") == 1)
     // written content identical either way
     assert(spark.read.parquet(s"$base/one").count() == docs.count())
-  }
-
-  test("bucketed tables join with ZERO shuffle exchanges (co-located layout)") {
-    import org.apache.spark.sql.functions._
-    val docs = table("documents").select(col("doc_id"), col("source"), col("n_chars"))
-    val meta = table("documents").select(col("doc_id"), col("lang"))
-    graft.io.BucketedTables.write(docs, "bkt_docs", "doc_id", buckets = 8)
-    graft.io.BucketedTables.write(meta, "bkt_meta", "doc_id", buckets = 8)
-    // force the sort-merge path so the assertion is about bucketing, not
-    // a broadcast hiding the exchange
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = graft.io.BucketedTables.join(spark, "bkt_docs", "bkt_meta", "doc_id")
-      val plan = planOf(joined)
-      assert(!plan.contains("Exchange"),
-        s"bucketed join still shuffles:\n$plan")
-      assert(joined.count() == docs.count())
-      // and the same join over path-based reads DOES shuffle — the spec
-      // is the thing doing the work, not the data layout on disk
-      val unbucketed = docs.join(meta, Seq("doc_id"))
-      assert(planOf(unbucketed).contains("Exchange"))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS bkt_docs")
-      spark.sql("DROP TABLE IF EXISTS bkt_meta")
-    }
   }
 
   test("html report renders counts and escapes content") {

@@ -2,9 +2,8 @@ package graft
 
 import graft.functions.ZOrder
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class ZOrderSpec extends AnyFunSuite {
+class ZOrderSpec extends ScopedSuite {
   import TestSpark._
   import spark.implicits._
 
@@ -28,21 +27,4 @@ class ZOrderSpec extends AnyFunSuite {
     assert(ys == ys.sorted)
   }
 
-  test("layout: one range exchange, files cover disjoint z ranges") {
-    val df = (0L until 4096L).map(i => (i % 64, i / 64)).toDF("x", "y")
-    val laid = ZOrder.layout(df, col("x"), col("y"), numFiles = 8)
-    val p = laid.queryExecution.executedPlan.toString
-    assert("Exchange rangepartitioning".r.findAllIn(p).size == 1, p)
-    assert(!p.contains("Exchange hashpartitioning"), p)
-    // recompute z per partition: min/max ranges must not overlap
-    val ranges = laid.select(ZOrder.morton(col("x"), col("y")).as("z"))
-      .withColumn("pid", spark_partition_id())
-      .groupBy("pid").agg(min("z").as("lo"), max("z").as("hi"))
-      .orderBy("lo").as[(Int, Long, Long)].collect()
-    assert(ranges.length > 1)
-    ranges.sliding(2).foreach {
-      case Array((_, _, hi1), (_, lo2, _)) => assert(hi1 <= lo2, s"overlap: $hi1 vs $lo2")
-      case _ => ()
-    }
-  }
 }

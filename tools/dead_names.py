@@ -22,8 +22,9 @@ Each file is tokenized once. Usage, from the checkout root:
 
     python3 tools/dead_names.py [--all]
 
-`--all` also prints the KEPT names. Exits 1 when a NOCALLER name is not
-on the allowlist, 0 otherwise.
+`--all` also prints the KEPT names. Exits 1 when a NOCALLER or TESTONLY
+name is not on the allowlist, 0 otherwise: src/main keeps no surface
+that only tests reach unless the allowlist records why.
 """
 import collections
 import os
@@ -284,7 +285,7 @@ def main(argv):
     tally = collections.Counter(r[0] for r in rows)
     print(f"# {tally['NOCALLER']} NOCALLER, {tally['TESTONLY']} TESTONLY, "
           f"{tally['KEPT']} KEPT over {len(defs)} visible src/main definitions")
-    return 1 if tally["NOCALLER"] else 0
+    return 1 if tally["NOCALLER"] or tally["TESTONLY"] else 0
 
 
 if __name__ == "__main__":
