@@ -99,7 +99,8 @@ final class IncrementalExactDedup(
   * month's corpus", reworded re-crawls included). Within-increment
   * near-dups are deliberately NOT dropped here: compose with
   * [[MinHashLSHDedup]] for that, exactly as the exact variant composes
-  * with [[TextExactDedup]].
+  * with [[TextExactDedup]] — or use [[MinHashLSHDedup.applyAgainst]],
+  * which keeps the same rows from one band-key join.
   *
   * Scale shape: the prior side reduces to (id, shingle-hash set, band
   * keys) — at 100 TB you'd materialize that signature table once per

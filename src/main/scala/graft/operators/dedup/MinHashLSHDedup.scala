@@ -172,13 +172,41 @@ final class MinHashLSHDedup(
     * batch, already bounded by the caller.
     */
   def pairsAgainst(increment: DataFrame, prior: DataFrame,
-      priorMaxBucketSize: Option[Int]): DataFrame = {
+      priorMaxBucketSize: Option[Int]): DataFrame =
+    pairsOf(verify(priorBands(prior, priorMaxBucketSize), banded(increment)))
+
+  /** `batch` minus every row with a verified near-dup that is EARLIER:
+    * any `prior` row (after [[pairsAgainst]]'s prior-side hot-bucket
+    * drop), or a batch row with a smaller id. This keeps exactly what
+    * `apply` followed by [[IncrementalMinHashDedup]] against `prior`
+    * keeps, because both drops are per-row tests over fixed sets (the
+    * in-batch test checks every smaller-id batch row, dropped or not) —
+    * but from ONE band-key join: prior bands plus batch bands on the
+    * left, batch bands on the right, then one distinct of the dropped
+    * ids and one left_anti. With no prior it is `apply`. The in-batch
+    * half is the direct, uncapped form.
+    */
+  def applyAgainst(batch: DataFrame, prior: Option[DataFrame],
+      priorMaxBucketSize: Option[Int] = None): DataFrame = {
+    require(maxBucketSize.isEmpty && !preCollapseExact,
+      "applyAgainst's in-batch half is the direct uncapped form")
+    val bands = banded(batch)
+    val batchLeft = bands.withColumn("_prior", lit(false))
+    val left = prior.fold(batchLeft)(p =>
+      priorBands(p, priorMaxBucketSize).unionByName(batchLeft))
+    batch.join(verify(left, bands).select(col("d2").as(idCol)).distinct(),
+      Seq(idCol), "left_anti")
+  }
+
+  /** `prior`'s band rows flagged `_prior`, without the (band, bucket)
+    * groups over `priorMaxBucketSize` rows. */
+  private def priorBands(prior: DataFrame, priorMaxBucketSize: Option[Int]): DataFrame = {
     require(priorMaxBucketSize.forall(_ >= 1),
       s"priorMaxBucketSize must be >= 1 when set, got $priorMaxBucketSize")
     val pbands = banded(prior)
-    val capped = priorMaxBucketSize.fold(pbands)(cap =>
+    priorMaxBucketSize.fold(pbands)(cap =>
       pbands.join(broadcast(hotBuckets(pbands, cap)), Seq("_b", "_bkey"), "left_anti"))
-    verify(capped, banded(increment), ordered = false)
+      .withColumn("_prior", lit(true))
   }
 
   private def lshPairs(df: DataFrame): DataFrame = {
@@ -196,7 +224,7 @@ final class MinHashLSHDedup(
         bands0.join(broadcast(hot), Seq("_b", "_bkey"), "left_anti")
       case None => bands0
     }
-    verify(bands, bands, ordered = true)
+    pairsOf(verify(bands.withColumn("_prior", lit(false)), bands))
   }
 
   /** The (_b, _bkey) groups of `bands` holding more than `cap` rows.
@@ -214,24 +242,29 @@ final class MinHashLSHDedup(
       .groupBy(col("_b"), col("_bkey")).agg(count(lit(1)).as("_bn"))
       .filter(col("_bn") > cap).select(col("_b"), col("_bkey"))
 
-  /** Verified pairs (d1 from `left`, d2 from `right`, jaccard) of two
-    * band frames: the band-key equi-join, `d1 < d2` when `ordered`, the
-    * exact Jaccard check, then the pair dedup. Verification runs inside
-    * the join stage, BEFORE the pair-dedup shuffle: the candidate
-    * multiset (≤ numBands copies per pair) re-verifies, but the full
-    * shingle-hash arrays never ride an exchange — only (d1, d2, jaccard)
-    * of TRUE pairs reaches dropDuplicates.
+  /** Verified candidates (d1 from `left`, d2 from `right`, `_j`) of two
+    * band frames: the band-key equi-join, kept when d1 is EARLIER than
+    * d2 — `left`'s `_prior` flag is set, or d1 < d2 — then the exact
+    * Jaccard check. A constant flag folds away at planning: all-prior
+    * leaves no order filter, all-batch leaves `d1 < d2`. Verification
+    * runs inside the join stage: the candidate multiset (≤ numBands
+    * copies per pair) re-verifies, but the full shingle-hash arrays
+    * never ride an exchange.
     */
-  private def verify(left: DataFrame, right: DataFrame, ordered: Boolean): DataFrame = {
-    val cand = left.select(col("_b"), col("_bkey"), col("_id").as("d1"), col("_h").as("h1"))
+  private def verify(left: DataFrame, right: DataFrame): DataFrame =
+    left.select(col("_b"), col("_bkey"), col("_id").as("d1"), col("_h").as("h1"),
+        col("_prior"))
       .join(right.select(col("_b"), col("_bkey"), col("_id").as("d2"), col("_h").as("h2")),
         Seq("_b", "_bkey"))
-    (if (ordered) cand.filter(col("d1") < col("d2")) else cand)
+      .filter(col("_prior") || col("d1") < col("d2"))
       .withColumn("_j", graft.plans.kernels.array_jaccard(col("h1"), col("h2")))
       .filter(col("_j") >= threshold)
-      .select(col("d1"), col("d2"), col("_j").as("jaccard"))
+
+  /** The (d1, d2, jaccard) pair set of [[verify]]'s candidates: only
+    * true pairs' ids reach the pair-dedup shuffle. */
+  private def pairsOf(verified: DataFrame): DataFrame =
+    verified.select(col("d1"), col("d2"), col("_j").as("jaccard"))
       .dropDuplicates("d1", "d2")
-  }
 
   /** Transitive-closure variant: connected components over the verified
     * pair graph, keeping exactly the minimum id of every component

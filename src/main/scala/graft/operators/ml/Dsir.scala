@@ -69,7 +69,7 @@ final class DsirScoreRefiner(
     val d = buckets.toDouble
     val tDen = tt + alpha * d
     val qDen = qt + alpha * d
-    ClassifierWeights.Local(Array.tabulate(buckets)(b =>
+    ClassifierWeights(Array.tabulate(buckets)(b =>
       math.log((tc(b) + alpha) / tDen) - math.log((qc(b) + alpha) / qDen)))
   }
 

@@ -16,14 +16,14 @@ import org.apache.spark.sql.functions._
   * The reference has no learned-filter operator (its quality gates are
   * heuristic); this is a beyond-reference training-data stage. Weights
   * come from an offline-trained export ([[ClassifierWeights.fromFile]],
-  * little-endian float32 — broadcast it for production tables); the
-  * oracle gates use [[ClassifierWeights.deterministic]], whose weights
-  * DuckDB recomputes in closed form.
+  * little-endian float32); the oracle gates use
+  * [[ClassifierWeights.deterministic]], whose weights DuckDB recomputes
+  * in closed form.
   *
   * Scale shape: stateless per-row map — no shuffle, no state; the weight
-  * table is the only distributed object and it broadcasts once per
-  * executor. At 100 TB this runs at scan speed behind whatever filter
-  * chain precedes it.
+  * table is a plain array inside the plan, shipped with each task. At
+  * 100 TB this runs at scan speed behind whatever filter chain precedes
+  * it.
   */
 object QualityClassifier {
   def score(textCol: String, bias: Double, buckets: Int, bigrams: Boolean,

@@ -1323,11 +1323,9 @@ object kernels {
     * sigmoid(bias + mean slot weight). This is the model-based quality
     * filtering stage of the modern curation pipelines (CCNet/DCLM/
     * fineweb-edu) with the model swapped for a weight table — the Spark
-    * plumbing (hash-trick lookup, broadcast table, one JVM pass per row)
-    * is the production shape; training happens offline.
-    *
-    * Weights resolve through [[graft.ml.ClassifierWeights]] so a
-    * production-sized table rides a broadcast, not the task closure.
+    * plumbing (hash-trick lookup, one JVM pass per row) is the
+    * production shape; training happens offline. The weight table is a
+    * [[graft.ml.ClassifierWeights]] inside the plan.
     */
   case class LinearClassifierScore(
       child: Expression,
@@ -1340,7 +1338,7 @@ object kernels {
       extends UnaryExpression with UnaryRefCodegen {
     override def dataType: DataType = DoubleType
     @transient private lazy val w = {
-      val arr = weights.get
+      val arr = weights.values
       require(arr.length == buckets, s"weight table ${arr.length} != buckets $buckets")
       arr
     }

@@ -43,12 +43,14 @@ object PipelineRunner {
     * malformed-record policy for the text formats: raw web-scale jsonl
     * ALWAYS contains broken lines, and the permissive read surfaces them
     * as `_corrupt_record` rows instead of killing the job — RunnerSpec
-    * pins both policies.
+    * pins both policies. A parquet read takes its schema from one footer
+    * read on the driver ([[graft.io.ParquetSchema.read]]), so loading
+    * runs no schema-inference job.
     */
   private def loadFiles(spark: SparkSession, conf: LoaderConf, files: Seq[String]): DataFrame = {
     val p = conf.params
     p.str("format", "parquet") match {
-      case "parquet" => spark.read.parquet(files: _*)
+      case "parquet" => graft.io.ParquetSchema.read(spark, files: _*)
       case "csv" => spark.read.option("header", p.bool("header", true).toString)
         .option("mode", p.str("mode", "PERMISSIVE"))
         .option("inferSchema", "true").csv(files: _*)

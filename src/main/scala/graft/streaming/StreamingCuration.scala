@@ -65,10 +65,12 @@ object StreamingCuration {
     * Bare directory existence is NOT enough (ADVICE r16): a first-epoch
     * crash leaves only `_temporary` debris, and schema inference over
     * zero data files throws and wedges the very replay loop the
-    * overwrite discipline makes safe. The read is then still resolved
-    * eagerly (forcing schema inference) so a committed-but-empty store
-    * (a zero-row epoch writes `_SUCCESS` and no data files) also falls
-    * back cleanly.
+    * overwrite discipline makes safe. The read takes its schema from
+    * the footer inference would read, on the driver
+    * ([[graft.io.ParquetSchema.read]]), so it runs no job; a
+    * committed-but-empty store (a zero-row epoch can write `_SUCCESS`
+    * and no data files) has no footer, and the plain read's inference
+    * throws, which reads as None.
     */
   private[graft] def committedPrior(spark: SparkSession, dir: String,
       epoch: Long): Option[DataFrame] =
@@ -94,31 +96,27 @@ object StreamingCuration {
         }
         found
       }
-      try Some(spark.read.parquet(dir).filter(col("epoch") =!= epoch))
+      try Some(graft.io.ParquetSchema.read(spark, dir).filter(col("epoch") =!= epoch))
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           if (hasDataFile(path)) throw e else None
       }
     }
 
-  /** One trigger of a prior-dedup twin: `selfDedup` the batch, then —
-    * when the store holds a committed prior — drop what `againstPrior`
-    * (built from the prior's `storeCols`) finds; survivors go to `outDir`
-    * and their `storeCols` to `priorDir`.
+  /** One trigger of a prior-dedup twin: `keep(batch, prior)` gives the
+    * survivors, where `prior` is the committed store's `storeCols`
+    * (None before the first commit); survivors go to `outDir` and their
+    * `storeCols` to `priorDir`.
     */
   private def priorDedupForeachBatch(stream: DataFrame, outDir: String,
       priorDir: String, storeCols: Seq[String],
-      selfDedup: DataFrame => DataFrame,
-      againstPrior: DataFrame => DataFrame => DataFrame)
+      keep: (DataFrame, Option[DataFrame]) => DataFrame)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val store = storeCols.map(col)
     stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val selfDeduped = selfDedup(batch)
-      val kept = committedPrior(batch.sparkSession, priorDir, epoch) match {
-        case None => selfDeduped
-        case Some(prior) => againstPrior(prior.select(store: _*))(selfDeduped)
-      }
-      val out = kept.persist()
+      val prior = committedPrior(batch.sparkSession, priorDir, epoch)
+        .map(_.select(store: _*))
+      val out = keep(batch, prior).persist()
       try {
         out.write.mode("overwrite").parquet(epochDir(outDir, epoch))
         out.select(store: _*).write.mode("overwrite").parquet(epochDir(priorDir, epoch))
@@ -174,10 +172,20 @@ object StreamingCuration {
 
   /** Streaming MinHash near-dedup as a micro-batch loop: each trigger's
     * batch drops (1) near-dups of everything accepted in PREVIOUS
-    * triggers — [[graft.operators.dedup.IncrementalMinHashDedup]]
-    * against the accumulating prior store — and (2) within-batch
-    * near-dups ([[graft.operators.dedup.MinHashLSHDedup]], full verified
-    * Jaccard); survivors append to both the output and the prior store.
+    * triggers — the [[graft.operators.dedup.IncrementalMinHashDedup]]
+    * test against the accumulating prior store — and (2) within-batch
+    * near-dups (the [[graft.operators.dedup.MinHashLSHDedup]] test, full
+    * verified Jaccard); survivors append to both the output and the
+    * prior store. Both drops come from ONE band-key join per trigger
+    * ([[graft.operators.dedup.MinHashLSHDedup.applyAgainst]]): prior
+    * and batch band rows on one side, batch band rows on the other, a
+    * candidate counting when its left row is a prior row or a batch row
+    * with a smaller id. Each drop is a per-row test over a fixed set, so
+    * this keeps exactly what in-batch dedup followed by the
+    * against-prior dedup keeps (pinned in StreamingSpec). The prior is
+    * read with the schema of one footer read on the driver
+    * ([[committedPrior]]), so no trigger runs a schema-inference job.
+    *
     * This is the production Kafka→micro-batch near-dedup shape: LSH
     * banding with EXACT set verification needs a candidate join, which
     * keyed per-row state can't express (a doc must meet candidates
@@ -219,13 +227,8 @@ object StreamingCuration {
       textCol = textCol, idCol = idCol, shingleWidth = shingleWidth,
       numHashes = numHashes, numBands = numBands, threshold = threshold,
       signatureScheme = signatureScheme)
-    priorDedupForeachBatch(stream, outDir, priorDir, Seq(idCol, textCol), lsh(_),
-      prior => new graft.operators.dedup.IncrementalMinHashDedup(
-        prior = Some(prior), textCol = textCol, idCol = idCol,
-        shingleWidth = shingleWidth, numHashes = numHashes,
-        numBands = numBands, threshold = threshold,
-        priorMaxBucketSize = priorMaxBucketSize,
-        signatureScheme = signatureScheme).apply)
+    priorDedupForeachBatch(stream, outDir, priorDir, Seq(idCol, textCol),
+      lsh.applyAgainst(_, _, priorMaxBucketSize))
   }
 
   /** Streaming SEMANTIC dedup — the embedding twin of
@@ -249,10 +252,10 @@ object StreamingCuration {
       seed: Long = 7L): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val self = new graft.operators.vector.EmbeddingSimHash(
       vecCol, idCol, idCol, bits, dims, seed)
-    priorDedupForeachBatch(stream, outDir, priorDir, Seq(idCol, vecCol), self(_),
-      prior => new graft.operators.vector.IncrementalEmbeddingDedup(
-        prior = Some(prior), vecCol = vecCol, idCol = idCol,
-        threshold = threshold, bits = bits, dims = dims, seed = seed).apply)
+    priorDedupForeachBatch(stream, outDir, priorDir, Seq(idCol, vecCol), (batch, prior) =>
+      prior.fold(self(batch))(p => new graft.operators.vector.IncrementalEmbeddingDedup(
+        prior = Some(p), vecCol = vecCol, idCol = idCol,
+        threshold = threshold, bits = bits, dims = dims, seed = seed)(self(batch))))
   }
 
   /** Streaming PROBED semantic dedup (r16) — the incremental twin of

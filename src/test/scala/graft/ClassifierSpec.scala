@@ -18,7 +18,7 @@ class ClassifierSpec extends ScopedSuite {
   }
 
   test("deterministic weights match their SQL closed form and span [-1, 1)") {
-    val arr = w.get
+    val arr = w.values
     assert(arr.length == D)
     assert(arr.forall(v => v >= -1.0 && v < 1.0))
     // slot 0 → ((0*40503)%1999)/999 − 1 = −1; slot 1 → (40503%1999)/999 − 1
@@ -63,7 +63,7 @@ class ClassifierSpec extends ScopedSuite {
         else feats.map { f =>
           val h = graft.plans.kernels.portableHashJvm(
             org.apache.spark.unsafe.types.UTF8String.fromString(f))
-          w.get((((h % D) + D) % D).toInt)
+          w.values((((h % D) + D) % D).toInt)
         }.sum / feats.size
       val want = 1.0 / (1.0 + math.exp(-mean))
       assert(math.abs(score - want) < 1e-9, s"doc $id: $score vs $want")

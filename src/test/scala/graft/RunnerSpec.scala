@@ -75,18 +75,22 @@ class RunnerSpec extends ScopedSuite {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/report.html")))
   }
 
-  test("job budget: a filters-only run is 2 jobs, and the metrics sink runs none") {
-    def jobsOf(conf: PipelineConf): Int = {
-      val sc = spark.sparkContext
-      val group = s"job-budget-${java.util.UUID.randomUUID()}"
-      sc.setJobGroup(group, "job budget")
-      try PipelineRunner.run(spark, conf) finally sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
+  /** Jobs `body` runs, counted through a job group. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "job budget")
+    try body finally sc.clearJobGroup()
+    org.apache.spark.TestBus.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("job budget: a filters-only run is 1 job, and the metrics sink runs none") {
+    def runJobs(conf: PipelineConf): Int = jobsOf(PipelineRunner.run(spark, conf))
     def outDir(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString + "/o"
     // web_clean's shape (parquet load, filters, partitioned write, metrics
-    // and report on, rejects off): the load's schema job and the write
+    // and report on, rejects off): the write; the load reads its schema
+    // from a footer on the driver
     val out = outDir("graft_budget")
     val filtersOnly = PipelineConf.fromYaml(
       s"""data_loader:
@@ -104,12 +108,31 @@ class RunnerSpec extends ScopedSuite {
          |  rejected_samples: {enabled: false}
          |  metrics: {enabled: true, output_path: "$out/_metrics", report_path: "$out/report.html"}
          |""".stripMargin)
-    assert(jobsOf(filtersOnly) == 2)
+    assert(runJobs(filtersOnly) == 1)
     // the dedup config with rejects on: metrics add no job
     val metricsOff = PipelineConf.fromYaml(yaml(outDir("graft_budget_off"))
       .replace("  metrics:\n    enabled: true", "  metrics:\n    enabled: false"))
     assert(!metricsOff.executor.metricsEnabled)
-    assert(jobsOf(PipelineConf.fromYaml(yaml(outDir("graft_budget_on")))) == jobsOf(metricsOff))
+    assert(runJobs(PipelineConf.fromYaml(yaml(outDir("graft_budget_on")))) == runJobs(metricsOff))
+  }
+
+  test("parquet load: the inferred schema from a driver-side footer read, no job") {
+    def loaderSchema(path: String) = {
+      var loaded: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsOf {
+        loaded = PipelineRunner.load(spark, LoaderConf("ParquetLoader",
+          Params(Map("format" -> "parquet", "path" -> path))))
+      }
+      assert(jobs == 0, s"loading $path ran $jobs jobs")
+      loaded.schema
+    }
+    // events.parquet carries INT64(TIMESTAMP_NANOS): the session's
+    // nanos-as-long flag must reach the conversion
+    val hive = java.nio.file.Files.createTempDirectory("graft_hive").toString + "/t"
+    table("documents").write.partitionBy("lang").parquet(hive)
+    for (path <- Seq(s"$sfDir/documents.parquet", s"$sfDir/events.parquet", hive))
+      assert(loaderSchema(path) == spark.read.parquet(path).schema, path)
+    assert(loaderSchema(hive).fieldNames.last == "lang", "partition column not discovered")
   }
 
   test("metrics.publish_path publishes the report as index.html (HF-Space twin)") {

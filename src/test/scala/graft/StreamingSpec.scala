@@ -159,6 +159,90 @@ class StreamingSpec extends ScopedSuite {
     assert(Set("a1", "c1", "b1").subsetOf(rerun(Some(1), "tiny")))
   }
 
+  test("fused near-dedup drop keeps exactly what in-batch dedup then the against-prior dedup keep") {
+    import spark.implicits._
+    import graft.operators.dedup.{IncrementalMinHashDedup, MinHashLSHDedup}
+    val (hashes, bands, th) = (16, 8, 0.5)
+    val lsh = new MinHashLSHDedup(textCol = "text", idCol = "id",
+      numHashes = hashes, numBands = bands, threshold = th)
+    val words = (0 until 40).map(i => s"w$i")
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("id").as[Long].collect().toSet
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      def doc(): Seq[String] = Seq.fill(12)(words(rnd.nextInt(words.size)))
+      def near(toks: Seq[String]): String =
+        toks.updated(rnd.nextInt(toks.size), words(rnd.nextInt(words.size))).mkString(" ")
+      val bases = Seq.fill(8)(doc())
+      // the prior: 8 docs and one near-dup of each (ids 0-15)
+      val priorRows = bases.zipWithIndex.flatMap { case (b, i) =>
+        Seq((i.toLong, b.mkString(" ")), (i + 8L, near(b))) }
+      val fresh = Seq.fill(4)(doc())
+      val batchRows: Seq[(Long, String)] =
+        // near-dups of prior docs
+        bases.take(4).zipWithIndex.map { case (b, i) => (100L + i, near(b)) } ++
+        // in-batch near-dup pairs of new docs
+        fresh.zipWithIndex.flatMap { case (f, i) =>
+          Seq((110L + 2 * i, f.mkString(" ")), (111L + 2 * i, near(f))) } ++
+        // two exact copies of a prior row: an in-batch and a prior drop at once
+        Seq((120L, priorRows(3)._2), (121L, priorRows(3)._2)) ++
+        // ids shared with prior rows: a novel doc and a near-dup
+        Seq((5L, doc().mkString(" ")), (9L, near(bases(1)))) ++
+        // fewer than shingleWidth tokens, twice, and null text
+        Seq((130L, "w1 w2"), (131L, "w1 w2"), (132L, null))
+      val batch = batchRows.toDF("id", "text")
+      val prior = priorRows.toDF("id", "text")
+      val selfKept = ids(lsh(batch))
+      assert(ids(lsh.applyAgainst(batch, None)) == selfKept, s"seed $seed: no prior")
+      assert(selfKept.size < batchRows.size, s"seed $seed: no in-batch drop — vacuous")
+      for (cap <- Seq(None, Some(1))) {
+        val composed = ids(new IncrementalMinHashDedup(prior = Some(prior),
+          textCol = "text", idCol = "id", numHashes = hashes, numBands = bands,
+          threshold = th, priorMaxBucketSize = cap)(lsh(batch)))
+        val fused = ids(lsh.applyAgainst(batch, Some(prior), cap))
+        assert(fused == composed, s"seed $seed cap $cap")
+        assert(Set(130L, 131L, 132L).subsetOf(fused), s"seed $seed: unshingled rows dropped")
+        if (cap.isEmpty)
+          assert(fused.size < selfKept.size && !fused.contains(120L),
+            s"seed $seed: no prior drop — vacuous")
+      }
+    }
+  }
+
+  test("near-dedup foreachBatch job budget: a first trigger, and a trigger with a prior") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_nbbudget")
+    val srcDir = base.resolve("src"); java.nio.file.Files.createDirectories(srcDir)
+    val rows = (0L until 40L).map(i => (i, s"doc ${i % 25} says " +
+      Seq.tabulate(10)(k => s"t${(i % 25) * 7 + k}").mkString(" "))).toDF("id", "text")
+    // two shards, drained one per trigger (the stream_dedup shape)
+    rows.filter($"id" < 20).coalesce(1).write.parquet(s"$base/stage/1")
+    rows.filter($"id" >= 20).coalesce(1).write.parquet(s"$base/stage/2")
+    copyPart(s"$base/stage/1", srcDir.resolve("shard1.parquet"))
+    val q = StreamingCuration.nearDedupForeachBatch(
+        StreamingCuration.incrementalSource(spark, srcDir.toString, rows.schema),
+        base.resolve("out").toString, base.resolve("prior").toString, threshold = 0.7)
+      .option("checkpointLocation", base.resolve("ckpt").toString)
+      .start()
+    // a streaming query runs its jobs in a job group named by its run id
+    val sc = spark.sparkContext
+    def jobs(): Int = {
+      org.apache.spark.TestBus.drain(sc)
+      sc.statusTracker.getJobIdsForGroup(q.runId.toString).length
+    }
+    try {
+      q.processAllAvailable()
+      val first = jobs()
+      copyPart(s"$base/stage/2", srcDir.resolve("shard2.parquet"))
+      q.processAllAvailable()
+      val second = jobs() - first
+      // one band join per trigger plus the two epoch writes, and no
+      // schema-inference job for the prior (the nested self-dedup plan
+      // and the inference job made the second trigger 10)
+      assert(first <= 5 && second <= 6, s"first trigger $first jobs, second $second")
+    } finally q.stop()
+  }
+
   test("foreachBatch semantic dedup: identical vector drops cross-trigger, novel survives") {
     import spark.implicits._
     val dims = 8
@@ -512,6 +596,14 @@ class StreamingSpec extends ScopedSuite {
     val e = intercept[Exception](
       StreamingCuration.committedPrior(spark, driftDir, 5L))
     assert(e.getMessage.contains("_pc"), s"unexpected error: $e")
+    // a store missing a store column fails analysis when the trigger
+    // selects its store columns, instead of reading the column as nulls
+    val otherDir = java.nio.file.Files.createTempDirectory("graft_prior_cols")
+      .resolve("prior").toString
+    Seq((1L, 3)).toDF("id", "_pc").write.parquet(s"$otherDir/epoch=0")
+    val e2 = intercept[org.apache.spark.sql.AnalysisException](
+      StreamingCuration.committedPrior(spark, otherDir, 5L).get.select("id", "text"))
+    assert(e2.getMessage.contains("text"), s"unexpected error: $e2")
   }
 
   test("epoch store listing: committed epoch=N children only; below vs excluding") {
